@@ -138,8 +138,7 @@ BENCH_QUERIES = [
     "kg_resolution_coverage",
     "kg_module_deps",
     "kg_dead_defs",
-    # round-5: blast radius (3-hop reverse BFS over the call graph; has
-    # its own paired scale artifact in BENCH_SCALING_CODEGRAPH2.json).
+    # round-5: blast radius (3-hop reverse BFS over the call graph).
     # kg_import_cycles / kg_dep_layers are oracle-gated but NOT benched:
     # the registered queries condense the dependency graph to ~20 repos,
     # so their SCC-peel walls are rounds of job-scheduling latency, not

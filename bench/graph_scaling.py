@@ -48,23 +48,8 @@ if _REPO_ROOT not in sys.path:
 ALL_KERNELS = [
     "pagerank_bcast",
     "pagerank_part",
-    "pagerank_part_ck3",
     "pagerank_stages",
     "kcore",
-    "kcore_part",
-    "kcore_part_ck2",
-    "kcore_anti",
-    "kcore_anti_ck2",
-    "kcore_cum",
-    "kcore_cum_stages",
-    "kcore_cum_even",
-    "kcore_cum_p256",
-    "kcore_cum_salt4",
-    "kcore_cum_salt8",
-    "kcore_delta",
-    "kcore_delta_salt4",
-    "kcore_delta_adj",
-    "kcore_delta_stages",
     "label_propagation",
     "bfs_levels",
     "bfs_part",
@@ -105,126 +90,10 @@ def _run_kernel(spark, name: str, edges):
     if name == "pagerank_part":
         n = G.pagerank(edges, checkpoint=True, partitioned=True).count()
         return n, None, None
-    if name == "pagerank_part_ck3":
-        # single lineage truncation at the end instead of one eager
-        # driver-action barrier per round (judge ask #4: "fewer/larger
-        # rounds per checkpoint")
-        n = G.pagerank(
-            edges, checkpoint=True, partitioned=True, checkpoint_every=G.PR_ITERS
-        ).count()
-        return n, None, None
     if name == "pagerank_stages":
         return _pagerank_stage_walls(edges)
-    if name == "kcore_cum_stages":
-        return _kcore_cum_stage_walls(edges)
-    if name == "kcore_cum_even":
-        # round-robin base + partial-agg degree rounds: the balanced
-        # layout for the power-law hub skew (top hub = 1M of 43.6M edges)
-        return (
-            *_checksum(
-                G.kcore_peel(edges, KCORE_K, KCORE_ROUNDS, cumulative=True, layout="even"),
-                ["node", "core_degree"],
-            ),
-            None,
-        )
-    if name.startswith("kcore_cum_salt"):
-        # salted layout: hub edges spread over s partitions, degree agg
-        # pays a bounded sum(min(deg,s))-row partial exchange per round
-        s = int(name.rsplit("salt", 1)[1])
-        return (
-            *_checksum(
-                G.kcore_peel(
-                    edges, KCORE_K, KCORE_ROUNDS, cumulative=True, layout=f"salted:{s}"
-                ),
-                ["node", "core_degree"],
-            ),
-            None,
-        )
-    if name == "kcore_cum_p256":
-        # hash(src) layout at 256 partitions: keeps the zero-exchange agg,
-        # dilutes the non-hub remainder of the skew
-        return (
-            *_checksum(
-                G.kcore_peel(
-                    edges, KCORE_K, KCORE_ROUNDS, cumulative=True, layout_partitions=256
-                ),
-                ["node", "core_degree"],
-            ),
-            None,
-        )
-    if name == "kcore_delta_stages":
-        return _kcore_delta_stage_walls(edges)
-    if name == "kcore_delta_adj":
-        # V-row adjacency formulation (round 5, gate headline): one-time
-        # neighbor-list build; per-round dec probes V rows, not E
-        return (
-            *_checksum(
-                G.kcore_peel(edges, KCORE_K, KCORE_ROUNDS, delta=True, adjacency=True),
-                ["node", "core_degree"],
-            ),
-            None,
-        )
-    if name.startswith("kcore_delta"):
-        # V-row degree-table maintenance (round 5): per cascade round one
-        # broadcast-join E-scan with tiny output + a V-row decrement; one
-        # driver action per round (the fixpoint count); post-cascade
-        # rounds and the final answer never touch E at all.
-        layout = "salted:4" if name.endswith("salt4") else "hash"
-        return (
-            *_checksum(
-                G.kcore_peel(edges, KCORE_K, KCORE_ROUNDS, delta=True, layout=layout),
-                ["node", "core_degree"],
-            ),
-            None,
-        )
     if name == "kcore":
         return (*_checksum(G.kcore_peel(edges, KCORE_K, KCORE_ROUNDS), ["node", "core_degree"]), None)
-    if name == "kcore_part":
-        return (
-            *_checksum(
-                G.kcore_peel(edges, KCORE_K, KCORE_ROUNDS, partitioned=True),
-                ["node", "core_degree"],
-            ),
-            None,
-        )
-    if name == "kcore_part_ck2":
-        return (
-            *_checksum(
-                G.kcore_peel(edges, KCORE_K, KCORE_ROUNDS, partitioned=True, checkpoint_every=2),
-                ["node", "core_degree"],
-            ),
-            None,
-        )
-    if name == "kcore_anti":
-        # zero-exchange peel: per-round REMOVED-set broadcast anti-joins,
-        # edges stay hash(src)-partitioned for the whole peel
-        return (
-            *_checksum(
-                G.kcore_peel(edges, KCORE_K, KCORE_ROUNDS, anti=True),
-                ["node", "core_degree"],
-            ),
-            None,
-        )
-    if name == "kcore_anti_ck2":
-        return (
-            *_checksum(
-                G.kcore_peel(edges, KCORE_K, KCORE_ROUNDS, anti=True, checkpoint_every=2),
-                ["node", "core_degree"],
-            ),
-            None,
-        )
-    if name == "kcore_cum":
-        # constant-depth peel: base table checkpointed ONCE, per-round
-        # broadcast of the cumulative removed set — nothing E-sized is
-        # ever rewritten (the anti/part variants rebuild ~E rows per
-        # checkpoint, the measured wall)
-        return (
-            *_checksum(
-                G.kcore_peel(edges, KCORE_K, KCORE_ROUNDS, cumulative=True),
-                ["node", "core_degree"],
-            ),
-            None,
-        )
     if name == "label_propagation":
         return (*_checksum(G.label_propagation(edges, LP_ITERS, checkpoint=True), ["node", "lab"]), None)
     if name in ("bfs_levels", "bfs_part"):
@@ -291,143 +160,6 @@ def _pagerank_stage_walls(edges):
         "node", (F.lit(0.15 / n) + F.lit(0.85) * F.coalesce(F.col("contrib"), F.lit(0.0))).alias("r")
     ).localCheckpoint()
     stages["round_rebuild"] = round(time.time() - t, 3)
-    return n, None, stages
-
-
-def _kcore_cum_stage_walls(edges):
-    """Per-stage decomposition of the CUMULATIVE k-core peel (mirrors
-    kgforge.operators.graph.kcore_peel(cumulative=True) with a timer per
-    leg): the one-time E-row base layout, then each round's degree-agg
-    pass (which also pays the prior rounds' broadcast builds and
-    anti-join scans, since the plan is constant-depth base+filters), and
-    the final survivor agg.  Removed-set sizes are recorded so the
-    paired artifact shows the geometric fringe decay that motivates the
-    broadcast."""
-    from pyspark.sql import functions as F
-
-    from kgforge.operators.graph import _pinned_checkpoint
-
-    stages: dict[str, float] = {}
-    t = time.time()
-    base = _pinned_checkpoint(edges.repartition("src"))
-    stages["base_layout"] = round(time.time() - t, 3)
-
-    removed_parts = []
-    cur = base
-    for i in range(KCORE_ROUNDS):
-        t = time.time()
-        new_removed = (
-            cur.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .where(F.col("c") < KCORE_K)
-            .select("src")
-        ).localCheckpoint()
-        n_removed = new_removed.count()
-        stages[f"round{i + 1}_agg_plus_ckpt"] = round(time.time() - t, 3)
-        stages[f"round{i + 1}_removed_rows"] = n_removed
-        if n_removed == 0:
-            break
-        removed_parts.append(new_removed)
-        rm = removed_parts[0]
-        for p in removed_parts[1:]:
-            rm = rm.unionAll(p)
-        cur = base.join(F.broadcast(rm), "src", "left_anti").join(
-            F.broadcast(rm.select(F.col("src").alias("dst"))), "dst", "left_anti"
-        )
-    t = time.time()
-    out = cur.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("core_degree"))
-    n = out.count()
-    stages["final_agg"] = round(time.time() - t, 3)
-    return n, None, stages
-
-
-def _kcore_delta_stage_walls(edges):
-    """Per-stage decomposition of the DELTA k-core peel (mirrors
-    kgforge.operators.graph.kcore_peel(delta=True) with a timer and a
-    driver-action barrier per leg): the one-time packed-base cache and
-    initial V-row degree build, then each cascade round split into its
-    three legs — the fixpoint probe off the cached V-row table, the
-    E-scan decrement aggregation, and the V-row degree update.  The
-    decrement agg is timed under BOTH join strategies in the same run —
-    ``roundN_dec_bcast`` (what the operator's plan picks under the 64 MB
-    broadcast threshold) and ``roundN_dec_shuf`` (explicit shuffle-hash)
-    — so the paired artifact directly shows whether the per-round
-    driver-side broadcast build is the serial term.  The barriers add
-    driver actions the production single-job-per-round plan does not
-    pay, so the stage SUM exceeds the kernel's end-to-end wall; the
-    per-leg efficiency ratios are the signal."""
-    from pyspark.sql import functions as F
-
-    from kgforge.cachectl import tracked_cache
-
-    stages: dict[str, float] = {}
-    h = [
-        F.xxhash64("src").alias("h1"),
-        F.xxhash64(F.lit("k2"), F.col("src")).alias("h2"),
-        F.xxhash64("dst").alias("d1"),
-        F.xxhash64(F.lit("k2"), F.col("dst")).alias("d2"),
-    ]
-    t = time.time()
-    base = tracked_cache(edges.select(*h))
-    base.count()
-    stages["base_cache"] = round(time.time() - t, 3)
-
-    t = time.time()
-    deg = tracked_cache(
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .select(
-            "src",
-            F.xxhash64("src").alias("h1"),
-            F.xxhash64(F.lit("k2"), F.col("src")).alias("h2"),
-            "c",
-        )
-    )
-    deg.count()
-    stages["deg_build"] = round(time.time() - t, 3)
-
-    for i in range(KCORE_ROUNDS):
-        t = time.time()
-        removed = tracked_cache(
-            deg.where(F.col("c") < KCORE_K).select(
-                F.col("h1").alias("h1"), F.col("h2").alias("h2")
-            )
-        )
-        n_removed = removed.count()
-        stages[f"round{i + 1}_probe"] = round(time.time() - t, 3)
-        stages[f"round{i + 1}_removed_rows"] = n_removed
-        if n_removed == 0:
-            break
-        rm_dst = removed.select(F.col("h1").alias("d1"), F.col("h2").alias("d2"))
-        dec_plan = (
-            base.join(F.broadcast(rm_dst), ["d1", "d2"])
-            .groupBy("h1", "h2")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        t = time.time()
-        dec = tracked_cache(dec_plan)
-        n_dec = dec.count()
-        stages[f"round{i + 1}_dec_escan"] = round(time.time() - t, 3)
-        stages[f"round{i + 1}_dec_rows"] = n_dec
-
-        alive = deg.join(F.broadcast(removed), ["h1", "h2"], "left_anti")
-        upd = lambda d: alive.join(d, ["h1", "h2"], "left").select(  # noqa: E731
-            "src",
-            "h1",
-            "h2",
-            (F.col("c") - F.coalesce(F.col("d"), F.lit(0))).alias("c"),
-        )
-        t = time.time()
-        upd(dec).count()  # planner picks broadcast: dec < 64 MB threshold
-        stages[f"round{i + 1}_upd_bcast"] = round(time.time() - t, 3)
-        t = time.time()
-        deg_next = tracked_cache(upd(dec.hint("shuffle_hash")))
-        deg_next.count()
-        stages[f"round{i + 1}_upd_shuf"] = round(time.time() - t, 3)
-        deg = deg_next
-    t = time.time()
-    n = deg.where(F.col("c") > 0).count()
-    stages["final_vrow_agg"] = round(time.time() - t, 3)
     return n, None, stages
 
 

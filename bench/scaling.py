@@ -94,7 +94,7 @@ def worker(cpus: int, input_dir: str, run_root: str) -> None:
     # Identical at both parallelism levels, so it cannot bias the gate.
     leg_reps = max(1, int(os.environ.get("KGFORGE_SCALE_LEG_REPS", "1")))
     walls: list = []
-    best = None
+    best = best_root = None
     for rep in range(leg_reps):
         root_r = run_root if rep == 0 else tempfile.mkdtemp(
             prefix=os.path.basename(run_root) + f"_rep{rep}_",
@@ -105,10 +105,16 @@ def worker(cpus: int, input_dir: str, run_root: str) -> None:
         n_triples = out["triples"].count()
         wall = round(time.time() - t0, 3)
         walls.append(wall)
-        if best is None or wall <= min(walls):
+        # strict: the earliest rep wins a tie.  The best rep's triples are
+        # read lazily from its root (PageRank below), so only a losing
+        # rep's root is deleted here; run_root is the caller's to delete.
+        if best is None or wall < best[0]:
             best = (wall, n_triples, out.get("stage_secs"), out)
-        if rep > 0:
-            shutil.rmtree(root_r, ignore_errors=True)
+            loser, best_root = best_root, root_r
+        else:
+            loser = root_r
+        if loser not in (None, run_root):
+            shutil.rmtree(loser, ignore_errors=True)
 
     secs, n_triples, stage_secs, out = best
 
@@ -133,6 +139,9 @@ def worker(cpus: int, input_dir: str, run_root: str) -> None:
         n_nodes = ranks.count()
         result["pagerank_secs"] = round(time.time() - t1, 3)
         result["pagerank_nodes"] = n_nodes
+
+    if best_root != run_root:
+        shutil.rmtree(best_root, ignore_errors=True)
 
     print(json.dumps(result))
 

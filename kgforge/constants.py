@@ -134,7 +134,6 @@ def round_like_spark(value: float, nd: int) -> float:
     return float(
         Decimal(repr(float(value))).quantize(Decimal(1).scaleb(-nd), rounding=ROUND_HALF_UP)
     )
-SALT_BUCKETS = 8         # salting fan-out for skewed (repo, lang) partitions
 
 
 def lsh_hyperplanes(dim: int = EMBED_DIM, planes: int = LSH_PLANES, seed: int = LSH_SEED) -> np.ndarray:

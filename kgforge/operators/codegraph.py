@@ -101,23 +101,22 @@ def _h2(col: str, pre: str) -> list:
     ]
 
 
-def call_graph(triples: DataFrame, layout: str = "packed") -> DataFrame:
+def call_graph(triples: DataFrame) -> DataFrame:
     """File-level call-graph edges: (caller, callee, n_fns) where the
     caller file calls >=1 function the callee file defines.  n_fns rides
     the per-(subj,pred,obj) dedup invariant: one row per called function
     per pair, so count(*) == distinct functions.
 
-    ``layout="packed"`` (default) carries 128-bit hash keys through both
+    The join and aggregation carry 128-bit hash keys through both
     shuffles instead of the path/symbol strings, re-attaching the file
     strings after the aggregation from the pred-pruned caller/callee
     dictionaries.  Measured at 1M synthetic files (48.2M output edges,
-    identical checksums): local[8] 29.1s vs 41.2s for the string layout,
-    2->8-core scaling efficiency 0.83 vs 0.49 — the string-pair shuffle
-    plus string-keyed agg map is the shared-JVM allocation wall, while
-    the 4-long agg leg alone scales at ~1.0.  On a real multi-executor
-    cluster the dictionaries join by shuffle when they outgrow the
-    broadcast threshold (no hint pinned here; AQE decides).
-    ``layout="strings"`` keeps the direct formulation for reference.
+    identical checksums): local[8] 29.1s vs 41.2s for a direct string
+    join + string-keyed agg, 2->8-core scaling efficiency 0.83 vs 0.49 —
+    the string-pair shuffle plus string-keyed agg map is the shared-JVM
+    allocation wall, while the 4-long agg leg alone scales at ~1.0.  On a
+    real multi-executor cluster the dictionaries join by shuffle when they
+    outgrow the broadcast threshold (no hint pinned here; AQE decides).
     """
     calls = triples.where(F.col("pred") == "calls").select(
         F.col("subj").alias("caller"), "obj"
@@ -125,14 +124,8 @@ def call_graph(triples: DataFrame, layout: str = "packed") -> DataFrame:
     defs = triples.where(F.col("pred") == "defines").select(
         F.col("subj").alias("callee"), "obj"
     )
-    if layout == "strings":
-        return (
-            calls.join(defs, "obj")
-            .groupBy("caller", "callee")
-            .agg(F.count(F.lit(1)).alias("n_fns"))
-        )
-    # packed: fixed-width rows through shuffle-1 (join on the 128-bit
-    # symbol key) and shuffle-2 (agg on the 128+128-bit file-pair key).
+    # fixed-width rows through shuffle-1 (join on the 128-bit symbol key)
+    # and shuffle-2 (agg on the 128+128-bit file-pair key).
     c = calls.select(*_h2("caller", "c"), *_h2("obj", "o"))
     d = defs.select(*_h2("callee", "e"), *_h2("obj", "o"))
     agg = (
@@ -385,6 +378,10 @@ def resolution_coverage(triples: DataFrame) -> DataFrame:
 # (/root/reference/experiments/uaz_documents_comparison.py:350-389); cycles
 # and build order are the code-KG analogs of that structural census.
 
+# Propagation steps per checkpointed segment of the SCC peel (see
+# _scc_labels_peel): each extra step deepens the un-checkpointed plan.
+SCC_UNROLL = 2
+
 
 def scc_labels(edges: DataFrame, src: str = "src_repo", dst: str = "dst_repo") -> DataFrame:
     """(node, scc_id) for every node incident to an edge, where scc_id is
@@ -460,9 +457,6 @@ def scc_labels(edges: DataFrame, src: str = "src_repo", dst: str = "dst_repo") -
         F.col("k2").alias("b2"),
     ).localCheckpoint()
 
-    import time as _time
-
-    _log = os.environ.get("KGFORGE_SCC_LOG")
     # Scoped AQE override: the packed label/edge tables are a few hundred
     # MB, so AQE's 64MB advisory size coalesces every per-step shuffle to
     # 2-4 partitions — at local[2] that saturates the machine, at
@@ -490,13 +484,13 @@ def scc_labels(edges: DataFrame, src: str = "src_repo", dst: str = "dst_repo") -
     _spark.conf.set(_coal_key, "false")
     _spark.conf.set(_shuf_key, str(max(4, 2 * _spark.sparkContext.defaultParallelism)))
     try:
-        return _scc_labels_peel(e, dictn, lab, _log, _time)
+        return _scc_labels_peel(e, dictn, lab)
     finally:
         _spark.conf.set(_coal_key, _coal_prev)
         _spark.conf.set(_shuf_key, _shuf_prev)
 
 
-def _scc_labels_peel(e, dictn, lab, _log, _time) -> DataFrame:
+def _scc_labels_peel(e, dictn, lab) -> DataFrame:
     """The iterative section of scc_labels (split out so the AQE override
     wraps exactly the peel; see scc_labels docstring for the algorithm)."""
 
@@ -561,7 +555,7 @@ def _scc_labels_peel(e, dictn, lab, _log, _time) -> DataFrame:
         )
         return ffr, bfr
 
-    # UNROLL propagation steps share one localCheckpoint + one
+    # SCC_UNROLL propagation steps share one localCheckpoint + one
     # convergence probe: the driver-side cost per checkpointed segment
     # (job submit, analysis, codegen, the V-row materialization, the
     # count action) is a per-segment constant, so unrolling halves the
@@ -572,19 +566,13 @@ def _scc_labels_peel(e, dictn, lab, _log, _time) -> DataFrame:
     # final sub-step with zero changes proves global fixpoint (earlier
     # sub-steps in the segment may have changed rows — the probe only
     # needs the LAST sub-step's flags).
-    UNROLL = max(1, int(os.environ.get("KGFORGE_SCC_UNROLL", "2")))
     settled: DataFrame | None = None
-    _round = 0
     while True:
-        _round += 1
-        _seg = 0
         ffr = lab.select("k1", "k2", F.col("f1").alias("l1"), F.col("f2").alias("l2"))
         bfr = lab.select("k1", "k2", F.col("b1").alias("l1"), F.col("b2").alias("l2"))
         while True:
-            _seg += 1
-            _t0 = _time.time()
             step = _advance(lab, ffr, bfr)
-            for _ in range(UNROLL - 1):
+            for _ in range(SCC_UNROLL - 1):
                 ffr, bfr = _frontiers(step)
                 step = _advance(step.drop("fch", "bch"), ffr, bfr)
             step = step.localCheckpoint()
@@ -593,12 +581,6 @@ def _scc_labels_peel(e, dictn, lab, _log, _time) -> DataFrame:
                 F.sum(F.when(F.col("bch"), 1).otherwise(0)).alias("nb"),
             ).first()
             nf, nb = int(row["nf"] or 0), int(row["nb"] or 0)
-            if _log:  # bench diagnostics (KGFORGE_SCC_LOG=1)
-                print(
-                    f"[scc] round={_round} seg={_seg} nf={nf} nb={nb}"
-                    f" secs={_time.time() - _t0:.2f}",
-                    flush=True,
-                )
             lab = step.drop("fch", "bch")
             ffr, bfr = _frontiers(step)
             if nf == 0 and nb == 0:

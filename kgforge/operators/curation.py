@@ -440,8 +440,8 @@ def ccnet_scores(base: DataFrame, broadcast_model: bool = True) -> DataFrame:
     with the corpus (real web text), the model outgrows any broadcast
     and the same query ships both model tables through shuffle-hash
     equi-joins on the hash keys instead — the corpus bigram stream pays
-    one exchange, the plan is otherwise unchanged.  Measured paired
-    (BENCH_SCALING_CCNET_OPENVOCAB.json, summarized in BASELINE.md)."""
+    one exchange, the plan is otherwise unchanged.  Row-identical to the
+    broadcast path (tests/test_plans.py)."""
     big = base.select("doc_id", F.explode(_bigram_hash_expr()).alias("g")).select(
         "doc_id", "g.h2", "g.h1"
     )

@@ -105,7 +105,6 @@ def pagerank(
     damping: float = DAMPING,
     checkpoint: bool = False,
     partitioned: bool = False,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed (src, dst) edge DataFrame.
 
@@ -116,11 +115,10 @@ def pagerank(
     symmetrize their edges, which makes every node a source.  An empty
     edge set returns an empty rank table rather than dividing by zero.
 
-    ``checkpoint=True`` localCheckpoints the rank vector every
-    ``checkpoint_every`` rounds — truncating lineage so plan size stays
-    O(checkpoint_every) in iteration count (mandatory at entity-graph
-    scale; left False for the toy concept query whose oracle unrolls the
-    identical CTE chain).
+    ``checkpoint=True`` localCheckpoints the rank vector every round —
+    truncating lineage so plan size stays constant in iteration count
+    (mandatory at entity-graph scale; left False for the toy concept
+    query whose oracle unrolls the identical CTE chain).
 
     ``partitioned=True`` selects the co-partitioned shuffle plan instead
     of broadcasting the rank vector: ``w`` and ``nodes`` are hash-
@@ -162,7 +160,7 @@ def pagerank(
     # of w was measured and REJECTED: with ranks broadcast it only adds
     # exchanges.  (If V outgrows the broadcast threshold, pre-partitioning
     # w by src becomes the right knob — AQE will flip the join to SMJ.)
-    for i in range(iters):
+    for _ in range(iters):
         r = ranks.hint("shuffle_hash") if partitioned else ranks
         contrib = (
             w.join(r, w["src"] == r["node"])
@@ -178,7 +176,7 @@ def pagerank(
                 + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
             ).alias("r"),
         )
-        if checkpoint and (i + 1) % checkpoint_every == 0:
+        if checkpoint:
             # partitioned mode: the rank vector leaves the round hash(node)-
             # partitioned (the nodes-side join layout), which is exactly the
             # next round's join distribution — pin it through the checkpoint
@@ -408,10 +406,8 @@ def count_triangles(edges: DataFrame) -> DataFrame:
 #   k-core reduction; at fixpoint extra rounds are no-ops, so the fixed
 #   unrolling equals the true k-core whenever the peel converges within
 #   the budget — both engines compute the identical fixed-round set
-#   either way).  Per round: one map-side-combined degree agg + two
-#   semi-joins against the (shrinking, broadcastable) survivor set; with
-#   many rounds at entity scale, localCheckpoint per round (the pagerank
-#   pattern) caps lineage.
+#   either way).  Per round: a V-row degree decrement driven by the
+#   removed set's neighbor lists (see ``kcore_peel``).
 # - ``label_propagation``: LP_ITERS synchronous rounds of
 #   most-frequent-neighbor-label with deterministic min-label
 #   tie-breaking — the classic community detector, made hash-gateable by
@@ -438,364 +434,98 @@ def _sql_kcore_chain() -> str:
     return ",\n".join(parts)
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int,
-    rounds: int,
-    partitioned: bool = False,
-    checkpoint_every: int = 1,
-    anti: bool = False,
-    cumulative: bool = False,
-    delta: bool = False,
-    adjacency: bool = False,
-    layout: str = "hash",
-    layout_partitions: int | None = None,
-) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """``rounds`` peels of degree-<k vertices over a SYMMETRIZED (src, dst)
     edge DataFrame; returns the surviving (node, core_degree) table.
 
-    ``partitioned=False`` broadcasts the survivor set into both per-round
-    semi-joins — right when survivors fit a broadcast (the toy concept
-    graph).  At entity scale the survivor set IS the node set (~1M rows):
-    building + shipping two ~40 MB broadcasts per round from the driver
-    is a serial Amdahl term — measured 0.41 paired scaling efficiency at
-    43.7M edges (bench/graph_scaling.py, round 4).  ``partitioned=True``
-    hints both semi-joins shuffle-hash instead: the survivor table moves
-    through parallel exchanges and the edge side, already hash-shuffled
-    on the same key by the degree agg, co-locates.  The initial edge set
-    is laid out hash(src) so round 1's degree agg and src semi-join
-    reuse it without an E-row exchange (the checkpoint is built via
-    ``_pinned_checkpoint`` — a plain localCheckpoint under AQE FORGETS
-    the hash layout and re-exchanges, measured round 4).
+    The peel maintains a V-row degree table, decremented per round, over
+    a V-row adjacency table built once, so no round scans or rebuilds the
+    E-row edge table:
 
-    Lineage control: ``edges`` is consumed TWICE per round (degree agg +
-    semi-join) and feeds every later round, so without truncation round
-    r re-derives the whole upstream plan ~2^r times — measured
-    101 s -> ~2 s at sf0.1 on the concept graph (whose edge derivation
-    is the doc-pair self-join), and a lineage bomb at entity scale
-    regardless.  Each eager localCheckpoint is also a per-round DRIVER
-    action (a serial barrier the paired-scaling runs can see), so
-    ``checkpoint_every=j`` truncates only every j-th round and caches
-    the rounds between (a lazy cache dedups the double consumption
-    without a driver round-trip; plan size stays O(2^j), fine for the
-    small j a fixed-round peel uses).
+    - one-time: group the edges by dst into per-node neighbor lists of
+      packed keys, ``adj(h1,h2) -> [struct(h1,h2)...]``.  ``size(nb)`` is
+      the initial degree (the edge table is symmetrized, so indegree =
+      outdegree), and ``first(dst)`` carries the node string into the
+      V-row table, so no later pass touches strings.
+    - per round: the removed set is ``deg < k``; its decrements come
+      from a V-row probe of ``adj`` against the broadcast removed set
+      plus an explode of ONLY the removed nodes' lists, then a V-row
+      update ``deg' = (deg minus removed) left-join dec``.  The degree
+      tables are lazily cached; each round materializes through one
+      action, the checkpoint of the removed set, plus an emptiness probe
+      over those checkpointed rows.  The loop exits early once nothing is removed
+      (the fixed-round oracle chain is insensitive to that by
+      construction).
 
-    ``anti=True`` is the zero-exchange formulation (round-4, after the
-    43.7M-edge paired run measured kcore_part at 0.41-0.56 efficiency):
-    instead of semi-joining the ~|V|-row SURVIVOR set into both edge
-    columns (the dst side re-exchanges every surviving edge by ``dst``,
-    and the next round's degree agg exchanges them straight back to
-    hash(src) — two E-row shuffles per round), broadcast the per-round
-    REMOVED set (``0 < deg < k`` among current srcs) into two
-    anti-joins.  On a symmetrized edge table every current node appears
-    as a src, so removed = current \\ keep and the anti-join is
-    set-identical to the keep semi-join (pinned by test).  Removed is
-    large only in round 1 of a power-law graph (the degree-1/2 fringe);
-    afterwards it is thousands of rows, so the per-round broadcast cost
-    that sank the keep-broadcast plan (two ~|V|-row builds EVERY round)
-    decays geometrically.  Both anti-joins are map-side, so the edge
-    table keeps its initial hash(src) layout for the whole peel: the
-    degree agg never exchanges, and per-round cost is one parallel
-    O(E/p) pass + one small broadcast.
-
-    Web-scale note: round 1's removed set is the only one that can
-    outgrow a broadcast (billions of nodes -> a degree-1/2 fringe of
-    hundreds of millions).  There, run round 1 with the
-    ``partitioned=True`` semi-join shape (pay the one dst exchange) and
-    switch to ``anti`` from round 2 on — the fringe shrinks
-    geometrically; at this harness's 1M-node graph the round-1 removed
-    set broadcasts fine, so the pure-anti path is what is measured.
-
-    ``cumulative=True`` (round-4, after the paired run measured even the
-    anti peel at 0.30-0.71 efficiency) removes the remaining wall: the
-    anti peel still REBUILDS the ~E-row edge table every
-    ``checkpoint_every`` rounds (a full-table materialization whose
-    write bandwidth both parallelism levels contend for, plus a
-    per-round driver barrier).  Cumulative mode never rebuilds the edge
-    table at all.  The base table is laid out hash(src) and
-    checkpointed ONCE; each round anti-joins the base against the
-    broadcast UNION of every prior round's removed set, so the physical
-    plan has CONSTANT depth (base scan + two map-side broadcast
-    anti-joins + zero-exchange degree agg) no matter the round index.
-    The only per-round materialization is the new removed set itself —
-    thousands of rows after round 1 — and the peel exits early at the
-    fixpoint (no new removals), which the fixed-round oracle chain is
-    insensitive to by construction.  Per-round cost: one parallel
-    O(E/p) in-memory scan; nothing E-sized is ever written.
-
-    ``layout`` picks the base-table layout for cumulative mode, because
-    a power-law entity graph makes the obvious choice WRONG:
-    ``repartition("src")`` puts every edge of a hub entity in ONE
-    partition (the benched 1M-node graph's top hub holds 1.0M of 43.6M
-    edges, and the max hash(src)%%32 bucket is 2.5x the mean), so the
-    straggler partition floors every stage wall at high parallelism —
-    measured 0.37-0.48 paired efficiency on the zero-exchange degree
-    agg itself.  ``layout="hash"`` keeps the zero-exchange plan and
-    dilutes the skew across ``layout_partitions`` (a hub's edges are
-    irreducibly co-located; more partitions only shrink the non-hub
-    remainder).  ``layout="even"`` round-robins the base so every scan
-    is perfectly balanced and lets the degree agg run as map-side
-    partial agg + a balanced exchange of partials (~sum(min(deg, P))
-    rows, half of E here) — the textbook skew answer; at web scale the
-    balanced exchange beats the straggler whenever a hub outweighs
-    E/cores.
-
-    ``delta=True`` (round 5 — the formulation that finally removed the
-    measured serial term) changes WHAT is maintained, not just how it
-    is laid out: a V-row DEGREE table, decremented per round, instead
-    of an E-row edge table re-aggregated per round.  The per-stage
-    decomposition of the cumulative peel (BENCH_SCALING_GRAPH_K16)
-    showed each E-row materialization leg carries ~0.6-1.6 s of
-    driver/action latency while its parallel portion scales nearly
-    perfectly — so the peel's efficiency is set by the NUMBER of
-    materialized legs.  Delta mode has three kinds of leg:
-
-    - one-time: cache the base edge table and aggregate initial
-      degrees deg(v) once;
-    - per cascade round: ``dec = base ⋈ broadcast(removed_r on dst)
-      → groupBy(src).count`` — one parallel E-scan whose OUTPUT is only
-      the edges incident to the round's removed set, then a V-row
-      update ``deg' = (deg ∖ removed_r) left-join dec`` and the next
-      removed set off the V-row table.  Everything is lazily cached;
-      the ONLY driver action per round is one count() (the fixpoint
-      probe), which materializes the whole round's chain as one job.
-    - after the cascade dies (removed_r = ∅): NO E-scan at all —
-      the fixpoint probe reads the V-row degree table only, and the
-      survivors' core degrees are already sitting in it (the E-row
-      final aggregation the other formulations pay, measured eff 0.56,
-      does not exist here).
+    Node ids are packed to two-seed 128-bit xxhash64 keys (one 64-bit key
+    birthday-collides ~1e4 times at the 1e12-file target —
+    codegraph._h2's bound; two seeds ~1.5e-15, treated as exact), so
+    every per-round join and aggregation is keyed on longs.
 
     Correctness: deg_r(v) for alive v equals v's degree in the round-r
-    induced subgraph by induction — each base edge (v, u) is
-    decremented from deg(v) exactly once, in the round u is removed
-    (removed sets are disjoint), and edges between two same-round
-    removed nodes decrement only already-dead rows, which the
-    anti-join discards.  A surviving node whose degree reached 0
-    (every neighbor peeled) is filtered at the end, matching the
-    groupBy-over-edges semantics of the other formulations (pinned
-    cross-formulation by tests/test_graph.py).  At web scale the
-    removed set can outgrow a broadcast only in round 1 (the
-    degree-fringe argument above): run round 1's dec as a shuffle join
-    there, then broadcast from round 2 on — at this harness's graph
-    every round broadcasts fine.
+    induced subgraph by induction — each edge (v, u) decrements deg(v)
+    exactly once, in the round u is removed (removed sets are disjoint),
+    and decrements of already-removed rows are discarded by the
+    anti-join.  A survivor whose degree reached 0 is filtered at the end,
+    matching a groupBy over the surviving edges.
 
-    ``delta=True, adjacency=True`` (round 5 — the formulation that
-    cleared the gate) additionally removes the per-round E-ROW SCAN.
-    The stage decomposition of plain delta mode
-    (BENCH_SCALING_GRAPH_DELTA kcore_delta_stages) localized the whole
-    scaling deficit to the dec leg: probing 44M cached edge rows
-    against a broadcast hash of the removed set costs ~4 s at BOTH
-    parallelism levels (a warm full cached scan alone is 0.23 s — the
-    constant is the random hash-probe's memory-latency wall, which a
-    single box cannot parallelize past ~2 threads), and it recurs
-    EVERY cascade round even when the round's output is 3.6k rows.
-    Adjacency mode pays one extra one-time build — group the packed
-    edges by dst into V-row neighbor lists,
-    ``adj(d1,d2) -> [struct(h1,h2)...]`` — and each round's dec becomes
-    a V-ROW probe (1.2M rows, not 44M) + explode of ONLY the removed
-    nodes' lists: measured 0.74 s (round 1, 312k removals) and 0.46 s
-    (3.5k removals) at local[8] vs the E-scan's flat ~4 s.  The build
-    itself is an ordinary partial-agg shuffle and scales at 0.91
-    paired; ``size(nb)`` doubles as the initial degree (the edge table
-    is symmetrized, so indegree = outdegree), which deletes the
-    separate string-keyed degree aggregation the plain-delta mode
-    paid.  The group-by carries ``first(dst)`` so the V-row table owns
-    the node string from birth; no E-row pass ever touches strings
-    again.  collect_list aggregation needs
+    Why this formulation: it is the fastest and the only one of seven
+    measured that clears the 0.8 paired-scaling gate (median 0.832, 16.55 s
+    at local[8] on a 44.2M-edge entity graph, k=16;
+    BENCH_SCALING_GRAPH_ADJ.json, BASELINE.md).  Per-round work is
+    proportional to the removed fringe, not to E: an E-row decrement
+    scan cost a flat ~4 s per round even at 3.6k removals
+    (BENCH_SCALING_GRAPH_DELTA_STAGES.json), the V-row probe 0.46-0.74 s.
+    The collect_list build needs
     ``spark.sql.execution.objectHashAggregate.sortBased.fallbackThreshold``
-    above the per-task group count (session.py sets 8M engine-wide;
-    the Spark default of 128 silently degrades the build to sort-based
-    — measured 21 s vs 10.7 s at local[8]).  Multiplicity, zero-degree
-    filtering and the fixed-round fixpoint semantics are identical to
-    plain delta (pinned cross-formulation by tests/test_graph.py)."""
-    if delta and adjacency:
-        adj = tracked_cache(
-            edges.groupBy(
-                F.xxhash64("dst").alias("h1"),
-                F.xxhash64(F.lit("k2"), F.col("dst")).alias("h2"),
-            ).agg(
-                F.collect_list(
-                    F.struct(
-                        F.xxhash64("src").alias("h1"),
-                        F.xxhash64(F.lit("k2"), F.col("src")).alias("h2"),
-                    )
-                ).alias("nb"),
-                F.first("dst").alias("node"),
-            )
-        )
-        deg = tracked_cache(
-            adj.select("node", "h1", "h2", F.size("nb").alias("c"))
-        )
-        for _ in range(rounds):
-            removed = tracked_cache(
-                deg.where(F.col("c") < k).select("h1", "h2")
-            )
-            if removed.count() == 0:  # the only driver action per round
-                break
-            dec = (
-                adj.join(F.broadcast(removed), ["h1", "h2"])
-                .select(F.explode("nb").alias("s"))
-                .groupBy(F.col("s.h1").alias("h1"), F.col("s.h2").alias("h2"))
-                .agg(F.count(F.lit(1)).alias("d"))
-            )
-            deg = tracked_cache(
-                deg.join(F.broadcast(removed), ["h1", "h2"], "left_anti")
-                .join(F.broadcast(dec), ["h1", "h2"], "left")
-                .select(
-                    "node",
-                    "h1",
-                    "h2",
-                    (F.col("c") - F.coalesce(F.col("d"), F.lit(0))).alias("c"),
+    above the per-task group count (session.py sets 8M; the Spark default
+    of 128 silently degrades it to sort-based, measured 21 s vs 10.7 s).
+    At web scale only round 1's removed set can outgrow a broadcast (the
+    degree-1/2 fringe); run that round's probe as a shuffle join there."""
+    adj = tracked_cache(
+        edges.groupBy(
+            F.xxhash64("dst").alias("h1"),
+            F.xxhash64(F.lit("k2"), F.col("dst")).alias("h2"),
+        ).agg(
+            F.collect_list(
+                F.struct(
+                    F.xxhash64("src").alias("h1"),
+                    F.xxhash64(F.lit("k2"), F.col("src")).alias("h2"),
                 )
-            )
-        return deg.where(F.col("c") > 0).select(
-            "node", F.col("c").alias("core_degree")
+            ).alias("nb"),
+            F.first("dst").alias("node"),
         )
-    if delta:
-        # Fixed-width discipline (the call_graph packed-key lesson,
-        # measured eff 0.49 -> 0.88 there): node ids are STRINGS, and a
-        # string-keyed E-row pass per round is the shared-JVM alloc wall.
-        # Hash both endpoints to a two-seed 128-bit key ONCE (one 64-bit
-        # key birthday-collides ~1e4 times at the 1e12-file target —
-        # codegraph._h2's bound; two seeds ~1.5e-15, treated as exact),
-        # cache the edge table as four longs, and key every round's
-        # join/agg on the longs.  The node STRING is touched by exactly
-        # one E-row aggregation (the initial degree count, which carries
-        # it into the V-row table) and never again — the output re-reads
-        # it from the V-row table for free.
-        h = [
-            F.xxhash64("src").alias("h1"),
-            F.xxhash64(F.lit("k2"), F.col("src")).alias("h2"),
-            F.xxhash64("dst").alias("d1"),
-            F.xxhash64(F.lit("k2"), F.col("dst")).alias("d2"),
-        ]
-        base = edges.select(*h)
-        if layout.startswith("salted"):
-            s = int(layout.split(":")[1]) if ":" in layout else 8
-            n_p = layout_partitions or 32
-            base = base.repartition(n_p, "h1", F.pmod(F.col("d1"), F.lit(s)))
-        base = tracked_cache(base)
+    )
+    deg = tracked_cache(
+        adj.select("node", "h1", "h2", F.size("nb").alias("c"))
+    )
+    for _ in range(rounds):
+        # a checkpoint, not a cache: the next deg reads deg directly,
+        # through ``removed`` and through dec, so an uncut ``removed``
+        # makes each round's plan embed the previous one three times
+        # (3^r growth, measured: 18 s at 4 cascade rounds on a 1.2k-edge
+        # graph, driver OOM at 5)
+        removed = deg.where(F.col("c") < k).select("h1", "h2").localCheckpoint()
+        if removed.isEmpty():
+            break
+        dec = (
+            adj.join(F.broadcast(removed), ["h1", "h2"])
+            .select(F.explode("nb").alias("s"))
+            .groupBy(F.col("s.h1").alias("h1"), F.col("s.h2").alias("h2"))
+            .agg(F.count(F.lit(1)).alias("d"))
+        )
         deg = tracked_cache(
-            edges.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("c"))
+            deg.join(F.broadcast(removed), ["h1", "h2"], "left_anti")
+            .join(F.broadcast(dec), ["h1", "h2"], "left")
             .select(
-                "src",
-                F.xxhash64("src").alias("h1"),
-                F.xxhash64(F.lit("k2"), F.col("src")).alias("h2"),
-                "c",
+                "node",
+                "h1",
+                "h2",
+                (F.col("c") - F.coalesce(F.col("d"), F.lit(0))).alias("c"),
             )
         )
-        for _ in range(rounds):
-            # alias() detaches exprIds so the deg-derived filter can
-            # join back against deg/base without self-join ambiguity
-            removed = tracked_cache(
-                deg.where(F.col("c") < k).select(
-                    F.col("h1").alias("h1"), F.col("h2").alias("h2")
-                )
-            )
-            if removed.count() == 0:  # the only driver action per round
-                break
-            rm_dst = removed.select(F.col("h1").alias("d1"), F.col("h2").alias("d2"))
-            dec = (
-                base.join(F.broadcast(rm_dst), ["d1", "d2"])
-                .groupBy("h1", "h2")
-                .agg(F.count(F.lit(1)).alias("d"))
-            )
-            deg = tracked_cache(
-                deg.join(F.broadcast(removed), ["h1", "h2"], "left_anti")
-                .join(dec, ["h1", "h2"], "left")
-                .select(
-                    "src",
-                    "h1",
-                    "h2",
-                    (F.col("c") - F.coalesce(F.col("d"), F.lit(0))).alias("c"),
-                )
-            )
-        return deg.where(F.col("c") > 0).select(
-            F.col("src").alias("node"), F.col("c").alias("core_degree")
-        )
-    if cumulative:
-        if layout == "even":
-            n_even = layout_partitions or edges.sparkSession.sparkContext.defaultParallelism * 4
-            base = edges.repartition(n_even).localCheckpoint()
-        elif layout.startswith("salted"):
-            # salt the layout key with hash(dst)%s: a hub's edges spread
-            # over at most s partitions (no straggler), while the degree
-            # agg's partial-exchange volume stays bounded by
-            # sum(min(deg, s)) rows — the middle ground between the
-            # zero-exchange-but-skewed hash layout and the
-            # balanced-but-E/2-exchange even layout (both measured).
-            s = int(layout.split(":")[1]) if ":" in layout else 8
-            n_p = layout_partitions or 32
-            base = edges.repartition(
-                n_p, "src", F.pmod(F.xxhash64("dst"), F.lit(s))
-            ).localCheckpoint()
-        elif layout_partitions:
-            base = _pinned_checkpoint(edges.repartition(layout_partitions, "src"))
-        else:
-            base = _pinned_checkpoint(edges.repartition("src"))
-        removed_parts: list[DataFrame] = []
-        cur = base
-        for _ in range(rounds):
-            new_removed = (
-                cur.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .where(F.col("c") < k)
-                .select("src")
-            ).localCheckpoint()
-            if not new_removed.head(1):
-                break  # fixpoint: later rounds remove nothing
-            removed_parts.append(new_removed)
-            rm = removed_parts[0]
-            for p in removed_parts[1:]:
-                rm = rm.unionAll(p)
-            cur = base.join(F.broadcast(rm), "src", "left_anti").join(
-                F.broadcast(rm.select(F.col("src").alias("dst"))), "dst", "left_anti"
-            )
-        return cur.groupBy(F.col("src").alias("node")).agg(
-            F.count(F.lit(1)).alias("core_degree")
-        )
-    ckpt = _pinned_checkpoint if (partitioned or anti) else (lambda d: d.localCheckpoint())
-    if partitioned or anti:
-        edges = edges.repartition("src")
-    edges = ckpt(edges)
-    for i in range(rounds):
-        if anti:
-            removed = (
-                edges.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .where(F.col("c") < k)
-                .select("src")
-            )
-            edges = edges.join(F.broadcast(removed), "src", "left_anti").join(
-                F.broadcast(removed.select(F.col("src").alias("dst"))), "dst", "left_anti"
-            )
-            if (i + 1) % checkpoint_every == 0 or i == rounds - 1:
-                edges = ckpt(edges)
-            else:
-                edges = tracked_cache(edges)
-            continue
-        keep = (
-            edges.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .where(F.col("c") >= k)
-            .select("src")
-        )
-        if partitioned:
-            keep = keep.hint("shuffle_hash")
-            edges = edges.join(keep, "src", "left_semi").join(
-                keep.select(F.col("src").alias("dst")).hint("shuffle_hash"), "dst", "left_semi"
-            )
-        else:
-            edges = edges.join(F.broadcast(keep), "src", "left_semi").join(
-                F.broadcast(keep.select(F.col("src").alias("dst"))), "dst", "left_semi"
-            )
-        if (i + 1) % checkpoint_every == 0 or i == rounds - 1:
-            edges = ckpt(edges)
-        else:
-            edges = tracked_cache(edges)
-    return edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("core_degree")
+    return deg.where(F.col("c") > 0).select(
+        "node", F.col("c").alias("core_degree")
     )
 
 

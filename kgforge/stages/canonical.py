@@ -15,9 +15,7 @@ Scale notes:
   convergence is detected by an order-insensitive edge-set fingerprint
   (count + sum of xxhash64), one tiny aggregate per round.
 - Node ids are strings; min == lexicographic min, deterministic across
-  partition counts.  An xxhash64-encoded numeric-rounds variant exists
-  (``numeric_rounds=True``) but measured SLOWER end-to-end (bench/cc_bench.py;
-  see connected_components for the numbers) and is off by default.
+  partition counts.
 """
 
 from __future__ import annotations
@@ -99,7 +97,6 @@ def connected_components(
     links: DataFrame,
     max_iter: int = 20,
     local_threshold: int = 1_000_000,
-    numeric_rounds: bool = False,
 ) -> DataFrame:
     """CANDIDATE_LINKS(a, b, ...) -> ENTITIES(entity_id, canonical_id).
 
@@ -123,23 +120,16 @@ def connected_components(
         if probe_n <= local_threshold:
             return _local_components(links.sparkSession, edges.collect())
 
-    if numeric_rounds:
-        numeric = _components_numeric(edges, max_iter)
-        if numeric is not None:
-            return numeric
-        # hash collision detected (p ~ n^2/2^64): fall back to exact
-        # string rounds below rather than risk merging two components.
-
-    # DEFAULT: string rounds.  groupBy-min on STRING ids means
-    # SortAggregate (var-length agg buffers disable hash aggregation) —
-    # measured and ACCEPTED: the numeric_rounds experiment (bench/cc_bench.py,
-    # 2M nodes / 3M edges, warmed, order-alternated) clocked the hashed
-    # variant at 52.2s vs 43.1s for strings, because its extra
-    # vertex-distinct, collision-check and representative-recovery passes
-    # are each proportional to the graph and together outweigh the
-    # per-round hash-vs-sort aggregate savings (~6 rounds at this
-    # diameter).  Sort-based aggregation also spills gracefully, and the
-    # edge set shrinks every round.  Numbers in BASELINE.md §Measured.
+    # String rounds.  groupBy-min on STRING ids means SortAggregate
+    # (var-length agg buffers disable hash aggregation) — measured and
+    # ACCEPTED: an xxhash64-encoded numeric-rounds variant (2M nodes / 3M
+    # edges, warmed, order-alternated) clocked 52.2s vs 43.1s for strings,
+    # because its extra vertex-distinct, collision-check and
+    # representative-recovery passes are each proportional to the graph
+    # and together outweigh the per-round hash-vs-sort aggregate savings
+    # (~6 rounds at this diameter).  Sort-based aggregation also spills
+    # gracefully, and the edge set shrinks every round.  Numbers in
+    # BASELINE.md §Measured — round 2.
     edges = edges.localCheckpoint()
     prev = _fingerprint(edges)
     for _ in range(max_iter):
@@ -153,66 +143,6 @@ def connected_components(
         F.greatest("src", "dst").alias("entity_id"), F.least("src", "dst").alias("canonical_id")
     )
     return orient.groupBy("entity_id").agg(F.min("canonical_id").alias("canonical_id"))
-
-
-def _components_numeric(edges: DataFrame, max_iter: int) -> DataFrame | None:
-    """Distributed rounds on xxhash64-encoded node ids.
-
-    Round 1 measured the string-keyed rounds as the slowest plan in the
-    repo: a var-length min() buffer downgrades every round's aggregation
-    to SortAggregate.  Hashing node ids to longs makes every round a
-    numeric HashAggregate; the lexicographic-min STRING representative the
-    twin/tests require is recovered afterwards with ONE string-min
-    aggregate per component (instead of one per round).
-
-    Correctness guard: xxhash64 must be injective over the actual vertex
-    set.  One tiny aggregate checks count(distinct id) == count(distinct
-    hash); on collision (p ~ n^2 / 2^64) returns None and the caller runs
-    the exact string rounds.
-    """
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .withColumn("h", F.xxhash64("id"))
-        .localCheckpoint()
-    )
-    chk = verts.agg(
-        F.count(F.lit(1)).alias("n"), F.countDistinct("h").alias("nh")
-    ).collect()[0]
-    if int(chk["n"]) != int(chk["nh"]):
-        return None
-
-    e = edges.select(
-        F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst")
-    ).localCheckpoint()
-    prev = _fingerprint(e)
-    for _ in range(max_iter):
-        e = small_star(large_star(e)).localCheckpoint()
-        cur = _fingerprint(e)
-        if cur == prev:
-            break
-        prev = cur
-
-    # Star forest on hashes: member -> component-min-HASH (min over the
-    # hash order, which is NOT the lexicographic string order — it is only
-    # a component KEY, never the emitted representative).
-    assign = (
-        e.select(F.greatest("src", "dst").alias("h"), F.least("src", "dst").alias("comp"))
-        .groupBy("h")
-        .agg(F.min("comp").alias("comp"))
-    )
-    members = assign.unionByName(
-        assign.select(F.col("comp").alias("h"), "comp").distinct()
-    )
-    named = members.join(verts, "h").select("id", "comp")
-    # THE one string aggregate: lexicographic-min member name per component.
-    reps = named.groupBy("comp").agg(F.min("id").alias("canonical_id"))
-    return (
-        named.join(reps, "comp")
-        .where(F.col("id") != F.col("canonical_id"))
-        .select(F.col("id").alias("entity_id"), "canonical_id")
-    )
 
 
 def canonicalize(df: DataFrame, mapping: DataFrame, col: str, broadcast: bool = True) -> DataFrame:

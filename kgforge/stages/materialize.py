@@ -192,7 +192,6 @@ def triples_from_packed(
 def triples_from_mentions(
     mentions: DataFrame,
     mapping: DataFrame,
-    broadcast_map: bool = True,
     prefilter_limit: int = 100_000,
     probe_rows: list | None = None,
 ) -> DataFrame:
@@ -236,7 +235,6 @@ def triples_from_mentions(
     return canonicalize_lexical(
         lexical,
         mapping,
-        broadcast_map=broadcast_map,
         prefilter_limit=prefilter_limit,
         probe_rows=probe_rows,
     )
@@ -245,7 +243,6 @@ def triples_from_mentions(
 def canonicalize_lexical(
     lexical: DataFrame,
     mapping: DataFrame,
-    broadcast_map: bool = True,
     prefilter_limit: int = 100_000,
     probe_rows: list | None = None,
 ) -> DataFrame:
@@ -259,7 +256,6 @@ def canonicalize_lexical(
     exactly what the batch path does after its lexical projection — which
     is why compaction output equals the batch pipeline's triples
     (tests/test_streaming_kg.py parity test)."""
-    bc = F.broadcast if broadcast_map else (lambda df: df)
     # One dictionary covering every obj that can participate in a
     # post-canonicalization collision: linked names (-> their canonical id)
     # plus the canonical ids themselves (-> identity).  A single broadcast
@@ -273,10 +269,10 @@ def canonicalize_lexical(
     # cap >= prefilter_limit + 1, see triples_from_packed) passes the rows
     # through so the same Spark job isn't run twice.
     if probe_rows is not None:
-        probe = probe_rows if broadcast_map else None
+        probe = probe_rows
     else:
-        probe = mapping.limit(prefilter_limit + 1).collect() if broadcast_map else None
-    small = probe is not None and len(probe) <= prefilter_limit
+        probe = mapping.limit(prefilter_limit + 1).collect()
+    small = len(probe) <= prefilter_limit
 
     if small:
         pairs = sorted(
@@ -299,7 +295,7 @@ def canonicalize_lexical(
             .distinct()
         )
 
-    j = lexical.join(bc(hot_dict), "obj", "left")
+    j = lexical.join(F.broadcast(hot_dict), "obj", "left")
     safe = j.where(F.col("_canon").isNull()).drop("_canon")
     hot_rows = j.where(F.col("_canon").isNotNull())
 

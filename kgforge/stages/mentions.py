@@ -11,8 +11,6 @@ Scale notes:
 - content_sha256 is computed JVM-side with the built-in ``sha2`` BEFORE the
   UDF and carried through (input_hint invariant), so the invariant check
   never depends on Python.
-- Salted repartition on (repo, lang) spreads the mega-repo across tasks
-  (north_rule: "salted repartition on repo+lang").
 """
 
 from __future__ import annotations
@@ -31,7 +29,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .. import constants, lexer, schemas
+from .. import lexer, schemas
 
 # Checkpoint-table schema for the packed mention stage (one row per file,
 # parallel kinds/names/lines/firsts arrays).  Module-level so
@@ -57,18 +55,7 @@ def with_content_sha(files: DataFrame) -> DataFrame:
     return files.withColumn("content_sha256", F.sha2(F.col("content"), 256))
 
 
-def salted(files: DataFrame, buckets: int = constants.SALT_BUCKETS) -> DataFrame:
-    """Spread skewed (repo, lang) groups across ``buckets`` tasks each —
-    for KEYED downstream stages (grouped writes, co-located joins).
-
-    The salt is a deterministic hash of (path, commit) — not rand() — so
-    plans are reproducible across retries and partition counts.
-    """
-    salt = F.pmod(F.xxhash64("path", "commit"), F.lit(buckets))
-    return files.repartition(F.col("repo"), F.col("lang"), salt)
-
-
-def extract_mentions_packed(files: DataFrame, repartition: bool = False) -> DataFrame:
+def extract_mentions_packed(files: DataFrame) -> DataFrame:
     """files(repo,path,commit,lang,content[,content_sha256]) -> packed
     mentions: ONE row per file with parallel kinds/names/lines arrays.
 
@@ -78,17 +65,14 @@ def extract_mentions_packed(files: DataFrame, repartition: bool = False) -> Data
     exploded checkpoint would be ~6x10^13 rows).  ``explode_mentions``
     restores the logical MENTIONS view JVM-side (inline, codegen).
 
-    No repartition by default: lexing is an embarrassingly-parallel map, so
-    scan splits already balance it and a pre-UDF shuffle would move the
-    ENTIRE corpus once more (measured 2x wall on the mention stage; at
-    100 TB it's a full extra pass over the input).  Skew salting belongs on
-    the keyed stages (the link self-join uses AQE skew-join; grouped writes
-    can use ``salted``), not on the map.
+    No repartition: lexing is an embarrassingly-parallel map, so scan
+    splits already balance it and a pre-UDF shuffle would move the ENTIRE
+    corpus once more (measured 2x wall on the mention stage; at 100 TB
+    it's a full extra pass over the input).  Skew handling belongs on the
+    keyed stages (the link self-join uses AQE skew-join), not on the map.
     """
     if "content_sha256" not in files.columns:
         files = with_content_sha(files)
-    if repartition:
-        files = salted(files)
 
     cols = ["repo", "path", "commit", "lang", "content_sha256", "content"]
     src = files.select(*cols)
@@ -150,6 +134,6 @@ def explode_mentions(packed: DataFrame) -> DataFrame:
     )
 
 
-def extract_mentions(files: DataFrame, repartition: bool = False) -> DataFrame:
+def extract_mentions(files: DataFrame) -> DataFrame:
     """files -> MENTIONS (exploded view; see extract_mentions_packed)."""
-    return explode_mentions(extract_mentions_packed(files, repartition=repartition))
+    return explode_mentions(extract_mentions_packed(files))

@@ -60,34 +60,6 @@ def test_canonicalize_identity_for_unmapped(spark):
     assert got == {"a", "q"}
 
 
-def test_numeric_and_string_rounds_agree(spark):
-    """The xxhash64-encoded rounds (HashAggregate) must emit exactly the
-    string rounds' (SortAggregate) mapping — same components, same
-    lexicographic-min representatives."""
-    pairs = (
-        [(f"c{i}", f"c{i+1}") for i in range(15)]          # one long chain
-        + [("hub", f"leaf{i}") for i in range(8)]          # one star
-        + [("p0", "p1"), ("p1", "p2"), ("p0", "p2")]       # one cycle
-    )
-    links = _links(spark, pairs)
-    num = {
-        r["entity_id"]: r["canonical_id"]
-        for r in connected_components(links, local_threshold=0, numeric_rounds=True).collect()
-    }
-    st = {
-        r["entity_id"]: r["canonical_id"]
-        for r in connected_components(links, local_threshold=0, numeric_rounds=False).collect()
-    }
-    assert num == st
-    assert len(num) == 25  # chain: 15 mapped, star: 8 (rep 'hub'), cycle: 2
-    # every representative is the lexicographic min of its component
-    comps: dict[str, set[str]] = {}
-    for k, v in num.items():
-        comps.setdefault(v, set()).add(k)
-    for rep, members in comps.items():
-        assert rep == min(members | {rep})
-
-
 def test_deterministic_across_partitioning(spark):
     pairs = [(f"v{i}", f"v{i+1}") for i in range(0, 40, 2)] + [("v1", "v2"), ("v5", "v6")]
     a = _cc(spark, pairs)

@@ -7,6 +7,7 @@ registered kg_* queries runs in tests/test_oracles.py like every query.)
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from kgforge.operators import codegraph
 
@@ -134,15 +135,19 @@ def test_census_aggs_plan_no_expand(spark, tiny_kg, kernel):
 
 
 def test_call_graph_packed_matches_strings_layout(spark, tiny_kg):
-    packed = {
-        (r.caller, r.callee): r.n_fns
-        for r in codegraph.call_graph(tiny_kg, layout="packed").collect()
-    }
+    """call_graph's packed 128-bit-key plan must equal the direct string
+    join + string-keyed aggregation it replaces."""
+    calls = tiny_kg.where(F.col("pred") == "calls").select(F.col("subj").alias("caller"), "obj")
+    defs = tiny_kg.where(F.col("pred") == "defines").select(F.col("subj").alias("callee"), "obj")
     strings = {
         (r.caller, r.callee): r.n_fns
-        for r in codegraph.call_graph(tiny_kg, layout="strings").collect()
+        for r in calls.join(defs, "obj")
+        .groupBy("caller", "callee")
+        .agg(F.count(F.lit(1)).alias("n_fns"))
+        .collect()
     }
-    assert packed == strings
+    packed = {(r.caller, r.callee): r.n_fns for r in codegraph.call_graph(tiny_kg).collect()}
+    assert strings and packed == strings
 
 
 def test_consumer_scan_prunes_pred_partitions(spark):

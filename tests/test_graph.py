@@ -32,11 +32,35 @@ def _sym(spark, und_pairs):
     return spark.createDataFrame(rows, "src string, dst string")
 
 
+def _bruteforce_kcore(und_pairs, k, rounds=None):
+    """Python reference peel: ``rounds`` synchronous removals of every
+    degree-<k node (None = to fixpoint); survivors with their degree."""
+    adj: dict[str, set[str]] = {}
+    for a, b in und_pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    done = 0
+    while rounds is None or done < rounds:
+        dead = {n for n, ns in adj.items() if len(ns) < k}
+        if not dead:
+            break
+        done += 1
+        for n in dead:
+            adj.pop(n)
+        for ns in adj.values():
+            ns.difference_update(dead)
+    return {n: len(ns) for n, ns in adj.items() if ns}
+
+
+def _kcore(edges, k, rounds):
+    from kgforge.operators.graph import kcore_peel
+
+    return {r["node"]: r["core_degree"] for r in kcore_peel(edges, k, rounds).collect()}
+
+
 def test_kcore_peel_matches_bruteforce(spark):
     """Fixed-round peel vs a Python reference peel on a graph with a
     planted 3-core (K4), a pendant chain, and a triangle hanging off it."""
-    from kgforge.operators.graph import kcore_peel
-
     und = [
         # K4 on a,b,c,d (3-core)
         ("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"), ("c", "d"),
@@ -48,40 +72,10 @@ def test_kcore_peel_matches_bruteforce(spark):
         # must NOT cascade (d keeps degree >= 2)
         ("d", "p"),
     ]
-    k, rounds = 2, 6
-
-    # brute-force peel
-    adj: dict[str, set[str]] = {}
-    for a, b in und:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    for _ in range(rounds):
-        dead = {n for n, ns in adj.items() if len(ns) < k}
-        if not dead:
-            break
-        for n in dead:
-            adj.pop(n)
-        for ns in adj.values():
-            ns.difference_update(dead)
-    want = {n: len(ns) for n, ns in adj.items() if ns}
-
-    got = {
-        r["node"]: r["core_degree"]
-        for r in kcore_peel(_sym(spark, und), k, rounds).collect()
-    }
-    assert got == want
+    got = _kcore(_sym(spark, und), 2, 6)
+    assert got == _bruteforce_kcore(und, 2, 6)
     assert "p" not in got  # pendant peeled
     assert "e" in got  # bridge node survives (degree exactly k)
-    got_delta = {
-        r["node"]: r["core_degree"]
-        for r in kcore_peel(_sym(spark, und), k, rounds, delta=True).collect()
-    }
-    assert got_delta == want
-    got_adj = {
-        r["node"]: r["core_degree"]
-        for r in kcore_peel(_sym(spark, und), k, rounds, delta=True, adjacency=True).collect()
-    }
-    assert got_adj == want
 
 
 def test_label_propagation_deterministic_and_total(spark):
@@ -165,46 +159,34 @@ def test_bfs_levels_frontier_multi_source_min(spark):
     assert got == {1: 0, 4: 0, 2: 1, 3: 1}
 
 
-def _random_sym_graph(spark, n_nodes=400, n_edges=2500, seed=13):
+def _random_und(n_nodes=400, n_edges=2500, seed=13):
     import random
-
-    from pyspark.sql import functions as F
 
     rng = random.Random(seed)
     rows = [
         (f"e{rng.randrange(n_nodes)}", f"e{rng.randrange(n_nodes)}") for _ in range(n_edges)
     ]
-    e = spark.createDataFrame([(a, b) for a, b in rows if a != b], "src string, dst string")
-    return e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    return [(a, b) for a, b in rows if a != b]
+
+
+def _random_sym_graph(spark, n_nodes=400, n_edges=2500, seed=13):
+    return _sym(spark, _random_und(n_nodes, n_edges, seed)).distinct()
 
 
 def test_partitioned_variants_match_broadcast_plans(spark):
     """The scale variants (shuffle-hash joins instead of per-round
-    broadcast builds — pagerank partitioned mode, kcore_peel partitioned,
-    bfs partitioned) must be output-identical to the broadcast plans;
-    only the physical exchange strategy differs.  These are the plans the
-    1M-node scaling bench (bench/graph_scaling.py) runs."""
+    broadcast builds — pagerank and bfs partitioned mode) must be
+    output-identical to the broadcast plans; only the physical exchange
+    strategy differs.  These are the plans the 1M-node scaling bench
+    (bench/graph_scaling.py) runs."""
     from pyspark.sql import functions as F
 
-    from kgforge.operators.graph import bfs_levels_frontier, kcore_peel, pagerank
+    from kgforge.operators.graph import bfs_levels_frontier, pagerank
 
     sym = _random_sym_graph(spark)
     a = {r.node: round(r.r, 6) for r in pagerank(sym, checkpoint=True).collect()}
-    b = {
-        r.node: round(r.r, 6)
-        for r in pagerank(sym, checkpoint=True, partitioned=True, checkpoint_every=2).collect()
-    }
+    b = {r.node: round(r.r, 6) for r in pagerank(sym, checkpoint=True, partitioned=True).collect()}
     assert a == b
-    ka = {(r.node, r.core_degree) for r in kcore_peel(sym, 3, 4).collect()}
-    kb = {(r.node, r.core_degree) for r in kcore_peel(sym, 3, 4, partitioned=True).collect()}
-    assert ka == kb
-    kc = {
-        (r.node, r.core_degree)
-        for r in kcore_peel(sym, 3, 4, partitioned=True, checkpoint_every=2).collect()
-    }
-    assert ka == kc
     seeds = sym.select(F.col("src").alias("node")).distinct().orderBy("node").limit(10)
     xa = {(r.node, r.dist) for r in bfs_levels_frontier(sym, seeds, 3).collect()}
     xb = {
@@ -214,80 +196,32 @@ def test_partitioned_variants_match_broadcast_plans(spark):
     assert xa == xb
 
 
-def test_kcore_anti_matches_and_round_is_exchange_free(spark):
-    """anti=True peels by broadcasting the per-round REMOVED set into two
-    anti-joins.  On a symmetrized graph removed = current-srcs \\ keep, so
-    the output must be set-identical to the keep semi-join plans; and a
-    peel round over hash(src)-laid-out edges must plan with ZERO shuffle
-    exchanges (both prunes map-side broadcast anti-joins, the degree agg
-    reusing the layout) — that is the whole point of the variant."""
+def test_kcore_peel_random_graph_matches_bruteforce(spark):
+    """On a random graph whose k=4 peel cascades for 5 rounds: a 2-round
+    budget must stop mid-cascade exactly where the reference does, and a
+    50-round budget (fixpoint early exit) must equal the reference
+    fixpoint."""
+    und = _random_und(n_edges=1200, seed=7)
+    sym = _sym(spark, und).distinct()
+    partial = _bruteforce_kcore(und, 4, 2)
+    fixpoint = _bruteforce_kcore(und, 4)
+    assert partial != fixpoint  # the 2-round budget really is cut short
+    assert _kcore(sym, 4, 2) == partial
+    assert _kcore(sym, 4, 50) == fixpoint
+
+
+def test_pinned_checkpoint_round_is_exchange_free(spark):
+    """_pinned_checkpoint is load-bearing for pagerank and
+    bfs_levels_frontier(partitioned=True): a PLAIN localCheckpoint under
+    AQE forgets the hash layout (AdaptiveSparkPlan's outputPartitioning
+    is unknown pre-final) and this very plan re-exchanges — measured.
+    Over a pinned hash(src) layout, a degree agg plus two broadcast
+    anti-joins must plan ZERO shuffle exchanges."""
     from pyspark.sql import functions as F
 
-    from kgforge.operators.graph import _pinned_checkpoint, kcore_peel
+    from kgforge.operators.graph import _pinned_checkpoint
 
     sym = _random_sym_graph(spark, seed=7)
-    ka = {(r.node, r.core_degree) for r in kcore_peel(sym, 3, 4).collect()}
-    kd = {(r.node, r.core_degree) for r in kcore_peel(sym, 3, 4, anti=True).collect()}
-    assert ka == kd
-    kd2 = {
-        (r.node, r.core_degree)
-        for r in kcore_peel(sym, 3, 4, anti=True, checkpoint_every=2).collect()
-    }
-    assert ka == kd2
-    # cumulative mode: base checkpointed once, per-round broadcast of the
-    # UNION of all removed sets, constant plan depth, fixpoint early-exit
-    kcum = {(r.node, r.core_degree) for r in kcore_peel(sym, 3, 4, cumulative=True).collect()}
-    assert ka == kcum
-    # layout variants are physical-only: even round-robin base (partial-agg
-    # degree rounds) and wider hash layout must not change the answer
-    keven = {
-        (r.node, r.core_degree)
-        for r in kcore_peel(sym, 3, 4, cumulative=True, layout="even").collect()
-    }
-    assert ka == keven
-    kp = {
-        (r.node, r.core_degree)
-        for r in kcore_peel(sym, 3, 4, cumulative=True, layout_partitions=16).collect()
-    }
-    assert ka == kp
-    ks = {
-        (r.node, r.core_degree)
-        for r in kcore_peel(sym, 3, 4, cumulative=True, layout="salted:4").collect()
-    }
-    assert ka == ks
-    # delta mode maintains a V-row degree table (decrements instead of
-    # E-row re-aggregation) — must be output-identical in every layout
-    kdelta = {(r.node, r.core_degree) for r in kcore_peel(sym, 3, 4, delta=True).collect()}
-    assert ka == kdelta
-    kdelta_ar = {
-        (r.node, r.core_degree)
-        for r in kcore_peel(sym, 3, 4, delta=True, layout="asread").collect()
-    }
-    assert ka == kdelta_ar
-    kdelta_s = {
-        (r.node, r.core_degree)
-        for r in kcore_peel(sym, 3, 4, delta=True, layout="salted:4").collect()
-    }
-    assert ka == kdelta_s
-    # adjacency-delta mode probes V-row neighbor lists instead of E rows
-    # per round — must be output-identical too
-    kdelta_adj = {
-        (r.node, r.core_degree)
-        for r in kcore_peel(sym, 3, 4, delta=True, adjacency=True).collect()
-    }
-    assert ka == kdelta_adj
-    # fixpoint early-exit must not change the answer vs a huge round budget
-    kcum_many = {
-        (r.node, r.core_degree) for r in kcore_peel(sym, 3, 50, cumulative=True).collect()
-    }
-    assert {(r.node, r.core_degree) for r in kcore_peel(sym, 3, 50).collect()} == kcum_many
-    assert {
-        (r.node, r.core_degree) for r in kcore_peel(sym, 3, 50, delta=True).collect()
-    } == kcum_many
-
-    # _pinned_checkpoint is load-bearing: a PLAIN localCheckpoint under
-    # AQE forgets the hash layout (AdaptiveSparkPlan's outputPartitioning
-    # is unknown pre-final), and this very plan re-exchanges — measured.
     laid = _pinned_checkpoint(sym.repartition("src"))
     removed = (
         laid.groupBy("src")

@@ -10,7 +10,7 @@ from kgforge.stages import embed, link, mentions
 
 @pytest.fixture(scope="module")
 def embedded(spark, small_files):
-    men = mentions.extract_mentions(small_files, repartition=False)
+    men = mentions.extract_mentions(small_files)
     return embed.embed_mentions(men).cache()
 
 

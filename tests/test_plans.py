@@ -79,7 +79,7 @@ def test_knn_bruteforce_is_broadcast_nested_loop(plans):
 def test_candidate_links_bucket_join_shape(spark, small_files):
     from kgforge.stages import embed, link, mentions
 
-    men = mentions.extract_mentions(small_files, repartition=False)
+    men = mentions.extract_mentions(small_files)
     links = link.candidate_links(embed.embed_mentions(men))
     p = plan_of(links)
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
@@ -314,6 +314,19 @@ def test_curation_plans_hash_agg_broadcast_only(plans):
     ccnet = plans("ccnet_ppl")
     assert "BroadcastHashJoin" in ccnet
     assert "SortMergeJoin" not in ccnet
+
+
+def test_ccnet_shuffle_model_matches_broadcast(spark, sf_dir):
+    """The open-vocabulary valve (model tables through shuffle-hash joins
+    instead of broadcasts) changes only the physical plan: its rows must
+    equal the broadcast path's, and the valve must really switch joins."""
+    from kgforge.operators.curation import _tok_base, ccnet_scores
+
+    base = _tok_base(spark, sf_dir)
+    shuffled = ccnet_scores(base, broadcast_model=False)
+    assert "ShuffledHashJoin" in plan_of(shuffled)
+    want = sorted(tuple(r) for r in ccnet_scores(base).collect())
+    assert want and sorted(tuple(r) for r in shuffled.collect()) == want
 
 
 def test_segment_dedup_plan_shape(plans):
