@@ -3,14 +3,8 @@ call-graph resolution, API fan-in, unresolved-import census, cross-repo
 duplicate definitions — the queries a materialized triple graph exists
 to serve.
 
-Methodology is bench/scaling.py's, inherited verbatim: the same job runs
-at two parallelism levels (default local[2] vs local[8] — both inside
-this host's linear memory-bandwidth region) over the SAME
-pre-materialized triple parquet, each pair in fresh JVMs, paired
-back-to-back so host-steal windows hit both levels or neither; the gate
-statistic is the paired-series median efficiency per kernel.  Exact
-count + bit_xor(xxhash64(...)) checksums must be identical at both
-levels.
+Methodology (paired fresh-JVM legs, N vs 4N): bench/paired.py.  Exact
+count + bit_xor(xxhash64(...)) checksums must be identical at every leg.
 
 INPUT SHAPE: the pipeline's own synthetic corpus draws its symbols from
 a FIXED 60-name pool, so at 10^5+ files every symbol is called and
@@ -38,14 +32,12 @@ Results -> BENCH_SCALING_CODEGRAPH.json, summarized in BASELINE.md.
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
-import statistics
-import subprocess
 import sys
 import tempfile
-import time
+
+import paired
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO_ROOT not in sys.path:
@@ -143,40 +135,30 @@ def synth_triples(spark, files: int):
     )
 
 
-def _checksum(df, cols):
-    from pyspark.sql import functions as F
-
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"bit_xor(xxhash64({', '.join(cols)}))").alias("sig"),
-    ).first()
-    return int(row["n"]), int(row["sig"] or 0)
-
-
 def _run_kernel(spark, name: str, triples):
     from kgforge.operators import codegraph as CG
 
     if name == "call_graph":
-        return _checksum(CG.call_graph(triples), ["caller", "callee", "n_fns"])
+        return paired.checksum(CG.call_graph(triples), ["caller", "callee", "n_fns"])
     if name == "api_fanin":
-        return _checksum(CG.api_fanin(triples, k=FANIN_K), ["obj", "n_callers", "n_defs"])
+        return paired.checksum(CG.api_fanin(triples, k=FANIN_K), ["obj", "n_callers", "n_defs"])
     if name == "unresolved_imports":
-        return _checksum(CG.unresolved_imports(triples), ["obj", "n_files", "n_repos"])
+        return paired.checksum(CG.unresolved_imports(triples), ["obj", "n_files", "n_repos"])
     if name == "xrepo_dup_defs":
-        return _checksum(CG.xrepo_dup_defs(triples), ["obj", "n_repos", "n_files"])
+        return paired.checksum(CG.xrepo_dup_defs(triples), ["obj", "n_repos", "n_files"])
     if name == "module_deps":
-        return _checksum(
+        return paired.checksum(
             CG.module_deps(triples), ["src_repo", "dst_repo", "n_imports", "n_modules"]
         )
     if name == "dead_defs":
-        return _checksum(CG.dead_defs(triples), ["repo", "n_defs", "n_dead", "dead_frac"])
+        return paired.checksum(CG.dead_defs(triples), ["repo", "n_defs", "n_dead", "dead_frac"])
     if name == "impact_radius":
         # end-to-end blast radius (round-4 judge ask #6: its reverse-edge
         # + min-hop shape had no paired artifact of its own): packed
         # call-graph build + 3-hop reverse BFS from the ~10% of files
         # whose index ends in 0 (subjects are "...f_<i>.py", so the LIKE
         # seed rule is engine-portable and deterministic)
-        return _checksum(
+        return paired.checksum(
             CG.impact_radius(triples, seed_pattern="%0.py", hops=3), ["file", "hop"]
         )
     if name == "call_scc":
@@ -191,7 +173,7 @@ def _run_kernel(spark, name: str, triples):
         edges = CG.call_graph(triples).select(
             F.col("caller").alias("src_repo"), F.col("callee").alias("dst_repo")
         )
-        return _checksum(CG.scc_labels(edges), ["node", "scc_id"])
+        return paired.checksum(CG.scc_labels(edges), ["node", "scc_id"])
     raise ValueError(name)
 
 
@@ -213,31 +195,11 @@ def worker(cpus: int, triples_dir: str, kernels: list[str]) -> None:
         # a limit()-slice warm-up does NOT compile the full-input plan
         # shapes (CollectLimit plans differently) and was measured
         # insufficient (api_fanin 0.72 median under it vs ~1.0 warm).
-        walls = []
-        rows = sig = None
-        for _ in range(2):
-            t0 = time.time()
-            rows, sig = _run_kernel(spark, name, triples)
-            walls.append(round(time.time() - t0, 3))
-            release_caches()
-        result["kernels"][name] = {
-            "secs": min(walls), "walls": walls, "rows": rows, "sig": sig,
-        }
+        secs, (rows, sig), walls = paired.best_of(
+            2, lambda _: _run_kernel(spark, name, triples), lambda _: release_caches()
+        )
+        result["kernels"][name] = {"secs": secs, "walls": walls, "rows": rows, "sig": sig}
     print(json.dumps(result))
-
-
-def _spawn(cpus: int, triples_dir: str, kernels: list[str], tmp_root, thread_env) -> dict:
-    log_path = tempfile.mktemp(prefix=f"kgcgscale{cpus}_", suffix=".log", dir=tmp_root)
-    cmd = [
-        sys.executable, __file__, "--worker", str(cpus), triples_dir,
-        "--kernels", ",".join(kernels),
-    ]
-    with open(log_path, "w") as log:
-        subprocess.run(cmd, stdout=log, stderr=subprocess.STDOUT, check=True,
-                       env={**os.environ, **thread_env})
-    with open(log_path) as log:
-        line = [ln for ln in log.read().splitlines() if ln.lstrip().startswith('{"cpus"')][-1]
-    return json.loads(line.lstrip())
 
 
 def materialize_triples(files: int, tmp_root) -> str:
@@ -253,16 +215,10 @@ def materialize_triples(files: int, tmp_root) -> str:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    ap = paired.parser(5, os.path.join(_REPO_ROOT, "BENCH_SCALING_CODEGRAPH.json"))
     ap.add_argument("--files", type=int, default=300_000)
-    ap.add_argument("--cores", default="2,8")
-    ap.add_argument("--repeats", type=int, default=5)
-    ap.add_argument("--target", type=float, default=0.8)
     ap.add_argument("--kernels", default=",".join(ALL_KERNELS))
     ap.add_argument("--triples-dir", default=None, help="reuse a materialized triple parquet")
-    ap.add_argument("--worker", type=int, default=0)
-    ap.add_argument("--out", default=os.path.join(_REPO_ROOT, "BENCH_SCALING_CODEGRAPH.json"))
-    ap.add_argument("rest", nargs="*")
     args = ap.parse_args()
     kernels = [k for k in args.kernels.split(",") if k]
 
@@ -270,54 +226,14 @@ def main() -> None:
         worker(args.worker, args.rest[0], kernels)
         return
 
-    if os.path.isdir("/dev/shm") and "KGFORGE_LOCAL_DIR" not in os.environ:
-        base = tempfile.mkdtemp(prefix="kgcgscale_shm_", dir="/dev/shm")
-        os.environ["KGFORGE_LOCAL_DIR"] = os.path.join(base, "local")
-    tmp_base = os.environ.get("KGFORGE_LOCAL_DIR")
-    tmp_root = os.path.dirname(tmp_base) if tmp_base else None
-
+    tmp_root = paired.tmpfs_root()
     triples_dir = args.triples_dir or materialize_triples(args.files, tmp_root)
 
     lo, hi = (int(c) for c in args.cores.split(","))
-    ratio = hi / lo
-    thread_env = {
-        "OMP_NUM_THREADS": "1",
-        "OPENBLAS_NUM_THREADS": "1",
-        "MKL_NUM_THREADS": "1",
-        "ARROW_NUM_THREADS": "1",
-    }
-
-    series = []
-    for rep in range(args.repeats):
-        got_lo = _spawn(lo, triples_dir, kernels, tmp_root, thread_env)
-        got_hi = _spawn(hi, triples_dir, kernels, tmp_root, thread_env)
-        pair: dict = {}
-        for k in kernels:
-            a, b = got_lo["kernels"][k], got_hi["kernels"][k]
-            assert a["rows"] == b["rows"] and a["sig"] == b["sig"], (
-                f"nondeterministic {k}: {a} vs {b}"
-            )
-            pair[k] = {
-                f"local{lo}_secs": a["secs"],
-                f"local{hi}_secs": b["secs"],
-                "rows": a["rows"],
-                "eff": round((a["secs"] / b["secs"]) / ratio, 3),
-            }
-        series.append(pair)
-        print(json.dumps({"pair": rep + 1, **pair}), flush=True)
-
-    summary = {}
-    for k in kernels:
-        effs = [p[k]["eff"] for p in series]
-        summary[k] = {
-            "median_eff": round(statistics.median(effs), 3),
-            "windows_passing": sum(1 for e in effs if e >= args.target),
-            "best_eff": max(effs),
-            f"local{lo}_min_secs": min(p[k][f"local{lo}_secs"] for p in series),
-            f"local{hi}_min_secs": min(p[k][f"local{hi}_secs"] for p in series),
-        }
-
-    out = {
+    series = paired.run_pairs(
+        __file__, [triples_dir, "--kernels", ",".join(kernels)], lo, hi, args.repeats, tmp_root
+    )
+    paired.write(args.out, {
         "files": args.files,
         "cores": [lo, hi],
         "kernels": kernels,
@@ -336,12 +252,10 @@ def main() -> None:
             "whole-stage-codegen JIT, run 2 is the engine); "
             "exact count+bit_xor(xxhash64) checksums identical at both levels"
         ),
-        "pairs": series,
-        "summary": summary,
-    }
-    with open(args.out, "w") as f:
-        json.dump(out, f, indent=2)
-    print(json.dumps({"summary": summary}), flush=True)
+        "series": series,
+        "summary": paired.summarize(series, lo, hi, args.target),
+        "target": args.target,
+    })
 
 
 if __name__ == "__main__":

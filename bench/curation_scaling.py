@@ -1,12 +1,7 @@
 """Scaling evidence for the CURATION operator family (gopher_repetition,
 dsir_importance, token_entropy) over a large synthetic documents corpus.
 
-Methodology is bench/scaling.py's, inherited verbatim: the same job at
-two parallelism levels (default local[2] vs local[8] — inside this
-host's linear memory-bandwidth region, see bench/scaling.py) over the
-SAME pre-materialized parquet, fresh JVM per level, PAIRED back-to-back
-windows, single-threaded BLAS, tmpfs spill dirs; gate = paired-series
-median efficiency.
+Methodology (paired fresh-JVM legs, N vs 4N): bench/paired.py.
 
 These kernels are the family's scale-shape thesis in miniature: one
 explode -> two-level hash aggregate with map-side combine, doc-level
@@ -41,14 +36,13 @@ Results -> BENCH_SCALING_CURATION.json, summarized in BASELINE.md.
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
-import statistics
-import subprocess
 import sys
 import tempfile
 import time
+
+import paired
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO_ROOT not in sys.path:
@@ -297,33 +291,31 @@ def _stage_df(spark, name: str, sf_dir: str):
     raise ValueError(name)
 
 
-def _signature(spark, name: str, df):
-    from pyspark.sql import functions as F
-
-    if name == "gopher_repetition":
-        sig_expr = "bit_xor(xxhash64(doc_id, top2gram_frac, dup5gram_frac, verdict))"
-    elif name == "dsir_importance":
-        sig_expr = "bit_xor(xxhash64(doc_id, round(weight, 1)))"
-    elif name == "token_entropy":
-        sig_expr = "bit_xor(xxhash64(doc_id, round(entropy, 1)))"
-    elif name in ("ccnet_ppl", "ccnet_ppl_openvocab"):
-        sig_expr = "bit_xor(xxhash64(doc_id, n_bigrams, round(avg_logprob, 1), ppl_bucket))"
-    elif name == "segment_dedup":
-        # fully deterministic across partitionings: integer counts and a
-        # rewrite string uniquely determined by (global dup set, doc order)
-        sig_expr = "bit_xor(xxhash64(doc_id, n_seg, n_kept, text_clean))"
-    elif name in ("minhash_near_dup_pairs", "minhash_near_dup_pairs_fast"):
-        # pair set is exactly deterministic (band equality + exact verify);
-        # jaccard is one int/int division, rounded — no float-order term
-        sig_expr = "bit_xor(xxhash64(doc_a, doc_b, jaccard))"
-    else:  # stage pseudo-kernels: already a one-row count
-        row = df.first()
-        return int(row[0]), 0
-    row = df.agg(F.count(F.lit(1)).alias("n"), F.expr(sig_expr).alias("sig")).first()
-    return int(row["n"]), int(row["sig"] or 0)
+# checksum columns per kernel: integer and string outputs hash exactly,
+# float SUMS (partial order varies with partitioning) hash rounded
+_SIG_COLS = {
+    "gopher_repetition": ["doc_id", "top2gram_frac", "dup5gram_frac", "verdict"],
+    "dsir_importance": ["doc_id", "round(weight, 1)"],
+    "token_entropy": ["doc_id", "round(entropy, 1)"],
+    "ccnet_ppl": ["doc_id", "n_bigrams", "round(avg_logprob, 1)", "ppl_bucket"],
+    "ccnet_ppl_openvocab": ["doc_id", "n_bigrams", "round(avg_logprob, 1)", "ppl_bucket"],
+    # fully deterministic across partitionings: integer counts and a
+    # rewrite string uniquely determined by (global dup set, doc order)
+    "segment_dedup": ["doc_id", "n_seg", "n_kept", "text_clean"],
+    # pair set is exactly deterministic (band equality + exact verify);
+    # jaccard is one int/int division, rounded — no float-order term
+    "minhash_near_dup_pairs": ["doc_a", "doc_b", "jaccard"],
+    "minhash_near_dup_pairs_fast": ["doc_a", "doc_b", "jaccard"],
+}
 
 
-def worker(cpus: int, corpus_dir: str, warm_dir: str) -> None:
+def _signature(name: str, df):
+    if name not in _SIG_COLS:  # stage pseudo-kernels: already a one-row count
+        return int(df.first()[0]), 0
+    return paired.checksum(df, _SIG_COLS[name])
+
+
+def worker(cpus: int, corpus_dir: str, warm_dir: str, kernels: list[str]) -> None:
     import kgforge.operators as ops
     from kgforge.cachectl import release_caches
     from kgforge.operators import registry
@@ -332,8 +324,6 @@ def worker(cpus: int, corpus_dir: str, warm_dir: str) -> None:
     ops.load_all()
     spark = build_session(f"kgforge-cscale-{cpus}", master=f"local[{cpus}]")
     spark.read.parquet(f"{corpus_dir}/documents.parquet").count()  # scan warm-up
-
-    kernels = os.environ.get("KGF_CSCALE_KERNELS", ",".join(KERNELS)).split(",")
 
     def build(name, sf_dir):
         if name in STAGE_KERNELS:
@@ -356,24 +346,11 @@ def worker(cpus: int, corpus_dir: str, warm_dir: str) -> None:
         build(name, warm_dir).write.format("noop").mode("overwrite").save()
         release_caches()
         t0 = time.time()
-        n, sig = _signature(spark, name, build(name, corpus_dir))
+        n, sig = _signature(name, build(name, corpus_dir))
         secs = time.time() - t0
         release_caches()
         result["kernels"][name] = {"secs": round(secs, 3), "rows": n, "sig": sig}
     print(json.dumps(result))
-
-
-def _spawn(cpus: int, corpus_dir: str, warm_dir: str, tmp_root, thread_env) -> dict:
-    log_path = tempfile.mktemp(prefix=f"kgcscale{cpus}_", suffix=".log", dir=tmp_root)
-    cmd = [sys.executable, __file__, "--worker", str(cpus), corpus_dir, warm_dir]
-    with open(log_path, "w") as log:
-        subprocess.run(
-            cmd, stdout=log, stderr=subprocess.STDOUT, check=True,
-            env={**os.environ, **thread_env},
-        )
-    with open(log_path) as log:
-        line = [ln for ln in log.read().splitlines() if ln.lstrip().startswith('{"cpus"')][-1]
-    return json.loads(line.lstrip())
 
 
 def materialize_corpus(docs: int, tmp_root, vocab: int = 400) -> tuple[str, str]:
@@ -399,73 +376,28 @@ def materialize_corpus(docs: int, tmp_root, vocab: int = 400) -> tuple[str, str]
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    ap = paired.parser(3, os.path.join(_REPO_ROOT, "BENCH_SCALING_CURATION.json"))
     ap.add_argument("--docs", type=int, default=300_000)
     ap.add_argument("--vocab", type=int, default=400,
                     help="synth vocabulary size (400 = the saturating default; "
                          "~docs = the ccnet open-vocabulary corpus)")
-    ap.add_argument("--cores", default="2,8")
     ap.add_argument("--kernels", default=",".join(KERNELS))
-    ap.add_argument("--repeats", type=int, default=3)
-    ap.add_argument("--target", type=float, default=0.8)
-    ap.add_argument("--worker", type=int, default=0)
-    ap.add_argument("--out", default=os.path.join(_REPO_ROOT, "BENCH_SCALING_CURATION.json"))
-    ap.add_argument("rest", nargs="*")
     args = ap.parse_args()
+    kernels = args.kernels.split(",")
 
     if args.worker:
-        worker(args.worker, args.rest[0], args.rest[1])
+        worker(args.worker, args.rest[0], args.rest[1], kernels)
         return
 
-    if os.path.isdir("/dev/shm") and "KGFORGE_LOCAL_DIR" not in os.environ:
-        base = tempfile.mkdtemp(prefix="kgcscale_shm_", dir="/dev/shm")
-        os.environ["KGFORGE_LOCAL_DIR"] = os.path.join(base, "local")
-    tmp_base = os.environ.get("KGFORGE_LOCAL_DIR")
-    tmp_root = os.path.dirname(tmp_base) if tmp_base else None
-
+    tmp_root = paired.tmpfs_root()
     corpus_dir, warm_dir = materialize_corpus(args.docs, tmp_root, vocab=args.vocab)
 
     lo, hi = (int(c) for c in args.cores.split(","))
-    ratio = hi / lo
-    kernels = args.kernels.split(",")
-    thread_env = {
-        "KGF_CSCALE_KERNELS": args.kernels,
-        "OMP_NUM_THREADS": "1",
-        "OPENBLAS_NUM_THREADS": "1",
-        "MKL_NUM_THREADS": "1",
-        "ARROW_NUM_THREADS": "1",
-    }
-
-    series = []
-    for rep in range(args.repeats):
-        got_lo = _spawn(lo, corpus_dir, warm_dir, tmp_root, thread_env)
-        got_hi = _spawn(hi, corpus_dir, warm_dir, tmp_root, thread_env)
-        pair: dict = {}
-        for k in kernels:
-            a, b = got_lo["kernels"][k], got_hi["kernels"][k]
-            assert a["rows"] == b["rows"] and a["sig"] == b["sig"], (
-                f"nondeterministic {k}: {a} vs {b}"
-            )
-            pair[k] = {
-                f"local{lo}_secs": a["secs"],
-                f"local{hi}_secs": b["secs"],
-                "eff": round((a["secs"] / b["secs"]) / ratio, 3),
-            }
-        series.append(pair)
-        print(json.dumps({"pair": rep + 1, **pair}), flush=True)
-
-    summary = {}
-    for k in kernels:
-        effs = [p[k]["eff"] for p in series]
-        summary[k] = {
-            "median_eff": round(statistics.median(effs), 3),
-            "windows_passing": sum(1 for e in effs if e >= args.target),
-            "best_eff": max(effs),
-            f"local{lo}_min_secs": min(p[k][f"local{lo}_secs"] for p in series),
-            f"local{hi}_min_secs": min(p[k][f"local{hi}_secs"] for p in series),
-        }
-
-    out = {
+    series = paired.run_pairs(
+        __file__, [corpus_dir, warm_dir, "--kernels", args.kernels], lo, hi, args.repeats,
+        tmp_root,
+    )
+    paired.write(args.out, {
         "docs": args.docs,
         "vocab": args.vocab,
         "cores": [lo, hi],
@@ -478,12 +410,9 @@ def main() -> None:
             "count + rounded signature; gate = paired median"
         ),
         "series": series,
-        "summary": summary,
+        "summary": paired.summarize(series, lo, hi, args.target),
         "target": args.target,
-    }
-    with open(args.out, "w") as f:
-        json.dump(out, f, indent=1)
-    print(json.dumps({"summary": summary}))
+    })
 
 
 if __name__ == "__main__":

@@ -3,13 +3,7 @@
 label propagation, and BFS levels over the REAL 1M-file entity graph —
 not the sf-toy concept graphs the oracle gate uses.
 
-Methodology is bench/scaling.py's, inherited verbatim: the same job runs
-at two parallelism levels (default local[2] vs local[8] — both inside
-this host's linear memory-bandwidth region, see bench/scaling.py's
-docstring for why not 8/32) over the SAME pre-materialized edge parquet,
-each pair in fresh JVMs, paired back-to-back so host-steal windows hit
-both levels or neither; the gate statistic is the paired-series median
-efficiency per kernel.  Single-threaded BLAS, tmpfs spill dirs.
+Methodology (paired fresh-JVM legs, N vs 4N): bench/paired.py.
 
 The edge table is materialized ONCE by running the full KG pipeline on a
 deterministic synthetic corpus at local[32] and symmetrizing its triple
@@ -19,7 +13,7 @@ not a synthetic uniform graph.
 
 Determinism across parallelism levels is enforced per kernel: exact
 kernels (kcore / label_propagation / bfs) must produce identical
-count + bit_xor(xxhash64(...)) checksums at both levels; pagerank
+count + bit_xor(xxhash64(...)) checksums at every leg; pagerank
 checks node count (float partial-sum order varies with partitioning, so
 its rank values are compared by the oracle gate at sf scale instead).
 
@@ -32,14 +26,13 @@ Results -> BENCH_SCALING_GRAPH.json, summarized in BASELINE.md.
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
-import statistics
-import subprocess
 import sys
 import tempfile
 import time
+
+import paired
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO_ROOT not in sys.path:
@@ -67,16 +60,6 @@ BFS_HOPS = 3
 BFS_SEEDS = 100
 
 
-def _checksum(df, cols):
-    from pyspark.sql import functions as F
-
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"bit_xor(xxhash64({', '.join(cols)}))").alias("sig"),
-    ).first()
-    return int(row["n"]), int(row["sig"] or 0)
-
-
 def _run_kernel(spark, name: str, edges):
     """Returns (rows, checksum-or-None, stage-walls-or-None); forces full
     execution."""
@@ -93,13 +76,15 @@ def _run_kernel(spark, name: str, edges):
     if name == "pagerank_stages":
         return _pagerank_stage_walls(edges)
     if name == "kcore":
-        return (*_checksum(G.kcore_peel(edges, KCORE_K, KCORE_ROUNDS), ["node", "core_degree"]), None)
+        peel = G.kcore_peel(edges, KCORE_K, KCORE_ROUNDS)
+        return (*paired.checksum(peel, ["node", "core_degree"]), None)
     if name == "label_propagation":
-        return (*_checksum(G.label_propagation(edges, LP_ITERS, checkpoint=True), ["node", "lab"]), None)
+        labels = G.label_propagation(edges, LP_ITERS, checkpoint=True)
+        return (*paired.checksum(labels, ["node", "lab"]), None)
     if name in ("bfs_levels", "bfs_part"):
         seeds = edges.select(F.col("src").alias("node")).distinct().orderBy("node").limit(BFS_SEEDS)
         return (
-            *_checksum(
+            *paired.checksum(
                 G.bfs_levels_frontier(edges, seeds, BFS_HOPS, partitioned=(name == "bfs_part")),
                 ["node", "dist"],
             ),
@@ -181,32 +166,14 @@ def worker(cpus: int, edges_dir: str, kernels: list[str]) -> None:
         # execution.  A long-lived cluster executor amortizes all of it;
         # the warm (second) run is the engine's scaling property, and the
         # min also absorbs one-sided host-steal windows.
-        walls = []
-        rows = sig = stages = None
-        for _ in range(2):
-            t0 = time.time()
-            rows, sig, stages = _run_kernel(spark, name, edges)
-            walls.append(round(time.time() - t0, 3))
-            release_caches()
-        entry = {"secs": min(walls), "walls": walls, "rows": rows, "sig": sig}
+        secs, (rows, sig, stages), walls = paired.best_of(
+            2, lambda _: _run_kernel(spark, name, edges), lambda _: release_caches()
+        )
+        entry = {"secs": secs, "walls": walls, "rows": rows, "sig": sig}
         if stages:
             entry["stages"] = stages
         result["kernels"][name] = entry
     print(json.dumps(result))
-
-
-def _spawn(cpus: int, edges_dir: str, kernels: list[str], tmp_root, thread_env) -> dict:
-    log_path = tempfile.mktemp(prefix=f"kggscale{cpus}_", suffix=".log", dir=tmp_root)
-    cmd = [
-        sys.executable, __file__, "--worker", str(cpus), edges_dir,
-        "--kernels", ",".join(kernels),
-    ]
-    with open(log_path, "w") as log:
-        subprocess.run(cmd, stdout=log, stderr=subprocess.STDOUT, check=True,
-                       env={**os.environ, **thread_env})
-    with open(log_path) as log:
-        line = [ln for ln in log.read().splitlines() if ln.lstrip().startswith('{"cpus"')][-1]
-    return json.loads(line.lstrip())
 
 
 def materialize_edges(files: int, tmp_root) -> str:
@@ -231,16 +198,10 @@ def materialize_edges(files: int, tmp_root) -> str:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    ap = paired.parser(5, os.path.join(_REPO_ROOT, "BENCH_SCALING_GRAPH.json"))
     ap.add_argument("--files", type=int, default=1_000_000)
-    ap.add_argument("--cores", default="2,8")
-    ap.add_argument("--repeats", type=int, default=5)
-    ap.add_argument("--target", type=float, default=0.8)
     ap.add_argument("--kernels", default=",".join(ALL_KERNELS))
     ap.add_argument("--edges-dir", default=None, help="reuse a materialized edge parquet")
-    ap.add_argument("--worker", type=int, default=0)
-    ap.add_argument("--out", default=os.path.join(_REPO_ROOT, "BENCH_SCALING_GRAPH.json"))
-    ap.add_argument("rest", nargs="*")
     args = ap.parse_args()
     kernels = [k for k in args.kernels.split(",") if k]
 
@@ -248,62 +209,28 @@ def main() -> None:
         worker(args.worker, args.rest[0], kernels)
         return
 
-    if os.path.isdir("/dev/shm") and "KGFORGE_LOCAL_DIR" not in os.environ:
-        base = tempfile.mkdtemp(prefix="kggscale_shm_", dir="/dev/shm")
-        os.environ["KGFORGE_LOCAL_DIR"] = os.path.join(base, "local")
-    tmp_base = os.environ.get("KGFORGE_LOCAL_DIR")
-    tmp_root = os.path.dirname(tmp_base) if tmp_base else None
-
+    tmp_root = paired.tmpfs_root()
     edges_dir = args.edges_dir or materialize_edges(args.files, tmp_root)
 
     lo, hi = (int(c) for c in args.cores.split(","))
-    ratio = hi / lo
-    thread_env = {
-        "OMP_NUM_THREADS": "1",
-        "OPENBLAS_NUM_THREADS": "1",
-        "MKL_NUM_THREADS": "1",
-        "ARROW_NUM_THREADS": "1",
-    }
 
-    series = []
-    for rep in range(args.repeats):
-        got_lo = _spawn(lo, edges_dir, kernels, tmp_root, thread_env)
-        got_hi = _spawn(hi, edges_dir, kernels, tmp_root, thread_env)
-        pair: dict = {}
-        for k in kernels:
-            a, b = got_lo["kernels"][k], got_hi["kernels"][k]
-            assert a["rows"] == b["rows"] and a["sig"] == b["sig"], (
-                f"nondeterministic {k}: {a} vs {b}"
-            )
-            pair[k] = {
-                f"local{lo}_secs": a["secs"],
-                f"local{hi}_secs": b["secs"],
-                "eff": round((a["secs"] / b["secs"]) / ratio, 3),
+    def stage_effs(_, a, b):
+        if not a.get("stages"):
+            return {}
+        return {"stages": {
+            s: {
+                f"local{lo}": a["stages"][s],
+                f"local{hi}": b["stages"][s],
+                "eff": round((a["stages"][s] / max(b["stages"][s], 1e-9)) / (hi / lo), 3),
             }
-            if a.get("stages"):
-                pair[k]["stages"] = {
-                    s: {
-                        f"local{lo}": a["stages"][s],
-                        f"local{hi}": b["stages"][s],
-                        "eff": round((a["stages"][s] / max(b["stages"][s], 1e-9)) / ratio, 3),
-                    }
-                    for s in a["stages"]
-                }
-        series.append(pair)
-        print(json.dumps({"pair": rep + 1, **pair}), flush=True)
+            for s in a["stages"]
+        }}
 
-    summary = {}
-    for k in kernels:
-        effs = [p[k]["eff"] for p in series]
-        summary[k] = {
-            "median_eff": round(statistics.median(effs), 3),
-            "windows_passing": sum(1 for e in effs if e >= args.target),
-            "best_eff": max(effs),
-            f"local{lo}_min_secs": min(p[k][f"local{lo}_secs"] for p in series),
-            f"local{hi}_min_secs": min(p[k][f"local{hi}_secs"] for p in series),
-        }
-
-    out = {
+    series = paired.run_pairs(
+        __file__, [edges_dir, "--kernels", ",".join(kernels)], lo, hi, args.repeats, tmp_root,
+        extra=stage_effs,
+    )
+    paired.write(args.out, {
         "files": args.files,
         "cores": [lo, hi],
         "kernels": kernels,
@@ -322,12 +249,9 @@ def main() -> None:
             "exact kernels checksum-equal across levels; gate = paired median"
         ),
         "series": series,
-        "summary": summary,
+        "summary": paired.summarize(series, lo, hi, args.target),
         "target": args.target,
-    }
-    with open(args.out, "w") as f:
-        json.dump(out, f, indent=1)
-    print(json.dumps({"summary": summary}))
+    })
 
 
 if __name__ == "__main__":

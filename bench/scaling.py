@@ -1,20 +1,10 @@
 """Scaling-efficiency evidence (north_rule: files/sec throughput scaling
 efficiency >= 0.8 from N to 4N executors).
 
-No real cluster exists in this sandbox, so the same pipeline job runs at
-two parallelism levels — local[2] (N) and local[8] (4N) — over the SAME
-pre-materialized parquet input, each in a fresh JVM (subprocess).
-Efficiency = (t_N / t_4N) / 4.
-
-METHODOLOGY (round 2, per round-1 advice): the headline statistic is
-PAIRED — each invocation runs local[2] then local[8] back-to-back and
-yields one efficiency number; the series of per-pair efficiencies is
-reported with its median and the count of windows clearing the target.
-``pass`` is tied to the paired statistic (>= 3 windows >= target, or the
-median >= target) — never to minima assembled across different
-invocations (those are still reported, labeled, as the uncontended-cost
-estimate, because this Firecracker host shows intermittent multi-minute
-noise windows where identical jobs vary up to 3x).
+The pipeline job from files to triples runs paired at N and 4N in fresh
+JVMs over one pre-materialized parquet input — the methodology and its
+reasons are bench/paired.py's.  ``pass`` is tied to the paired statistic
+(>= 3 windows >= target, or the median >= target).
 
 Each worker JVM first runs a small WARM-UP pipeline (2k files, throwaway
 run root, excluded from timing): whole-stage codegen compilation, JIT,
@@ -23,38 +13,23 @@ long-lived cluster executor amortizes over hours — timing them would
 measure JVM startup, not engine scaling.  The warm-up is identical at
 both parallelism levels, so it cannot bias the ratio.
 
-local[2]/local[8] rather than 8/32: this VM's ~32 vCPUs sit on a host
-whose measured memory bandwidth saturates for Spark's string-heavy
-stages somewhere above ~8-12 concurrent task threads (a pure-CPU probe
-still scales to 16+, but identical triples jobs measure SLOWER at
-local[16/32] than local[8]).  On a real multi-executor cluster each 4N
-step adds nodes with their own DRAM, so the single-box bandwidth wall is
-an artifact; 2->8 keeps both measurement points inside the host's linear
-region.  Override with --cores.
-
-BLAS threading is forced to 1 (OMP/OPENBLAS/MKL) in every worker so the
-"N-core" run cannot borrow extra physical cores for numpy math.  CPU
-pinning was evaluated and rejected: pinned CPU sets collapse under this
-hypervisor's vCPU stealing (identical jobs 2.4s unpinned vs 14-30s
-pinned), measuring the hypervisor rather than the engine.
-
 Usage:
     python bench/scaling.py --files 400000 --repeats 8   # parent
-    python bench/scaling.py --worker 4 IN OUT            # internal per-JVM worker
+    python bench/scaling.py --worker 4 IN TMP            # internal per-JVM worker
 
 Results are recorded in BASELINE.md §Measured and BENCH_SCALING.json.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
-import statistics
-import subprocess
+import shutil
 import sys
 import tempfile
 import time
+
+import paired
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO_ROOT not in sys.path:
@@ -63,7 +38,7 @@ if _REPO_ROOT not in sys.path:
 WARMUP_FILES = 2000
 
 
-def worker(cpus: int, input_dir: str, run_root: str) -> None:
+def worker(cpus: int, input_dir: str, tmp_dir: str) -> None:
     from kgforge.pipeline import run_pipeline
     from kgforge.session import build_session
 
@@ -75,12 +50,10 @@ def worker(cpus: int, input_dir: str, run_root: str) -> None:
     # root — compiles every stage's codegen, spawns the Python workers,
     # initializes Catalyst/AQE.  Identical at both levels; excluded from
     # the timed window (a cluster executor amortizes this over hours).
-    warm_root = tempfile.mkdtemp(prefix="kgscale_warm_", dir=os.path.dirname(run_root))
+    warm_root = tempfile.mkdtemp(prefix="kgscale_warm_", dir=tmp_dir)
     run_pipeline(spark, files.limit(WARMUP_FILES), warm_root)["triples"].count()
     # warm-up checkpoints live on the tmpfs tmp_root — delete them so later
     # paired windows don't run with less free memory than earlier ones
-    import shutil
-
     shutil.rmtree(warm_root, ignore_errors=True)
 
     # KGFORGE_SCALE_LEG_REPS=N (default 1): time N FULL pipeline runs
@@ -93,38 +66,18 @@ def worker(cpus: int, input_dir: str, run_root: str) -> None:
     # whole pair still hits both levels and cancels in the ratio.
     # Identical at both parallelism levels, so it cannot bias the gate.
     leg_reps = max(1, int(os.environ.get("KGFORGE_SCALE_LEG_REPS", "1")))
-    walls: list = []
-    best = best_root = None
-    for rep in range(leg_reps):
-        root_r = run_root if rep == 0 else tempfile.mkdtemp(
-            prefix=os.path.basename(run_root) + f"_rep{rep}_",
-            dir=os.path.dirname(run_root),
-        )
-        t0 = time.time()
-        out = run_pipeline(spark, files, root_r)
-        n_triples = out["triples"].count()
-        wall = round(time.time() - t0, 3)
-        walls.append(wall)
-        # strict: the earliest rep wins a tie.  The best rep's triples are
-        # read lazily from its root (PageRank below), so only a losing
-        # rep's root is deleted here; run_root is the caller's to delete.
-        if best is None or wall < best[0]:
-            best = (wall, n_triples, out.get("stage_secs"), out)
-            loser, best_root = best_root, root_r
-        else:
-            loser = root_r
-        if loser not in (None, run_root):
-            shutil.rmtree(loser, ignore_errors=True)
 
-    secs, n_triples, stage_secs, out = best
+    def run(rep):
+        root = tempfile.mkdtemp(prefix=f"kgscale_run{cpus}_rep{rep}_", dir=tmp_dir)
+        out = run_pipeline(spark, files, root)
+        return root, out["triples"], out["triples"].count()
 
-    result = {
-        "cpus": cpus,
-        "secs": secs,
-        "walls": walls,
-        "n_triples": n_triples,
-        "stage_secs": stage_secs,
-    }
+    # The best rep's triples are read lazily from its root (PageRank
+    # below), so only a losing rep's root is deleted as it loses.
+    secs, (root, triples, n_triples), walls = paired.best_of(
+        leg_reps, run, lambda lost: lost and shutil.rmtree(lost[0], ignore_errors=True)
+    )
+    kernels = {"pipeline": {"secs": secs, "walls": walls, "rows": n_triples, "sig": None}}
 
     # Consumer-side graph analytics AT SCALE (round-2 judge item #3): a
     # 3-iteration checkpointed PageRank over the just-materialized triple
@@ -135,123 +88,47 @@ def worker(cpus: int, input_dir: str, run_root: str) -> None:
         from kgforge.operators.graph import pagerank, triple_edges
 
         t1 = time.time()
-        ranks = pagerank(triple_edges(out["triples"]), checkpoint=True)
-        n_nodes = ranks.count()
-        result["pagerank_secs"] = round(time.time() - t1, 3)
-        result["pagerank_nodes"] = n_nodes
+        n_nodes = pagerank(triple_edges(triples), checkpoint=True).count()
+        kernels["pagerank"] = {"secs": round(time.time() - t1, 3), "rows": n_nodes, "sig": None}
 
-    if best_root != run_root:
-        shutil.rmtree(best_root, ignore_errors=True)
-
-    print(json.dumps(result))
-
-
-def _run_worker(cpus: int, input_dir: str, tmp_root: str | None, thread_env: dict) -> dict:
-    run_root = tempfile.mkdtemp(prefix=f"kgscale_run{cpus}_", dir=tmp_root)
-    log_path = f"{run_root}.log"
-    cmd = [sys.executable, __file__, "--worker", str(cpus), input_dir, run_root]
-    with open(log_path, "w") as log:
-        subprocess.run(
-            cmd, stdout=log, stderr=subprocess.STDOUT, check=True,
-            env={**os.environ, **thread_env},
-        )
-    with open(log_path) as log:
-        line = [ln for ln in log.read().splitlines() if ln.lstrip().startswith('{"cpus"')][-1]
-    import shutil
-
-    shutil.rmtree(run_root, ignore_errors=True)
-    return json.loads(line.lstrip())
+    shutil.rmtree(root, ignore_errors=True)
+    print(json.dumps({"cpus": cpus, "kernels": kernels}))
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    ap = paired.parser(8, os.path.join(_REPO_ROOT, "BENCH_SCALING.json"))
     ap.add_argument("--files", type=int, default=400000)
-    ap.add_argument("--cores", default="2,8")
-    ap.add_argument(
-        "--repeats", type=int, default=8,
-        help="paired invocations (lo+hi back-to-back); the reported series "
-        "has one efficiency per pair",
-    )
-    ap.add_argument("--target", type=float, default=0.8)
-    ap.add_argument("--worker", type=int, default=0)
     ap.add_argument(
         "--input-dir", default=None,
         help="reuse an already-materialized parquet input (must match --files)",
     )
-    ap.add_argument(
-        "--out", default=os.path.join(_REPO_ROOT, "BENCH_SCALING.json"),
-        help="artifact path (default: the round-gate BENCH_SCALING.json)",
-    )
-    ap.add_argument("rest", nargs="*")
     args = ap.parse_args()
 
     if args.worker:
         worker(args.worker, args.rest[0], args.rest[1])
         return
 
-    # tmpfs for shuffle spill + checkpoint tables: the sandbox analog of
-    # executor-local NVMe (measuring one shared virtual disk would report
-    # disk contention, not engine scaling).
-    if os.path.isdir("/dev/shm") and "KGFORGE_LOCAL_DIR" not in os.environ:
-        base = tempfile.mkdtemp(prefix="kgscale_shm_", dir="/dev/shm")
-        os.environ["KGFORGE_LOCAL_DIR"] = os.path.join(base, "local")
-
-    from kgforge import synth
-    from kgforge.session import build_session
-
-    tmp_base = os.environ.get("KGFORGE_LOCAL_DIR")
-    tmp_root = os.path.dirname(tmp_base) if tmp_base else None
+    tmp_root = paired.tmpfs_root()
     if args.input_dir:
         input_dir = args.input_dir
     else:
+        from kgforge import synth
+        from kgforge.session import build_session
+
         input_dir = tempfile.mkdtemp(prefix="kgscale_in_", dir=tmp_root)
         spark = build_session("kgforge-scale-gen", master="local[32]")
         synth.synth_files_df(spark, args.files).write.mode("overwrite").parquet(input_dir)
         spark.stop()
 
     lo, hi = (int(c) for c in args.cores.split(","))
-    ratio = hi / lo
-    thread_env = {
-        "OMP_NUM_THREADS": "1",
-        "OPENBLAS_NUM_THREADS": "1",
-        "MKL_NUM_THREADS": "1",
-        "ARROW_NUM_THREADS": "1",
-    }
-
-    series = []
-    n_triples = None
-    for rep in range(args.repeats):
-        got_lo = _run_worker(lo, input_dir, tmp_root, thread_env)
-        got_hi = _run_worker(hi, input_dir, tmp_root, thread_env)
-        if n_triples is None:
-            n_triples = got_lo["n_triples"]
-        # determinism check enforced on EVERY run at BOTH levels
-        assert got_lo["n_triples"] == got_hi["n_triples"] == n_triples, "nondeterministic triples!"
-        eff = (got_lo["secs"] / got_hi["secs"]) / ratio
-        entry = {
-            f"local{lo}_secs": got_lo["secs"],
-            f"local{hi}_secs": got_hi["secs"],
-            "eff": round(eff, 3),
-        }
-        if got_lo.get("pagerank_secs") and got_hi.get("pagerank_secs"):
-            entry["pagerank_secs"] = [got_lo["pagerank_secs"], got_hi["pagerank_secs"]]
-            entry["pagerank_eff"] = round(
-                (got_lo["pagerank_secs"] / got_hi["pagerank_secs"]) / ratio, 3
-            )
-            entry["pagerank_nodes"] = got_lo["pagerank_nodes"]
-        series.append(entry)
-        print(json.dumps({"pair": rep + 1, **series[-1]}), flush=True)
-
-    effs = [s["eff"] for s in series]
-    median_eff = round(statistics.median(effs), 3)
-    n_pass = sum(1 for e in effs if e >= args.target)
-    best = max(effs)
+    series = paired.run_pairs(__file__, [input_dir, tmp_root], lo, hi, args.repeats, tmp_root)
+    summary = paired.summarize(series, lo, hi, args.target)
+    gate = summary["pipeline"]
+    n_triples = series[0]["pipeline"]["rows"]
     # uncontended-cost estimate (cross-pair minima) — reported, labeled,
     # NOT the gate statistic
-    t_lo_min = min(s[f"local{lo}_secs"] for s in series)
-    t_hi_min = min(s[f"local{hi}_secs"] for s in series)
-
-    out = {
+    t_lo_min, t_hi_min = gate[f"local{lo}_min_secs"], gate[f"local{hi}_min_secs"]
+    paired.write(args.out, {
         "files": args.files,
         "n_triples": n_triples,
         "method": (
@@ -263,23 +140,16 @@ def main() -> None:
         ),
         "cores": [lo, hi],
         "series": series,
-        "paired_median_efficiency": median_eff,
-        "paired_windows_passing": n_pass,
-        "paired_best_efficiency": best,
-        f"local{lo}_secs_min": t_lo_min,
-        f"local{hi}_secs_min": t_hi_min,
-        "cross_pair_min_efficiency": round((t_lo_min / t_hi_min) / ratio, 3),
+        "summary": summary,
+        "paired_median_efficiency": gate["median_eff"],
+        "cross_pair_min_efficiency": round((t_lo_min / t_hi_min) / (hi / lo), 3),
         f"local{lo}_files_per_sec": round(args.files / t_lo_min, 2),
         f"local{hi}_files_per_sec": round(args.files / t_hi_min, 2),
         f"local{lo}_triples_per_sec": round(n_triples / t_lo_min, 2),
         f"local{hi}_triples_per_sec": round(n_triples / t_hi_min, 2),
-        "scaling_efficiency": median_eff,
         "target": args.target,
-        "pass": bool(n_pass >= 3 or median_eff >= args.target),
-    }
-    print(json.dumps(out))
-    with open(args.out, "w") as f:
-        json.dump(out, f, indent=2)
+        "pass": bool(gate["windows_passing"] >= 3 or gate["median_eff"] >= args.target),
+    })
 
 
 if __name__ == "__main__":

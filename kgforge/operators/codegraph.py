@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from .. import pipeline, synth
 from ..oracle.fixtures import SYNTH_N, fixture_path
+from ..session import scoped_conf
 from .registry import ROUND, query
 
 _FIX = fixture_path("triples")
@@ -464,8 +465,8 @@ def scc_labels(edges: DataFrame, src: str = "src_repo", dst: str = "dst_repo") -
     # collapsed to ~0.59 from this alone (per-step stage profiles show
     # (0+2)/4-task stages at both levels).  Keeping the configured
     # shuffle-partition count through the iterative section restores
-    # core-proportional parallelism; the override is restored in the
-    # finally block so bulk queries keep AQE coalescing.  On a real
+    # core-proportional parallelism; the override is restored on exit
+    # so bulk queries keep AQE coalescing.  On a real
     # cluster with TB-scale graphs the advisory size yields plenty of
     # partitions and this knob is a no-op safety.
     # Shuffle width is set core-proportionally (2x the executor slots)
@@ -473,21 +474,15 @@ def scc_labels(edges: DataFrame, src: str = "src_repo", dst: str = "dst_repo") -
     # in task overhead on these small V-row stages, while 2x slots keeps
     # every core busy at any level — the setting a cluster deployment
     # derives from its executor count.
-    _spark = edges.sparkSession
-    _coal_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    _shuf_key = "spark.sql.shuffle.partitions"
-    try:
-        _coal_prev = _spark.conf.get(_coal_key)
-        _shuf_prev = _spark.conf.get(_shuf_key)
-    except Exception:  # pragma: no cover
-        _coal_prev, _shuf_prev = "true", "32"
-    _spark.conf.set(_coal_key, "false")
-    _spark.conf.set(_shuf_key, str(max(4, 2 * _spark.sparkContext.defaultParallelism)))
-    try:
+    spark = edges.sparkSession
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.shuffle.partitions": str(max(4, 2 * spark.sparkContext.defaultParallelism)),
+        },
+    ):
         return _scc_labels_peel(e, dictn, lab)
-    finally:
-        _spark.conf.set(_coal_key, _coal_prev)
-        _spark.conf.set(_shuf_key, _shuf_prev)
 
 
 def _scc_labels_peel(e, dictn, lab) -> DataFrame:

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..cachectl import tracked_cache
+from ..session import scoped_conf
 
 
 def _pinned_checkpoint(df: "DataFrame") -> "DataFrame":
@@ -53,13 +54,8 @@ def _pinned_checkpoint(df: "DataFrame") -> "DataFrame":
     also stops AQE from coalescing the checkpoint's partitions, which
     would otherwise change the partition count between rounds and break
     round-to-round co-partitioning."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with scoped_conf(df.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
         return df.localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 from .kgdocs import SQL_DOC_PAIRS, _doc_mentions, _doc_pairs
 from .registry import ROUND, query
 

@@ -196,6 +196,30 @@ def test_scc_labels_nested_cycles_through_bridge(spark):
     assert got == {"a": "a", "b": "a", "m": "m", "x": "x", "y": "x"}
 
 
+def test_scoped_conf_overrides_do_not_leak(spark):
+    """scc_labels and graph._pinned_checkpoint override session conf for
+    their own section only: afterwards every key reads back exactly as
+    before — an explicit value unchanged, an unset key still unset."""
+    from kgforge.operators.graph import _pinned_checkpoint
+
+    coal, shuf = "spark.sql.adaptive.coalescePartitions.enabled", "spark.sql.shuffle.partitions"
+    coal_prev, shuf_prev = spark.conf.get(coal), spark.conf.get(shuf)
+    spark.conf.unset(coal)
+    spark.conf.set(shuf, "7")
+    try:
+        e = _deps(spark, [("a", "b"), ("b", "c"), ("c", "a")])
+        got = {r.node: r.scc_id for r in codegraph.scc_labels(e).collect()}
+        assert got == {"a": "a", "b": "a", "c": "a"}
+        assert spark.conf.get(coal, None) is None
+        assert spark.conf.get(shuf) == "7"
+        _pinned_checkpoint(e.repartition("src_repo")).count()
+        assert spark.conf.get(shuf) == "7"
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    finally:
+        spark.conf.set(coal, coal_prev)
+        spark.conf.set(shuf, shuf_prev)
+
+
 def test_import_cycles_filters_singletons(spark):
     e = _deps(
         spark,
