@@ -12,26 +12,33 @@ Two registered graph inputs:
   mentions -> links -> components -> materialize pipeline over the
   deterministic synthetic corpus, derives the entity edge set from the
   emitted (subj, pred, obj) triples, and ranks entities with the SCALE
-  path (lineage truncated per round via localCheckpoint — the CC stage's
-  pattern).  Its oracle recomputes the same ranks in DuckDB from the
-  committed twin triple fixture, so the iterative job is still hard
-  value-hash-gated.
+  settings (``checkpoint=True``).  Its oracle recomputes the same ranks in
+  DuckDB from the committed twin triple fixture, so the iterative job is
+  still hard value-hash-gated.
 
-Scale notes: ``pagerank`` takes any (src, dst) edge DataFrame;
-contributions are one groupBy per iteration (AQE-skew-safe); the per-node
-out-degree factor is computed once and joined into the edge list before
-iterating, so each round touches only (src, dst, w) + the rank vector.
-With ``checkpoint=True`` every round's rank vector is localCheckpointed,
-truncating lineage so iteration count never grows the plan — required on
-a million-entity graph, measured at 1M-file scale in bench/scaling.py.
-Intermediates are cached through cachectl so a long-lived session can
-release them after the plan is forced.  No collect, no UDF.
+Scale notes: ``pagerank`` takes any (src, dst) edge DataFrame and runs in
+one of two regimes, chosen by one bounded probe of the cached edge set.
+Up to ``PR_LOCAL_EDGES`` edges the graph is collected once (Arrow) and
+the power iteration finishes on the driver in numpy — per-job round trips,
+not rank arithmetic, are the whole cost of a small graph.  Above it the
+distributed body runs: contributions are one groupBy per iteration
+(AQE-skew-safe); the per-node out-degree factor is computed once and
+joined into the edge list before iterating, so each round touches only
+(src, dst, w) + the rank vector.  With ``checkpoint=True`` every round's
+rank vector is localCheckpointed, truncating lineage so iteration count
+never grows the plan — required on a million-entity graph, measured at
+1M-file scale in bench/scaling.py.  Intermediates are cached through
+cachectl so a long-lived session can release them after the plan is
+forced.  No UDF on either path.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..cachectl import tracked_cache
 from ..session import scoped_conf
@@ -61,6 +68,11 @@ from .registry import ROUND, query
 
 DAMPING = 0.85
 PR_ITERS = 3
+# pagerank finishes on the driver up to this many edges — the same bound
+# as canonical.connected_components' local_threshold.  Crossover sweep in
+# BASELINE.md "PageRank at entity-graph scale": local wins 9.7x at 10k
+# edges and 2.5x at 1M; the 43.6M-edge scaling graphs stay distributed.
+PR_LOCAL_EDGES = 1_000_000
 
 _SQL_EDGES = f"""
 sym as (
@@ -111,6 +123,14 @@ def pagerank(
     symmetrize their edges, which makes every node a source.  An empty
     edge set returns an empty rank table rather than dividing by zero.
 
+    Two regimes, one algorithm: a bounded probe of the cached edge set
+    (``limit(PR_LOCAL_EDGES + 1)``) decides.  Graphs of at most
+    ``PR_LOCAL_EDGES`` edges reuse the probe's rows and finish on the
+    driver (``_local_pagerank``); ``checkpoint`` and ``partitioned`` pick
+    a distributed plan and so have no effect there.  Larger graphs run
+    the distributed body below.  Both return the same (node, r) table,
+    ``node`` typed as the input ids and ``r`` double.
+
     ``checkpoint=True`` localCheckpoints the rank vector every round —
     truncating lineage so plan size stays constant in iteration count
     (mandatory at entity-graph scale; left False for the toy concept
@@ -128,9 +148,17 @@ def pagerank(
     broadcast below ~10^5 nodes, partitioned above (measured in
     bench/graph_scaling.py).
     """
-    sym = tracked_cache(edges)  # feeds deg AND the join leg
+    sym = tracked_cache(edges)  # feeds the probe, deg AND the join leg
+    probe = sym.limit(PR_LOCAL_EDGES + 1).toPandas()
+    if len(probe) <= PR_LOCAL_EDGES:
+        return _local_pagerank(sym, probe, iters, damping)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("d"))
-    w = sym.join(deg, "src").select("src", "dst", (F.lit(1.0) / F.col("d")).alias("w"))
+    # the probe loaded sym's cache, so its size is now known: partitioned
+    # mode pins the one-time degree join to a sort-merge join rather than
+    # let that size plan a driver-built V-row broadcast of deg
+    w = sym.join(deg.hint("merge") if partitioned else deg, "src").select(
+        "src", "dst", (F.lit(1.0) / F.col("d")).alias("w")
+    )
     nodes = (
         sym.select(F.col("src").alias("node"))
         .unionByName(sym.select(F.col("dst").alias("node")))
@@ -144,10 +172,7 @@ def pagerank(
         nodes = nodes.repartition("node")
     w = tracked_cache(w)
     nodes = tracked_cache(nodes)
-    n = nodes.count()
-    if n == 0:
-        return nodes.select("node", F.lit(0.0).alias("r"))
-
+    n = nodes.count()  # > 0: an empty edge set took the local path
     ranks = nodes.select("node", (F.lit(1.0) / F.lit(float(n))).alias("r"))
     # Per-round plan (audited): the rank vector broadcasts into the edge
     # join (the edge table is NEVER reshuffled), and the contribution
@@ -180,6 +205,26 @@ def pagerank(
             # V rows every round; see _pinned_checkpoint)
             ranks = _pinned_checkpoint(ranks) if partitioned else ranks.localCheckpoint()
     return ranks
+
+
+def _local_pagerank(sym: DataFrame, pdf: pd.DataFrame, iters: int, damping: float) -> DataFrame:
+    """The distributed body's arithmetic over a collected edge set, in
+    numpy.  Edges are sorted by node code first, so every float sum runs
+    in one fixed order whatever order the collect returned the rows in."""
+    codes, nodes = pd.factorize(pd.concat([pdf["src"], pdf["dst"]], ignore_index=True), sort=True)
+    n, m = len(nodes), len(pdf)
+    r = np.empty(0)
+    if n:
+        order = np.lexsort((codes[m:], codes[:m]))
+        src, dst = codes[:m][order], codes[m:][order]
+        w = 1.0 / np.bincount(src, minlength=n)[src]  # 1 / out-degree, per edge
+        r = np.full(n, 1.0 / n)
+        for _ in range(iters):
+            r = (1 - damping) / n + damping * np.bincount(dst, weights=w * r[src], minlength=n)
+    schema = StructType(
+        [StructField("node", sym.schema["src"].dataType), StructField("r", DoubleType(), False)]
+    )
+    return sym.sparkSession.createDataFrame(pd.DataFrame({"node": nodes, "r": r}), schema)
 
 
 def _concept_edges(spark, sf_dir) -> DataFrame:
@@ -224,7 +269,8 @@ def concept_pagerank(spark, sf_dir):
 # PageRank over the REAL KG output: the full pipeline runs on the synthetic
 # corpus, the edge set is the emitted triple graph itself (subj -> obj of
 # every non-identity triple, symmetrized, deduped), and ranking uses the
-# scale path (per-round localCheckpoint).  The oracle re-derives the same
+# scale settings (checkpoint=True), though at oracle size the graph is far
+# under PR_LOCAL_EDGES and finishes on the driver.  The oracle re-derives the same
 # edges from the committed twin triple fixture (fixtures/twin_triples.parquet,
 # drift-guarded) and unrolls the identical PR chain in SQL — so the
 # iterative job over pipeline output is hard value-hash-gated end-to-end.
@@ -272,7 +318,7 @@ def entity_pagerank(spark, sf_dir):
     entity ranking, /root/reference/experiments/uaz_documents_comparison.py:
     54-66 generalized to the code KG).  Runs the REAL pipeline — packed
     mention extraction, LSH-blocked linking, distributed CC, materialize —
-    then ranks with the scale path (localCheckpoint per round)."""
+    then ranks with the scale settings (``checkpoint=True``)."""
     from ..stages import canonical, embed, link, materialize, mentions
     from .kgdocs import _synth
 

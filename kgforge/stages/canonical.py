@@ -109,16 +109,15 @@ def connected_components(
     that is what makes the canonical dictionary broadcast-able (north_rule).
     """
     edges = _dedup(links.select(F.col("a").alias("src"), F.col("b").alias("dst")))
-    # Bounded probe: a limit(T+1).count() decides the path without moving
-    # rows to the driver — when the graph is LARGE this costs one scalar
-    # instead of shipping T rows through the driver on every invocation;
-    # when small, the follow-up collect is a cheap second scan (and in the
-    # pipeline the links table is checkpointed parquet, so the re-scan is
-    # a columnar read, not a recompute).
+    # Bounded probe: ONE limit(T+1).collect() decides the path and, when
+    # the graph is small, IS the union-find's input — no second pass over
+    # the plan (materialize.triples_from_packed probes its mapping the
+    # same way).  A large graph ships at most T+1 rows before falling
+    # through to the distributed rounds.
     if local_threshold > 0:
-        probe_n = edges.limit(local_threshold + 1).count()
-        if probe_n <= local_threshold:
-            return _local_components(links.sparkSession, edges.collect())
+        probe = edges.limit(local_threshold + 1).collect()
+        if len(probe) <= local_threshold:
+            return _local_components(links.sparkSession, probe)
 
     # String rounds.  groupBy-min on STRING ids means SortAggregate
     # (var-length agg buffers disable hash aggregation) — measured and

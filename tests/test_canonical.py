@@ -67,3 +67,22 @@ def test_deterministic_across_partitioning(spark):
     rows = connected_components(b_df).collect()
     b = {r["entity_id"]: r["canonical_id"] for r in rows}
     assert a == b
+
+
+def test_local_path_probes_once(spark):
+    """The small path decides and collects with ONE bounded
+    limit(T+1).collect(): 2 jobs on this graph (the dedup's shuffle map
+    stage and the collect), where a limit(T+1).count() followed by a
+    collect of the same rows ran 5."""
+    sc = spark.sparkContext
+    links = _links(spark, [("a", "b"), ("b", "c"), ("x", "y"), ("m", "n"), ("n", "c")])
+    sc.setJobGroup("cc_local_probe", "cc_local_probe")
+    try:
+        out = connected_components(links)
+        jobs = sc.statusTracker().getJobIdsForGroup("cc_local_probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 2, jobs
+    assert {r["entity_id"]: r["canonical_id"] for r in out.collect()} == {
+        "b": "a", "c": "a", "m": "a", "n": "a", "y": "x"
+    }

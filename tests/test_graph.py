@@ -1,10 +1,12 @@
 """Contract tests for the public pagerank(edges) API beyond the oracle
-queries: empty input and genuinely directed graphs (sink nodes)."""
+queries: empty input, genuinely directed graphs (sink nodes), and parity
+between the driver-local finisher and the distributed body."""
 
 from __future__ import annotations
 
 import pytest
 
+from kgforge.operators import graph
 from kgforge.operators.graph import pagerank
 
 
@@ -173,7 +175,7 @@ def _random_sym_graph(spark, n_nodes=400, n_edges=2500, seed=13):
     return _sym(spark, _random_und(n_nodes, n_edges, seed)).distinct()
 
 
-def test_partitioned_variants_match_broadcast_plans(spark):
+def test_partitioned_variants_match_broadcast_plans(spark, monkeypatch):
     """The scale variants (shuffle-hash joins instead of per-round
     broadcast builds — pagerank and bfs partitioned mode) must be
     output-identical to the broadcast plans; only the physical exchange
@@ -183,6 +185,7 @@ def test_partitioned_variants_match_broadcast_plans(spark):
 
     from kgforge.operators.graph import bfs_levels_frontier, pagerank
 
+    monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)  # plan under test, not the local finisher
     sym = _random_sym_graph(spark)
     a = {r.node: round(r.r, 6) for r in pagerank(sym, checkpoint=True).collect()}
     b = {r.node: round(r.r, 6) for r in pagerank(sym, checkpoint=True, partitioned=True).collect()}
@@ -238,11 +241,12 @@ def test_pinned_checkpoint_round_is_exchange_free(spark):
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
-def test_pagerank_partitioned_has_no_per_round_rank_broadcast(spark):
+def test_pagerank_partitioned_has_no_per_round_rank_broadcast(spark, monkeypatch):
     """The partitioned plan's point: the rank vector moves through
     shuffle-hash exchanges, never a per-round broadcast build.  The only
     BroadcastExchange allowed in the full plan is the one-time degree
     join inside the cached w build."""
+    monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)  # plan under test, not the local finisher
     sym = _random_sym_graph(spark, seed=14)
     plan = (
         pagerank(sym, partitioned=True)
@@ -252,3 +256,67 @@ def test_pagerank_partitioned_has_no_per_round_rank_broadcast(spark):
     )
     assert "ShuffledHashJoin" in plan
     assert plan.count("BroadcastExchange") <= 1
+
+
+# ------------------------------------------- local finisher vs distributed
+def _both_paths(monkeypatch, edges, **kw):
+    """(local, distributed) pagerank outputs over the same edges."""
+    local = pagerank(edges, **kw)
+    with monkeypatch.context() as m:
+        m.setattr(graph, "PR_LOCAL_EDGES", 0)
+        dist = pagerank(edges, **kw)
+    return local, dist
+
+
+def _ranks(df, digits=None):
+    return {r.node: (r.r if digits is None else round(r.r, digits)) for r in df.collect()}
+
+
+def test_pagerank_paths_agree_on_random_graph(spark, monkeypatch):
+    local, dist = _both_paths(monkeypatch, _random_sym_graph(spark), checkpoint=True)
+    assert local.dtypes == dist.dtypes == [("node", "string"), ("r", "double")]
+    assert _ranks(local, 9) == _ranks(dist, 9)
+
+
+def test_pagerank_paths_agree_on_directed_graph_with_sinks(spark, monkeypatch):
+    # 3 and 5 are sinks; 4 only sends; 1 <-> 2 is a cycle
+    edges = spark.createDataFrame(
+        [("1", "2"), ("2", "1"), ("1", "3"), ("2", "3"), ("4", "3"), ("4", "5")],
+        "src string, dst string",
+    )
+    local, dist = _both_paths(monkeypatch, edges, iters=1)
+    assert _ranks(local, 9) == _ranks(dist, 9)
+    assert set(_ranks(local)) == {"1", "2", "3", "4", "5"}
+
+
+def test_pagerank_paths_agree_on_empty_edges(spark, monkeypatch):
+    """The probe of an empty edge set returns 0 rows, which is within any
+    bound, so both settings finish locally and return the empty table."""
+    edges = spark.createDataFrame([], "src string, dst string")
+    for out in _both_paths(monkeypatch, edges):
+        assert out.columns == ["node", "r"]
+        assert out.count() == 0
+
+
+def test_pagerank_paths_keep_bigint_ids(spark, monkeypatch):
+    edges = spark.createDataFrame(
+        [(10, 20), (20, 10), (20, 30), (30, 20), (10, 30), (2**40, 10)], "src bigint, dst bigint"
+    )
+    local, dist = _both_paths(monkeypatch, edges)
+    assert local.dtypes == dist.dtypes == [("node", "bigint"), ("r", "double")]
+    assert _ranks(local, 9) == _ranks(dist, 9)
+    assert 2**40 in _ranks(local)
+
+
+def test_pagerank_local_ranks_ignore_input_order(spark):
+    """The local finisher sorts edges by node code before iterating, so
+    its float sums do not depend on the order the collect returns rows."""
+    import random
+
+    rows = _random_und()
+    rows = rows + [(b, a) for a, b in rows]
+    shuffled = list(rows)
+    random.Random(5).shuffle(shuffled)
+    a = spark.createDataFrame(rows, "src string, dst string")
+    b = spark.createDataFrame(shuffled, "src string, dst string").repartition(3)
+    assert _ranks(pagerank(a)) == _ranks(pagerank(b))

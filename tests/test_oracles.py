@@ -41,13 +41,27 @@ def test_registry_nonempty():
     assert set(ORACLES) <= set(QUERIES)
 
 
-@pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(spark, sf_dir, ducks, name):
+def _assert_matches_oracle(spark, sf_dir, ducks, name):
     got = _normalize(QUERIES[name](spark, sf_dir).toPandas())
     want = _normalize(ducks.sql(ORACLES[name]).df())
     assert list(got.columns) == list(want.columns), f"{name}: column mismatch"
     assert len(got) == len(want), f"{name}: rowcount {len(got)} != {len(want)}"
     pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=False, rtol=0, atol=1e-9)
+
+
+@pytest.mark.parametrize("name", sorted(ORACLES))
+def test_query_matches_oracle(spark, sf_dir, ducks, name):
+    _assert_matches_oracle(spark, sf_dir, ducks, name)
+
+
+@pytest.mark.parametrize("name", ["concept_pagerank", "entity_pagerank", "keyword_textrank"])
+def test_pagerank_oracles_on_distributed_path(spark, sf_dir, ducks, monkeypatch, name):
+    """At sf size every PageRank query finishes on the driver; with the
+    local bound at 0 the same oracles gate the distributed body too."""
+    from kgforge.operators import graph
+
+    monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)
+    _assert_matches_oracle(spark, sf_dir, ducks, name)
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
