@@ -113,7 +113,7 @@ def _pagerank_stage_walls(edges):
     t = time.time()
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("d"))
     w = tracked_cache(
-        sym.join(deg, "src")
+        sym.join(deg.hint("merge"), "src")  # as pagerank(partitioned=True) builds w
         .select("src", "dst", (F.lit(1.0) / F.col("d")).alias("w"))
         .repartition("src")
     )

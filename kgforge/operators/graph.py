@@ -17,19 +17,19 @@ Two registered graph inputs:
   still hard value-hash-gated.
 
 Scale notes: ``pagerank`` takes any (src, dst) edge DataFrame and runs in
-one of two regimes, chosen by one bounded probe of the cached edge set.
-Up to ``PR_LOCAL_EDGES`` edges the graph is collected once (Arrow) and
-the power iteration finishes on the driver in numpy — per-job round trips,
-not rank arithmetic, are the whole cost of a small graph.  Above it the
-distributed body runs: contributions are one groupBy per iteration
-(AQE-skew-safe); the per-node out-degree factor is computed once and
-joined into the edge list before iterating, so each round touches only
-(src, dst, w) + the rank vector.  With ``checkpoint=True`` every round's
-rank vector is localCheckpointed, truncating lineage so iteration count
-never grows the plan — required on a million-entity graph, measured at
-1M-file scale in bench/scaling.py.  Intermediates are cached through
-cachectl so a long-lived session can release them after the plan is
-forced.  No UDF on either path.
+one of two regimes, chosen by the size of the cached edge set (a capped
+probe, then a count past the cap).  Up to ``PR_LOCAL_EDGES`` edges the
+graph is collected once and the power iteration finishes on the driver
+in numpy — per-job round trips, not rank arithmetic, are the whole cost
+of a small graph.  Above it the distributed body runs: contributions are
+one groupBy per iteration (AQE-skew-safe); the per-node out-degree
+factor is computed once and joined into the edge list before iterating,
+so each round touches only (src, dst, w) + the rank vector.  With
+``checkpoint=True`` every round's rank vector is localCheckpointed,
+truncating lineage so iteration count never grows the plan — required on
+a million-entity graph, measured at 1M-file scale in bench/scaling.py.
+Intermediates are cached through cachectl so a long-lived session can
+release them after the plan is forced.  No UDF on either path.
 """
 
 from __future__ import annotations
@@ -70,9 +70,13 @@ DAMPING = 0.85
 PR_ITERS = 3
 # pagerank finishes on the driver up to this many edges — the same bound
 # as canonical.connected_components' local_threshold.  Crossover sweep in
-# BASELINE.md "PageRank at entity-graph scale": local wins 9.7x at 10k
-# edges and 2.5x at 1M; the 43.6M-edge scaling graphs stay distributed.
+# BASELINE.md "PageRank at entity-graph scale": local wins 12.6x at 10k
+# edges, 2.3x at 1M and still 1.5x at 4M, so the bound is a driver-memory
+# guard, not the crossover; the 43.6M-edge scaling graphs stay distributed.
 PR_LOCAL_EDGES = 1_000_000
+# rows pagerank's first path probe collects (materialize caps its own
+# mapping probe at the same size); larger graphs are counted instead
+PR_PROBE_EDGES = 100_000
 
 _SQL_EDGES = f"""
 sym as (
@@ -123,13 +127,14 @@ def pagerank(
     symmetrize their edges, which makes every node a source.  An empty
     edge set returns an empty rank table rather than dividing by zero.
 
-    Two regimes, one algorithm: a bounded probe of the cached edge set
-    (``limit(PR_LOCAL_EDGES + 1)``) decides.  Graphs of at most
-    ``PR_LOCAL_EDGES`` edges reuse the probe's rows and finish on the
-    driver (``_local_pagerank``); ``checkpoint`` and ``partitioned`` pick
-    a distributed plan and so have no effect there.  Larger graphs run
-    the distributed body below.  Both return the same (node, r) table,
-    ``node`` typed as the input ids and ``r`` double.
+    Two regimes, one algorithm, chosen by edge count.  Graphs of at most
+    ``PR_LOCAL_EDGES`` edges are collected and finish on the driver
+    (``_local_pagerank``): up to ``PR_PROBE_EDGES`` edges the one probe
+    job's rows are the input, past it ``count()`` decides and a graph
+    within the bound is collected whole.  ``checkpoint`` and
+    ``partitioned`` pick a distributed plan and so have no effect there.
+    Larger graphs run the distributed body below.  Both return the same
+    (node, r) table, ``node`` typed as the input ids and ``r`` double.
 
     ``checkpoint=True`` localCheckpoints the rank vector every round —
     truncating lineage so plan size stays constant in iteration count
@@ -149,13 +154,23 @@ def pagerank(
     bench/graph_scaling.py).
     """
     sym = tracked_cache(edges)  # feeds the probe, deg AND the join leg
-    probe = sym.limit(PR_LOCAL_EDGES + 1).toPandas()
-    if len(probe) <= PR_LOCAL_EDGES:
-        return _local_pagerank(sym, probe, iters, damping)
+    # Path choice that never ships a large graph: the first
+    # PR_PROBE_EDGES + 1 rows (one job) settle a small graph outright;
+    # past them count() decides, which costs next to nothing beyond
+    # loading the cache the distributed body reads anyway.
+    head = sym.limit(PR_PROBE_EDGES + 1).collect()
+    if len(head) <= PR_PROBE_EDGES:
+        pdf = pd.DataFrame(head, columns=sym.columns)
+    else:
+        pdf = sym.toPandas() if sym.count() <= PR_LOCAL_EDGES else None
+    if pdf is not None and len(pdf) <= PR_LOCAL_EDGES:
+        return _local_pagerank(sym, pdf, iters, damping)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("d"))
-    # the probe loaded sym's cache, so its size is now known: partitioned
-    # mode pins the one-time degree join to a sort-merge join rather than
-    # let that size plan a driver-built V-row broadcast of deg
+    # Partitioned mode keeps the one-time degree join off the driver too:
+    # a sort-merge join, never a driver-built V-row broadcast of deg, even
+    # now that the probe has loaded sym and its size is known.  Measured
+    # against the broadcast AQE picks at 4M edges: same walls (BASELINE.md,
+    # "PageRank at entity-graph scale").
     w = sym.join(deg.hint("merge") if partitioned else deg, "src").select(
         "src", "dst", (F.lit(1.0) / F.col("d")).alias("w")
     )

@@ -93,6 +93,10 @@ def _local_components(spark, rows) -> DataFrame:
     return spark.createDataFrame(out, "entity_id string, canonical_id string")
 
 
+# rows the first path probe of connected_components collects
+LOCAL_PROBE_ROWS = 100_000
+
+
 def connected_components(
     links: DataFrame,
     max_iter: int = 20,
@@ -109,15 +113,20 @@ def connected_components(
     that is what makes the canonical dictionary broadcast-able (north_rule).
     """
     edges = _dedup(links.select(F.col("a").alias("src"), F.col("b").alias("dst")))
-    # Bounded probe: ONE limit(T+1).collect() decides the path and, when
-    # the graph is small, IS the union-find's input — no second pass over
-    # the plan (materialize.triples_from_packed probes its mapping the
-    # same way).  A large graph ships at most T+1 rows before falling
-    # through to the distributed rounds.
+    # Bounded probe, capped as materialize.triples_from_packed caps its
+    # mapping probe: ONE limit(cap+1).collect() settles a graph of at most
+    # LOCAL_PROBE_ROWS edges and IS the union-find's input.  Past the cap a
+    # limit(T+1).count() decides without moving rows to the driver (in the
+    # pipeline the links table is checkpointed parquet, so the follow-up
+    # collect is a columnar re-read, not a recompute).
     if local_threshold > 0:
-        probe = edges.limit(local_threshold + 1).collect()
-        if len(probe) <= local_threshold:
-            return _local_components(links.sparkSession, probe)
+        cap = min(local_threshold, LOCAL_PROBE_ROWS)
+        rows = edges.limit(cap + 1).collect()
+        if len(rows) > cap:
+            fits = cap < local_threshold and edges.limit(local_threshold + 1).count() <= local_threshold
+            rows = edges.collect() if fits else None
+        if rows is not None:
+            return _local_components(links.sparkSession, rows)
 
     # String rounds.  groupBy-min on STRING ids means SortAggregate
     # (var-length agg buffers disable hash aggregation) — measured and

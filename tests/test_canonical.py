@@ -70,8 +70,8 @@ def test_deterministic_across_partitioning(spark):
 
 
 def test_local_path_probes_once(spark):
-    """The small path decides and collects with ONE bounded
-    limit(T+1).collect(): 2 jobs on this graph (the dedup's shuffle map
+    """The small path decides and collects with ONE capped
+    limit(cap+1).collect(): 2 jobs on this graph (the dedup's shuffle map
     stage and the collect), where a limit(T+1).count() followed by a
     collect of the same rows ran 5."""
     sc = spark.sparkContext
@@ -86,3 +86,26 @@ def test_local_path_probes_once(spark):
     assert {r["entity_id"]: r["canonical_id"] for r in out.collect()} == {
         "b": "a", "c": "a", "m": "a", "n": "a", "y": "x"
     }
+
+
+def test_path_choice_past_probe_cap(spark, monkeypatch):
+    """Past LOCAL_PROBE_ROWS a bounded count decides: a graph still under
+    local_threshold is collected and finished locally, a larger one runs
+    the distributed rounds — same mapping either way."""
+    from kgforge.stages import canonical
+
+    local_inputs = []
+
+    def spy(spark, rows):
+        local_inputs.append(len(rows))
+        return local(spark, rows)
+
+    local = canonical._local_components
+    monkeypatch.setattr(canonical, "_local_components", spy)
+    monkeypatch.setattr(canonical, "LOCAL_PROBE_ROWS", 2)
+    links = _links(spark, [("a", "b"), ("b", "c"), ("x", "y"), ("m", "n"), ("n", "c")])
+    want = {"b": "a", "c": "a", "m": "a", "n": "a", "y": "x"}
+    for threshold in (10, 4):  # 5 edges: count path local, then distributed
+        rows = connected_components(links, local_threshold=threshold).collect()
+        assert {r["entity_id"]: r["canonical_id"] for r in rows} == want
+    assert local_inputs == [5]  # the whole graph, and only at threshold 10

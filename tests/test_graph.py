@@ -320,3 +320,27 @@ def test_pagerank_local_ranks_ignore_input_order(spark):
     a = spark.createDataFrame(rows, "src string, dst string")
     b = spark.createDataFrame(shuffled, "src string, dst string").repartition(3)
     assert _ranks(pagerank(a)) == _ranks(pagerank(b))
+
+
+def test_pagerank_path_choice_past_probe_cap(spark, monkeypatch):
+    """Past PR_PROBE_EDGES a count decides: a graph within PR_LOCAL_EDGES
+    is collected whole and finished locally (bit-identical to the probe's
+    rows), a larger one runs the distributed body."""
+    sym = _random_sym_graph(spark)
+    n_edges = sym.count()
+    local_inputs = []
+
+    def spy(sym, pdf, iters, damping):
+        local_inputs.append(len(pdf))
+        return local(sym, pdf, iters, damping)
+
+    local = graph._local_pagerank
+    monkeypatch.setattr(graph, "_local_pagerank", spy)
+    head = _ranks(pagerank(sym))
+    monkeypatch.setattr(graph, "PR_PROBE_EDGES", 100)
+    counted = _ranks(pagerank(sym))
+    monkeypatch.setattr(graph, "PR_LOCAL_EDGES", n_edges - 1)
+    dist = _ranks(pagerank(sym), 9)
+    assert local_inputs == [n_edges, n_edges]
+    assert counted == head
+    assert dist == {k: round(v, 9) for k, v in head.items()}
