@@ -50,10 +50,13 @@ def write_json(df: DataFrame, location: str, codec: str = "gzip", mode: str = "o
     df.write.mode(mode).option("compression", codec).json(location)
 
 
-def read_table(spark: SparkSession, location: str) -> DataFrame:
+def read_table(spark: SparkSession, location: str, schema=None) -> DataFrame:
+    """Read a stage table.  A parquet read given ``schema`` (the StructType
+    the table was just written with) skips the footer-inference job."""
     if _iceberg():
         return spark.read.table(location)
-    return spark.read.parquet(location)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(location)
 
 
 def table_exists(spark: SparkSession, location: str) -> bool:

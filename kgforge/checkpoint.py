@@ -6,7 +6,10 @@ Spark analog of the reference's embedding cache memoization
 and save).  Each stage's output is a table under the run root; ``get_or_run``
 reads it if complete, else computes, writes, and re-reads (so downstream
 always consumes the materialized table — this is also what truncates lineage
-between stages and makes each stage an independent job).
+between stages and makes each stage an independent job).  The re-read after
+a fresh write passes the schema the stage just wrote, so it launches no
+parquet-footer job; only a resumed table has its schema inferred, which the
+schema guard needs.
 
 A ``manifest.json`` under the run root records completed stages for
 observability; completeness itself is judged by the table's _SUCCESS marker
@@ -64,7 +67,7 @@ class CheckpointManager:
         df = fn()
         catalog.write_table(df, loc, partition_by=partition_by)
         self._record(stage, time.time() - t0)
-        return catalog.read_table(self.spark, loc)
+        return catalog.read_table(self.spark, loc, schema=df.schema)
 
     @staticmethod
     def _schema_ok(df: DataFrame, schema) -> bool:

@@ -180,7 +180,7 @@ def embed_batch(texts, dim: int = EMBED_DIM) -> np.ndarray:
 
 def lsh_signature(vecs: np.ndarray) -> np.ndarray:
     """[N, LSH_BANDS] int32 band signatures from sign bits."""
-    planes = lsh_hyperplanes()
+    planes = lsh_hyperplanes(vecs.shape[1])
     bits = (vecs @ planes.T) >= 0  # [N, LSH_PLANES]
     sigs = np.zeros((vecs.shape[0], LSH_BANDS), dtype=np.int32)
     for b in range(LSH_BANDS):

@@ -240,22 +240,22 @@ def token_embeddings(docs):
     broadcast-joined back to positions; shipping every position through the
     Python worker would move the whole corpus across Arrow instead.
     """
-    from ..stages.embed import _hash_embed_udf
+    from ..stages.embed import _embed_udf, _hash_encoder
 
     toks = F.filter(F.split(F.lower(F.col("text")), r"\W+"), lambda t: t != "")
     pos = docs.select("doc_id", F.posexplode(toks).alias("token_pos", "term"))
     vocab = pos.select("term").distinct()
-    vecs = vocab.withColumn("vec", _hash_embed_udf()(F.col("term")))
+    vecs = vocab.withColumn("vec", _embed_udf(_hash_encoder)(F.col("term"))["embedding"])
     return pos.join(F.broadcast(vecs), "term").select("doc_id", "token_pos", "term", "vec")
 
 
 def _sims_dense(spark, doc_tokens):
     """(term, q_term, sim) via the hashed n-gram dense embeddings; vectors
     are L2-normalized so cosine == dot (zip_with + aggregate, JVM-side)."""
-    from ..stages.embed import _hash_embed_udf
+    from ..stages.embed import _embed_udf, _hash_encoder
 
     vocab = doc_tokens.select("term").distinct().withColumn(
-        "vec", _hash_embed_udf()(F.col("term"))
+        "vec", _embed_udf(_hash_encoder)(F.col("term"))["embedding"]
     )
     qv = spark.createDataFrame(
         [(t, [float(x) for x in constants.embed_text(t)]) for t in QUERY_TERMS],

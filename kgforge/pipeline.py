@@ -17,7 +17,6 @@ import argparse
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import catalog, schemas, synth, valvemetrics
 from .checkpoint import CheckpointManager
@@ -39,7 +38,9 @@ def run_pipeline(
     """
     ck = CheckpointManager(spark, run_root)
     out: dict[str, DataFrame] = {}
-    metrics_parts: list[DataFrame] = []
+    # valves fired before this run keep their LAST entry objects; only the
+    # entries replaced while this run builds belong in its metrics table
+    valves_before = dict(valvemetrics.LAST)
 
     # NB: the input corpus is never re-materialized — content_sha256 is
     # computed inline in the mention stage (at 100 TB, a files_hashed
@@ -57,17 +58,7 @@ def run_pipeline(
     )
     men = mentions.explode_mentions(men_packed)
     out["mentions"] = men
-    sha_ok = materialize.sha_audit(files_hashed, men) if audit else None
-    metrics_parts.append(
-        materialize.stage_metrics(
-            "mentions",
-            files.select("repo"),
-            men_packed.select("repo", F.col("n_mentions").alias("_n")),
-            int((time.time() - t1) * 1000),
-            sha_ok=sha_ok,
-            out_weight="_n",
-        )
-    )
+    mentions_ms = int((time.time() - t1) * 1000)
 
     t2 = time.time()
     emb = ck.get_or_run(
@@ -105,24 +96,22 @@ def run_pipeline(
         schema=schemas.TRIPLES,
     )
     out["triples"] = tri
-    metrics_parts.append(
-        materialize.stage_metrics(
-            "triples",
-            men_packed.select("repo", F.col("n_mentions").alias("_n")),
-            tri.withColumn("repo", F.split_part(F.col("subj"), F.lit(":"), F.lit(1))),
-            int((time.time() - t5) * 1000),
-            in_weight="_n",
-        )
-    )
+    triples_ms = int((time.time() - t5) * 1000)
 
     def _metrics():
-        df = metrics_parts[0]
-        for p in metrics_parts[1:]:
-            df = df.unionByName(p)
-        # fold in any valve drops observed while the stages above built
+        df = materialize.lineage_metrics(
+            files,
+            men_packed,
+            tri,
+            mentions_ms,
+            triples_ms,
+            sha_ok=materialize.sha_audit(files_hashed, men) if audit else None,
+        )
+        # fold in the valve drops observed while this run's stages built
         # (e.g. link's oversized-bucket cap) — the cluster audit trail
         # for "no silent caps" lives in the written table, not in logs
-        valve_rows = valvemetrics.metrics_rows(spark)
+        fired = {k: v for k, v in valvemetrics.LAST.items() if valves_before.get(k) is not v}
+        valve_rows = valvemetrics.metrics_rows(spark, fired)
         if valve_rows is not None:
             df = df.unionByName(valve_rows)
         return df

@@ -60,6 +60,8 @@ ENTITY_EMBEDDINGS = StructType(
         StructField("name", StringType(), False),
         StructField("kind", StringType(), False),
         StructField("embedding", ArrayType(FloatType(), False), False),
+        # LSH_BANDS band signatures of the embedding (stages/link.py blocks on them)
+        StructField("sigs", ArrayType(IntegerType(), False), False),
     ]
 )
 

@@ -20,6 +20,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -90,7 +91,11 @@ def _local_components(spark, rows) -> DataFrame:
             lo, hi = sorted((ra, rb))
             parent[hi] = lo
     out = [(x, find(x)) for x in parent if find(x) != x]
-    return spark.createDataFrame(out, "entity_id string, canonical_id string")
+    # a pandas frame goes through Arrow; a list of tuples through a pickled RDD
+    return spark.createDataFrame(
+        pd.DataFrame(out, columns=["entity_id", "canonical_id"], dtype=object),
+        "entity_id string, canonical_id string",
+    )
 
 
 # rows the first path probe of connected_components collects
@@ -115,18 +120,18 @@ def connected_components(
     edges = _dedup(links.select(F.col("a").alias("src"), F.col("b").alias("dst")))
     # Bounded probe, capped as materialize.triples_from_packed caps its
     # mapping probe: ONE limit(cap+1).collect() settles a graph of at most
-    # LOCAL_PROBE_ROWS edges and IS the union-find's input.  Past the cap a
-    # limit(T+1).count() decides without moving rows to the driver (in the
-    # pipeline the links table is checkpointed parquet, so the follow-up
-    # collect is a columnar re-read, not a recompute).
+    # LOCAL_PROBE_ROWS edges and IS the union-find's input.  Past the cap the
+    # edges are checkpointed once, so the size count, the union-find collect
+    # and the first distributed round share one pass over the _dedup plan.
+    spark = links.sparkSession
     if local_threshold > 0:
         cap = min(local_threshold, LOCAL_PROBE_ROWS)
         rows = edges.limit(cap + 1).collect()
-        if len(rows) > cap:
-            fits = cap < local_threshold and edges.limit(local_threshold + 1).count() <= local_threshold
-            rows = edges.collect() if fits else None
-        if rows is not None:
-            return _local_components(links.sparkSession, rows)
+        if len(rows) <= cap:
+            return _local_components(spark, rows)
+    edges = edges.localCheckpoint()
+    if local_threshold > LOCAL_PROBE_ROWS and edges.count() <= local_threshold:
+        return _local_components(spark, edges.collect())
 
     # String rounds.  groupBy-min on STRING ids means SortAggregate
     # (var-length agg buffers disable hash aggregation) — measured and
@@ -138,7 +143,6 @@ def connected_components(
     # (~6 rounds at this diameter).  Sort-based aggregation also spills
     # gracefully, and the edge set shrinks every round.  Numbers in
     # BASELINE.md §Measured — round 2.
-    edges = edges.localCheckpoint()
     prev = _fingerprint(edges)
     for _ in range(max_iter):
         edges = small_star(large_star(edges)).localCheckpoint()

@@ -7,7 +7,8 @@ mean-pool embedder from constants.py — the no-weights analog of the
 reference's batched sentence encoder
 (/root/reference/search/bert_search.py:124-143,160-166).  Set
 ``constants.EMBED_BACKEND='minilm'`` to swap in a real sentence-transformer
-(gated import; identical UDF shape).
+(gated import; the same UDF, which also computes each vector's LSH band
+signatures for the link stage).
 
 Spark shape: groupBy-distinct (one shuffle, tiny output) then an
 iterator-style pandas_udf so any per-executor model init is amortized
@@ -22,7 +23,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType
 
 from .. import constants
 
@@ -56,35 +56,40 @@ def entities_from_mentions(mentions: DataFrame) -> DataFrame:
     )
 
 
-def _hash_embed_udf():
-    @F.pandas_udf(ArrayType(FloatType()))
-    def embed(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        # per-executor init would go here (model load for the minilm
-        # backend); the hash backend needs none.
+def _hash_encoder():
+    return constants.embed_batch
+
+
+def _minilm_encoder():  # pragma: no cover - optional heavy backend
+    from sentence_transformers import SentenceTransformer  # gated import
+
+    model = SentenceTransformer("all-MiniLM-L6-v2")
+    return lambda texts: model.encode(texts, batch_size=256, normalize_embeddings=True).astype(
+        "float32"
+    )
+
+
+def _embed_udf(make_encoder):
+    @F.pandas_udf("embedding array<float>, sigs array<int>")
+    def embed(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        encode = make_encoder()  # per-executor init (the minilm model load)
         for s in batches:
-            mat = constants.embed_batch(s.tolist())
-            yield pd.Series(list(mat))
-
-    return embed
-
-
-def _minilm_embed_udf():  # pragma: no cover - optional heavy backend
-    @F.pandas_udf(ArrayType(FloatType()))
-    def embed(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from sentence_transformers import SentenceTransformer  # gated import
-
-        model = SentenceTransformer("all-MiniLM-L6-v2")
-        for s in batches:
-            mat = model.encode(s.tolist(), batch_size=256, normalize_embeddings=True)
-            yield pd.Series([row.astype("float32") for row in mat])
+            mat = encode(s.tolist())
+            yield pd.DataFrame(
+                {"embedding": list(mat), "sigs": list(constants.lsh_signature(mat))}
+            )
 
     return embed
 
 
 def embed_entities(entities: DataFrame) -> DataFrame:
-    """entities(entity_id, name, kind) -> ENTITY_EMBEDDINGS."""
-    udf = _minilm_embed_udf() if constants.EMBED_BACKEND == "minilm" else _hash_embed_udf()
-    return entities.withColumn("embedding", udf(F.col("name")))
+    """entities(entity_id, name, kind) -> ENTITY_EMBEDDINGS.  The LSH band
+    signatures are computed here, from the vectors already in numpy, so
+    the link stage runs no Python."""
+    enc = _minilm_encoder if constants.EMBED_BACKEND == "minilm" else _hash_encoder
+    return entities.withColumn("_e", _embed_udf(enc)(F.col("name"))).select(
+        *entities.columns, "_e.embedding", "_e.sigs"
+    )
 
 
 def embed_mentions(mentions: DataFrame, linkable_only: bool = True) -> DataFrame:

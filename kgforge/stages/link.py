@@ -2,12 +2,14 @@
 
 Replaces the reference's all-pairs cosine scan
 (/root/reference/search/bert_search.py:176-181, O(N·M) tensor broadcast)
-with sign-LSH blocking (SURVEY.md §4 N1): each entity gets LSH_BANDS band
-signatures; only pairs sharing a (kind, band, signature) bucket are scored.
+with sign-LSH blocking (SURVEY.md §4 N1): each entity carries LSH_BANDS band
+signatures, computed once by the embed stage's UDF and stored in
+entity_embeddings; only pairs sharing a (kind, band, signature) bucket are
+scored.
 The bucket join is a plain equi-join, so Catalyst/AQE give us shuffled-hash
 or sort-merge execution plus skew splitting for free; cosine is computed
 JVM-side (zip_with + aggregate over pre-normalized vectors, so cosine ==
-dot) — no Python in the join path.
+dot) — no Python in the join path, and none in the stage at all.
 
 Scale notes:
 - Cosine is evaluated inside the bucket join and deduped AFTER with a
@@ -20,38 +22,18 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType
 
 from .. import constants
 from ..valvemetrics import drop_hot_keys
 
 
-def _signature_udf():
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def sigs(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float32) for v in s])
-            out = constants.lsh_signature(mat)
-            yield pd.Series([row.tolist() for row in out])
-
-    return sigs
-
-
 def with_buckets(embedded: DataFrame) -> DataFrame:
-    """entity_embeddings -> one row per (entity, band) with a bucket key."""
-    sig = _signature_udf()
+    """entity_embeddings -> one row per (entity, band) with a bucket key,
+    from the band signatures the embed stage stored."""
     return (
-        embedded.withColumn("sigs", sig(F.col("embedding")))
-        .select(
+        embedded.select(
             "entity_id",
             "kind",
             "embedding",

@@ -359,48 +359,65 @@ def sha_audit(rows_in: DataFrame, rows_out: DataFrame, partition_col: str = "rep
     )
 
 
-def stage_metrics(
-    stage: str,
-    rows_in: DataFrame,
-    rows_out: DataFrame,
-    wall_ms: int,
-    partition_col: str = "repo",
+def lineage_metrics(
+    files: DataFrame,
+    packed: DataFrame,
+    triples: DataFrame,
+    mentions_ms: int,
+    triples_ms: int,
     sha_ok: DataFrame | None = None,
-    in_weight: str | None = None,
-    out_weight: str | None = None,
 ) -> DataFrame:
-    """Per-partition lineage rows (north_rule).  Pass ``sha_ok`` (from
-    ``sha_audit``) to fold invariant verdicts in; rows_in/rows_out counts
-    read only the partition column (column-pruned scans).
+    """Per-repo lineage rows (north_rule) for the mentions stage (files in,
+    mentions out) and the triples stage (mentions in, lexical triples out),
+    from ONE groupBy(repo) over a union of the three tables' row weights:
+    a file counts 1, a packed mention row its ``n_mentions`` (so the count
+    never pays the 60x explode), a lexical triple 1.  same_as triples have
+    entity subjects, not files, so no repo owns them.  Pass ``sha_ok``
+    (from ``sha_audit``) to fold invariant verdicts into the mentions
+    rows."""
+    zero, one = F.lit(0).cast("long"), F.lit(1).cast("long")
 
-    ``in_weight``/``out_weight``: sum this column instead of counting rows —
-    lets callers hand in the PACKED per-file mention table (rows = sum of
-    array sizes) so the lineage count never pays the 60x row explosion."""
-    if in_weight is not None:
-        in_counts = rows_in.groupBy(partition_col).agg(
-            F.sum(in_weight).cast("long").alias("rows_in")
+    def leg(df, repo, f, m, t):
+        return df.select(repo.alias("repo"), f.alias("f"), m.alias("m"), t.alias("t"))
+
+    per_repo = (
+        leg(files, F.col("repo"), one, zero, zero)
+        .unionByName(leg(packed, F.col("repo"), zero, F.col("n_mentions").cast("long"), zero))
+        .unionByName(
+            leg(
+                triples.where(F.col("pred") != constants.PRED_SAME_AS),
+                F.split_part(F.col("subj"), F.lit(":"), F.lit(1)),
+                zero,
+                zero,
+                one,
+            )
         )
-    else:
-        in_counts = rows_in.groupBy(partition_col).agg(F.count(F.lit(1)).alias("rows_in"))
-    if out_weight is not None:
-        out_counts = rows_out.groupBy(partition_col).agg(
-            F.sum(out_weight).cast("long").alias("rows_out")
-        )
-    else:
-        out_counts = rows_out.groupBy(partition_col).agg(F.count(F.lit(1)).alias("rows_out"))
-    joined = in_counts.join(out_counts, partition_col, "full")
+        .groupBy("repo")
+        .agg(*[F.sum(c).alias(c) for c in "fmt"])
+    )
     if sha_ok is not None:
-        joined = joined.join(sha_ok, partition_col, "left")
+        per_repo = per_repo.join(sha_ok, "repo", "left")
     else:
-        joined = joined.withColumn("content_sha_ok", F.lit(True))
-    return joined.select(
-        F.lit(stage).alias("stage"),
-        F.col(partition_col).cast("string").alias("partition_key"),
-        F.coalesce("rows_in", F.lit(0)).alias("rows_in"),
-        F.coalesce("rows_out", F.lit(0)).alias("rows_out"),
-        F.coalesce("content_sha_ok", F.lit(True)).alias("content_sha_ok"),
-        # cast: a bare int literal is IntegerType, but schemas.METRICS
-        # declares LongType — without the cast the checkpoint schema guard
-        # rejects every valid metrics table and resume recomputes it forever
-        F.lit(int(wall_ms)).cast("long").alias("wall_ms"),
+        per_repo = per_repo.withColumn("content_sha_ok", F.lit(True))
+
+    def row(stage, rows_in, rows_out, sha_ok_col, wall_ms):
+        return F.struct(
+            F.lit(stage).alias("stage"),
+            F.col("repo").cast("string").alias("partition_key"),
+            F.col(rows_in).alias("rows_in"),
+            F.col(rows_out).alias("rows_out"),
+            sha_ok_col.alias("content_sha_ok"),
+            # cast: a bare int literal is IntegerType, but schemas.METRICS
+            # declares LongType — without the cast the checkpoint schema
+            # guard rejects every valid metrics table
+            F.lit(int(wall_ms)).cast("long").alias("wall_ms"),
+        )
+
+    return per_repo.select(
+        F.inline(
+            F.array(
+                row("mentions", "f", "m", F.coalesce("content_sha_ok", F.lit(True)), mentions_ms),
+                row("triples", "m", "t", F.lit(True), triples_ms),
+            )
+        )
     )

@@ -11,15 +11,18 @@ advisor finding).
 
 ``drop_hot_keys`` is the single shared implementation: it computes the
 per-key sizes (one map-side-combined aggregate), records what the cap
-drops (rows, distinct keys, fraction) via one tiny extra job over that
-same aggregate, logs a warning when anything was dropped, and returns
-the anti-joined survivors.  The metric lands in ``LAST`` keyed by valve
-name so callers/tests/operators can read ``dropped_fraction`` after
-building a plan; on a cluster the log line is the per-job audit trail.
+drops (rows, distinct keys, fraction) as an ``Observation`` on that same
+aggregate while it is local-checkpointed, logs a warning when
+anything was dropped, and returns the anti-joined survivors.  The metric
+lands in ``LAST`` keyed by valve name before the call returns, so
+callers/tests/operators can read ``dropped_fraction`` after building a
+plan; on a cluster the log line is the per-job audit trail.
 
-Cost: one extra job over the (tiny) per-key size table per valve per
-plan build — the size aggregate itself was already needed to find the
-hot keys, so the observation adds no extra pass over the data.
+Cost: one tiny extra job per valve per plan build — the checkpoint of the
+per-key size table (under AQE its shuffle map stage runs as a second
+job).  The size aggregate was needed anyway to find the hot keys, and the
+broadcast hot list is read from the checkpoint, so nothing is computed
+twice.
 """
 
 from __future__ import annotations
@@ -27,7 +30,8 @@ from __future__ import annotations
 import logging
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 log = logging.getLogger("kgforge.valves")
@@ -45,15 +49,24 @@ def drop_hot_keys(df: DataFrame, keys: Sequence[str], cap: int, name: str) -> Da
     dropped_keys, dropped_fraction}`` and warns when dropped_rows > 0.
     """
     keys = list(keys)
-    sizes = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("_vn"))
-    # One tiny job over the size table: totals + what the cap removes.
-    row = sizes.agg(
-        F.coalesce(F.sum("_vn"), F.lit(0)).alias("total_rows"),
-        F.coalesce(F.sum(F.when(F.col("_vn") > cap, F.col("_vn"))), F.lit(0)).alias(
-            "dropped_rows"
-        ),
-        F.count(F.when(F.col("_vn") > cap, F.lit(1))).alias("dropped_keys"),
-    ).first()
+    obs = Observation()
+    # checkpointing the size table fires the observation (one job, plus
+    # the shuffle map stage AQE runs as a job of its own), and the hot list
+    # below reads the checkpoint instead of re-aggregating ``df``
+    sizes = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_vn"))
+        .observe(
+            obs,
+            F.coalesce(F.sum("_vn"), F.lit(0)).alias("total_rows"),
+            F.coalesce(F.sum(F.when(F.col("_vn") > cap, F.col("_vn"))), F.lit(0)).alias(
+                "dropped_rows"
+            ),
+            F.count(F.when(F.col("_vn") > cap, F.lit(1))).alias("dropped_keys"),
+        )
+        .localCheckpoint()
+    )
+    row = obs.get
     total = int(row["total_rows"])
     dropped = int(row["dropped_rows"])
     metrics: dict[str, float | int] = {
@@ -79,11 +92,11 @@ def drop_hot_keys(df: DataFrame, keys: Sequence[str], cap: int, name: str) -> Da
     return df.join(F.broadcast(hot), keys, "left_anti")
 
 
-def metrics_rows(spark) -> DataFrame | None:
-    """``LAST`` rendered as schemas.METRICS rows, so a pipeline run's
-    valve audit trail persists IN the written metrics table instead of
-    dying with the process (round-4 judge ask #4: log lines and a
-    process-local dict are not a cluster audit trail).
+def metrics_rows(spark, valves: dict[str, dict[str, float | int]]) -> DataFrame | None:
+    """``valves`` (entries of ``LAST``) rendered as schemas.METRICS rows,
+    so a pipeline run's valve audit trail persists IN the written metrics
+    table instead of dying with the process (round-4 judge ask #4: log
+    lines and a process-local dict are not a cluster audit trail).
 
     Mapping: ``stage`` = ``valve:<name>``, ``rows_in`` = rows entering
     the valve, ``rows_out`` = survivors (so dropped_fraction =
@@ -91,9 +104,9 @@ def metrics_rows(spark) -> DataFrame | None:
     ``partition_key`` carries the remaining detail
     (``cap=..;dropped_keys=..;dropped_fraction=..``) — a valve is
     corpus-global, not per-partition, so the key slot is free.  Returns
-    None when no valve fired in this process (e.g. a fully-resumed run,
-    where the previously-written table already holds the rows)."""
-    if not LAST:
+    None when ``valves`` is empty (e.g. a fully-resumed run, where the
+    previously-written table already holds the rows)."""
+    if not valves:
         return None
     rows = [
         (
@@ -105,8 +118,9 @@ def metrics_rows(spark) -> DataFrame | None:
             True,
             0,
         )
-        for name, m in sorted(LAST.items())
+        for name, m in sorted(valves.items())
     ]
     from .schemas import METRICS
 
-    return spark.createDataFrame(rows, METRICS)
+    # a pandas frame goes through Arrow; a list of tuples through a pickled RDD
+    return spark.createDataFrame(pd.DataFrame(rows, columns=METRICS.fieldNames()), METRICS)

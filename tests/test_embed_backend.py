@@ -1,5 +1,5 @@
 """Structural exercise of the gated MiniLM embedding backend
-(stages/embed.py:_minilm_embed_udf): the real model weights are absent from
+(stages/embed.py:_minilm_encoder): the real model weights are absent from
 CI, but the UDF's wiring — gated import inside the worker, model init once
 per batch iterator, encode(normalize_embeddings=True), float32 row arrays —
 must not be able to rot silently (round-2 judge item #6: a typo in that UDF
@@ -107,6 +107,7 @@ def test_minilm_backend_udf_shape(spark, monkeypatch, fake_sentence_transformers
         assert all(isinstance(v, float) for v in r.embedding)
         norm = math.sqrt(sum(v * v for v in r.embedding))
         assert abs(norm - 1.0) < 1e-3  # normalize_embeddings=True was passed
+        assert len(r.sigs) == constants.LSH_BANDS  # same UDF, any vector width
     # the fake encodes by name length -> different names, different vectors
     assert rows["function:alpha"].embedding[0] != rows["class:beta_long"].embedding[0]
 

@@ -2,6 +2,10 @@
 exact all-pairs linker (the reference's own O(N^2) semantics,
 /root/reference/search/bert_search.py:176-181) — SURVEY.md §7.2(e)."""
 
+import contextlib
+import io
+
+import numpy as np
 import pytest
 
 from kgforge import constants
@@ -50,3 +54,22 @@ def test_oversized_bucket_valve(embedded):
     # with max_bucket=1 every bucket is dropped -> no candidates
     got = link.candidate_links(embedded, max_bucket=1)
     assert got.count() == 0
+
+
+def test_stored_sigs_are_the_embedding_signatures(embedded):
+    """The embed UDF stores each entity's LSH band signatures next to its
+    vector; they must be exactly ``constants.lsh_signature`` of it."""
+    rows = embedded.select("embedding", "sigs").collect()
+    mat = np.array([r["embedding"] for r in rows], dtype=np.float32)
+    assert [list(r["sigs"]) for r in rows] == constants.lsh_signature(mat).tolist()
+
+
+def test_link_stage_runs_no_python(embedded):
+    """Over stored embeddings the link plan has no Python node: the bucket
+    keys come from the stored ``sigs`` column."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        link.candidate_links(embedded.localCheckpoint()).explain("formatted")
+    plan = buf.getvalue()
+    assert "posexplode" in plan
+    assert "EvalPython" not in plan and "InPandas" not in plan

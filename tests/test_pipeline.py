@@ -80,3 +80,60 @@ def test_mega_repo_skew_present(small_files_pdf):
     """The fixture must actually exercise skew (FIXTURES.md §1)."""
     share = (small_files_pdf["repo"] == "org0/repo0").mean()
     assert share > 0.2
+
+
+def test_triples_lineage_keys_are_input_repos(pipe, small_files_pdf):
+    """The triples lineage rows count lexical triples per repo: every
+    partition_key is a repo of the input (same_as subjects such as
+    'function:foo' are entities, not files, and own no repo)."""
+    out, _ = pipe
+    m = out["metrics"].toPandas()
+    tri = m[m["stage"] == "triples"]
+    assert set(tri["partition_key"]) <= set(small_files_pdf["repo"])
+    lexical = out["triples"].where(F.col("pred") != "same_as").count()
+    assert int(tri["rows_out"].sum()) == lexical
+    men = m[m["stage"] == "mentions"].set_index("partition_key")["rows_out"]
+    assert (tri.set_index("partition_key")["rows_in"] == men.reindex(tri["partition_key"])).all()
+
+
+def test_resume_recomputes_embeddings_without_sigs(pipe, spark, small_files, tmp_path):
+    """Schema guard: a root whose entity_embeddings has the 4 columns it
+    had before the stage stored ``sigs`` is not resumed.  The stage is
+    recomputed, and the run's triples equal a fresh run's."""
+    import shutil
+
+    from kgforge.checkpoint import CheckpointManager
+
+    out, fresh_root = pipe
+    root = tmp_path / "kgrun_old_embeddings"
+    shutil.copytree(f"{fresh_root}/mentions", root / "mentions")
+    old = spark.read.parquet(f"{fresh_root}/entity_embeddings").drop("sigs")
+    assert old.columns == ["entity_id", "name", "kind", "embedding"]
+    old.write.parquet(str(root / "entity_embeddings"))
+
+    out2 = run_pipeline(spark, small_files, str(root))
+    assert "sigs" in spark.read.parquet(str(root / "entity_embeddings")).columns
+    done = CheckpointManager(spark, str(root)).manifest()
+    assert "mentions" not in done and "entity_embeddings" in done  # resumed vs recomputed
+    key = ["subj", "pred", "obj"]
+    before = _triples_pdf(out["triples"]).sort_values(key).reset_index(drop=True)
+    after = _triples_pdf(out2["triples"]).sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(before, after)
+
+
+# Spark jobs a fresh run of the 300-file fixture launches (local[4], 8
+# shuffle partitions): 17.  The build before the observed valve, the
+# stored LSH signatures, the one-shuffle lineage metrics and the
+# schema-given read-backs launched 27.
+FRESH_RUN_JOBS = 17
+
+
+def test_fresh_run_job_budget(spark, small_files, tmp_path):
+    sc = spark.sparkContext
+    sc.setJobGroup("fresh_run_budget", "fresh_run_budget")
+    try:
+        run_pipeline(spark, small_files, str(tmp_path / "kgrun_budget"))
+        jobs = sc.statusTracker().getJobIdsForGroup("fresh_run_budget")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= FRESH_RUN_JOBS, len(jobs)

@@ -130,3 +130,38 @@ def test_valve_rows_persist_in_metrics_table(spark, small_files, tmp_path):
         assert m["dropped_fraction"] == pytest.approx(
             1 - row.rows_out / row.rows_in, abs=1e-6
         )
+
+
+def test_drop_hot_keys_runs_one_checkpoint_job(spark):
+    """The totals ride an Observation on the size table's localCheckpoint,
+    filled before the call returns.  While the plan builds that is one
+    checkpoint job plus the shuffle map stage AQE submits as a job of its
+    own: 2 jobs, where a ``.first()`` probe over the size aggregate ran 3."""
+    rows = [("hot", i) for i in range(60)] + [("a", 1), ("a", 2), ("b", 1)]
+    df = spark.createDataFrame(rows, "k string, v int")
+    sc = spark.sparkContext
+    sc.setJobGroup("valve_one_job", "valve_one_job")
+    try:
+        kept = drop_hot_keys(df, ["k"], cap=50, name="t_valve_one_job")
+        jobs = sc.statusTracker().getJobIdsForGroup("valve_one_job")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 2, jobs
+    m = valvemetrics.LAST["t_valve_one_job"]
+    assert (m["total_rows"], m["dropped_rows"], m["dropped_keys"]) == (63, 60, 1)
+    assert sorted((r.k, r.v) for r in kept.collect()) == [("a", 1), ("a", 2), ("b", 1)]
+
+
+def test_metrics_table_holds_only_this_runs_valves(spark, tiny_files, tmp_path):
+    """LAST is process-global; a run's metrics table must fold only the
+    valves that fired while that run built, not every valve the process
+    has ever fired."""
+    from kgforge.pipeline import run_pipeline
+
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
+    drop_hot_keys(df, ["k"], cap=10, name="t_valve")
+    root = str(tmp_path / "kgrun_own_valves")
+    run_pipeline(spark, tiny_files, root)
+    stages = {r.stage for r in spark.read.parquet(f"{root}/metrics").select("stage").collect()}
+    assert "valve:t_valve" not in stages
+    assert "valve:link_candidate_bucket" in stages
