@@ -91,11 +91,8 @@ def _local_components(spark, rows) -> DataFrame:
             lo, hi = sorted((ra, rb))
             parent[hi] = lo
     out = [(x, find(x)) for x in parent if find(x) != x]
-    # a pandas frame goes through Arrow; a list of tuples through a pickled RDD
-    return spark.createDataFrame(
-        pd.DataFrame(out, columns=["entity_id", "canonical_id"], dtype=object),
-        "entity_id string, canonical_id string",
-    )
+    pdf = pd.DataFrame(out, columns=["entity_id", "canonical_id"])  # Arrow, not a pickled RDD
+    return spark.createDataFrame(pdf, "entity_id string, canonical_id string")
 
 
 # rows the first path probe of connected_components collects

@@ -376,48 +376,30 @@ def lineage_metrics(
     (from ``sha_audit``) to fold invariant verdicts into the mentions
     rows."""
     zero, one = F.lit(0).cast("long"), F.lit(1).cast("long")
-
-    def leg(df, repo, f, m, t):
-        return df.select(repo.alias("repo"), f.alias("f"), m.alias("m"), t.alias("t"))
-
+    cols = ["repo", "f", "m", "t"]  # weight columns: files, mentions, triples
+    lexical = triples.where(F.col("pred") != constants.PRED_SAME_AS)
     per_repo = (
-        leg(files, F.col("repo"), one, zero, zero)
-        .unionByName(leg(packed, F.col("repo"), zero, F.col("n_mentions").cast("long"), zero))
-        .unionByName(
-            leg(
-                triples.where(F.col("pred") != constants.PRED_SAME_AS),
-                F.split_part(F.col("subj"), F.lit(":"), F.lit(1)),
-                zero,
-                zero,
-                one,
-            )
-        )
+        files.select("repo", one, zero, zero).toDF(*cols)
+        .union(packed.select("repo", zero, F.col("n_mentions").cast("long"), zero).toDF(*cols))
+        .union(lexical.select(F.split_part("subj", F.lit(":"), F.lit(1)), zero, zero, one).toDF(*cols))
         .groupBy("repo")
         .agg(*[F.sum(c).alias(c) for c in "fmt"])
     )
+    sha = F.lit(True)
     if sha_ok is not None:
         per_repo = per_repo.join(sha_ok, "repo", "left")
-    else:
-        per_repo = per_repo.withColumn("content_sha_ok", F.lit(True))
+        sha = F.coalesce("content_sha_ok", F.lit(True))
 
-    def row(stage, rows_in, rows_out, sha_ok_col, wall_ms):
+    def row(stage, rows_in, rows_out, sha_col, wall_ms):
         return F.struct(
             F.lit(stage).alias("stage"),
             F.col("repo").cast("string").alias("partition_key"),
             F.col(rows_in).alias("rows_in"),
             F.col(rows_out).alias("rows_out"),
-            sha_ok_col.alias("content_sha_ok"),
-            # cast: a bare int literal is IntegerType, but schemas.METRICS
-            # declares LongType — without the cast the checkpoint schema
-            # guard rejects every valid metrics table
-            F.lit(int(wall_ms)).cast("long").alias("wall_ms"),
+            sha_col.alias("content_sha_ok"),
+            F.lit(int(wall_ms)).cast("long").alias("wall_ms"),  # METRICS says long, not int
         )
 
-    return per_repo.select(
-        F.inline(
-            F.array(
-                row("mentions", "f", "m", F.coalesce("content_sha_ok", F.lit(True)), mentions_ms),
-                row("triples", "m", "t", F.lit(True), triples_ms),
-            )
-        )
-    )
+    mentions_row = row("mentions", "f", "m", sha, mentions_ms)
+    triples_row = row("triples", "m", "t", F.lit(True), triples_ms)
+    return per_repo.select(F.inline(F.array(mentions_row, triples_row)))

@@ -12,17 +12,16 @@ advisor finding).
 ``drop_hot_keys`` is the single shared implementation: it computes the
 per-key sizes (one map-side-combined aggregate), records what the cap
 drops (rows, distinct keys, fraction) as an ``Observation`` on that same
-aggregate while it is local-checkpointed, logs a warning when
-anything was dropped, and returns the anti-joined survivors.  The metric
-lands in ``LAST`` keyed by valve name before the call returns, so
-callers/tests/operators can read ``dropped_fraction`` after building a
-plan; on a cluster the log line is the per-job audit trail.
+aggregate, logs a warning when anything was dropped, and returns the
+anti-joined survivors.  The metric lands in ``LAST`` keyed by valve name
+before the call returns, so callers/tests/operators can read
+``dropped_fraction`` after building a plan; on a cluster the log line is
+the per-job audit trail.
 
-Cost: one tiny extra job per valve per plan build — the checkpoint of the
-per-key size table (under AQE its shuffle map stage runs as a second
-job).  The size aggregate was needed anyway to find the hot keys, and the
-broadcast hot list is read from the checkpoint, so nothing is computed
-twice.
+Cost: one tiny extra job per valve per plan build, which checkpoints the
+hot-key list (AQE runs the size aggregate's shuffle map stage as a job
+of its own).  The broadcast anti-join reads that checkpoint, so the
+aggregate is not computed twice, and only the hot keys stay in storage.
 """
 
 from __future__ import annotations
@@ -49,21 +48,20 @@ def drop_hot_keys(df: DataFrame, keys: Sequence[str], cap: int, name: str) -> Da
     dropped_keys, dropped_fraction}`` and warns when dropped_rows > 0.
     """
     keys = list(keys)
-    obs = Observation()
-    # checkpointing the size table fires the observation (one job, plus
-    # the shuffle map stage AQE runs as a job of its own), and the hot list
-    # below reads the checkpoint instead of re-aggregating ``df``
-    sizes = (
+    obs, is_hot = Observation(), F.col("_vn") > cap
+    # the observation sees every size row; only the hot keys are kept, in
+    # a checkpoint whose one job fires the observation before we return
+    hot = (
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("_vn"))
         .observe(
             obs,
             F.coalesce(F.sum("_vn"), F.lit(0)).alias("total_rows"),
-            F.coalesce(F.sum(F.when(F.col("_vn") > cap, F.col("_vn"))), F.lit(0)).alias(
-                "dropped_rows"
-            ),
-            F.count(F.when(F.col("_vn") > cap, F.lit(1))).alias("dropped_keys"),
+            F.coalesce(F.sum(F.when(is_hot, F.col("_vn"))), F.lit(0)).alias("dropped_rows"),
+            F.count(F.when(is_hot, F.lit(1))).alias("dropped_keys"),
         )
+        .where(is_hot)
+        .select(*keys)
         .localCheckpoint()
     )
     row = obs.get
@@ -88,7 +86,6 @@ def drop_hot_keys(df: DataFrame, keys: Sequence[str], cap: int, name: str) -> Da
             100.0 * metrics["dropped_fraction"],
             metrics["dropped_keys"],
         )
-    hot = sizes.where(F.col("_vn") > cap).select(*keys)
     return df.join(F.broadcast(hot), keys, "left_anti")
 
 
