@@ -132,22 +132,23 @@ def test_valve_rows_persist_in_metrics_table(spark, small_files, tmp_path):
         )
 
 
-def test_drop_hot_keys_runs_one_checkpoint_job(spark):
-    """The totals ride an Observation on the size table's localCheckpoint,
-    filled before the call returns.  While the plan builds that is one
-    checkpoint job plus the shuffle map stage AQE submits as a job of its
-    own: 2 jobs, where a ``.first()`` probe over the size aggregate ran 3."""
+def test_drop_hot_keys_jobs_at_call_time(spark):
+    """The totals ride an Observation on the size aggregate, filled by the
+    hot-key checkpoint before the call returns.  While the plan builds
+    that is one checkpoint job plus the shuffle map stage AQE submits as a
+    job of its own: 2 jobs, where a ``.first()`` probe over the size
+    aggregate ran 3."""
     rows = [("hot", i) for i in range(60)] + [("a", 1), ("a", 2), ("b", 1)]
     df = spark.createDataFrame(rows, "k string, v int")
     sc = spark.sparkContext
-    sc.setJobGroup("valve_one_job", "valve_one_job")
+    sc.setJobGroup("valve_call_jobs", "valve_call_jobs")
     try:
-        kept = drop_hot_keys(df, ["k"], cap=50, name="t_valve_one_job")
-        jobs = sc.statusTracker().getJobIdsForGroup("valve_one_job")
+        kept = drop_hot_keys(df, ["k"], cap=50, name="t_valve_call_jobs")
+        jobs = sc.statusTracker().getJobIdsForGroup("valve_call_jobs")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(jobs) == 2, jobs
-    m = valvemetrics.LAST["t_valve_one_job"]
+    m = valvemetrics.LAST["t_valve_call_jobs"]
     assert (m["total_rows"], m["dropped_rows"], m["dropped_keys"]) == (63, 60, 1)
     assert sorted((r.k, r.v) for r in kept.collect()) == [("a", 1), ("a", 2), ("b", 1)]
 
