@@ -64,8 +64,16 @@ class CheckpointManager:
             if schema is None or self._schema_ok(df, schema):
                 return df
         t0 = time.time()
+        persisted = self.spark.sparkContext._jsc.getPersistentRDDs
+        before = set(persisted().keySet())
         df = fn()
         catalog.write_table(df, loc, partition_by=partition_by)
+        # the stage's own checkpoints and caches (valve hot keys, canonical
+        # edge and round checkpoints) are dead once the table is written:
+        # downstream reads the table, not the stage's plan
+        now = persisted()
+        for rdd_id in set(now.keySet()) - before:
+            now.get(rdd_id).unpersist(False)
         self._record(stage, time.time() - t0)
         return catalog.read_table(self.spark, loc, schema=df.schema)
 

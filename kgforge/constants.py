@@ -9,6 +9,7 @@ RandomState.  Reference analogs cited per constant.
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
@@ -142,14 +143,20 @@ def lsh_hyperplanes(dim: int = EMBED_DIM, planes: int = LSH_PLANES, seed: int = 
     return rs.standard_normal((planes, dim)).astype(np.float32)
 
 
+@functools.lru_cache(maxsize=1 << 16)
 def hash_token_vector(token: str, dim: int = EMBED_DIM, seed: int = EMBED_SEED) -> np.ndarray:
     """Deterministic unit-ish vector for one token: seeded by a stable string
-    hash (NOT Python's salted hash()).  Shared by embedder and twin."""
+    hash (NOT Python's salted hash()).  Shared by embedder and twin.
+
+    Memoized (a RandomState per call dominated embedding short names); the
+    cached vector is shared by every caller, so it is read-only."""
     import zlib
 
     h = zlib.crc32(token.encode("utf-8")) ^ seed
     rs = np.random.RandomState(h & 0x7FFFFFFF)
-    return rs.standard_normal(dim).astype(np.float32)
+    vec = rs.standard_normal(dim).astype(np.float32)
+    vec.flags.writeable = False
+    return vec
 
 
 def embed_text(text: str, dim: int = EMBED_DIM) -> np.ndarray:

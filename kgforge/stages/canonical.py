@@ -16,6 +16,9 @@ Scale notes:
   (count + sum of xxhash64), one tiny aggregate per round.
 - Node ids are strings; min == lexicographic min, deterministic across
   partition counts.
+- Small graphs never reach the rounds: one capped collect of the raw
+  links (no dedup shuffle — union-find ignores duplicate edges and
+  self-loops) feeds a driver-side union-find.
 """
 
 from __future__ import annotations
@@ -92,7 +95,9 @@ def _local_components(spark, rows) -> DataFrame:
             parent[hi] = lo
     out = [(x, find(x)) for x in parent if find(x) != x]
     pdf = pd.DataFrame(out, columns=["entity_id", "canonical_id"])  # Arrow, not a pickled RDD
-    return spark.createDataFrame(pdf, "entity_id string, canonical_id string")
+    # one partition: the stage table is then one file, and materialize's
+    # capped mapping probe reads one split
+    return spark.createDataFrame(pdf, "entity_id string, canonical_id string").coalesce(1)
 
 
 # rows the first path probe of connected_components collects
@@ -114,19 +119,21 @@ def connected_components(
     proportional to the linked subgraph, not the full entity universe —
     that is what makes the canonical dictionary broadcast-able (north_rule).
     """
-    edges = _dedup(links.select(F.col("a").alias("src"), F.col("b").alias("dst")))
+    raw = links.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     # Bounded probe, capped as materialize.triples_from_packed caps its
-    # mapping probe: ONE limit(cap+1).collect() settles a graph of at most
-    # LOCAL_PROBE_ROWS edges and IS the union-find's input.  Past the cap the
-    # edges are checkpointed once, so the size count, the union-find collect
-    # and the first distributed round share one pass over the _dedup plan.
+    # mapping probe: ONE limit(cap+1).collect() of the RAW links settles a
+    # graph of at most LOCAL_PROBE_ROWS edges and IS the union-find's input
+    # (union-find ignores duplicate edges and self-loops, so the probe
+    # skips _dedup's shuffle).  Past the cap the deduped edges are
+    # checkpointed once, so the size count, the union-find collect and the
+    # first distributed round share one pass over the _dedup plan.
     spark = links.sparkSession
     if local_threshold > 0:
         cap = min(local_threshold, LOCAL_PROBE_ROWS)
-        rows = edges.limit(cap + 1).collect()
+        rows = raw.limit(cap + 1).collect()
         if len(rows) <= cap:
             return _local_components(spark, rows)
-    edges = edges.localCheckpoint()
+    edges = _dedup(raw).localCheckpoint()
     if local_threshold > LOCAL_PROBE_ROWS and edges.count() <= local_threshold:
         return _local_components(spark, edges.collect())
 

@@ -18,15 +18,51 @@ Scale notes:
 - Degenerate buckets (hot signatures) are dropped via a broadcast anti-join
   against the (tiny) oversized-bucket list — the safety valve that keeps a
   10^12-entity run from producing a quadratic bucket.
+
+Driver finisher: the stage first collects at most ``LINK_PROBE_ROWS`` + 1
+entities, each with its bucket keys (computed JVM-side by the same
+``bucket_key`` the join uses).  When the whole table fits in that probe
+and its surviving buckets self-join to at most ``LOCAL_LINK_PAIRS`` rows
+(sum of n_b^2), the same plan runs in numpy on the driver: the same valve
+(recorded through ``valvemetrics.record``), the same a < b self-join, the
+cosine as float32 products summed in order in float64 (what the JVM's
+aggregate does), the same threshold and the same (a, b) -> max score, min
+bucket dedup.  Its rows are bit-identical to the distributed plan's
+(tests/test_link.py runs both).  A 72-entity build then costs one probe
+job instead of the valve, join and dedup jobs.  Both bounds are
+driver-memory guards, not crossovers: the local path still won at the
+largest graph the guard admits (BASELINE.md "link finisher").
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import constants
-from ..valvemetrics import drop_hot_keys
+from .. import constants, valvemetrics
+
+# Rows of the bucket self-join (sum of n_b^2 over the buckets that pass the
+# valve) the driver finisher may build; past it the distributed plan runs.
+# A driver-memory guard: the finisher's peak grows ~47 bytes per row
+# (BASELINE.md "link finisher"), ~190 MB here.
+LOCAL_LINK_PAIRS = 4_000_000
+# Entities the finisher's probe collects; a larger table runs the
+# distributed plan.  With LSH_ROWS-bit bands an entity table of n rows
+# over k kinds self-joins to at least (LSH_BANDS / 2**LSH_ROWS) * n^2 / k
+# rows, n^2 / 2 for the two LINK_KINDS, so past ~2.8k entities the pair
+# guard declines anyway and a larger probe would be collected for nothing.
+LINK_PROBE_ROWS = 4_000
+
+_VALVE = "link_candidate_bucket"
+_LINKS_DDL = "a string, b string, score double, bucket long"
+
+
+def bucket_key(kind, band, sig):
+    """The LSH bucket of one (kind, band, signature) — the one definition
+    both the bucket join and the driver finisher's probe use."""
+    return F.xxhash64(kind, band, sig)
 
 
 def with_buckets(embedded: DataFrame) -> DataFrame:
@@ -39,7 +75,7 @@ def with_buckets(embedded: DataFrame) -> DataFrame:
             "embedding",
             F.posexplode("sigs").alias("band", "sig"),
         )
-        .withColumn("bucket", F.xxhash64("kind", "band", "sig"))
+        .withColumn("bucket", bucket_key("kind", "band", "sig"))
         .drop("band", "sig")
     )
 
@@ -59,13 +95,32 @@ def candidate_links(
     max_bucket: int = constants.LINK_MAX_BUCKET,
 ) -> DataFrame:
     """ENTITY_EMBEDDINGS -> CANDIDATE_LINKS (a < b canonical ordering,
-    /root/reference/experiments/uaz_documents_comparison.py:237-238)."""
+    /root/reference/experiments/uaz_documents_comparison.py:237-238).
+
+    Finishes on the driver when the table and its bucket self-join fit the
+    module bounds (see the module docstring); the rows are the same."""
+    probe = (
+        embedded.select(
+            "entity_id",
+            "embedding",
+            F.transform("sigs", lambda sig, band: bucket_key(F.col("kind"), band, sig)).alias(
+                "buckets"
+            ),
+        )
+        .limit(LINK_PROBE_ROWS + 1)
+        .collect()
+    )
+    if len(probe) <= LINK_PROBE_ROWS:
+        local = _local_links(embedded.sparkSession, probe, threshold, max_bucket)
+        if local is not None:
+            return local
+
     bucketed = with_buckets(embedded)
 
     # observable valve: oversized buckets are dropped, and the dropped
     # row/key counts are recorded + logged (kgforge/valvemetrics.py) so
     # the recall cost of the cap is never silent.
-    bucketed = drop_hot_keys(bucketed, ["bucket"], max_bucket, "link_candidate_bucket")
+    bucketed = valvemetrics.drop_hot_keys(bucketed, ["bucket"], max_bucket, _VALVE)
 
     left = bucketed.select(
         "bucket",
@@ -86,6 +141,69 @@ def candidate_links(
     return pairs.groupBy("a", "b").agg(
         F.max("score").alias("score"), F.min("bucket").alias("bucket")
     )
+
+
+def _local_links(spark, rows, threshold: float, max_bucket: int) -> DataFrame | None:
+    """The distributed body of ``candidate_links`` over collected probe
+    rows, in numpy.  Returns None, recording nothing, when the surviving
+    buckets self-join to more than ``LOCAL_LINK_PAIRS`` rows."""
+    ent = np.repeat(np.arange(len(rows)), [len(r["buckets"]) for r in rows])
+    keys = np.fromiter((k for r in rows for k in r["buckets"]), np.int64, len(ent))
+    # valve: group sizes over every (entity, band) row, drop groups over the cap
+    buckets, group, sizes = np.unique(keys, return_inverse=True, return_counts=True)
+    hot = sizes > max_bucket
+    if int(np.square(sizes[~hot]).sum()) > LOCAL_LINK_PAIRS:
+        return None
+    valvemetrics.record(_VALVE, max_bucket, len(keys), int(sizes[hot].sum()), int(hot.sum()))
+
+    # bucket self-join: every unordered pair of rows inside a surviving
+    # bucket, grouped by bucket size so each size is one triu_indices block
+    by_bucket = ent[np.argsort(group, kind="stable")]
+    starts = np.cumsum(sizes) - sizes
+    blocks = [(np.zeros(0, np.int64),) * 3]
+    for size in np.unique(sizes[~hot & (sizes > 1)]):
+        g = np.flatnonzero(~hot & (sizes == size))
+        i, j = np.triu_indices(size, 1)
+        blocks.append(
+            (
+                by_bucket[(starts[g, None] + i).ravel()],
+                by_bucket[(starts[g, None] + j).ravel()],
+                np.repeat(buckets[g], len(i)),
+            )
+        )
+    left, right, pair_bucket = (np.concatenate(c) for c in zip(*blocks))
+
+    # a < b on the ids (str order is Spark's UTF-8 binary order); equal ids
+    # share a rank and drop out, as the join's a < b drops them
+    ids, rank = np.unique(
+        np.array([r["entity_id"] for r in rows], dtype=object), return_inverse=True
+    )
+    ra, rb = rank[left], rank[right]
+    keep = ra != rb
+    left, right, pair_bucket = left[keep], right[keep], pair_bucket[keep]
+    ra, rb = ra[keep], rb[keep]
+
+    # cosine as the JVM computes it: float32 products, summed in order in float64
+    emb = np.array([r["embedding"] for r in rows], dtype=np.float32, ndmin=2).T.copy()
+    score = np.zeros(len(left))
+    for col in emb:
+        score += col[left] * col[right]
+    hit = score >= float(threshold)
+    pairs = pd.DataFrame(
+        {
+            "a": np.minimum(ra, rb)[hit],
+            "b": np.maximum(ra, rb)[hit],
+            "score": score[hit],
+            "bucket": pair_bucket[hit],
+        }
+    )
+    links = pairs.groupby(["a", "b"], as_index=False, sort=False).agg(
+        score=("score", "max"), bucket=("bucket", "min")
+    )
+    links["a"], links["b"] = ids[links["a"].to_numpy()], ids[links["b"].to_numpy()]
+    # one partition: the stage table is then one file, and the next
+    # stage's capped probe reads one split
+    return spark.createDataFrame(links, _LINKS_DDL).coalesce(1)
 
 
 def exact_links(embedded: DataFrame, threshold: float = constants.LINK_THRESHOLD) -> DataFrame:

@@ -45,6 +45,13 @@ def test_star_and_cycle(spark, local_threshold):
     assert got == {"n": "m", "o": "m", "p": "m"}
 
 
+def test_duplicate_edges_and_self_loops(spark, local_threshold):
+    """The driver path's probe reads the raw links: repeated edges and
+    self-loops must not change the mapping."""
+    got = _cc(spark, [("a", "b"), ("a", "b"), ("b", "b"), ("q", "q"), ("c", "b")], local_threshold)
+    assert got == {"b": "a", "c": "a"}
+
+
 def test_long_chain_needs_iterations(spark, local_threshold):
     nodes = [f"n{i:02d}" for i in range(12)]
     got = _cc(spark, list(zip(nodes, nodes[1:])), local_threshold)
@@ -69,20 +76,23 @@ def test_deterministic_across_partitioning(spark):
     assert a == b
 
 
-def test_local_path_probes_once(spark):
+def test_local_path_probes_once(spark, tmp_path):
     """The small path decides and collects with ONE capped
-    limit(cap+1).collect(): 2 jobs on this graph (the dedup's shuffle map
-    stage and the collect), where a limit(T+1).count() followed by a
-    collect of the same rows ran 5."""
+    limit(cap+1).collect() of the raw links: 1 job on this graph, read
+    from a one-file table as the link stage writes it, where probing the
+    deduped edges ran 2 (the dedup's shuffle map stage and the collect)
+    and a limit(T+1).count() followed by a collect of the same rows ran 5."""
     sc = spark.sparkContext
-    links = _links(spark, [("a", "b"), ("b", "c"), ("x", "y"), ("m", "n"), ("n", "c")])
+    pairs = [("a", "b"), ("b", "c"), ("x", "y"), ("m", "n"), ("n", "c")]
+    _links(spark, pairs).coalesce(1).write.parquet(str(tmp_path / "links"))
+    links = spark.read.parquet(str(tmp_path / "links"))
     sc.setJobGroup("cc_local_probe", "cc_local_probe")
     try:
         out = connected_components(links)
         jobs = sc.statusTracker().getJobIdsForGroup("cc_local_probe")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(jobs) <= 2, jobs
+    assert len(jobs) == 1, jobs
     assert {r["entity_id"]: r["canonical_id"] for r in out.collect()} == {
         "b": "a", "c": "a", "m": "a", "n": "a", "y": "x"
     }

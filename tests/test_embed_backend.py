@@ -120,3 +120,19 @@ def test_hash_backend_is_default(spark):
     )
     (row,) = embed.embed_entities(ents).collect()
     assert len(row.embedding) == constants.EMBED_DIM
+
+
+def test_hash_token_vector_cache_is_exact_and_read_only(monkeypatch):
+    """The memoized trigram vectors embed bit for bit as the uncached
+    function does, and a cached vector cannot be written through."""
+    import numpy as np
+
+    names = ["parse_config", "ParseConfig", "résumé", "x", "", "parse_config"]
+    cached = constants.embed_batch(names)
+    monkeypatch.setattr(constants, "hash_token_vector", constants.hash_token_vector.__wrapped__)
+    assert np.array_equal(cached, constants.embed_batch(names))
+    monkeypatch.undo()
+    vec = constants.hash_token_vector("^pa")
+    with pytest.raises(ValueError):
+        vec[0] = 1.0
+    assert constants.hash_token_vector("^pa") is vec

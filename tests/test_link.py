@@ -8,7 +8,7 @@ import io
 import numpy as np
 import pytest
 
-from kgforge import constants
+from kgforge import constants, valvemetrics
 from kgforge.stages import embed, link, mentions
 
 
@@ -18,11 +18,90 @@ def embedded(spark, small_files):
     return embed.embed_mentions(men).cache()
 
 
+@pytest.fixture(params=["local", "distributed"])
+def link_path(request, monkeypatch):
+    """Run a test through BOTH the driver finisher and the distributed
+    bucket join (a probe bound of 0 sends every non-empty table to the join)."""
+    if request.param == "distributed":
+        monkeypatch.setattr(link, "LINK_PROBE_ROWS", 0)
+    return request.param
+
+
 def _pairs(df):
     return {(r["a"], r["b"]) for r in df.select("a", "b").collect()}
 
 
-def test_lsh_recall_vs_exact(embedded):
+def _both_paths(embedded, monkeypatch, **kw):
+    """(rows, valve metrics) of the driver finisher, then of the
+    distributed body (the finisher declining), on the same input.  Fails
+    if the finisher did not finish the first run."""
+    local, finished = link._local_links, []
+
+    def spy(*args):
+        out = local(*args)
+        finished.append(out is not None)
+        return out
+
+    got = []
+    for finisher in (spy, lambda *args: None):
+        monkeypatch.setattr(link, "_local_links", finisher)
+        rows = sorted(tuple(r) for r in link.candidate_links(embedded, **kw).collect())
+        got.append((rows, valvemetrics.LAST["link_candidate_bucket"]))
+    assert finished == [True]
+    return got
+
+
+@pytest.mark.parametrize("max_bucket", [constants.LINK_MAX_BUCKET, 1, 3])
+def test_local_finisher_matches_distributed_body(embedded, monkeypatch, max_bucket):
+    """Same rows, scores and buckets bit for bit, and the same valve
+    metrics; at max_bucket 1 every shared bucket is dropped, at 3 most are."""
+    (local_rows, local_valve), (dist_rows, dist_valve) = _both_paths(
+        embedded, monkeypatch, max_bucket=max_bucket
+    )
+    assert local_rows == dist_rows
+    assert local_valve == dist_valve
+    assert local_valve["total_rows"] == embedded.count() * constants.LSH_BANDS
+    if max_bucket == constants.LINK_MAX_BUCKET:
+        assert local_rows and local_valve["dropped_rows"] == 0
+    else:
+        assert local_valve["dropped_keys"] > 0
+
+
+def test_local_finisher_on_empty_table(embedded, monkeypatch):
+    (local_rows, local_valve), (dist_rows, dist_valve) = _both_paths(
+        embedded.limit(0), monkeypatch
+    )
+    assert local_rows == dist_rows == []
+    assert local_valve == dist_valve
+    assert local_valve["total_rows"] == 0
+
+
+def test_local_finisher_orders_non_ascii_ids(spark, monkeypatch):
+    """a < b is Spark's UTF-8 binary order, which Python's code-point str
+    order equals — also between a supplementary-plane character and one
+    above the surrogates (UTF-16 order would swap those)."""
+    names = [
+        "résumé_parser", "resume_parser", "Résumé_parser", "naïve_bayes", "naive_bayes",
+        "日本語_tokenizer", "日本_tokenizer", "Ωmega_fn", "omega_fn", "zeta_fn", "ßeta_fn",
+        "\U0001d523_parse", "\uff46_parse", "f_parse",
+    ]
+    vecs = constants.embed_batch(names)
+    df = spark.createDataFrame(
+        [
+            (f"function:{n}", n, "function", [float(x) for x in v], [int(x) for x in sig])
+            for n, v, sig in zip(names, vecs, constants.lsh_signature(vecs))
+        ],
+        "entity_id string, name string, kind string, embedding array<float>, sigs array<int>",
+    )
+    (local_rows, local_valve), (dist_rows, dist_valve) = _both_paths(
+        df, monkeypatch, threshold=-1.0
+    )
+    assert local_rows == dist_rows
+    assert local_valve == dist_valve
+    assert ("function:\uff46_parse", "function:\U0001d523_parse") in {r[:2] for r in local_rows}
+
+
+def test_lsh_recall_vs_exact(embedded, link_path):
     got = _pairs(link.candidate_links(embedded))
     want = _pairs(link.exact_links(embedded))
     assert want, "exact linker found no pairs — fixture too small"
@@ -34,7 +113,7 @@ def test_lsh_recall_vs_exact(embedded):
     assert not spurious, f"spurious pairs (cosine below threshold?): {sorted(spurious)[:5]}"
 
 
-def test_links_are_canonically_ordered_and_thresholded(embedded):
+def test_links_are_canonically_ordered_and_thresholded(embedded, link_path):
     rows = link.candidate_links(embedded).collect()
     assert rows
     for r in rows:
@@ -64,9 +143,10 @@ def test_stored_sigs_are_the_embedding_signatures(embedded):
     assert [list(r["sigs"]) for r in rows] == constants.lsh_signature(mat).tolist()
 
 
-def test_link_stage_runs_no_python(embedded):
-    """Over stored embeddings the link plan has no Python node: the bucket
-    keys come from the stored ``sigs`` column."""
+def test_link_stage_runs_no_python(embedded, monkeypatch):
+    """Over stored embeddings the distributed link plan has no Python
+    node: the bucket keys come from the stored ``sigs`` column."""
+    monkeypatch.setattr(link, "LINK_PROBE_ROWS", 0)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         link.candidate_links(embedded.localCheckpoint()).explain("formatted")

@@ -122,10 +122,11 @@ def test_resume_recomputes_embeddings_without_sigs(pipe, spark, small_files, tmp
 
 
 # Spark jobs a fresh run of the 300-file fixture launches (local[4], 8
-# shuffle partitions): 17.  The build before the observed valve, the
-# stored LSH signatures, the one-shuffle lineage metrics and the
-# schema-given read-backs launched 27.
-FRESH_RUN_JOBS = 17
+# shuffle partitions): 11.  Before the link stage's driver finisher, the
+# raw-links canonical probe and the one-file driver-built tables it was
+# 17; before the observed valve, the stored LSH signatures, the
+# one-shuffle lineage metrics and the schema-given read-backs, 27.
+FRESH_RUN_JOBS = 11
 
 
 def test_fresh_run_job_budget(spark, small_files, tmp_path):
@@ -137,3 +138,17 @@ def test_fresh_run_job_budget(spark, small_files, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(jobs) <= FRESH_RUN_JOBS, len(jobs)
+
+
+def test_run_leaves_no_persisted_blocks(spark, small_files, tmp_path, monkeypatch):
+    """The valve's hot-key checkpoint and canonical's edge checkpoint are
+    released once their stage table is written: a run ends with the
+    persistent-RDD count it started with."""
+    from kgforge.stages import canonical, link
+
+    monkeypatch.setattr(link, "LINK_PROBE_ROWS", 0)  # distributed link: the valve fires
+    monkeypatch.setattr(canonical, "LOCAL_PROBE_ROWS", 2)  # past the probe: edge checkpoint
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = rdds().size()
+    run_pipeline(spark, small_files, str(tmp_path / "kgrun_blocks"))
+    assert rdds().size() == before

@@ -76,9 +76,11 @@ def test_knn_bruteforce_is_broadcast_nested_loop(plans):
     assert "CartesianProduct" not in p
 
 
-def test_candidate_links_bucket_join_shape(spark, small_files):
+def test_candidate_links_bucket_join_shape(spark, small_files, monkeypatch):
     from kgforge.stages import embed, link, mentions
 
+    # the fixture's 72 entities finish on the driver; this checks the join
+    monkeypatch.setattr(link, "LINK_PROBE_ROWS", 0)
     men = mentions.extract_mentions(small_files)
     links = link.candidate_links(embed.embed_mentions(men))
     p = plan_of(links)
