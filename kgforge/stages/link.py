@@ -173,22 +173,18 @@ def _local_links(spark, rows, threshold: float, max_bucket: int) -> DataFrame | 
         )
     left, right, pair_bucket = (np.concatenate(c) for c in zip(*blocks))
 
+    # cosine as the JVM computes it: float32 products, summed in order in float64
+    emb = np.array([r["embedding"] for r in rows], dtype=np.float32, ndmin=2).T.copy()
+    score = np.zeros(len(left))
+    for col in emb:
+        score += col[left] * col[right]
     # a < b on the ids (str order is Spark's UTF-8 binary order); equal ids
     # share a rank and drop out, as the join's a < b drops them
     ids, rank = np.unique(
         np.array([r["entity_id"] for r in rows], dtype=object), return_inverse=True
     )
     ra, rb = rank[left], rank[right]
-    keep = ra != rb
-    left, right, pair_bucket = left[keep], right[keep], pair_bucket[keep]
-    ra, rb = ra[keep], rb[keep]
-
-    # cosine as the JVM computes it: float32 products, summed in order in float64
-    emb = np.array([r["embedding"] for r in rows], dtype=np.float32, ndmin=2).T.copy()
-    score = np.zeros(len(left))
-    for col in emb:
-        score += col[left] * col[right]
-    hit = score >= float(threshold)
+    hit = (ra != rb) & (score >= float(threshold))
     pairs = pd.DataFrame(
         {
             "a": np.minimum(ra, rb)[hit],

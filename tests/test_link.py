@@ -101,6 +101,24 @@ def test_local_finisher_orders_non_ascii_ids(spark, monkeypatch):
     assert ("function:\uff46_parse", "function:\U0001d523_parse") in {r[:2] for r in local_rows}
 
 
+def test_local_finisher_sums_cosine_in_jvm_order(spark, monkeypatch):
+    """Scores equal the JVM's bit for bit where the summation order shows:
+    components spanning twelve orders of magnitude, every entity in every
+    bucket, no threshold.  A pairwise or BLAS sum fails this."""
+    rng, sigs = np.random.default_rng(7), [0] * constants.LSH_BANDS
+    vecs = rng.standard_normal((40, 64)) * 10.0 ** rng.uniform(-6, 6, (40, 64))
+    df = spark.createDataFrame(
+        [
+            (f"function:f{i:02d}", f"f{i:02d}", "function", v.astype(np.float32).tolist(), sigs)
+            for i, v in enumerate(vecs)
+        ],
+        "entity_id string, name string, kind string, embedding array<float>, sigs array<int>",
+    )
+    (local_rows, _), (dist_rows, _) = _both_paths(df, monkeypatch, threshold=-1e300)
+    assert len(local_rows) == 40 * 39 // 2
+    assert local_rows == dist_rows
+
+
 def test_lsh_recall_vs_exact(embedded, link_path):
     got = _pairs(link.candidate_links(embedded))
     want = _pairs(link.exact_links(embedded))
