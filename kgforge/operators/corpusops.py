@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..cachectl import tracked_cache
+from ..simjoin import block_pairs, sides
 from ..valvemetrics import drop_hot_keys
 from .registry import ROUND, query, table
 
@@ -458,22 +459,15 @@ def winnow_near_dup_pairs(spark, sf_dir):
     kept = tracked_cache(drop_hot_keys(fps, ["fp"], WNW_MAX_POSTING, "winnow_hot_posting"))
     sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     pairs = (
-        kept.select(F.col("doc_id").alias("doc_a"), "fp")
-        .join(kept.select(F.col("doc_id").alias("doc_b"), "fp"), "fp")
-        .where(F.col("doc_a") < F.col("doc_b"))
+        block_pairs(kept, "doc_id", ["fp"], "doc_a", "doc_b")
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("shared"))
         .where(F.col("shared") >= WNW_MIN_SHARED)
     )
-    return (
-        pairs.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sa")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sb")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "shared",
-            F.round(F.col("shared").cast("double") / (F.col("sa") + F.col("sb") - F.col("shared")), ROUND).alias("fp_jaccard"),
-        )
+    shared = F.col("shared")
+    jac = shared.cast("double") / (F.col("sz_a") + F.col("sz_b") - shared)
+    return sides(pairs, sizes, "doc_id", "doc_a", "doc_b", ("sz",)).select(
+        "doc_a", "doc_b", "shared", F.round(jac, ROUND).alias("fp_jaccard")
     )
 
 

@@ -13,7 +13,9 @@ training-data-pipeline dedup family, each as a first-class query:
 Everything runs as built-in expressions (md5/conv/bit ops) — no Python in
 any hot path; the banded self-join is the same blocking pattern as the
 pipeline's entity linker (stages/link.py), which is the point: dedup IS
-entity linking on content keys.
+entity linking on content keys.  Every candidate join here is
+``simjoin.block_pairs`` and every verify reads its pair ends through
+``simjoin.sides``; the embedding variants score with ``simjoin.cosine``.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..cachectl import tracked_cache
+from ..simjoin import block_pairs, cosine, sides, unit
 from ..valvemetrics import drop_hot_keys
 from .registry import ROUND, query, table
 
@@ -160,10 +163,10 @@ def _bands_df(sigs):
     return sigs.select("doc_id", F.posexplode(band_sigs).alias("band", "sig"))
 
 
-def _verify_pairs(cand, docs, a_col, b_col):
+def _verify_pairs(cand, docs, a_col, b_col, hashed=False):
     """Exact-Jaccard verification of LSH candidate pairs, sized to the
     CANDIDATE set, never the corpus: the candidate doc-id set semi-joins
-    the documents scan before any tokenization, so shingle arrays are
+    the documents scan before any tokenization, so shingle sets are
     rebuilt only for docs that appear in some candidate pair.  ``cand``
     is cached HERE (it is read three times: two id projections and the
     final pair join) — callers need not pre-cache; a second ``.cache()``
@@ -171,22 +174,38 @@ def _verify_pairs(cand, docs, a_col, b_col):
     idempotent (round-4 advisor: an uncached caller used to silently
     recompute the banded self-join three times).  The semi-join's build
     side is the candidate id set — corpus-size-independent, and AQE
-    converts it to a broadcast at runtime when it fits."""
+    converts it to a broadcast at runtime when it fits.
+
+    ``hashed`` intersects base-hash sets instead of shingle strings (no
+    string allocation anywhere in the leg).  Shingle identity there is
+    the 128-bit (h1, h2) two-seed key, NOT the single h1 long the
+    signature side uses: set-Jaccard over hashed shingles equals
+    string-set Jaccard only under injectivity, and one 64-bit key
+    birthday-collides ~10^4 times at the 10^12-shingle production target
+    (the codegraph.py:_h2 bound) — enough to perturb a verified Jaccard.
+    Two seeds bound the any-collision probability at ~1.5e-15, so the
+    precision-1.0 claim holds to that bound at any realistic scale (and
+    exactly on the fixture domain, where h1 alone is asserted injective
+    at generation time)."""
     cand = tracked_cache(cand)
     ids = (
         cand.select(F.col(a_col).alias("doc_id"))
         .unionByName(cand.select(F.col(b_col).alias("doc_id")))
         .distinct()
     )
-    shc = tracked_cache(_shingles_of(docs.join(ids, "doc_id", "semi")))
-    x = shc.select(F.col("doc_id").alias(a_col), F.col("sh").alias("sh_a"))
-    y = shc.select(F.col("doc_id").alias(b_col), F.col("sh").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
+    sub = docs.join(ids, "doc_id", "semi")
+    sets = _hashed_shingles_of(sub, bits128=True) if hashed else _shingles_of(sub)
+    return _jaccard(cand, tracked_cache(sets), a_col, b_col, "bh" if hashed else "sh")
+
+
+def _jaccard(cand, sets, a_col, b_col, col):
+    """The verify tail: candidate pairs whose ``col`` sets in ``sets``
+    have Jaccard >= JACCARD_THRESHOLD, with the rounded score."""
+    jac = F.size(F.array_intersect(col + "_a", col + "_b")).cast("double") / F.size(
+        F.array_union(col + "_a", col + "_b")
     )
     return (
-        cand.join(x, a_col)
-        .join(y, b_col)
+        sides(cand, sets, "doc_id", a_col, b_col, (col,))
         .where(jac >= JACCARD_THRESHOLD)
         .select(a_col, b_col, F.round(jac, ROUND).alias("jaccard"))
     )
@@ -248,15 +267,7 @@ def minhash_near_dup_pairs(spark, sf_dir):
     sigs = tracked_cache(
         _md5_groups(_shingles_df(spark, sf_dir)).select("doc_id", *_minhash_cols())
     )
-    bands = _bands_df(sigs)
-    left = bands.select(F.col("doc_id").alias("doc_a"), "band", "sig")
-    right = bands.select(F.col("doc_id").alias("doc_b"), "band", "sig")
-    cand = (
-        left.join(right, ["band", "sig"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = block_pairs(_bands_df(sigs), "doc_id", ["band", "sig"], "doc_a", "doc_b").distinct()
     return _verify_pairs(cand, table(spark, sf_dir, "documents"), "doc_a", "doc_b")
 
 
@@ -345,41 +356,6 @@ def _fast_bands(sigs):
     )
 
 
-def _verify_pairs_hashed(cand, docs, a_col, b_col):
-    """_verify_pairs with base-hash sets instead of shingle strings: the
-    semi-join still bounds re-shingling to candidate docs, but the arrays
-    intersected are fixed-width — no string allocation anywhere in the
-    leg.  Caches ``cand`` itself (idempotent; see _verify_pairs).
-
-    Shingle identity here is the 128-bit (h1, h2) two-seed key, NOT the
-    single h1 long the signature side uses: set-Jaccard over hashed
-    shingles equals string-set Jaccard only under injectivity, and one
-    64-bit key birthday-collides ~10^4 times at the 10^12-shingle
-    production target (the codegraph.py:_h2 bound) — enough to perturb a
-    verified Jaccard.  Two seeds bound the any-collision probability at
-    ~1.5e-15, so the precision-1.0 claim holds to that bound at any
-    realistic scale (and exactly on the fixture domain, where h1 alone
-    is asserted injective at generation time)."""
-    cand = tracked_cache(cand)
-    ids = (
-        cand.select(F.col(a_col).alias("doc_id"))
-        .unionByName(cand.select(F.col(b_col).alias("doc_id")))
-        .distinct()
-    )
-    shc = tracked_cache(_hashed_shingles_of(docs.join(ids, "doc_id", "semi"), bits128=True))
-    x = shc.select(F.col("doc_id").alias(a_col), F.col("bh").alias("bh_a"))
-    y = shc.select(F.col("doc_id").alias(b_col), F.col("bh").alias("bh_b"))
-    jac = F.size(F.array_intersect("bh_a", "bh_b")).cast("double") / F.size(
-        F.array_union("bh_a", "bh_b")
-    )
-    return (
-        cand.join(x, a_col)
-        .join(y, b_col)
-        .where(jac >= JACCARD_THRESHOLD)
-        .select(a_col, b_col, F.round(jac, ROUND).alias("jaccard"))
-    )
-
-
 def _sql_fast_minhash() -> str:
     from ..oracle.fixtures import shingle_minhash_path
 
@@ -440,16 +416,10 @@ def minhash_near_dup_pairs_fast(spark, sf_dir):
     document-set comparisons, re-expressed as banded LSH."""
     docs = table(spark, sf_dir, "documents")
     sigs = tracked_cache(_hashed_shingles_of(docs).select("doc_id", *_fast_minhash_cols()))
-    bands = _fast_bands(sigs)
-    left = bands.select(F.col("doc_id").alias("doc_a"), "band", "s1", "s2")
-    right = bands.select(F.col("doc_id").alias("doc_b"), "band", "s1", "s2")
-    cand = (
-        left.join(right, ["band", "s1", "s2"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return _verify_pairs_hashed(cand, docs, "doc_a", "doc_b")
+    cand = block_pairs(
+        _fast_bands(sigs), "doc_id", ["band", "s1", "s2"], "doc_a", "doc_b"
+    ).distinct()
+    return _verify_pairs(cand, docs, "doc_a", "doc_b", hashed=True)
 
 
 # Incremental split: doc_id % INCR_MOD == 0 simulates "the newly arrived
@@ -493,11 +463,10 @@ def minhash_incremental(spark, sf_dir):
     sigs = tracked_cache(
         _md5_groups(_shingles_df(spark, sf_dir)).select("doc_id", *_minhash_cols())
     )
-    bands = _bands_df(sigs)
     is_new = F.col("doc_id") % INCR_MOD == 0
-    newb = bands.where(is_new).select(F.col("doc_id").alias("new_doc"), "band", "sig")
-    oldb = bands.where(~is_new).select(F.col("doc_id").alias("dup_of"), "band", "sig")
-    cand = newb.join(oldb, ["band", "sig"]).select("new_doc", "dup_of").distinct()
+    cand = block_pairs(
+        _bands_df(sigs), "doc_id", ["band", "sig"], "new_doc", "dup_of", new=is_new
+    ).distinct()
     return _verify_pairs(cand, table(spark, sf_dir, "documents"), "new_doc", "dup_of")
 
 
@@ -557,12 +526,11 @@ def minhash_incremental_fast(spark, sf_dir):
     per batch.  Oracle replays the same fixture-hash pipeline in SQL."""
     docs = table(spark, sf_dir, "documents")
     sigs = tracked_cache(_hashed_shingles_of(docs).select("doc_id", *_fast_minhash_cols()))
-    bands = _fast_bands(sigs)
     is_new = F.col("doc_id") % INCR_MOD == 0
-    newb = bands.where(is_new).select(F.col("doc_id").alias("new_doc"), "band", "s1", "s2")
-    oldb = bands.where(~is_new).select(F.col("doc_id").alias("dup_of"), "band", "s1", "s2")
-    cand = newb.join(oldb, ["band", "s1", "s2"]).select("new_doc", "dup_of").distinct()
-    return _verify_pairs_hashed(cand, docs, "new_doc", "dup_of")
+    cand = block_pairs(
+        _fast_bands(sigs), "doc_id", ["band", "s1", "s2"], "new_doc", "dup_of", new=is_new
+    ).distinct()
+    return _verify_pairs(cand, docs, "new_doc", "dup_of", hashed=True)
 
 
 def _simhash_spark():
@@ -651,25 +619,14 @@ def embedding_near_dups(spark, sf_dir):
     e = table(spark, sf_dir, "embeddings")
     # norms and double-casts are per-VECTOR properties — compute them once
     # per row before the self-join, not once per candidate pair.
-    ed = e.select(
-        F.col("label").alias("lbl"),
-        "vec_id",
-        F.transform("embedding", lambda v: v.cast("double")).alias("vec"),
-    ).withColumn(
-        "norm", F.sqrt(F.aggregate(F.col("vec"), F.lit(0.0), lambda s, v: s + v * v))
-    )
+    ed = unit(e.select(F.col("label").alias("lbl"), "vec_id", "embedding"))
     # the valve: block sizes are a tiny aggregate; the oversized list is
     # broadcast and anti-joined before any pair is formed — and the
     # dropped rows/keys are recorded + logged (valvemetrics) so the
     # recall cost of the cap is visible.
     ed = drop_hot_keys(ed, ["lbl"], NEARDUP_MAX_BLOCK, "embedding_near_dups_block")
-    x = ed.select("lbl", F.col("vec_id").alias("a"), F.col("vec").alias("ea"), F.col("norm").alias("na"))
-    y = ed.select("lbl", F.col("vec_id").alias("b"), F.col("vec").alias("eb"), F.col("norm").alias("nb"))
-    dot = F.aggregate(F.zip_with("ea", "eb", lambda p, q: p * q), F.lit(0.0), lambda s, v: s + v)
-    pairs = (
-        x.join(y, "lbl")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", F.round(dot / (F.col("na") * F.col("nb")), ROUND).alias("score"))
+    pairs = block_pairs(ed, "vec_id", ["lbl"], "a", "b", cols=("vec", "norm")).select(
+        "a", "b", F.round(cosine(), ROUND).alias("score")
     )
     # global top-k via orderBy+limit -> TakeOrderedAndProject (distributed
     # partial top-k per partition); an unpartitioned row_number window
@@ -767,26 +724,11 @@ def embedding_near_dups_lsh(spark, sf_dir):
     bands = tracked_cache(
         drop_hot_keys(bands, ["band", "key"], NEARDUP_MAX_BLOCK, "embedding_near_dups_lsh_bucket")
     )
-    cand = (
-        bands.select(F.col("vec_id").alias("a"), "band", "key")
-        .join(bands.select(F.col("vec_id").alias("b"), "band", "key"), ["band", "key"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    cand = block_pairs(bands, "vec_id", ["band", "key"], "a", "b").distinct()
     # norms/casts are per-vector properties — compute once before the join
-    ed = e.select(
-        "vec_id", F.transform("embedding", lambda v: v.cast("double")).alias("vec")
-    ).withColumn(
-        "norm", F.sqrt(F.aggregate(F.col("vec"), F.lit(0.0), lambda s, v: s + v * v))
-    )
-    x = ed.select(F.col("vec_id").alias("a"), F.col("vec").alias("ea"), F.col("norm").alias("na"))
-    y = ed.select(F.col("vec_id").alias("b"), F.col("vec").alias("eb"), F.col("norm").alias("nb"))
-    dot = F.aggregate(F.zip_with("ea", "eb", lambda p, q: p * q), F.lit(0.0), lambda s, v: s + v)
-    pairs = (
-        cand.join(x, "a")
-        .join(y, "b")
-        .select("a", "b", F.round(dot / (F.col("na") * F.col("nb")), ROUND).alias("score"))
+    ed = unit(e.select("vec_id", "embedding"))
+    pairs = sides(cand, ed, "vec_id", "a", "b", ("vec", "norm")).select(
+        "a", "b", F.round(cosine(), ROUND).alias("score")
     )
     return pairs.orderBy(F.desc("score"), F.asc("a"), F.asc("b")).limit(NEARDUP_TOPK)
 
@@ -864,29 +806,16 @@ def ngram_jaccard_pairs(spark, sf_dir):
         .where(F.col("rn") <= F.col("n") - F.ceil(F.lit(JACCARD_THRESHOLD) * F.col("n")) + 1)
         .select("doc_id", "n", "s")
     )
-    a = prefix.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), "s")
-    b = prefix.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), "s")
     cand = (
-        a.join(b, "s")
+        block_pairs(prefix, "doc_id", ["s"], "doc_a", "doc_b", cols=("n",))
         .where(
-            (F.col("doc_a") < F.col("doc_b"))
-            & (F.col("nb") >= F.lit(JACCARD_THRESHOLD) * F.col("na"))
-            & (F.col("na") >= F.lit(JACCARD_THRESHOLD) * F.col("nb"))
+            (F.col("n_b") >= F.lit(JACCARD_THRESHOLD) * F.col("n_a"))
+            & (F.col("n_a") >= F.lit(JACCARD_THRESHOLD) * F.col("n_b"))
         )
         .select("doc_a", "doc_b")
         .distinct()
     )
-    x = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    y = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return (
-        cand.join(x, "doc_a")
-        .join(y, "doc_b")
-        .where(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, ROUND).alias("jaccard"))
-    )
+    return _jaccard(cand, sh, "doc_a", "doc_b", "sh")
 
 
 # --------------------------------------------- SimHash Hamming near-dups
@@ -954,19 +883,10 @@ def simhash_near_dups(spark, sf_dir):
             )
         ).alias("cv"),
     ).select("doc_id", F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
-    cand = (
-        chunks.select(F.col("doc_id").alias("doc_a"), "chunk", "val")
-        .join(chunks.select(F.col("doc_id").alias("doc_b"), "chunk", "val"), ["chunk", "val"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    x = sigs.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("ha"))
-    y = sigs.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("hb"))
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    cand = block_pairs(chunks, "doc_id", ["chunk", "val"], "doc_a", "doc_b").distinct()
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
-        cand.join(x, "doc_a")
-        .join(y, "doc_b")
+        sides(cand, sigs, "doc_id", "doc_a", "doc_b", ("simhash",))
         .where(hamming <= HD_MAX)
         .select("doc_a", "doc_b", hamming.cast("long").alias("hamming"))
     )

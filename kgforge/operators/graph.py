@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..cachectl import tracked_cache
-from ..session import scoped_conf
+from ..session import local_frame, scoped_conf
 
 
 def _pinned_checkpoint(df: "DataFrame") -> "DataFrame":
@@ -239,7 +239,7 @@ def _local_pagerank(sym: DataFrame, pdf: pd.DataFrame, iters: int, damping: floa
     schema = StructType(
         [StructField("node", sym.schema["src"].dataType), StructField("r", DoubleType(), False)]
     )
-    return sym.sparkSession.createDataFrame(pd.DataFrame({"node": nodes, "r": r}), schema)
+    return local_frame(sym.sparkSession, pd.DataFrame({"node": nodes, "r": r}), schema)
 
 
 def _concept_edges(spark, sf_dir) -> DataFrame:
@@ -529,7 +529,10 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     Why this formulation: it is the fastest and the only one of seven
     measured that clears the 0.8 paired-scaling gate (median 0.832, 16.55 s
     at local[8] on a 44.2M-edge entity graph, k=16;
-    BENCH_SCALING_GRAPH_ADJ.json, BASELINE.md).  Per-round work is
+    BENCH_SCALING_GRAPH_ADJ.json, BASELINE.md).  That figure was measured
+    before the removed set became a ``localCheckpoint`` (a cached removed
+    set grew the plan 3^r); the body above has not been re-measured at
+    that size, whose graph does not fit a 15 GB host.  Per-round work is
     proportional to the removed fringe, not to E: an E-row decrement
     scan cost a flat ~4 s per round even at 3.6k removals
     (BENCH_SCALING_GRAPH_DELTA_STAGES.json), the V-row probe 0.46-0.74 s.

@@ -9,15 +9,17 @@
 
 All scoring is JVM-side expression work on array columns; doubles are
 rounded to ROUND decimals on both sides and every rank window is totally
-ordered (score desc, id) so Spark and DuckDB agree bit-for-bit.
+ordered (score desc, id) so Spark and DuckDB agree bit-for-bit.  The
+cosine is ``simjoin.unit`` + ``simjoin.cosine`` and every per-query cut
+is ``simjoin.top_k``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..cachectl import tracked_cache
+from ..simjoin import block_pairs, cosine, top_k, unit
 from .registry import ROUND, query, table
 
 N_QUERIES = 5          # vec_id < 5 are the query vectors
@@ -30,11 +32,19 @@ def _dvec(col: str):
     return F.transform(F.col(col), lambda x: x.cast("double"))
 
 
-def _cos(a: str, b: str):
-    dot = F.aggregate(F.zip_with(_dvec(a), _dvec(b), lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    na = F.sqrt(F.aggregate(_dvec(a), F.lit(0.0), lambda s, x: s + x * x))
-    nb = F.sqrt(F.aggregate(_dvec(b), F.lit(0.0), lambda s, x: s + x * x))
-    return dot / (na * nb)
+def _queries(e, *cols):
+    """The query vectors (vec_id < N_QUERIES) as ``qid`` with their
+    ``unit`` vector and norm, ``vec_q`` and ``norm_q``."""
+    q = e.where(F.col("vec_id") < N_QUERIES)
+    return unit(q.select(F.col("vec_id").alias("qid"), "embedding", *cols), suffix="_q")
+
+
+def _scored_topk(cand):
+    """The exact rescore every search ends in: the rounded cosine of each
+    candidate row's ``embedding`` against its query's ``vec_q``, then the
+    top TOPK per query (score desc, vec_id)."""
+    scored = unit(cand).select("qid", "vec_id", F.round(cosine("_q", ""), ROUND).alias("score"))
+    return top_k(scored, "qid", [F.desc("score"), F.asc("vec_id")], TOPK)
 
 
 _SQL_COS = (
@@ -64,20 +74,8 @@ def knn_bruteforce(spark, sf_dir):
     query side is tiny and broadcast; ranking uses the rounded score so the
     cut is reproducible across engines and partition counts."""
     e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", F.round(_cos("qe", "embedding"), ROUND).alias("score"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOPK)
-        .select("qid", "vec_id", "score")
-    )
+    cand = e.crossJoin(F.broadcast(_queries(e))).where(F.col("vec_id") != F.col("qid"))
+    return _scored_topk(cand)
 
 
 def _bucket_sql(col: str, dims=None) -> str:
@@ -131,22 +129,12 @@ def ann_lsh_buckets(spark, sf_dir):
 )
 def ann_lsh_topk(spark, sf_dir):
     """ANN: same top-k but candidates restricted to the query's sign
-    bucket — the scale path (bucket equi-join, AQE-skew-safe)."""
+    bucket — the scale path (bucket equi-join against the broadcast
+    query side, never a cross join)."""
     e = table(spark, sf_dir, "embeddings").withColumn("bucket", _bucket_col("embedding"))
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"), "bucket"
-    )
-    scored = (
-        e.join(q, "bucket")
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", F.round(_cos("qe", "embedding"), ROUND).alias("score"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOPK)
-        .select("qid", "vec_id", "score")
-    )
+    q = F.broadcast(_queries(e, "bucket"))
+    cand = e.join(q, "bucket").where(F.col("vec_id") != F.col("qid"))
+    return _scored_topk(cand)
 
 
 @query(
@@ -201,39 +189,31 @@ def ann_ivf_topk(spark, sf_dir):
     e = table(spark, sf_dir, "embeddings")
     v = e.select("vec_id", "label", F.posexplode(_dvec("embedding")).alias("pos", "x"))
     cen = v.groupBy(F.col("label").alias("clabel"), "pos").agg(F.avg("x").alias("c"))
-    cnorm = cen.groupBy("clabel").agg(F.sqrt(F.sum(F.col("c") * F.col("c"))).alias("nc"))
-
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    qv = q.select("qid", F.posexplode(_dvec("qe")).alias("pos", "x"))
-    qnorm = qv.groupBy("qid").agg(F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("nq"))
-    qc = (
-        qv.join(F.broadcast(cen), "pos")
-        .groupBy("qid", "clabel")
-        .agg(F.sum(F.col("x") * F.col("c")).alias("dot"))
-    )
-    wq = Window.partitionBy("qid").orderBy(F.desc("csim"), F.asc("clabel"))
-    probed = (
-        qc.join(qnorm, "qid")
-        .join(F.broadcast(cnorm), "clabel")
-        .select("qid", "clabel", F.round(F.col("dot") / (F.col("nq") * F.col("nc")), ROUND).alias("csim"))
-        .withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= NPROBE)
-        .select("qid", "clabel")
-    )
+    q = _queries(e)
+    probed = _probe_cells(q, cen, "clabel")
     cand = (
         e.join(F.broadcast(probed), e["label"] == probed["clabel"])
         .join(F.broadcast(q), "qid")
         .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", F.round(_cos("qe", "embedding"), ROUND).alias("score"))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOPK)
-        .select("qid", "vec_id", "score")
+    return _scored_topk(cand)
+
+
+def _probe_cells(q, cen, cell: str):
+    """(qid, <cell>) for each query's NPROBE closest cells, ranked by the
+    rounded cosine to the cell centroid with ties on the cell id; ``cen``
+    is the long-form (<cell>, pos, c) centroid table."""
+    cnorm = cen.groupBy(cell).agg(F.sqrt(F.sum(F.col("c") * F.col("c"))).alias("nc"))
+    qv = q.select("qid", F.posexplode("vec_q").alias("pos", "x"))
+    qnorm = qv.groupBy("qid").agg(F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("nq"))
+    qc = (
+        qv.join(F.broadcast(cen), "pos")
+        .groupBy("qid", cell)
+        .agg(F.sum(F.col("x") * F.col("c")).alias("dot"))
     )
+    csim = F.round(F.col("dot") / (F.col("nq") * F.col("nc")), ROUND).alias("csim")
+    sims = qc.join(qnorm, "qid").join(F.broadcast(cnorm), cell).select("qid", cell, csim)
+    return top_k(sims, "qid", [F.desc("csim"), F.asc(cell)], NPROBE).select("qid", cell)
 
 
 KM_K = 4
@@ -455,11 +435,8 @@ def nearest_centroid(spark, sf_dir):
             F.round(F.col("dot") / (F.col("nv") * F.col("nc")), ROUND).alias("sim"),
         )
     )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("clabel"))
-    return (
-        sim.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "label", F.col("clabel").alias("pred_label"), "sim")
+    return top_k(sim, "vec_id", [F.desc("sim"), F.asc("clabel")], 1).select(
+        "vec_id", "label", F.col("clabel").alias("pred_label"), "sim"
     )
 
 
@@ -517,40 +494,15 @@ def ann_ivf_kmeans_topk(spark, sf_dir):
     v = tracked_cache(e.select("vec_id", F.posexplode(_dvec("embedding")).alias("pos", "x")))
     cent, a = _lloyd(v)
     cent = tracked_cache(cent)  # feeds cnorm AND the probe dot-product
-    cnorm = cent.groupBy("cid").agg(F.sqrt(F.sum(F.col("c") * F.col("c"))).alias("nc"))
-
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    qv = q.select("qid", F.posexplode(_dvec("qe")).alias("pos", "x"))
-    qnorm = qv.groupBy("qid").agg(F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("nq"))
-    qc = (
-        qv.join(F.broadcast(cent), "pos")
-        .groupBy("qid", "cid")
-        .agg(F.sum(F.col("x") * F.col("c")).alias("dot"))
-    )
-    wq = Window.partitionBy("qid").orderBy(F.desc("csim"), F.asc("cid"))
-    probed = (
-        qc.join(qnorm, "qid")
-        .join(F.broadcast(cnorm), "cid")
-        .select("qid", "cid", F.round(F.col("dot") / (F.col("nq") * F.col("nc")), ROUND).alias("csim"))
-        .withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= NPROBE)
-        .select("qid", "cid")
-    )
+    q = _queries(e)
+    probed = _probe_cells(q, cent, "cid")
     cand = (
         a.join(F.broadcast(probed), a["cluster"] == probed["cid"])
         .join(e, "vec_id")
         .join(F.broadcast(q), "qid")
         .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", F.round(_cos("qe", "embedding"), ROUND).alias("score"))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOPK)
-        .select("qid", "vec_id", "score")
-    )
+    return _scored_topk(cand)
 
 
 # ------------------------------------------------- scalar quantization (SQ8)
@@ -603,7 +555,6 @@ def _sq8_candidates(e, n_queries: int = N_QUERIES, rerank: int = RERANK, impl: s
             ).alias("code"),
         )
     )
-    wq = Window.partitionBy("qid").orderBy(F.desc("ascore"), F.asc("vec_id"))
     ascore = F.col("adot") / F.sqrt((F.col("qsq") * F.col("csq")).cast("double"))
     if impl == "auto":
         impl = "posexplode" if n_queries >= 16 else "hof"
@@ -646,12 +597,8 @@ def _sq8_candidates(e, n_queries: int = N_QUERIES, rerank: int = RERANK, impl: s
         )
     else:  # pragma: no cover - guarded constant
         raise ValueError(impl)
-    return (
-        scored.select("qid", "vec_id", ascore.alias("ascore"))
-        .withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= rerank)
-        .select("qid", "vec_id")
-    )
+    scored = scored.select("qid", "vec_id", ascore.alias("ascore"))
+    return top_k(scored, "qid", [F.desc("ascore"), F.asc("vec_id")], rerank).select("qid", "vec_id")
 
 
 
@@ -718,18 +665,7 @@ def ann_sq8_topk(spark, sf_dir):
     vs knn_bruteforce asserted in test_trainprep.py."""
     e = table(spark, sf_dir, "embeddings")
     cand = _sq8_candidates(e)
-    qe = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        cand.join(e, "vec_id")
-        .join(F.broadcast(qe), "qid")
-        .select("qid", "vec_id", F.round(_cos("qv", "embedding"), ROUND).alias("score"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOPK)
-        .select("qid", "vec_id", "score")
-    )
+    return _scored_topk(cand.join(e, "vec_id").join(F.broadcast(_queries(e)), "qid"))
 
 
 # ------------------------------------------------------------- SemDeDup
@@ -780,18 +716,10 @@ def semdedup_prune(spark, sf_dir):
     e = table(spark, sf_dir, "embeddings")
     v = tracked_cache(e.select("vec_id", F.posexplode(_dvec("embedding")).alias("pos", "x")))
     _, a = _lloyd(v)
-    m = tracked_cache(
-        e.join(a, "vec_id")
-        .select("vec_id", "cluster", _dvec("embedding").alias("vec"))
-        .withColumn("norm", F.sqrt(F.aggregate(F.col("vec"), F.lit(0.0), lambda s, x: s + x * x)))
-    )
-    x = m.select("cluster", F.col("vec_id").alias("a"), F.col("vec").alias("ea"), F.col("norm").alias("na"))
-    y = m.select("cluster", F.col("vec_id").alias("b"), F.col("vec").alias("eb"), F.col("norm").alias("nb"))
-    dot = F.aggregate(F.zip_with("ea", "eb", lambda p, q: p * q), F.lit(0.0), lambda s, u: s + u)
+    m = tracked_cache(unit(e.join(a, "vec_id").select("vec_id", "cluster", "embedding")))
     pruned = (
-        x.join(y, "cluster")
-        .where(F.col("a") < F.col("b"))
-        .where(F.round(dot / (F.col("na") * F.col("nb")), ROUND) >= SEMDEDUP_TH)
+        block_pairs(m, "vec_id", ["cluster"], "a", "b", cols=("vec", "norm"))
+        .where(F.round(cosine(), ROUND) >= SEMDEDUP_TH)
         .select(F.col("b").alias("vec_id"))
         .distinct()
         .withColumn("pr", F.lit(True))
@@ -982,29 +910,12 @@ def ann_pq_topk(spark, sf_dir):
         .groupBy("vec_id")
         .agg(F.sum("sq").alias("rsq"))
     )
-    wc = Window.partitionBy("qid").orderBy(F.desc("ascore"), F.asc("vec_id"))
-    cand = (
+    ascore = F.round(F.col("adot") / F.sqrt(F.col("qsq") * F.col("rsq")), ROUND).alias("ascore")
+    scored = (
         adot.join(rsq.where(F.col("rsq") > 0), "vec_id")
         .join(F.broadcast(qsq), "qid")
         .where(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.round(F.col("adot") / F.sqrt(F.col("qsq") * F.col("rsq")), ROUND).alias("ascore"),
-        )
-        .withColumn("rn", F.row_number().over(wc))
-        .where(F.col("rn") <= PQ_RERANK)
-        .select("qid", "vec_id")
+        .select("qid", "vec_id", ascore)
     )
-    qe = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        cand.join(e, "vec_id")
-        .join(F.broadcast(qe), "qid")
-        .select("qid", "vec_id", F.round(_cos("qv", "embedding"), ROUND).alias("score"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOPK)
-        .select("qid", "vec_id", "score")
-    )
+    cand = top_k(scored, "qid", [F.desc("ascore"), F.asc("vec_id")], PQ_RERANK).select("qid", "vec_id")
+    return _scored_topk(cand.join(e, "vec_id").join(F.broadcast(_queries(e)), "qid"))

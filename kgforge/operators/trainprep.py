@@ -39,9 +39,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..cachectl import tracked_cache
+from ..simjoin import cosine, unit
 from .corpusops import sql_wins, wins_df
 from .registry import ROUND, query, table
-from .similarity import _PACK_M, _SQL_COS, _dvec, _pack_argmin
+from .similarity import _PACK_M, _SQL_COS, _pack_argmin
 from .text import QUERY_TERMS, SQL_TF, _tf, _tokens_col
 
 # ------------------------------------------------------------------- BM25
@@ -726,21 +727,12 @@ EMB_DECON_THRESH = 0.3
 def emb_decontamination(spark, sf_dir):
     """Per-training-vector nearest benchmark vector + contamination flag."""
     e = table(spark, sf_dir, "embeddings")
-    # Factor the double-cast and the norm OUT of the pair loop: each is
-    # computed once per vector in a projection, so the per-pair work is
-    # ONE zip_with dot product.  dot/(na*nb) runs the same double ops in
-    # the same order as the inline _cos form, so scores are bit-identical
-    # to the oracle's per-pair formula (measured 3.99 s -> ~1.3 s at
-    # sf0.1 from 3 HOF aggregates + 2 array casts per pair down to 1).
-    def _unit(idc, vc, ida, va, na):
-        v = _dvec(vc)
-        return e.where(idc).select(
-            F.col("vec_id").alias(ida),
-            v.alias(va),
-            F.sqrt(F.aggregate(v, F.lit(0.0), lambda s, x: s + x * x)).alias(na),
-        )
-
-    bench = _unit(F.col("vec_id") % EMB_DECON_MOD == 7, "embedding", "bid", "vb", "nb")
+    # Factor the double-cast and the norm OUT of the pair loop (simjoin.unit):
+    # each is computed once per vector in a projection, so the per-pair
+    # work is ONE zip_with dot product (measured 3.99 s -> ~1.3 s at sf0.1
+    # from 3 HOF aggregates + 2 array casts per pair down to 1).
+    held_out = F.col("vec_id") % EMB_DECON_MOD == 7
+    bench = unit(e.where(held_out).select(F.col("vec_id").alias("bid"), "embedding"), suffix="_b")
     # Dense re-key of benchmark ids so the per-vector argmax can run as a
     # packed-long min — a true map-side-combinable HashAggregate — instead
     # of min(struct(-score, bid)), whose struct min-buffer forces
@@ -771,15 +763,10 @@ def emb_decontamination(spark, sf_dir):
     # Spreading the rows first costs one tiny shuffle of the narrow side
     # and keeps every core busy — at 100 TB the scan is already thousands
     # of splits and Catalyst elides nothing here either way.
-    corpus = _unit(F.col("vec_id") % EMB_DECON_MOD != 7, "embedding", "vec_id", "va", "na")
+    corpus = unit(e.where(~held_out).select("vec_id", "embedding"), suffix="_a")
     corpus = corpus.repartition(spark.sparkContext.defaultParallelism)
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
     scored = corpus.crossJoin(F.broadcast(bench)).select(
-        "vec_id",
-        "dbid",
-        (-F.round(dot / (F.col("na") * F.col("nb")), ROUND)).alias("ns"),
+        "vec_id", "dbid", (-F.round(cosine(), ROUND)).alias("ns")
     )
     # argmax as min over the packed long (ns asc = score desc, dense-id
     # ties = bid ties): one map-side-combinable HashAggregate.  Decode is

@@ -10,7 +10,11 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from . import constants
 
@@ -119,3 +123,15 @@ def scoped_conf(spark: SparkSession, conf: dict[str, str]):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def local_frame(spark: SparkSession, pdf: pd.DataFrame, schema: StructType | str) -> DataFrame:
+    """A driver-built frame over ``pdf``, handed to Spark as a pyarrow
+    Table so it plans as a ``LocalRelation`` at any size.  From an empty
+    pandas frame or a list of tuples ``createDataFrame`` plans a
+    ``LogicalRDD`` of pickled rows, whose first read starts a Python
+    worker (BASELINE.md "driver-built frames")."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pandas(pdf, schema=to_arrow_schema(schema), preserve_index=False)
+    return spark.createDataFrame(table, schema)

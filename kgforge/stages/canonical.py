@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _dedup(edges: DataFrame) -> DataFrame:
     return edges.where(F.col("src") != F.col("dst")).distinct()
@@ -94,10 +96,10 @@ def _local_components(spark, rows) -> DataFrame:
             lo, hi = sorted((ra, rb))
             parent[hi] = lo
     out = [(x, find(x)) for x in parent if find(x) != x]
-    pdf = pd.DataFrame(out, columns=["entity_id", "canonical_id"])  # Arrow, not a pickled RDD
+    pdf = pd.DataFrame(out, columns=["entity_id", "canonical_id"])
     # one partition: the stage table is then one file, and materialize's
     # capped mapping probe reads one split
-    return spark.createDataFrame(pdf, "entity_id string, canonical_id string").coalesce(1)
+    return local_frame(spark, pdf, "entity_id string, canonical_id string").coalesce(1)
 
 
 # rows the first path probe of connected_components collects

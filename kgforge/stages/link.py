@@ -32,6 +32,11 @@ bucket dedup.  Its rows are bit-identical to the distributed plan's
 job instead of the valve, join and dedup jobs.  Both bounds are
 driver-memory guards, not crossovers: the local path still won at the
 largest graph the guard admits (BASELINE.md "link finisher").
+
+The bucket join is written here, not through ``kgforge.simjoin`` as the
+dedup and similarity operators' joins are: it scores inside the join
+and keeps min(bucket) per pair, the numpy finisher is pinned bit for bit
+to that body, and it is the only similarity join perfbench measures.
 """
 
 from __future__ import annotations
@@ -42,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import constants, valvemetrics
+from ..session import local_frame
 
 # Rows of the bucket self-join (sum of n_b^2 over the buckets that pass the
 # valve) the driver finisher may build; past it the distributed plan runs.
@@ -199,7 +205,7 @@ def _local_links(spark, rows, threshold: float, max_bucket: int) -> DataFrame | 
     links["a"], links["b"] = ids[links["a"].to_numpy()], ids[links["b"].to_numpy()]
     # one partition: the stage table is then one file, and the next
     # stage's capped probe reads one split
-    return spark.createDataFrame(links, _LINKS_DDL).coalesce(1)
+    return local_frame(spark, links, _LINKS_DDL).coalesce(1)
 
 
 def exact_links(embedded: DataFrame, threshold: float = constants.LINK_THRESHOLD) -> DataFrame:

@@ -21,10 +21,12 @@ Scale notes:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import constants
+from ..session import local_frame
 
 _KIND_PRED = {
     "import": constants.PRED_IMPORTS,
@@ -283,7 +285,8 @@ def canonicalize_lexical(
         if not pairs:
             # empty mapping: nothing links, nothing can collide
             return lexical.select("subj", "pred", "obj", "line", "score")
-        hot_dict = spark.createDataFrame(pairs, "obj string, _canon string")
+        pdf = pd.DataFrame(pairs, columns=["obj", "_canon"])
+        hot_dict = local_frame(spark, pdf, "obj string, _canon string")
     else:
         hot_dict = (
             mapping.select(F.col("entity_id").alias("obj"), F.col("canonical_id").alias("_canon"))

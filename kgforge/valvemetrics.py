@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 log = logging.getLogger("kgforge.valves")
 
 #: valve name -> last observed drop metrics for this process.
@@ -128,5 +130,4 @@ def metrics_rows(spark, valves: dict[str, dict[str, float | int]]) -> DataFrame 
     ]
     from .schemas import METRICS
 
-    # a pandas frame goes through Arrow; a list of tuples through a pickled RDD
-    return spark.createDataFrame(pd.DataFrame(rows, columns=METRICS.fieldNames()), METRICS)
+    return local_frame(spark, pd.DataFrame(rows, columns=METRICS.fieldNames()), METRICS)

@@ -75,27 +75,25 @@ def test_entry_smoke(spark):
     assert df.count() > 0
 
 
-def test_embedding_lsh_neardup_recall(spark, sf_dir):
+def test_embedding_lsh_neardup_recall(spark, sf_dir, ducks):
     """The cross-label LSH near-dup variant must recover (nearly all of)
     the brute-force global top-20 pairs.  This corpus has NO true
     near-dups (top cosine ~0.48), which is the adversarial case for sign
     bands — at real near-dup cosines (>=0.9) band recall is ~1.0 — so the
-    bound here is deliberately the measured floor."""
-    from pyspark.sql import functions as F
-
-    e = QUERIES["knn_bruteforce"].__wrapped__.__globals__["table"](spark, sf_dir, "embeddings")
-    from kgforge.operators.similarity import _cos
-
-    x = e.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
-    y = e.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
-    brute = (
-        x.crossJoin(y)
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", F.round(_cos("ea", "eb"), 4).alias("score"))
-        .orderBy(F.desc("score"), F.asc("a"), F.asc("b"))
-        .limit(20)
-    )
-    want = {(r.a, r.b) for r in brute.collect()}
+    bound here is deliberately the measured floor.  The brute-force
+    reference is DuckDB's ``list_cosine_similarity``, as in the oracles,
+    so it shares no code with the Spark cosine under test."""
+    brute = ducks.sql(
+        """
+        select x.vec_id as a, y.vec_id as b,
+               round(list_cosine_similarity(list_transform(x.embedding, v -> v::DOUBLE),
+                                            list_transform(y.embedding, v -> v::DOUBLE)), 4) as score
+        from embeddings x join embeddings y on x.vec_id < y.vec_id
+        order by score desc, a, b
+        limit 20
+        """
+    ).fetchall()
+    want = {(a, b) for a, b, _ in brute}
     got = {(r.a, r.b) for r in QUERIES["embedding_near_dups_lsh"](spark, sf_dir).collect()}
     assert len(want & got) / len(want) >= 0.9
 
