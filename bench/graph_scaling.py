@@ -68,10 +68,10 @@ def _run_kernel(spark, name: str, edges):
     from kgforge.operators import graph as G
 
     if name == "pagerank_bcast":
-        n = G.pagerank(edges, checkpoint=True).count()
+        n = G.pagerank(edges).count()
         return n, None, None
     if name == "pagerank_part":
-        n = G.pagerank(edges, checkpoint=True, partitioned=True).count()
+        n = G.pagerank(edges, partitioned=True).count()
         return n, None, None
     if name == "pagerank_stages":
         return _pagerank_stage_walls(edges)

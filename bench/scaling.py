@@ -88,7 +88,7 @@ def worker(cpus: int, input_dir: str, tmp_dir: str) -> None:
         from kgforge.operators.graph import pagerank, triple_edges
 
         t1 = time.time()
-        n_nodes = pagerank(triple_edges(triples), checkpoint=True).count()
+        n_nodes = pagerank(triple_edges(triples)).count()
         kernels["pagerank"] = {"secs": round(time.time() - t1, 3), "rows": n_nodes, "sig": None}
 
     shutil.rmtree(root, ignore_errors=True)

@@ -51,7 +51,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import pipeline, synth
+from .. import iterate, pipeline, synth
 from ..oracle.fixtures import SYNTH_N, fixture_path
 from ..session import scoped_conf
 from .registry import ROUND, query
@@ -416,16 +416,16 @@ def scc_labels(edges: DataFrame, src: str = "src_repo", dst: str = "dst_repo") -
       order, which is all the peel needs).
     - FUSED directions + delta frontiers: one step advances fmin and
       bmin together — two frontier-sized edge joins, one V-row
-      three-way left join, ONE localCheckpoint and ONE count aggregate
-      (the bounded driver probe) — instead of two separate
-      loops with their own checkpoints and emptiness probes.  Only
+      three-way left join and ONE checkpoint, which observes the count of
+      changed labels in its own job — instead of two separate loops with
+      their own checkpoints and emptiness probes.  Only
       labels that improved last step are re-pushed (min-labels only
       ever decrease, so an unchanged node cannot improve a neighbor it
       already reached), so per-step join cost tracks the geometrically
       decaying frontier, not V.
     - Inner steps are bounded by the remaining graph's diameter, outer
-      rounds by the condensation depth; localCheckpoint per step
-      truncates lineage exactly like graph.py's CC/pagerank rounds."""
+      rounds by the condensation depth; ``iterate.checkpoint`` per step
+      and per round truncates lineage and observes the convergence count."""
     e0 = (
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .where(F.col("s") != F.col("d"))
@@ -550,17 +550,16 @@ def _scc_labels_peel(e, dictn, lab) -> DataFrame:
         )
         return ffr, bfr
 
-    # SCC_UNROLL propagation steps share one localCheckpoint + one
-    # convergence probe: the driver-side cost per checkpointed segment
-    # (job submit, analysis, codegen, the V-row materialization, the
-    # count action) is a per-segment constant, so unrolling halves the
-    # peel's serial term.  Within a segment the intermediate label table
-    # feeds three consumers (next step's lab + both frontiers); Spark's
-    # exchange reuse deduplicates the shared sub-plan inside the single
-    # job.  Termination stays exact: min-propagation is monotone, so a
-    # final sub-step with zero changes proves global fixpoint (earlier
-    # sub-steps in the segment may have changed rows — the probe only
-    # needs the LAST sub-step's flags).
+    # SCC_UNROLL propagation steps share one observed checkpoint: the
+    # driver-side cost per checkpointed segment (job submit, analysis,
+    # codegen, the V-row materialization) is a per-segment constant, so
+    # unrolling halves the peel's serial term.  Within a segment the
+    # intermediate label table feeds three consumers (next step's lab +
+    # both frontiers); Spark's exchange reuse deduplicates the shared
+    # sub-plan inside the single job.  Termination stays exact:
+    # min-propagation is monotone, so a final sub-step with zero changes
+    # proves global fixpoint (earlier sub-steps in the segment may have
+    # changed rows — the probe only needs the LAST sub-step's flags).
     settled: DataFrame | None = None
     while True:
         ffr = lab.select("k1", "k2", F.col("f1").alias("l1"), F.col("f2").alias("l2"))
@@ -570,24 +569,22 @@ def _scc_labels_peel(e, dictn, lab) -> DataFrame:
             for _ in range(SCC_UNROLL - 1):
                 ffr, bfr = _frontiers(step)
                 step = _advance(step.drop("fch", "bch"), ffr, bfr)
-            step = step.localCheckpoint()
-            row = step.agg(
-                F.sum(F.when(F.col("fch"), 1).otherwise(0)).alias("nf"),
-                F.sum(F.when(F.col("bch"), 1).otherwise(0)).alias("nb"),
-            ).first()
-            nf, nb = int(row["nf"] or 0), int(row["nb"] or 0)
+            step, seen = iterate.checkpoint(
+                step, F.count_if(F.col("fch") | F.col("bch")).alias("n")
+            )
             lab = step.drop("fch", "bch")
             ffr, bfr = _frontiers(step)
-            if nf == 0 and nb == 0:
+            if seen["n"] == 0:
                 break
         done = lab.where(
             (F.col("f1") == F.col("b1")) & (F.col("f2") == F.col("b2"))
         ).select("k1", "k2", F.col("f1").alias("c1"), F.col("f2").alias("c2"))
         settled = done if settled is None else settled.unionByName(done)
-        rem = lab.where(
-            (F.col("f1") != F.col("b1")) | (F.col("f2") != F.col("b2"))
-        ).localCheckpoint()
-        if rem.isEmpty():
+        rem, seen = iterate.checkpoint(
+            lab.where((F.col("f1") != F.col("b1")) | (F.col("f2") != F.col("b2"))),
+            F.count(F.lit(1)).alias("n"),
+        )
+        if seen["n"] == 0:
             break
         # reset remaining labels to self and drop settled nodes' edges
         lab = rem.select(
@@ -599,10 +596,9 @@ def _scc_labels_peel(e, dictn, lab) -> DataFrame:
             F.col("k2").alias("b2"),
         )
         keys = rem.select("k1", "k2")
-        e = (
+        e, _ = iterate.checkpoint(
             e.join(keys.select(F.col("k1").alias("s1"), F.col("k2").alias("s2")), ["s1", "s2"], "semi")
             .join(keys.select(F.col("k1").alias("d1"), F.col("k2").alias("d2")), ["d1", "d2"], "semi")
-            .localCheckpoint()
         )
     # re-attach strings once: member nodes by packed key, then the final
     # per-SCC min over the node STRING restores the lexicographic scc_id
@@ -638,9 +634,10 @@ def dep_layers(deps: DataFrame) -> DataFrame:
 
     The relaxation iterates layer(v) = max over out-edges of
     1 + layer(dst) to fixpoint; the condensation is a DAG so the loop is
-    bounded by its depth.  Condensed-edge build is two dictionary joins
-    (scc label per endpoint) + distinct — the label table is
-    |repos|-bounded and broadcastable at any realistic scale."""
+    bounded by its depth (each round's groupBy carries the old layer, so
+    its checkpoint observes how many changed).  Condensed-edge build is
+    two dictionary joins (scc label per endpoint) + distinct — the label
+    table is |repos|-bounded and broadcastable at any realistic scale."""
     deps = deps.select("src_repo", "dst_repo")
     lab = scc_labels(deps)
     cond = (
@@ -663,23 +660,17 @@ def dep_layers(deps: DataFrame) -> DataFrame:
         .localCheckpoint()
     )
     while True:
-        cand = (
-            cond.join(layer.withColumnRenamed("n", "dst"), "dst")
-            .select(F.col("src").alias("n"), (F.col("layer") + 1).alias("layer"))
+        cand = cond.join(layer.withColumnRenamed("n", "dst"), "dst").select(
+            F.col("src").alias("n"), (F.col("layer") + 1).alias("layer"), F.lit(None).alias("old")
         )
-        new = (
-            layer.unionByName(cand)
+        layer, seen = iterate.checkpoint(
+            layer.select("n", "layer", F.col("layer").alias("old"))
+            .unionByName(cand)
             .groupBy("n")
-            .agg(F.max("layer").alias("layer"))
-            .localCheckpoint()
+            .agg(F.max("layer").alias("layer"), F.max("old").alias("old")),
+            F.count_if(F.col("layer") != F.col("old")).alias("changed"),
         )
-        changed = (
-            new.join(layer.withColumnRenamed("layer", "old"), "n")
-            .where(F.col("layer") != F.col("old"))
-            .count()
-        )
-        layer = new
-        if changed == 0:
+        if seen["changed"] == 0:
             break
     return lab.join(
         layer.withColumnRenamed("n", "scc_id"), "scc_id"

@@ -11,10 +11,9 @@ Two registered graph inputs:
 - the REAL pipeline triple graph: ``entity_pagerank`` runs the full
   mentions -> links -> components -> materialize pipeline over the
   deterministic synthetic corpus, derives the entity edge set from the
-  emitted (subj, pred, obj) triples, and ranks entities with the SCALE
-  settings (``checkpoint=True``).  Its oracle recomputes the same ranks in
-  DuckDB from the committed twin triple fixture, so the iterative job is
-  still hard value-hash-gated.
+  emitted (subj, pred, obj) triples, and ranks the entities.  Its oracle
+  recomputes the same ranks in DuckDB from the committed twin triple
+  fixture, so the iterative job is still hard value-hash-gated.
 
 Scale notes: ``pagerank`` takes any (src, dst) edge DataFrame and runs in
 one of two regimes, chosen by the size of the cached edge set (a capped
@@ -24,10 +23,10 @@ in numpy — per-job round trips, not rank arithmetic, are the whole cost
 of a small graph.  Above it the distributed body runs: contributions are
 one groupBy per iteration (AQE-skew-safe); the per-node out-degree
 factor is computed once and joined into the edge list before iterating,
-so each round touches only (src, dst, w) + the rank vector.  With
-``checkpoint=True`` every round's rank vector is localCheckpointed,
-truncating lineage so iteration count never grows the plan — required on
-a million-entity graph, measured at 1M-file scale in bench/scaling.py.
+so each round touches only (src, dst, w) + the rank vector.  Every
+round's rank vector goes through ``iterate.checkpoint``, truncating
+lineage so iteration count never grows the plan — required on a
+million-entity graph, measured at 1M-file scale in bench/scaling.py.
 Intermediates are cached through cachectl so a long-lived session can
 release them after the plan is forced.  No UDF on either path.
 """
@@ -40,29 +39,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from .. import iterate
 from ..cachectl import tracked_cache
-from ..session import local_frame, scoped_conf
-
-
-def _pinned_checkpoint(df: "DataFrame") -> "DataFrame":
-    """``localCheckpoint`` that actually PRESERVES the hash layout.
-
-    Under AQE, ``Dataset.localCheckpoint`` captures the
-    ``AdaptiveSparkPlan``'s outputPartitioning — which is *unknown*
-    before the final plan is installed — so the resulting LogicalRDD
-    forgets it is hash-partitioned and every downstream agg/co-located
-    join re-exchanges the full table (measured round 4: a groupBy over
-    a ``repartition("src").localCheckpoint()`` table re-planned an
-    E-row ``Exchange hashpartitioning``; the identical checkpoint built
-    with AQE off planned ZERO exchanges, pinned by
-    tests/test_graph.py).  Building just the checkpoint with AQE
-    momentarily disabled keeps the iterative kernels' layout-reuse
-    contract; AQE stays on for everything else.  The disabled window
-    also stops AQE from coalescing the checkpoint's partitions, which
-    would otherwise change the partition count between rounds and break
-    round-to-round co-partitioning."""
-    with scoped_conf(df.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
-        return df.localCheckpoint()
+from ..session import local_frame
 from .kgdocs import SQL_DOC_PAIRS, _doc_mentions, _doc_pairs
 from .registry import ROUND, query
 
@@ -115,7 +94,6 @@ def pagerank(
     edges: DataFrame,
     iters: int = PR_ITERS,
     damping: float = DAMPING,
-    checkpoint: bool = False,
     partitioned: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed (src, dst) edge DataFrame.
@@ -131,15 +109,12 @@ def pagerank(
     ``PR_LOCAL_EDGES`` edges are collected and finish on the driver
     (``_local_pagerank``): up to ``PR_PROBE_EDGES`` edges the one probe
     job's rows are the input, past it ``count()`` decides and a graph
-    within the bound is collected whole.  ``checkpoint`` and
-    ``partitioned`` pick a distributed plan and so have no effect there.
-    Larger graphs run the distributed body below.  Both return the same
-    (node, r) table, ``node`` typed as the input ids and ``r`` double.
-
-    ``checkpoint=True`` localCheckpoints the rank vector every round —
-    truncating lineage so plan size stays constant in iteration count
-    (mandatory at entity-graph scale; left False for the toy concept
-    query whose oracle unrolls the identical CTE chain).
+    within the bound is collected whole.  ``partitioned`` picks a
+    distributed plan and so has no effect there.  Larger graphs run the
+    distributed body below, which checkpoints the rank vector every
+    round so plan size stays constant in iteration count.  Both return
+    the same (node, r) table, ``node`` typed as the input ids and ``r``
+    double.
 
     ``partitioned=True`` selects the co-partitioned shuffle plan instead
     of broadcasting the rank vector: ``w`` and ``nodes`` are hash-
@@ -212,13 +187,10 @@ def pagerank(
                 + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
             ).alias("r"),
         )
-        if checkpoint:
-            # partitioned mode: the rank vector leaves the round hash(node)-
-            # partitioned (the nodes-side join layout), which is exactly the
-            # next round's join distribution — pin it through the checkpoint
-            # (a plain localCheckpoint under AQE forgets it and re-exchanges
-            # V rows every round; see _pinned_checkpoint)
-            ranks = _pinned_checkpoint(ranks) if partitioned else ranks.localCheckpoint()
+        # partitioned mode: the rank vector leaves the round hash(node)-
+        # partitioned (the nodes-side join layout), which is exactly the
+        # next round's join distribution — pin it through the checkpoint
+        ranks, _ = iterate.checkpoint(ranks, pin=partitioned)
     return ranks
 
 
@@ -283,9 +255,9 @@ def concept_pagerank(spark, sf_dir):
 # -------------------------------------------------- pipeline entity graph
 # PageRank over the REAL KG output: the full pipeline runs on the synthetic
 # corpus, the edge set is the emitted triple graph itself (subj -> obj of
-# every non-identity triple, symmetrized, deduped), and ranking uses the
-# scale settings (checkpoint=True), though at oracle size the graph is far
-# under PR_LOCAL_EDGES and finishes on the driver.  The oracle re-derives the same
+# every non-identity triple, symmetrized, deduped), and ranking takes the
+# same path choice as any caller: at oracle size the graph is far under
+# PR_LOCAL_EDGES and finishes on the driver.  The oracle re-derives the same
 # edges from the committed twin triple fixture (fixtures/twin_triples.parquet,
 # drift-guarded) and unrolls the identical PR chain in SQL — so the
 # iterative job over pipeline output is hard value-hash-gated end-to-end.
@@ -333,7 +305,7 @@ def entity_pagerank(spark, sf_dir):
     entity ranking, /root/reference/experiments/uaz_documents_comparison.py:
     54-66 generalized to the code KG).  Runs the REAL pipeline — packed
     mention extraction, LSH-blocked linking, distributed CC, materialize —
-    then ranks with the scale settings (``checkpoint=True``)."""
+    then ranks the entity graph."""
     from ..stages import canonical, embed, link, materialize, mentions
     from .kgdocs import _synth
 
@@ -342,7 +314,7 @@ def entity_pagerank(spark, sf_dir):
     links = link.candidate_links(embed.embed_mentions(men))
     ents = canonical.connected_components(links)
     triples = materialize.triples_from_packed(men_packed, ents)
-    ranks = pagerank(triple_edges(triples), checkpoint=True)
+    ranks = pagerank(triple_edges(triples))
     return ranks.select(F.col("node").alias("entity"), F.round("r", ROUND).alias("rank"))
 
 
@@ -509,10 +481,9 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
       plus an explode of ONLY the removed nodes' lists, then a V-row
       update ``deg' = (deg minus removed) left-join dec``.  The degree
       tables are lazily cached; each round materializes through one
-      action, the checkpoint of the removed set, plus an emptiness probe
-      over those checkpointed rows.  The loop exits early once nothing is removed
-      (the fixed-round oracle chain is insensitive to that by
-      construction).
+      action, the checkpoint of the removed set, which also observes its
+      row count.  The loop exits early once nothing is removed (the
+      fixed-round oracle chain is insensitive to that by construction).
 
     Node ids are packed to two-seed 128-bit xxhash64 keys (one 64-bit key
     birthday-collides ~1e4 times at the 1e12-file target —
@@ -565,8 +536,10 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
         # makes each round's plan embed the previous one three times
         # (3^r growth, measured: 18 s at 4 cascade rounds on a 1.2k-edge
         # graph, driver OOM at 5)
-        removed = deg.where(F.col("c") < k).select("h1", "h2").localCheckpoint()
-        if removed.isEmpty():
+        removed, seen = iterate.checkpoint(
+            deg.where(F.col("c") < k).select("h1", "h2"), F.count(F.lit(1)).alias("n")
+        )
+        if seen["n"] == 0:
             break
         dec = (
             adj.join(F.broadcast(removed), ["h1", "h2"])
@@ -632,7 +605,7 @@ def label_propagation(edges: DataFrame, iters: int, checkpoint: bool = False) ->
     The edge table is consumed every round — localCheckpoint it once so
     an expensive upstream derivation (here the doc-pair self-join) is
     not re-run per iteration; ``checkpoint=True`` additionally truncates
-    the label table per round (the pagerank scale pattern)."""
+    the label table per round, pinned (the partitioned pagerank pattern)."""
     from pyspark.sql import Window
 
     edges = edges.localCheckpoint()
@@ -659,7 +632,7 @@ def label_propagation(edges: DataFrame, iters: int, checkpoint: bool = False) ->
             # labels leave the round hash(node)-partitioned (the final
             # groupBy layout) — exactly the next round's join/window
             # distribution; pin it through the truncation
-            labels = _pinned_checkpoint(labels)
+            labels, _ = iterate.checkpoint(labels, pin=True)
     return labels
 
 
@@ -689,7 +662,7 @@ def label_propagation_query(spark, sf_dir):
 # Scale shape: classic frontier-expansion BFS — each round is ONE
 # equi-join of the (shrinking) frontier against the edge table
 # partitioned by src, an anti-join against the visited set, and a
-# localCheckpoint to truncate lineage (the canonical.py CC pattern).
+# checkpoint that observes the frontier's size (empty ends the walk).
 # Work per round is |frontier| x avg-degree, never O(V^2); the visited
 # set only ever grows by the new frontier, so the union chain is flat.
 # The oracle re-derives the same levels with a bounded recursive CTE —
@@ -703,7 +676,8 @@ def bfs_levels_frontier(
 ) -> DataFrame:
     """(node, dist) shortest hop distances from ``seeds`` over symmetrized
     ``edges(src, dst)``, exploring at most ``max_hops`` rounds.  Each
-    round's new frontier is checkpointed so the plan stays flat.
+    round's new frontier is checkpointed so the plan stays flat, and its
+    observed size stops the walk once it is empty.
 
     ``partitioned=True`` hints the per-hop joins shuffle-hash: on an
     expander-ish graph the frontier and the visited set reach ~|V| rows
@@ -733,7 +707,9 @@ def bfs_levels_frontier(
         # partitioned mode: nxt leaves the hop hash(node)-partitioned (the
         # distinct's layout), which the next hop's expansion join and the
         # anti-join both want — pin it through the truncation
-        nxt = _pinned_checkpoint(nxt) if partitioned else nxt.localCheckpoint()
+        nxt, seen = iterate.checkpoint(nxt, F.count(F.lit(1)).alias("n"), pin=partitioned)
+        if seen["n"] == 0:
+            break
         dist = dist.unionByName(nxt)
         frontier = nxt.select("node")
     return dist

@@ -41,9 +41,9 @@ def _queries(e, *cols):
 
 def _scored_topk(cand):
     """The exact rescore every search ends in: the rounded cosine of each
-    candidate row's ``embedding`` against its query's ``vec_q``, then the
-    top TOPK per query (score desc, vec_id)."""
-    scored = unit(cand).select("qid", "vec_id", F.round(cosine("_q", ""), ROUND).alias("score"))
+    candidate row's ``unit`` vector ``vec`` against its query's ``vec_q``,
+    then the top TOPK per query (score desc, vec_id)."""
+    scored = cand.select("qid", "vec_id", F.round(cosine("_q", ""), ROUND).alias("score"))
     return top_k(scored, "qid", [F.desc("score"), F.asc("vec_id")], TOPK)
 
 
@@ -74,7 +74,7 @@ def knn_bruteforce(spark, sf_dir):
     query side is tiny and broadcast; ranking uses the rounded score so the
     cut is reproducible across engines and partition counts."""
     e = table(spark, sf_dir, "embeddings")
-    cand = e.crossJoin(F.broadcast(_queries(e))).where(F.col("vec_id") != F.col("qid"))
+    cand = unit(e).crossJoin(F.broadcast(_queries(e))).where(F.col("vec_id") != F.col("qid"))
     return _scored_topk(cand)
 
 
@@ -134,7 +134,7 @@ def ann_lsh_topk(spark, sf_dir):
     e = table(spark, sf_dir, "embeddings").withColumn("bucket", _bucket_col("embedding"))
     q = F.broadcast(_queries(e, "bucket"))
     cand = e.join(q, "bucket").where(F.col("vec_id") != F.col("qid"))
-    return _scored_topk(cand)
+    return _scored_topk(unit(cand))
 
 
 @query(
@@ -196,7 +196,7 @@ def ann_ivf_topk(spark, sf_dir):
         .join(F.broadcast(q), "qid")
         .where(F.col("vec_id") != F.col("qid"))
     )
-    return _scored_topk(cand)
+    return _scored_topk(unit(cand))
 
 
 def _probe_cells(q, cen, cell: str):
@@ -502,7 +502,7 @@ def ann_ivf_kmeans_topk(spark, sf_dir):
         .join(F.broadcast(q), "qid")
         .where(F.col("vec_id") != F.col("qid"))
     )
-    return _scored_topk(cand)
+    return _scored_topk(unit(cand))
 
 
 # ------------------------------------------------- scalar quantization (SQ8)
@@ -665,7 +665,7 @@ def ann_sq8_topk(spark, sf_dir):
     vs knn_bruteforce asserted in test_trainprep.py."""
     e = table(spark, sf_dir, "embeddings")
     cand = _sq8_candidates(e)
-    return _scored_topk(cand.join(e, "vec_id").join(F.broadcast(_queries(e)), "qid"))
+    return _scored_topk(unit(cand.join(e, "vec_id").join(F.broadcast(_queries(e)), "qid")))
 
 
 # ------------------------------------------------------------- SemDeDup
@@ -918,4 +918,4 @@ def ann_pq_topk(spark, sf_dir):
         .select("qid", "vec_id", ascore)
     )
     cand = top_k(scored, "qid", [F.desc("ascore"), F.asc("vec_id")], PQ_RERANK).select("qid", "vec_id")
-    return _scored_topk(cand.join(e, "vec_id").join(F.broadcast(_queries(e)), "qid"))
+    return _scored_topk(unit(cand.join(e, "vec_id").join(F.broadcast(_queries(e)), "qid")))

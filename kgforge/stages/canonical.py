@@ -11,9 +11,10 @@ new strategy SURVEY.md §4 N4 calls for.
 Scale notes:
 - O(log n) rounds; every round is two groupBy-join passes over the edge
   set — pure DataFrame ops, AQE-skew-safe.
-- ``localCheckpoint`` each round truncates lineage (SURVEY.md §7.2(b));
-  convergence is detected by an order-insensitive edge-set fingerprint
-  (count + sum of xxhash64), one tiny aggregate per round.
+- ``iterate.checkpoint`` each round truncates lineage (SURVEY.md §7.2(b))
+  and observes an order-insensitive edge-set fingerprint (count + bit_xor
+  of xxhash64) in the same job; the loop stops when it repeats, after at
+  most ``MAX_ROUNDS`` rounds.
 - Node ids are strings; min == lexicographic min, deterministic across
   partition counts.
 - Small graphs never reach the rounds: one capped collect of the raw
@@ -27,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import iterate
 from ..session import local_frame
 
 
@@ -67,12 +69,11 @@ def small_star(edges: DataFrame) -> DataFrame:
     return _dedup(out)
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+def _observed(edges: DataFrame) -> tuple[DataFrame, dict]:
+    """Checkpoint ``edges``, observing the round's fingerprint."""
+    return iterate.checkpoint(
+        edges, F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("src", "dst")).alias("h")
+    )
 
 
 def _local_components(spark, rows) -> DataFrame:
@@ -104,13 +105,11 @@ def _local_components(spark, rows) -> DataFrame:
 
 # rows the first path probe of connected_components collects
 LOCAL_PROBE_ROWS = 100_000
+# bound on the distributed large-star/small-star rounds
+MAX_ROUNDS = 20
 
 
-def connected_components(
-    links: DataFrame,
-    max_iter: int = 20,
-    local_threshold: int = 1_000_000,
-) -> DataFrame:
+def connected_components(links: DataFrame, local_threshold: int = 1_000_000) -> DataFrame:
     """CANDIDATE_LINKS(a, b, ...) -> ENTITIES(entity_id, canonical_id).
 
     Adaptive: edge sets under ``local_threshold`` run driver-side
@@ -127,16 +126,17 @@ def connected_components(
     # graph of at most LOCAL_PROBE_ROWS edges and IS the union-find's input
     # (union-find ignores duplicate edges and self-loops, so the probe
     # skips _dedup's shuffle).  Past the cap the deduped edges are
-    # checkpointed once, so the size count, the union-find collect and the
-    # first distributed round share one pass over the _dedup plan.
+    # checkpointed once, observing the size and the first fingerprint, so
+    # the union-find collect and the first distributed round share one
+    # pass over the _dedup plan.
     spark = links.sparkSession
     if local_threshold > 0:
         cap = min(local_threshold, LOCAL_PROBE_ROWS)
         rows = raw.limit(cap + 1).collect()
         if len(rows) <= cap:
             return _local_components(spark, rows)
-    edges = _dedup(raw).localCheckpoint()
-    if local_threshold > LOCAL_PROBE_ROWS and edges.count() <= local_threshold:
+    edges, prev = _observed(_dedup(raw))
+    if local_threshold > LOCAL_PROBE_ROWS and prev["n"] <= local_threshold:
         return _local_components(spark, edges.collect())
 
     # String rounds.  groupBy-min on STRING ids means SortAggregate
@@ -149,10 +149,8 @@ def connected_components(
     # (~6 rounds at this diameter).  Sort-based aggregation also spills
     # gracefully, and the edge set shrinks every round.  Numbers in
     # BASELINE.md §Measured — round 2.
-    prev = _fingerprint(edges)
-    for _ in range(max_iter):
-        edges = small_star(large_star(edges)).localCheckpoint()
-        cur = _fingerprint(edges)
+    for _ in range(MAX_ROUNDS):
+        edges, cur = _observed(small_star(large_star(edges)))
         if cur == prev:
             break
         prev = cur

@@ -197,10 +197,12 @@ def test_scc_labels_nested_cycles_through_bridge(spark):
 
 
 def test_scoped_conf_overrides_do_not_leak(spark):
-    """scc_labels and graph._pinned_checkpoint override session conf for
-    their own section only: afterwards every key reads back exactly as
+    """scc_labels and iterate.checkpoint(pin=True) override session conf
+    for their own section only: afterwards every key reads back exactly as
     before — an explicit value unchanged, an unset key still unset."""
-    from kgforge.operators.graph import _pinned_checkpoint
+    from pyspark.sql import functions as F
+
+    from kgforge import iterate
 
     coal, shuf = "spark.sql.adaptive.coalescePartitions.enabled", "spark.sql.shuffle.partitions"
     coal_prev, shuf_prev = spark.conf.get(coal), spark.conf.get(shuf)
@@ -212,7 +214,10 @@ def test_scoped_conf_overrides_do_not_leak(spark):
         assert got == {"a": "a", "b": "a", "c": "a"}
         assert spark.conf.get(coal, None) is None
         assert spark.conf.get(shuf) == "7"
-        _pinned_checkpoint(e.repartition("src_repo")).count()
+        iterate.checkpoint(e.repartition("src_repo"), pin=True)[0].count()
+        assert spark.conf.get(shuf) == "7"
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        iterate.checkpoint(e.repartition("src_repo"), F.count(F.lit(1)).alias("n"), pin=True)
         assert spark.conf.get(shuf) == "7"
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     finally:

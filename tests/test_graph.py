@@ -187,8 +187,8 @@ def test_partitioned_variants_match_broadcast_plans(spark, monkeypatch):
 
     monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)  # plan under test, not the local finisher
     sym = _random_sym_graph(spark)
-    a = {r.node: round(r.r, 6) for r in pagerank(sym, checkpoint=True).collect()}
-    b = {r.node: round(r.r, 6) for r in pagerank(sym, checkpoint=True, partitioned=True).collect()}
+    a = {r.node: round(r.r, 6) for r in pagerank(sym).collect()}
+    b = {r.node: round(r.r, 6) for r in pagerank(sym, partitioned=True).collect()}
     assert a == b
     seeds = sym.select(F.col("src").alias("node")).distinct().orderBy("node").limit(10)
     xa = {(r.node, r.dist) for r in bfs_levels_frontier(sym, seeds, 3).collect()}
@@ -213,19 +213,9 @@ def test_kcore_peel_random_graph_matches_bruteforce(spark):
     assert _kcore(sym, 4, 50) == fixpoint
 
 
-def test_pinned_checkpoint_round_is_exchange_free(spark):
-    """_pinned_checkpoint is load-bearing for pagerank and
-    bfs_levels_frontier(partitioned=True): a PLAIN localCheckpoint under
-    AQE forgets the hash layout (AdaptiveSparkPlan's outputPartitioning
-    is unknown pre-final) and this very plan re-exchanges — measured.
-    Over a pinned hash(src) layout, a degree agg plus two broadcast
-    anti-joins must plan ZERO shuffle exchanges."""
+def _assert_round_exchange_free(laid):
     from pyspark.sql import functions as F
 
-    from kgforge.operators.graph import _pinned_checkpoint
-
-    sym = _random_sym_graph(spark, seed=7)
-    laid = _pinned_checkpoint(sym.repartition("src"))
     removed = (
         laid.groupBy("src")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -241,21 +231,58 @@ def test_pinned_checkpoint_round_is_exchange_free(spark):
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
+def test_pinned_checkpoint_round_is_exchange_free(spark):
+    """iterate.checkpoint(pin=True) is load-bearing for pagerank,
+    label_propagation and bfs_levels_frontier(partitioned=True): a PLAIN
+    localCheckpoint under AQE forgets the hash layout (AdaptiveSparkPlan's
+    outputPartitioning is unknown pre-final) and this very plan
+    re-exchanges — measured.  Over a pinned hash(src) layout, a degree
+    agg plus two broadcast anti-joins must plan ZERO shuffle exchanges."""
+    from kgforge import iterate
+
+    sym = _random_sym_graph(spark, seed=7)
+    laid, _ = iterate.checkpoint(sym.repartition("src"), pin=True)
+    _assert_round_exchange_free(laid)
+
+
+def test_pinned_checkpoint_with_probe_is_exchange_free(spark):
+    """The observed probe a loop attaches to its checkpoint keeps the
+    pinned layout: the same round still plans no shuffle exchange."""
+    from pyspark.sql import functions as F
+
+    from kgforge import iterate
+
+    sym = _random_sym_graph(spark, seed=7)
+    laid, seen = iterate.checkpoint(
+        sym.repartition("src"), F.count(F.lit(1)).alias("n"), pin=True
+    )
+    assert seen == {"n": sym.count()}
+    _assert_round_exchange_free(laid)
+
+
 def test_pagerank_partitioned_has_no_per_round_rank_broadcast(spark, monkeypatch):
     """The partitioned plan's point: the rank vector moves through
     shuffle-hash exchanges, never a per-round broadcast build.  The only
-    BroadcastExchange allowed in the full plan is the one-time degree
-    join inside the cached w build."""
+    BroadcastExchange allowed in a round's plan is the one-time degree
+    join inside the cached w build.  Every round ends in a checkpoint,
+    so each round's plan is read as that checkpoint executed it."""
+    from kgforge import iterate
+
     monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)  # plan under test, not the local finisher
+    plans, real = [], iterate.checkpoint
+
+    def spy(df, *probes, pin=False):
+        out = real(df, *probes, pin=pin)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(iterate, "checkpoint", spy)
     sym = _random_sym_graph(spark, seed=14)
-    plan = (
-        pagerank(sym, partitioned=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "ShuffledHashJoin" in plan
-    assert plan.count("BroadcastExchange") <= 1
+    pagerank(sym, partitioned=True)
+    assert len(plans) == graph.PR_ITERS
+    for plan in plans:
+        assert "ShuffledHashJoin" in plan
+        assert plan.count("BroadcastExchange") <= 1
 
 
 # ------------------------------------------- local finisher vs distributed
@@ -273,7 +300,7 @@ def _ranks(df, digits=None):
 
 
 def test_pagerank_paths_agree_on_random_graph(spark, monkeypatch):
-    local, dist = _both_paths(monkeypatch, _random_sym_graph(spark), checkpoint=True)
+    local, dist = _both_paths(monkeypatch, _random_sym_graph(spark))
     assert local.dtypes == dist.dtypes == [("node", "string"), ("r", "double")]
     assert _ranks(local, 9) == _ranks(dist, 9)
 

@@ -18,7 +18,7 @@ sys.path.insert(0, sys.argv[1])
 import kgforge, kgforge.pipeline, kgforge.lexer, kgforge.constants
 import kgforge.stages.mentions, kgforge.stages.link, kgforge.stages.canonical
 import kgforge.stages.materialize, kgforge.checkpoint, kgforge.schemas
-import kgforge.simjoin, kgforge.operators.dedup
+import kgforge.simjoin, kgforge.iterate, kgforge.operators.dedup
 assert kgforge.__file__.startswith(sys.argv[1]), kgforge.__file__
 ms = kgforge.lexer.lex("python", "pkg/mod.py", "import os\ndef f():\n    pass\n")
 kinds = {m[0] for m in ms}

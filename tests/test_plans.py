@@ -76,6 +76,17 @@ def test_knn_bruteforce_is_broadcast_nested_loop(plans):
     assert "CartesianProduct" not in p
 
 
+def test_knn_bruteforce_units_corpus_below_the_join(spark, sf_dir):
+    # the corpus vector is cast and normed once per vector, below the
+    # cross join, not once per (query, candidate) row above it
+    df = registry.QUERIES["knn_bruteforce"](spark, sf_dir)
+    above, below = df._jdf.queryExecution().executedPlan().toString().split(
+        "BroadcastNestedLoopJoin"
+    )
+    assert " AS vec#" in below and " AS norm#" in below
+    assert " AS vec#" not in above and " AS norm#" not in above
+
+
 def test_candidate_links_bucket_join_shape(spark, small_files, monkeypatch):
     from kgforge.stages import embed, link, mentions
 
