@@ -79,7 +79,7 @@ def _run_kernel(spark, name: str, edges):
         peel = G.kcore_peel(edges, KCORE_K, KCORE_ROUNDS)
         return (*paired.checksum(peel, ["node", "core_degree"]), None)
     if name == "label_propagation":
-        labels = G.label_propagation(edges, LP_ITERS, checkpoint=True)
+        labels = G.label_propagation(edges, LP_ITERS)
         return (*paired.checksum(labels, ["node", "lab"]), None)
     if name in ("bfs_levels", "bfs_part"):
         seeds = edges.select(F.col("src").alias("node")).distinct().orderBy("node").limit(BFS_SEEDS)

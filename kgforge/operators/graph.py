@@ -441,7 +441,8 @@ def count_triangles(edges: DataFrame) -> DataFrame:
 #   most-frequent-neighbor-label with deterministic min-label
 #   tie-breaking — the classic community detector, made hash-gateable by
 #   the deterministic tie rule.  Per round: one edge-label equi-join +
-#   one (node, label) count agg + one per-node argmax window.
+#   one (node, label) count agg + one per-node argmax window, then a
+#   pinned checkpoint of the labels.
 
 KCORE_K = 2
 KCORE_ROUNDS = 4
@@ -595,7 +596,7 @@ def _sql_lp_chain() -> str:
     return ",\n".join(parts)
 
 
-def label_propagation(edges: DataFrame, iters: int, checkpoint: bool = False) -> DataFrame:
+def label_propagation(edges: DataFrame, iters: int) -> DataFrame:
     """``iters`` synchronous label-propagation rounds over a symmetrized
     (src, dst) edge DataFrame: each node takes its neighbors' most frequent
     label, ties to the MIN label (deterministic — required for the
@@ -604,8 +605,8 @@ def label_propagation(edges: DataFrame, iters: int, checkpoint: bool = False) ->
 
     The edge table is consumed every round — localCheckpoint it once so
     an expensive upstream derivation (here the doc-pair self-join) is
-    not re-run per iteration; ``checkpoint=True`` additionally truncates
-    the label table per round, pinned (the partitioned pagerank pattern)."""
+    not re-run per iteration.  Each round's label table is truncated
+    through a pinned checkpoint (the partitioned pagerank pattern)."""
     from pyspark.sql import Window
 
     edges = edges.localCheckpoint()
@@ -628,11 +629,10 @@ def label_propagation(edges: DataFrame, iters: int, checkpoint: bool = False) ->
             .groupBy("node")
             .agg(F.min("lab").alias("lab"))
         )
-        if checkpoint:
-            # labels leave the round hash(node)-partitioned (the final
-            # groupBy layout) — exactly the next round's join/window
-            # distribution; pin it through the truncation
-            labels, _ = iterate.checkpoint(labels, pin=True)
+        # labels leave the round hash(node)-partitioned (the final
+        # groupBy layout) — exactly the next round's join/window
+        # distribution; pin it through the truncation
+        labels, _ = iterate.checkpoint(labels, pin=True)
     return labels
 
 

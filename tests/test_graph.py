@@ -263,9 +263,11 @@ def test_pinned_checkpoint_with_probe_is_exchange_free(spark):
 def test_pagerank_partitioned_has_no_per_round_rank_broadcast(spark, monkeypatch):
     """The partitioned plan's point: the rank vector moves through
     shuffle-hash exchanges, never a per-round broadcast build.  The only
-    BroadcastExchange allowed in a round's plan is the one-time degree
-    join inside the cached w build.  Every round ends in a checkpoint,
-    so each round's plan is read as that checkpoint executed it."""
+    BroadcastExchange allowed across ALL rounds is the one-time degree
+    join inside the cached w build.  Every round ends in a checkpoint, so
+    a round's plan holds only that round (earlier rounds sit behind the
+    previous checkpoint): the per-round counts sum to the whole unrolled
+    plan's count."""
     from kgforge import iterate
 
     monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)  # plan under test, not the local finisher
@@ -282,7 +284,7 @@ def test_pagerank_partitioned_has_no_per_round_rank_broadcast(spark, monkeypatch
     assert len(plans) == graph.PR_ITERS
     for plan in plans:
         assert "ShuffledHashJoin" in plan
-        assert plan.count("BroadcastExchange") <= 1
+    assert sum(p.count("BroadcastExchange") for p in plans) <= 1
 
 
 # ------------------------------------------- local finisher vs distributed
