@@ -1,5 +1,5 @@
 """Scaling evidence for the iterative GRAPH kernels (round-3 judge asks
-#4 and #6): PageRank (broadcast vs partitioned plans), k-core peeling,
+#4 and #6): PageRank, k-core peeling,
 label propagation, and BFS levels over the REAL 1M-file entity graph —
 not the sf-toy concept graphs the oracle gate uses.
 
@@ -19,7 +19,7 @@ its rank values are compared by the oracle gate at sf scale instead).
 
 Usage:
     python bench/graph_scaling.py --files 1000000 --repeats 5
-    python bench/graph_scaling.py --worker 8 EDGES_DIR --kernels pagerank_part
+    python bench/graph_scaling.py --worker 8 EDGES_DIR --kernels pagerank
 
 Results -> BENCH_SCALING_GRAPH.json, summarized in BASELINE.md.
 """
@@ -39,8 +39,7 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 ALL_KERNELS = [
-    "pagerank_bcast",
-    "pagerank_part",
+    "pagerank",
     "pagerank_stages",
     "kcore",
     "label_propagation",
@@ -67,11 +66,8 @@ def _run_kernel(spark, name: str, edges):
 
     from kgforge.operators import graph as G
 
-    if name == "pagerank_bcast":
+    if name == "pagerank":
         n = G.pagerank(edges).count()
-        return n, None, None
-    if name == "pagerank_part":
-        n = G.pagerank(edges, partitioned=True).count()
         return n, None, None
     if name == "pagerank_stages":
         return _pagerank_stage_walls(edges)
@@ -94,7 +90,7 @@ def _run_kernel(spark, name: str, edges):
 
 
 def _pagerank_stage_walls(edges):
-    """Per-stage decomposition of ONE partitioned-PageRank round (judge
+    """Per-stage decomposition of ONE co-partitioned PageRank round (judge
     ask #4's 'prove the ceiling' branch): times the loop-invariant builds
     and one round's two legs separately, so the paired run shows WHICH
     stage anti-scales.  Stage isolation uses localCheckpoint barriers
@@ -113,7 +109,7 @@ def _pagerank_stage_walls(edges):
     t = time.time()
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("d"))
     w = tracked_cache(
-        sym.join(deg.hint("merge"), "src")  # as pagerank(partitioned=True) builds w
+        sym.join(deg.hint("merge"), "src")  # as pagerank's co-partitioned plan builds w
         .select("src", "dst", (F.lit(1.0) / F.col("d")).alias("w"))
         .repartition("src")
     )

@@ -939,7 +939,7 @@ def near_dup_clusters(spark, sf_dir):
         )
     )
     comp = connected_components(pairs, local_threshold=0)
-    # Same consumer shape as the pipeline's canonicalize(): representatives
+    # Same consumer shape as materialize's canonical lookup: representatives
     # carry no mapping row, so rebuild the vertex set and coalesce to self.
     verts = (
         pairs.select(F.col("a").alias("doc_id"))

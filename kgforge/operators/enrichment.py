@@ -18,9 +18,9 @@ around the stub is the real Spark shape for an external-call stage:
   probe shape).
 - **Arrow-batched mapInPandas with a per-task token bucket** — the
   sandbox analog of the reference's ``sleep(1)`` loop; cluster-wide call
-  rate = tasks x KGF_ENRICH_RATE (req/s per task, default unlimited),
-  which is the knob an operator like this must expose because the
-  bottleneck is the remote service, not the cluster.
+  rate = tasks x ``rate`` (req/s per task, default unlimited), which is
+  the argument an operator like this must expose because the bottleneck
+  is the remote service, not the cluster.
 - **maxHits / threshold applied service-side** so the transferred
   response is bounded regardless of ontology size.
 
@@ -32,7 +32,6 @@ stub's top-k/threshold behavior matches an independent pandas replay.
 from __future__ import annotations
 
 import hashlib
-import os
 import time
 from collections.abc import Iterator
 
@@ -78,14 +77,11 @@ def _stub_ground(query_string: str, nodes: list[str]) -> list[tuple[str, float]]
     return hits[:UAZ_MAX_HITS]
 
 
-def enrich_queries(qdf, nodes: list[str], rate: float | None = None):
+def enrich_queries(qdf, nodes: list[str], rate: float = float("inf")):
     """(name, query_string) -> one row per grounding hit, via the
     rate-limited external-call stage.  ``rate`` is requests/sec PER TASK
-    (cluster-wide rate = tasks x rate); default comes from
-    KGF_ENRICH_RATE read at plan-build time on the driver (worker
-    processes outlive driver env changes, so the value is captured in the
-    task closure, not read worker-side)."""
-    rate = float(os.environ.get("KGF_ENRICH_RATE", "inf")) if rate is None else rate
+    (cluster-wide rate = tasks x rate), unlimited by default; it is
+    captured in the task closure."""
     min_gap = 0.0 if rate == float("inf") else 1.0 / rate
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -23,9 +23,12 @@ in numpy — per-job round trips, not rank arithmetic, are the whole cost
 of a small graph.  Above it the distributed body runs: contributions are
 one groupBy per iteration (AQE-skew-safe); the per-node out-degree
 factor is computed once and joined into the edge list before iterating,
-so each round touches only (src, dst, w) + the rank vector.  Every
-round's rank vector goes through ``iterate.checkpoint``, truncating
-lineage so iteration count never grows the plan — required on a
+so each round touches only (src, dst, w) + the rank vector.  The edge
+count also picks its plan: up to ``PR_PARTITION_EDGES`` the rank vector
+broadcasts into the edge join, past it the edge list and node set are
+hash-partitioned once on their join keys and each round shuffles only
+the V-row rank and contribution tables.  Every round's rank vector goes
+through ``iterate.checkpoint``, truncating lineage so iteration count never grows the plan — required on a
 million-entity graph, measured at 1M-file scale in bench/scaling.py.
 Intermediates are cached through cachectl so a long-lived session can
 release them after the plan is forced.  No UDF on either path.
@@ -56,6 +59,12 @@ PR_LOCAL_EDGES = 1_000_000
 # rows pagerank's first path probe collects (materialize caps its own
 # mapping probe at the same size); larger graphs are counted instead
 PR_PROBE_EDGES = 100_000
+# Past this many edges pagerank's distributed body runs the co-partitioned
+# plan; up to it the rank vector broadcasts into the edge join.  Bracketed,
+# not pinned, by measurement (BASELINE.md "PageRank's distributed plan by
+# edge count"): broadcasting was faster at 13.3M edges, co-partitioning at
+# 43.6M; the bound sits near their geometric mean.
+PR_PARTITION_EDGES = 24_000_000
 
 _SQL_EDGES = f"""
 sym as (
@@ -90,12 +99,7 @@ _SQL_PR_CHAIN = ",".join(
 )
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = PR_ITERS,
-    damping: float = DAMPING,
-    partitioned: bool = False,
-) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = PR_ITERS, damping: float = DAMPING) -> DataFrame:
     """Fixed-iteration PageRank over a directed (src, dst) edge DataFrame.
 
     Sink nodes (dst-only) are kept in the node set and receive inbound
@@ -109,24 +113,17 @@ def pagerank(
     ``PR_LOCAL_EDGES`` edges are collected and finish on the driver
     (``_local_pagerank``): up to ``PR_PROBE_EDGES`` edges the one probe
     job's rows are the input, past it ``count()`` decides and a graph
-    within the bound is collected whole.  ``partitioned`` picks a
-    distributed plan and so has no effect there.  Larger graphs run the
+    within the bound is collected whole.  Larger graphs run the
     distributed body below, which checkpoints the rank vector every
-    round so plan size stays constant in iteration count.  Both return
+    round so plan size stays constant in iteration count.  Its plan is
+    chosen by the same edge count: up to ``PR_PARTITION_EDGES`` the rank
+    vector broadcasts into each round's edge join; past it ``w`` and
+    ``nodes`` are hash-partitioned ONCE on their per-round join keys and
+    cached, the per-round joins are hinted shuffle-hash, and only the
+    V-row rank/contribution tables move per round, through parallel
+    exchanges rather than a driver-built broadcast.  Both regimes return
     the same (node, r) table, ``node`` typed as the input ids and ``r``
     double.
-
-    ``partitioned=True`` selects the co-partitioned shuffle plan instead
-    of broadcasting the rank vector: ``w`` and ``nodes`` are hash-
-    partitioned ONCE on their per-round join keys and cached, the
-    per-round joins are hinted shuffle-hash, and only the V-row
-    rank/contribution tables move per round — through parallel
-    exchanges, not a driver-serialized broadcast build.  At 1M+ nodes
-    the per-round broadcast (collect V rows, build ONE hash table on the
-    driver, re-ship it) is a serial Amdahl term; exchanges parallelize
-    with cores.  Same arithmetic shape, same results — choose by |V|:
-    broadcast below ~10^5 nodes, partitioned above (measured in
-    bench/graph_scaling.py).
     """
     sym = tracked_cache(edges)  # feeds the probe, deg AND the join leg
     # Path choice that never ships a large graph: the first
@@ -135,11 +132,14 @@ def pagerank(
     # loading the cache the distributed body reads anyway.
     head = sym.limit(PR_PROBE_EDGES + 1).collect()
     if len(head) <= PR_PROBE_EDGES:
+        n_edges = len(head)
         pdf = pd.DataFrame(head, columns=sym.columns)
     else:
-        pdf = sym.toPandas() if sym.count() <= PR_LOCAL_EDGES else None
+        n_edges = sym.count()
+        pdf = sym.toPandas() if n_edges <= PR_LOCAL_EDGES else None
     if pdf is not None and len(pdf) <= PR_LOCAL_EDGES:
         return _local_pagerank(sym, pdf, iters, damping)
+    partitioned = n_edges > PR_PARTITION_EDGES
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("d"))
     # Partitioned mode keeps the one-time degree join off the driver too:
     # a sort-merge join, never a driver-built V-row broadcast of deg, even
@@ -169,8 +169,8 @@ def pagerank(
     # groupBy partial-aggregates map-side, so the only shuffle per round
     # moves O(V x partitions) rows, not O(E).  A repartition("src")+cache
     # of w was measured and REJECTED: with ranks broadcast it only adds
-    # exchanges.  (If V outgrows the broadcast threshold, pre-partitioning
-    # w by src becomes the right knob — AQE will flip the join to SMJ.)
+    # exchanges.  Past PR_PARTITION_EDGES the partitioned mode below takes
+    # over instead.
     for _ in range(iters):
         r = ranks.hint("shuffle_hash") if partitioned else ranks
         contrib = (

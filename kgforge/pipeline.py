@@ -60,7 +60,6 @@ def run_pipeline(
     out["mentions"] = men
     mentions_ms = int((time.time() - t1) * 1000)
 
-    t2 = time.time()
     emb = ck.get_or_run(
         "entity_embeddings",
         lambda: embed.embed_mentions(men),
@@ -69,7 +68,6 @@ def run_pipeline(
     )
     out["entity_embeddings"] = emb
 
-    t3 = time.time()
     links = ck.get_or_run(
         "candidate_links",
         lambda: link.candidate_links(emb),
@@ -78,7 +76,6 @@ def run_pipeline(
     )
     out["candidate_links"] = links
 
-    t4 = time.time()
     ents = ck.get_or_run(
         "entities",
         lambda: canonical.connected_components(links),
@@ -116,17 +113,8 @@ def run_pipeline(
             df = df.unionByName(valve_rows)
         return df
 
-    t6 = time.time()
     out["metrics"] = ck.get_or_run("metrics", _metrics, force=force, schema=schemas.METRICS)
     out["wall_secs"] = time.time() - t0  # type: ignore[assignment]
-    out["stage_secs"] = {  # type: ignore[assignment]
-        "mentions": round(t2 - t1, 2),
-        "embed": round(t3 - t2, 2),
-        "links": round(t4 - t3, 2),
-        "entities": round(t5 - t4, 2),
-        "triples": round(t6 - t5, 2),
-        "metrics": round(time.time() - t6, 2),
-    }
     return out
 
 

@@ -70,10 +70,9 @@ def build_session(
         # idles the whole wave.  On a cluster the 128 MB default is right
         # (a 100 TB scan yields ~800k splits regardless); in local mode the
         # whole input may be under a GB, so 128 MB splits collapse to
-        # n_cores tasks — cap at 16 MB there.  Override via env.
-        "spark.sql.files.maxPartitionBytes": os.environ.get(
-            "KGFORGE_MAX_PARTITION_BYTES",
-            "16777216" if (master or "").startswith("local") else "134217728",
+        # n_cores tasks — cap at 16 MB there.
+        "spark.sql.files.maxPartitionBytes": (
+            "16777216" if (master or "").startswith("local") else "134217728"
         ),
         "spark.sql.autoBroadcastJoinThreshold": "64m",
         # collect_list/collect_set style aggs (evidence squash, k-core

@@ -115,10 +115,11 @@ def connected_components(links: DataFrame, local_threshold: int = 1_000_000) -> 
     Adaptive: edge sets under ``local_threshold`` run driver-side
     union-find (one job); larger ones run the distributed
     large-star/small-star loop.  Nodes that never appear in a link are
-    their own canonical entity and are NOT emitted here; consumers use
-    ``canonicalize`` (left join + coalesce) so the mapping table stays
-    proportional to the linked subgraph, not the full entity universe —
-    that is what makes the canonical dictionary broadcast-able (north_rule).
+    their own canonical entity and are NOT emitted here; consumers
+    (``materialize``) look ids up with identity for the unmapped, so the
+    mapping table stays proportional to the linked subgraph, not the full
+    entity universe — that is what makes the canonical dictionary
+    broadcast-able (north_rule).
     """
     raw = links.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     # Bounded probe, capped as materialize.triples_from_packed caps its
@@ -159,20 +160,3 @@ def connected_components(links: DataFrame, local_threshold: int = 1_000_000) -> 
         F.greatest("src", "dst").alias("entity_id"), F.least("src", "dst").alias("canonical_id")
     )
     return orient.groupBy("entity_id").agg(F.min("canonical_id").alias("canonical_id"))
-
-
-def canonicalize(df: DataFrame, mapping: DataFrame, col: str, broadcast: bool = True) -> DataFrame:
-    """Replace ``col`` with its canonical id (identity when unmapped).
-
-    The mapping is broadcast when it fits (north_rule: "broadcast of the
-    canonical-entity dictionary when it fits") — pass broadcast=False to
-    fall back to a shuffled join for huge dictionaries.
-    """
-    m = mapping.withColumnRenamed("entity_id", col)
-    if broadcast:
-        m = F.broadcast(m)
-    return (
-        df.join(m, col, "left")
-        .withColumn(col, F.coalesce(F.col("canonical_id"), F.col(col)))
-        .drop("canonical_id")
-    )

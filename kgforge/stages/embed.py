@@ -92,12 +92,10 @@ def embed_entities(entities: DataFrame) -> DataFrame:
     )
 
 
-def embed_mentions(mentions: DataFrame, linkable_only: bool = True) -> DataFrame:
-    """Distinct entities -> embeddings.  By default only the linkable kinds
+def embed_mentions(mentions: DataFrame) -> DataFrame:
+    """Distinct entities -> embeddings.  Only the linkable kinds
     (constants.LINK_KINDS) are embedded: embeddings exist solely to feed the
     link stage, and restricting them keeps the entity-embedding table
     bounded by the naming-variant namespace rather than the corpus size."""
-    ents = entities_from_mentions(mentions)
-    if linkable_only:
-        ents = ents.where(F.col("kind").isin(*constants.LINK_KINDS))
+    ents = entities_from_mentions(mentions).where(F.col("kind").isin(*constants.LINK_KINDS))
     return embed_entities(ents)

@@ -95,16 +95,15 @@ def cosine_expr(a: str, b: str):
     ).cast("double")
 
 
-def candidate_links(
-    embedded: DataFrame,
-    threshold: float = constants.LINK_THRESHOLD,
-    max_bucket: int = constants.LINK_MAX_BUCKET,
-) -> DataFrame:
+def candidate_links(embedded: DataFrame) -> DataFrame:
     """ENTITY_EMBEDDINGS -> CANDIDATE_LINKS (a < b canonical ordering,
     /root/reference/experiments/uaz_documents_comparison.py:237-238).
 
+    Scores at least ``constants.LINK_THRESHOLD`` and buckets of at most
+    ``constants.LINK_MAX_BUCKET`` rows, the values the pandas twin uses.
     Finishes on the driver when the table and its bucket self-join fit the
     module bounds (see the module docstring); the rows are the same."""
+    threshold, max_bucket = constants.LINK_THRESHOLD, constants.LINK_MAX_BUCKET
     probe = (
         embedded.select(
             "entity_id",

@@ -14,7 +14,9 @@ Scale notes:
   dictionary) pay a hash aggregate.  No string agg buffers anywhere
   (they would downgrade HashAggregate to SortAggregate).
 - The canonical-map join is broadcast; the collision dictionary is built
-  driver-side from one bounded probe when it fits.
+  driver-side from one probe of at most ``MAP_PROBE_ROWS`` mapping rows
+  when it fits, and a mapping of at most ``MAP_LITERAL_MAX`` rows rides
+  the single-pass packed plan as a closure dictionary.
 - Output is partitioned by pred — partition pruning for per-predicate
   consumers (SURVEY.md §4 N5).
 """
@@ -53,13 +55,14 @@ del _kind_images
 # broadcast-join plan (a 10k-entry literal map is ~40kB of plan, fine;
 # an unbounded one would blow up Catalyst).
 MAP_LITERAL_MAX = 10_000
+# Rows of the canonical mapping the one bounded probe collects.  A mapping
+# within it becomes the collision dictionary driver-side (and, within
+# MAP_LITERAL_MAX, the literal map); past it the join plan builds the
+# dictionary as a distinct union.
+MAP_PROBE_ROWS = 100_000
 
 
-def triples_from_packed(
-    packed: DataFrame,
-    mapping: DataFrame | None,
-    map_literal_max: int = MAP_LITERAL_MAX,
-) -> DataFrame:
+def triples_from_packed(packed: DataFrame, mapping: DataFrame | None) -> DataFrame:
     """PACKED mentions + ENTITIES -> TRIPLES in ONE pass, zero joins,
     zero shuffles (plus the tiny same_as union).
 
@@ -89,7 +92,7 @@ def triples_from_packed(
                     -> inline -> project -> write
 
     The twin differential + fixture oracles pin exact equality with the
-    join plan.  Dictionaries larger than ``map_literal_max`` fall back to
+    join plan.  Dictionaries larger than ``MAP_LITERAL_MAX`` fall back to
     the broadcast-join plan (closure capture of an unbounded dict would
     ship it to every task)."""
     from collections.abc import Iterator
@@ -116,9 +119,8 @@ def triples_from_packed(
         # so the join plan can reuse these rows instead of re-collecting the
         # mapping (two driver jobs over a possibly non-checkpointed mapping
         # otherwise, for dictionaries between the two thresholds).
-        probe_cap = max(map_literal_max, 100_000)
-        probe = mapping.limit(probe_cap + 1).collect()
-        if len(probe) > map_literal_max:
+        probe = mapping.limit(MAP_PROBE_ROWS + 1).collect()
+        if len(probe) > MAP_LITERAL_MAX:
             return triples_from_mentions(
                 mentions_stage.explode_mentions(packed), mapping, probe_rows=probe
             )
@@ -192,10 +194,7 @@ def triples_from_packed(
 
 
 def triples_from_mentions(
-    mentions: DataFrame,
-    mapping: DataFrame,
-    prefilter_limit: int = 100_000,
-    probe_rows: list | None = None,
+    mentions: DataFrame, mapping: DataFrame, probe_rows: list | None = None
 ) -> DataFrame:
     """MENTIONS + ENTITIES -> TRIPLES.
 
@@ -204,7 +203,7 @@ def triples_from_mentions(
     ``with_evidence`` for the display string), score = 1.0 for lexical
     triples.  same_as triples come straight from the mapping.
 
-    When the mapping fits under ``prefilter_limit`` rows (it is
+    When the mapping fits under ``MAP_PROBE_ROWS`` rows (it is
     broadcast-sized by contract), the collision dictionary is collected and
     rebuilt as one driver-local relation — the distinct-union subquery
     would otherwise be planned (and its shuffle run) once per join leg.
@@ -234,19 +233,11 @@ def triples_from_mentions(
         F.col("line"),
         F.lit(1.0).alias("score"),
     )
-    return canonicalize_lexical(
-        lexical,
-        mapping,
-        prefilter_limit=prefilter_limit,
-        probe_rows=probe_rows,
-    )
+    return canonicalize_lexical(lexical, mapping, probe_rows=probe_rows)
 
 
 def canonicalize_lexical(
-    lexical: DataFrame,
-    mapping: DataFrame,
-    prefilter_limit: int = 100_000,
-    probe_rows: list | None = None,
+    lexical: DataFrame, mapping: DataFrame, probe_rows: list | None = None
 ) -> DataFrame:
     """LEXICAL triples (subj, pred, obj, line, score — raw objs, already
     per-file first-occurrence-deduped on RAW keys) + canonical mapping ->
@@ -267,14 +258,14 @@ def canonicalize_lexical(
     # One bounded probe of the (broadcast-sized by contract) mapping: if it
     # fits, build the collision dictionary driver-side — one tiny local
     # relation instead of a twice-planned distinct-union subquery.
-    # probe_rows: a caller that already limit-collected the mapping (with a
-    # cap >= prefilter_limit + 1, see triples_from_packed) passes the rows
+    # probe_rows: a caller that already limit-collected the mapping (to
+    # MAP_PROBE_ROWS + 1 rows, see triples_from_packed) passes the rows
     # through so the same Spark job isn't run twice.
     if probe_rows is not None:
         probe = probe_rows
     else:
-        probe = mapping.limit(prefilter_limit + 1).collect()
-    small = len(probe) <= prefilter_limit
+        probe = mapping.limit(MAP_PROBE_ROWS + 1).collect()
+    small = len(probe) <= MAP_PROBE_ROWS
 
     if small:
         pairs = sorted(
@@ -338,25 +329,22 @@ def with_evidence(triples: DataFrame) -> DataFrame:
     )
 
 
-def sha_audit(rows_in: DataFrame, rows_out: DataFrame, partition_col: str = "repo") -> DataFrame:
-    """Per-partition verification of the input_hint invariant: every
+def sha_audit(rows_in: DataFrame, rows_out: DataFrame) -> DataFrame:
+    """Per-repo verification of the input_hint invariant: every
     (repo, path, commit) in the output carries the same content_sha256 as
     the source table.  This re-hashes the source content — a full input
     pass — so it is an explicit audit (tests + ``--audit``), not something
     silently glued onto every metrics row."""
-    src = rows_in.select(partition_col, "path", "commit", "content_sha256").distinct()
-    got = rows_out.select(partition_col, "path", "commit", "content_sha256").distinct()
-    bad = (
-        got.join(src, [partition_col, "path", "commit", "content_sha256"], "left_anti")
-        .groupBy(partition_col)
-        .agg(F.count(F.lit(1)).alias("_bad"))
-    )
+    key = ["repo", "path", "commit", "content_sha256"]
+    src = rows_in.select(*key).distinct()
+    got = rows_out.select(*key).distinct()
+    bad = got.join(src, key, "left_anti").groupBy("repo").agg(F.count(F.lit(1)).alias("_bad"))
     return (
-        src.select(partition_col)
+        src.select("repo")
         .distinct()
-        .join(bad, partition_col, "left")
+        .join(bad, "repo", "left")
         .select(
-            partition_col,
+            "repo",
             (F.coalesce(F.col("_bad"), F.lit(0)) == 0).alias("content_sha_ok"),
         )
     )

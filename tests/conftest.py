@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -7,9 +9,21 @@ from kgforge import synth
 from kgforge.session import build_session
 
 
+def _driver_memory() -> str:
+    """Half the host's physical memory, capped at the library's 32g
+    default, so the test JVM's heap cannot outgrow a small host."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+    return f"{min(half_mb, 32 * 1024)}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session("kgforge-tests", master="local[4]", shuffle_partitions=8)
+    s = build_session(
+        "kgforge-tests",
+        master="local[4]",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": _driver_memory()},
+    )
     yield s
     s.stop()
 
@@ -36,6 +50,4 @@ def small_files(spark, small_files_pdf):
 
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
-    import os
-
     return os.environ.get("KGFORGE_TEST_SF_DIR", "/root/testdata/sf0.001")

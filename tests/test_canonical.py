@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from kgforge.stages.canonical import canonicalize, connected_components
+from kgforge.stages.canonical import connected_components
 
 
 import pytest
@@ -56,15 +56,6 @@ def test_long_chain_needs_iterations(spark, local_threshold):
     nodes = [f"n{i:02d}" for i in range(12)]
     got = _cc(spark, list(zip(nodes, nodes[1:])), local_threshold)
     assert set(got.values()) == {"n00"} and len(got) == 11
-
-
-def test_canonicalize_identity_for_unmapped(spark):
-    mapping = _links(spark, []).sparkSession.createDataFrame(
-        [("b", "a")], "entity_id string, canonical_id string"
-    )
-    df = spark.createDataFrame([("b",), ("q",)], "obj string")
-    got = {r["obj"] for r in canonicalize(df, mapping, "obj").collect()}
-    assert got == {"a", "q"}
 
 
 def test_deterministic_across_partitioning(spark):

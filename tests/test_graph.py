@@ -177,10 +177,10 @@ def _random_sym_graph(spark, n_nodes=400, n_edges=2500, seed=13):
 
 def test_partitioned_variants_match_broadcast_plans(spark, monkeypatch):
     """The scale variants (shuffle-hash joins instead of per-round
-    broadcast builds — pagerank and bfs partitioned mode) must be
-    output-identical to the broadcast plans; only the physical exchange
-    strategy differs.  These are the plans the 1M-node scaling bench
-    (bench/graph_scaling.py) runs."""
+    broadcast builds — pagerank past PR_PARTITION_EDGES and bfs
+    partitioned mode) must be output-identical to the broadcast plans;
+    only the physical exchange strategy differs.  These are the plans the
+    1M-node scaling bench (bench/graph_scaling.py) runs."""
     from pyspark.sql import functions as F
 
     from kgforge.operators.graph import bfs_levels_frontier, pagerank
@@ -188,7 +188,8 @@ def test_partitioned_variants_match_broadcast_plans(spark, monkeypatch):
     monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)  # plan under test, not the local finisher
     sym = _random_sym_graph(spark)
     a = {r.node: round(r.r, 6) for r in pagerank(sym).collect()}
-    b = {r.node: round(r.r, 6) for r in pagerank(sym, partitioned=True).collect()}
+    monkeypatch.setattr(graph, "PR_PARTITION_EDGES", 0)
+    b = {r.node: round(r.r, 6) for r in pagerank(sym).collect()}
     assert a == b
     seeds = sym.select(F.col("src").alias("node")).distinct().orderBy("node").limit(10)
     xa = {(r.node, r.dist) for r in bfs_levels_frontier(sym, seeds, 3).collect()}
@@ -261,7 +262,7 @@ def test_pinned_checkpoint_with_probe_is_exchange_free(spark):
 
 
 def test_pagerank_partitioned_has_no_per_round_rank_broadcast(spark, monkeypatch):
-    """The partitioned plan's point: the rank vector moves through
+    """The co-partitioned plan's point: the rank vector moves through
     shuffle-hash exchanges, never a per-round broadcast build.  The only
     BroadcastExchange allowed across ALL rounds is the one-time degree
     join inside the cached w build.  Every round ends in a checkpoint, so
@@ -271,6 +272,7 @@ def test_pagerank_partitioned_has_no_per_round_rank_broadcast(spark, monkeypatch
     from kgforge import iterate
 
     monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)  # plan under test, not the local finisher
+    monkeypatch.setattr(graph, "PR_PARTITION_EDGES", 0)
     plans, real = [], iterate.checkpoint
 
     def spy(df, *probes, pin=False):
@@ -280,11 +282,38 @@ def test_pagerank_partitioned_has_no_per_round_rank_broadcast(spark, monkeypatch
 
     monkeypatch.setattr(iterate, "checkpoint", spy)
     sym = _random_sym_graph(spark, seed=14)
-    pagerank(sym, partitioned=True)
+    pagerank(sym)
     assert len(plans) == graph.PR_ITERS
     for plan in plans:
         assert "ShuffledHashJoin" in plan
     assert sum(p.count("BroadcastExchange") for p in plans) <= 1
+
+
+def test_pagerank_plan_follows_edge_count(spark, monkeypatch):
+    """The distributed body co-partitions (a pinned checkpoint every round)
+    exactly when the edge count passes PR_PARTITION_EDGES, whether the
+    probe's rows or a count past the probe cap gave that count."""
+    from kgforge import iterate
+
+    monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)  # plan under test, not the local finisher
+    pins, real = [], iterate.checkpoint
+
+    def spy(df, *probes, pin=False):
+        pins.append(pin)
+        return real(df, *probes, pin=pin)
+
+    monkeypatch.setattr(iterate, "checkpoint", spy)
+    sym = _random_sym_graph(spark)
+    n_edges = sym.count()
+    got = []
+    for probe_cap in (graph.PR_PROBE_EDGES, 100):
+        monkeypatch.setattr(graph, "PR_PROBE_EDGES", probe_cap)
+        for bound in (n_edges, n_edges - 1):
+            monkeypatch.setattr(graph, "PR_PARTITION_EDGES", bound)
+            pins.clear()
+            pagerank(sym)
+            got.append(set(pins))
+    assert got == [{False}, {True}, {False}, {True}]
 
 
 # ------------------------------------------- local finisher vs distributed

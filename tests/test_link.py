@@ -31,7 +31,7 @@ def _pairs(df):
     return {(r["a"], r["b"]) for r in df.select("a", "b").collect()}
 
 
-def _both_paths(embedded, monkeypatch, **kw):
+def _both_paths(embedded, monkeypatch):
     """(rows, valve metrics) of the driver finisher, then of the
     distributed body (the finisher declining), on the same input.  Fails
     if the finisher did not finish the first run."""
@@ -45,7 +45,7 @@ def _both_paths(embedded, monkeypatch, **kw):
     got = []
     for finisher in (spy, lambda *args: None):
         monkeypatch.setattr(link, "_local_links", finisher)
-        rows = sorted(tuple(r) for r in link.candidate_links(embedded, **kw).collect())
+        rows = sorted(tuple(r) for r in link.candidate_links(embedded).collect())
         got.append((rows, valvemetrics.LAST["link_candidate_bucket"]))
     assert finished == [True]
     return got
@@ -55,13 +55,13 @@ def _both_paths(embedded, monkeypatch, **kw):
 def test_local_finisher_matches_distributed_body(embedded, monkeypatch, max_bucket):
     """Same rows, scores and buckets bit for bit, and the same valve
     metrics; at max_bucket 1 every shared bucket is dropped, at 3 most are."""
-    (local_rows, local_valve), (dist_rows, dist_valve) = _both_paths(
-        embedded, monkeypatch, max_bucket=max_bucket
-    )
+    default = constants.LINK_MAX_BUCKET
+    monkeypatch.setattr(constants, "LINK_MAX_BUCKET", max_bucket)
+    (local_rows, local_valve), (dist_rows, dist_valve) = _both_paths(embedded, monkeypatch)
     assert local_rows == dist_rows
     assert local_valve == dist_valve
     assert local_valve["total_rows"] == embedded.count() * constants.LSH_BANDS
-    if max_bucket == constants.LINK_MAX_BUCKET:
+    if max_bucket == default:
         assert local_rows and local_valve["dropped_rows"] == 0
     else:
         assert local_valve["dropped_keys"] > 0
@@ -93,9 +93,8 @@ def test_local_finisher_orders_non_ascii_ids(spark, monkeypatch):
         ],
         "entity_id string, name string, kind string, embedding array<float>, sigs array<int>",
     )
-    (local_rows, local_valve), (dist_rows, dist_valve) = _both_paths(
-        df, monkeypatch, threshold=-1.0
-    )
+    monkeypatch.setattr(constants, "LINK_THRESHOLD", -1.0)
+    (local_rows, local_valve), (dist_rows, dist_valve) = _both_paths(df, monkeypatch)
     assert local_rows == dist_rows
     assert local_valve == dist_valve
     assert ("function:\uff46_parse", "function:\U0001d523_parse") in {r[:2] for r in local_rows}
@@ -114,7 +113,8 @@ def test_local_finisher_sums_cosine_in_jvm_order(spark, monkeypatch):
         ],
         "entity_id string, name string, kind string, embedding array<float>, sigs array<int>",
     )
-    (local_rows, _), (dist_rows, _) = _both_paths(df, monkeypatch, threshold=-1e300)
+    monkeypatch.setattr(constants, "LINK_THRESHOLD", -1e300)
+    (local_rows, _), (dist_rows, _) = _both_paths(df, monkeypatch)
     assert len(local_rows) == 40 * 39 // 2
     assert local_rows == dist_rows
 
@@ -147,9 +147,10 @@ def test_embeddings_are_normalized(embedded):
         assert abs(float(np.linalg.norm(np.array(v))) - 1.0) < 1e-3
 
 
-def test_oversized_bucket_valve(embedded):
-    # with max_bucket=1 every bucket is dropped -> no candidates
-    got = link.candidate_links(embedded, max_bucket=1)
+def test_oversized_bucket_valve(embedded, monkeypatch):
+    # with a bucket cap of 1 every bucket is dropped -> no candidates
+    monkeypatch.setattr(constants, "LINK_MAX_BUCKET", 1)
+    got = link.candidate_links(embedded)
     assert got.count() == 0
 
 

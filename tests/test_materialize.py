@@ -52,16 +52,15 @@ def test_collision_dedup_in_packed_path(spark, collision_packed):
     assert len(sames) == 2 and all(r[3] is None for r in sames)
 
 
-def test_fallback_join_plan_is_equivalent(spark, collision_packed):
+def test_fallback_join_plan_is_equivalent(spark, collision_packed, monkeypatch):
     mapping = _mapping(
         spark,
         [("function:load_v1", "function:load"), ("function:load_v2", "function:load")],
     )
     fast = _rows(materialize.triples_from_packed(collision_packed, mapping))
-    # map_literal_max=0 forces the broadcast-join fallback
-    slow = _rows(
-        materialize.triples_from_packed(collision_packed, mapping, map_literal_max=0)
-    )
+    # MAP_LITERAL_MAX = 0 forces the broadcast-join fallback
+    monkeypatch.setattr(materialize, "MAP_LITERAL_MAX", 0)
+    slow = _rows(materialize.triples_from_packed(collision_packed, mapping))
     assert fast == slow
 
 

@@ -5,6 +5,7 @@ the cluster surface needs and run the pure-Python mention lexer."""
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -46,3 +47,62 @@ def test_pyfiles_zip_is_self_contained(tmp_path):
     )
     assert res.returncode == 0, res.stderr
     assert "ZIPOK" in res.stdout
+
+
+# The only environment variables library code may read: deployment
+# settings of the session and the catalog.  A tuning knob belongs in a
+# module constant (tests monkeypatch it) or a parameter a caller sets.
+DEPLOYMENT_ENV = {"SPARK_GRAFT_CPUS", "KGFORGE_DRIVER_MEM", "KGFORGE_LOCAL_DIR", "KGFORGE_TABLE_FORMAT"}
+
+
+def _env_reads(tree) -> list[tuple[int, str | None]]:
+    """(line, variable) of every ``os.environ`` / ``os.getenv`` use in
+    ``tree``; the variable is None when it is not a string literal."""
+
+    def is_os(node, attr):
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == attr
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        )
+
+    def literal(node):
+        return node.value if isinstance(node, ast.Constant) and isinstance(node.value, str) else None
+
+    parents = {child: node for node in ast.walk(tree) for child in ast.iter_child_nodes(node)}
+    reads = []
+    for node in ast.walk(tree):
+        if is_os(node, "getenv"):
+            call = parents.get(node)
+            arg = call.args[0] if isinstance(call, ast.Call) and call.args else None
+            reads.append((node.lineno, literal(arg)))
+        elif is_os(node, "environ"):
+            up = parents.get(node)
+            if isinstance(up, ast.Subscript):  # os.environ["X"]
+                key = up.slice
+            elif isinstance(up, ast.Compare):  # "X" in os.environ
+                key = up.left
+            elif isinstance(up, ast.Attribute) and isinstance(parents.get(up), ast.Call):
+                call = parents[up]  # os.environ.get("X", ...)
+                key = call.args[0] if call.args else None
+            else:
+                key = None
+            reads.append((node.lineno, literal(key)))
+    return reads
+
+
+def test_library_reads_only_deployment_env():
+    """No module under kgforge/ reads an env var other than the
+    deployment settings: a knob only a bench sets is not library API."""
+    root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "kgforge")
+    bad = []
+    for dirpath, _, files in os.walk(root):
+        for name in sorted(files):
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path, encoding="utf-8") as f:
+                    tree = ast.parse(f.read(), path)
+                rel = os.path.relpath(path, os.path.dirname(root))
+                bad += [f"{rel}:{ln} {var}" for ln, var in _env_reads(tree) if var not in DEPLOYMENT_ENV]
+    assert not bad, f"env reads outside the deployment settings: {bad}"
