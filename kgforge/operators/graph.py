@@ -28,8 +28,9 @@ count also picks its plan: up to ``PR_PARTITION_EDGES`` the rank vector
 broadcasts into the edge join, past it the edge list and node set are
 hash-partitioned once on their join keys and each round shuffles only
 the V-row rank and contribution tables.  Every round's rank vector goes
-through ``iterate.checkpoint``, truncating lineage so iteration count never grows the plan — required on a
-million-entity graph, measured at 1M-file scale in bench/scaling.py.
+through ``iterate.checkpoint``, truncating lineage so iteration count
+never grows the plan — required on a million-entity graph, measured at
+1M-file scale in bench/scaling.py.
 Intermediates are cached through cachectl so a long-lived session can
 release them after the plan is forced.  No UDF on either path.
 """
@@ -60,11 +61,12 @@ PR_LOCAL_EDGES = 1_000_000
 # mapping probe at the same size); larger graphs are counted instead
 PR_PROBE_EDGES = 100_000
 # Past this many edges pagerank's distributed body runs the co-partitioned
-# plan; up to it the rank vector broadcasts into the edge join.  Bracketed,
-# not pinned, by measurement (BASELINE.md "PageRank's distributed plan by
-# edge count"): broadcasting was faster at 13.3M edges, co-partitioning at
-# 43.6M; the bound sits near their geometric mean.
-PR_PARTITION_EDGES = 24_000_000
+# plan; up to it the rank vector broadcasts into the edge join.  Paired
+# runs (BASELINE.md "PageRank's distributed plan by edge count"): broadcast
+# faster at 13.3M edges; at 26.5M co-partitioning tied at local[2] and was
+# faster at local[4], so the bound is the smallest size measured where the
+# co-partitioned plan is no slower.
+PR_PARTITION_EDGES = 26_500_000
 
 _SQL_EDGES = f"""
 sym as (

@@ -10,8 +10,11 @@ from kgforge.session import build_session
 
 
 def _driver_memory() -> str:
-    """Half the host's physical memory, capped at the library's 32g
-    default, so the test JVM's heap cannot outgrow a small host."""
+    """``KGFORGE_DRIVER_MEM`` when set, else half the host's physical
+    memory capped at the library's 32g default, so the test JVM's heap
+    cannot outgrow a small host."""
+    if os.environ.get("KGFORGE_DRIVER_MEM"):
+        return os.environ["KGFORGE_DRIVER_MEM"]
     half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
     return f"{min(half_mb, 32 * 1024)}m"
 
