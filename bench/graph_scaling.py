@@ -32,6 +32,8 @@ import sys
 import tempfile
 import time
 
+import pyarrow.dataset
+
 import paired
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -207,6 +209,9 @@ def main() -> None:
 
     tmp_root = paired.tmpfs_root()
     edges_dir = args.edges_dir or materialize_edges(args.files, tmp_root)
+    # the graph run is the edge set read, whichever run built it
+    n_edges = pyarrow.dataset.dataset(edges_dir, format="parquet").count_rows()
+    source = f"full pipeline output at {args.files} files" if args.edges_dir is None else "reused edge set"
 
     lo, hi = (int(c) for c in args.cores.split(","))
 
@@ -227,7 +232,8 @@ def main() -> None:
         extra=stage_effs,
     )
     paired.write(args.out, {
-        "files": args.files,
+        **({"files": args.files} if args.edges_dir is None else {}),
+        "edges": n_edges,
         "cores": [lo, hi],
         "kernels": kernels,
         "kernel_params": {
@@ -237,8 +243,8 @@ def main() -> None:
         },
         "method": (
             f"{args.repeats} PAIRED fresh-JVM invocations per level over one "
-            "pre-materialized entity-graph edge parquet (full pipeline output "
-            f"at {args.files} files); per-kernel min-of-2 full runs in the "
+            f"pre-materialized entity-graph edge parquet ({source}, {n_edges} "
+            "edges); per-kernel min-of-2 full runs in the "
             "live JVM (run 1 pays the serial per-round codegen JIT, run 2 "
             "is the engine — artifacts predating BENCH_SCALING_GRAPH_WARM "
             "used a limit()-slice warm-up instead); "

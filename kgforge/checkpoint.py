@@ -4,15 +4,21 @@ per stage").
 Spark analog of the reference's embedding cache memoization
 (/root/reference/search/bert_search.py:41-47,149-157: try-load, else compute
 and save).  Each stage's output is a table under the run root; ``get_or_run``
-reads it if complete, else computes, writes, and re-reads (so downstream
-always consumes the materialized table — this is also what truncates lineage
-between stages and makes each stage an independent job).  The re-read after
-a fresh write passes the schema the stage just wrote, so it launches no
-parquet-footer job; only a resumed table has its schema inferred, which the
-schema guard needs.
+reads it if complete, else computes and writes it.  Downstream consumes a
+distributed stage's materialized table: the re-read after the write
+truncates lineage between stages and makes each stage an independent job,
+and it passes the schema the stage just wrote, so it launches no
+parquet-footer job.  A stage whose frame was built on the driver (a
+``LocalRelation``: the link and canonical finishers, the metrics rows) is
+written as one file and handed forward as that frame, so the next stage's
+probe of it plans over the relation and launches no job.  Only a resumed
+table has its schema inferred, which the schema guard needs.
 
-A ``manifest.json`` under the run root records completed stages for
-observability; completeness itself is judged by the table's _SUCCESS marker
+The write carries an ``Observation`` of the stage's row totals, so they
+cost no job of their own; ``totals`` serves them to the metrics table.
+
+A ``manifest.json`` under the run root records completed stages with
+their totals; completeness itself is judged by the table's _SUCCESS marker
 (atomic with the write), so a killed run resumes correctly.
 """
 
@@ -22,7 +28,8 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from . import catalog
 
@@ -32,6 +39,11 @@ class CheckpointManager:
         self.spark = spark
         self.root = root.rstrip("/")
         os.makedirs(self.root, exist_ok=True) if "://" not in self.root else None
+        #: stage -> milliseconds its ``get_or_run`` took in this run
+        self.walls: dict[str, int] = {}
+        # stage -> its totals, or for a resumed stage without stored
+        # totals the (not yet run) aggregate that counts them
+        self._totals: dict[str, dict[str, int] | DataFrame] = {}
 
     def location(self, stage: str) -> str:
         if catalog.table_format() == "iceberg":
@@ -48,6 +60,7 @@ class CheckpointManager:
         partition_by: list[str] | None = None,
         force: bool = False,
         schema=None,
+        observe=(),
     ) -> DataFrame:
         """Return the stage table, computing it via ``fn() -> DataFrame`` only
         if absent (or ``force``).
@@ -57,25 +70,58 @@ class CheckpointManager:
         longer match is recomputed instead of silently resumed (ADVICE.md:
         round 1 added the packed 'firsts' array and replaced the triples
         'evidence' string with an int 'line'; resuming an old run_root
-        either crashed downstream or silently served the old schema)."""
+        either crashed downstream or silently served the old schema).
+
+        ``observe``: named integer aggregates over the stage table that
+        ``totals`` reports next to its row count ``rows``."""
+        t0 = time.time()
         loc = self.location(stage)
+        aggs = [F.count(F.lit(1)).alias("rows"), *observe]
         if not force and self.exists(stage):
             df = catalog.read_table(self.spark, loc)
             if schema is None or self._schema_ok(df, schema):
+                stored = self.manifest().get(stage, {}).get("totals")
+                self._totals[stage] = stored or df.agg(*aggs)
+                self.walls[stage] = int((time.time() - t0) * 1000)
                 return df
-        t0 = time.time()
+        # a kill between the write and its manifest entry must not leave
+        # the previous table's totals describing this one
+        self._record(stage, None)
         persisted = self.spark.sparkContext._jsc.getPersistentRDDs
-        before = set(persisted().keySet())
+        # keySet().toArray(): iterating the JavaSet itself costs ~76 py4j
+        # round trips even when empty (py4j reflects on the exception
+        # that ends the iteration)
+        before = set(persisted().keySet().toArray())
         df = fn()
-        catalog.write_table(df, loc, partition_by=partition_by)
+        local = df.isLocal()
+        obs = Observation()
+        observed = df.observe(obs, *aggs)
+        # a driver-built frame is written as one file, so a later read of
+        # the table (a resume) is one split; this run hands the frame on
+        catalog.write_table(observed.coalesce(1) if local else observed, loc, partition_by=partition_by)
         # the stage's own checkpoints and caches (valve hot keys, canonical
         # edge and round checkpoints) are dead once the table is written:
         # downstream reads the table, not the stage's plan
         now = persisted()
-        for rdd_id in set(now.keySet()) - before:
+        for rdd_id in set(now.keySet().toArray()) - before:
             now.get(rdd_id).unpersist(False)
-        self._record(stage, time.time() - t0)
+        totals = {k: int(v or 0) for k, v in obs.get.items()}
+        self._totals[stage] = totals
+        secs = time.time() - t0
+        self._record(stage, {"completed_at": time.time(), "secs": round(secs, 3), "totals": totals})
+        self.walls[stage] = int(secs * 1000)
+        if local:
+            return df
         return catalog.read_table(self.spark, loc, schema=df.schema)
+
+    def totals(self, stage: str) -> dict[str, int]:
+        """Row totals of a stage this run passed through: observed on its
+        write, stored in its manifest entry when it was resumed, and
+        otherwise (an older root, an object-store root) counted once."""
+        got = self._totals[stage]
+        if isinstance(got, DataFrame):
+            got = self._totals[stage] = {k: int(v or 0) for k, v in got.first().asDict().items()}
+        return got
 
     @staticmethod
     def _schema_ok(df: DataFrame, schema) -> bool:
@@ -90,11 +136,15 @@ class CheckpointManager:
     def _manifest_path(self) -> str:
         return f"{self.root}/manifest.json"
 
-    def _record(self, stage: str, secs: float) -> None:
+    def _record(self, stage: str, entry: dict | None) -> None:
+        """Set the stage's manifest entry, or drop it (``entry`` None)."""
         if "://" in self.root:
             return  # object-store manifest writing is a cluster concern
         m = self.manifest()
-        m[stage] = {"completed_at": time.time(), "secs": round(secs, 3)}
+        if entry is not None:
+            m[stage] = entry
+        elif m.pop(stage, None) is None:
+            return
         with open(self._manifest_path(), "w") as f:
             json.dump(m, f, indent=2)
 

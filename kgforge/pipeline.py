@@ -16,11 +16,27 @@ from __future__ import annotations
 import argparse
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from . import catalog, schemas, synth, valvemetrics
+from . import catalog, constants, schemas, synth, valvemetrics
 from .checkpoint import CheckpointManager
+from .session import local_frame
 from .stages import canonical, embed, link, materialize, mentions
+
+
+# stage -> ((stage, total) read as its metrics row's rows_in, its own total
+# read as rows_out); totals as ``CheckpointManager.totals`` names them.  A
+# packed mentions row is one file, so the mentions table carries both ends
+# of its stage; lexical triples exclude same_as, which no file owns.
+LINEAGE = {
+    "mentions": (("mentions", "rows"), "mentions"),
+    "entity_embeddings": (("mentions", "mentions"), "rows"),
+    "candidate_links": (("entity_embeddings", "rows"), "rows"),
+    "entities": (("candidate_links", "rows"), "rows"),
+    "triples": (("mentions", "mentions"), "lexical"),
+}
 
 
 def run_pipeline(
@@ -32,9 +48,12 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Run (or resume) all stages; returns the stage tables.
 
-    ``audit=True`` additionally re-hashes the source content and folds the
-    per-partition content_sha256 invariant verdicts into the metrics table
-    (an extra full input pass — on by default in tests, opt-in in prod).
+    The metrics table holds one row per stage (``partition_key`` '*'),
+    from the totals each stage's write observed, plus the valve rows.
+    ``audit=True`` writes per-repo lineage rows for the mentions and
+    triples stages instead, re-hashing the source content to fold the
+    per-partition content_sha256 invariant verdicts into them (an extra
+    full input pass — on by default in tests, opt-in in prod).
     """
     ck = CheckpointManager(spark, run_root)
     out: dict[str, DataFrame] = {}
@@ -49,16 +68,15 @@ def run_pipeline(
     files_hashed = mentions.with_content_sha(files)
     out["files"] = files_hashed
 
-    t1 = time.time()
     men_packed = ck.get_or_run(
         "mentions",
         lambda: mentions.extract_mentions_packed(files_hashed),
         force=force,
         schema=mentions.MENTIONS_PACKED,
+        observe=[F.sum("n_mentions").alias("mentions")],
     )
     men = mentions.explode_mentions(men_packed)
     out["mentions"] = men
-    mentions_ms = int((time.time() - t1) * 1000)
 
     emb = ck.get_or_run(
         "entity_embeddings",
@@ -84,34 +102,38 @@ def run_pipeline(
     )
     out["entities"] = ents
 
-    t5 = time.time()
     tri = ck.get_or_run(
         "triples",
         lambda: materialize.triples_from_packed(men_packed, ents),
         partition_by=["pred"],
         force=force,
         schema=schemas.TRIPLES,
+        observe=[F.count_if(F.col("pred") != constants.PRED_SAME_AS).alias("lexical")],
     )
     out["triples"] = tri
-    triples_ms = int((time.time() - t5) * 1000)
 
     def _metrics():
-        df = materialize.lineage_metrics(
-            files,
-            men_packed,
-            tri,
-            mentions_ms,
-            triples_ms,
-            sha_ok=materialize.sha_audit(files_hashed, men) if audit else None,
-        )
         # fold in the valve drops observed while this run's stages built
         # (e.g. link's oversized-bucket cap) — the cluster audit trail
         # for "no silent caps" lives in the written table, not in logs
         fired = {k: v for k, v in valvemetrics.LAST.items() if valves_before.get(k) is not v}
-        valve_rows = valvemetrics.metrics_rows(spark, fired)
-        if valve_rows is not None:
-            df = df.unionByName(valve_rows)
-        return df
+        if audit:
+            df = materialize.lineage_metrics(
+                files,
+                men_packed,
+                tri,
+                ck.walls["mentions"],
+                ck.walls["triples"],
+                sha_ok=materialize.sha_audit(files_hashed, men),
+            )
+            valve_rows = valvemetrics.metrics_rows(spark, fired)
+            return df if valve_rows is None else df.unionByName(valve_rows)
+        rows = [
+            (stage, "*", ck.totals(src)[rows_in], ck.totals(stage)[rows_out], True, ck.walls[stage])
+            for stage, ((src, rows_in), rows_out) in LINEAGE.items()
+        ]
+        rows += valvemetrics.rows(fired)
+        return local_frame(spark, pd.DataFrame(rows, columns=schemas.METRICS.fieldNames()), schemas.METRICS)
 
     out["metrics"] = ck.get_or_run("metrics", _metrics, force=force, schema=schemas.METRICS)
     out["wall_secs"] = time.time() - t0  # type: ignore[assignment]

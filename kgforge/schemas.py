@@ -105,8 +105,11 @@ TRIPLES = StructType(
     ]
 )
 
-# Per-partition lineage/metrics rows (north_rule: per-partition lineage +
-# metrics; FIXTURES.md §4).
+# Lineage/metrics rows (north_rule: per-partition lineage + metrics;
+# FIXTURES.md §4).  By default one row per stage (partition_key '*', the
+# row totals observed on the stage's write); under ``audit`` per-repo rows
+# for the mentions and triples stages, with content_sha256 verdicts.
+# Valve rows ('valve:<name>') ride along in both.
 METRICS = StructType(
     [
         StructField("stage", StringType(), False),

@@ -81,8 +81,10 @@ def _local_components(spark, rows) -> DataFrame:
 
     The adaptive fast path: when the candidate-link graph fits comfortably
     on the driver, log(n) distributed rounds are pure overhead — one
-    collect + one createDataFrame beats ~10 shuffle stages.  Output is
-    identical to the iterative path (tests assert equivalence)."""
+    collect + one driver-built frame beats ~10 shuffle stages.  Output is
+    identical to the iterative path (tests assert equivalence).  The
+    checkpoint writes the frame as one file and hands it forward, so
+    materialize's mapping probe of it runs no job."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -98,9 +100,7 @@ def _local_components(spark, rows) -> DataFrame:
             parent[hi] = lo
     out = [(x, find(x)) for x in parent if find(x) != x]
     pdf = pd.DataFrame(out, columns=["entity_id", "canonical_id"])
-    # one partition: the stage table is then one file, and materialize's
-    # capped mapping probe reads one split
-    return local_frame(spark, pdf, "entity_id string, canonical_id string").coalesce(1)
+    return local_frame(spark, pdf, "entity_id string, canonical_id string")
 
 
 # rows the first path probe of connected_components collects
@@ -126,10 +126,11 @@ def connected_components(links: DataFrame, local_threshold: int = 1_000_000) -> 
     # mapping probe: ONE limit(cap+1).collect() of the RAW links settles a
     # graph of at most LOCAL_PROBE_ROWS edges and IS the union-find's input
     # (union-find ignores duplicate edges and self-loops, so the probe
-    # skips _dedup's shuffle).  Past the cap the deduped edges are
-    # checkpointed once, observing the size and the first fingerprint, so
-    # the union-find collect and the first distributed round share one
-    # pass over the _dedup plan.
+    # skips _dedup's shuffle); over the driver-built links the link
+    # finisher hands forward it runs no job.  Past the cap the deduped
+    # edges are checkpointed once, observing the size and the first
+    # fingerprint, so the union-find collect and the first distributed
+    # round share one pass over the _dedup plan.
     spark = links.sparkSession
     if local_threshold > 0:
         cap = min(local_threshold, LOCAL_PROBE_ROWS)

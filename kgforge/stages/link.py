@@ -151,7 +151,9 @@ def candidate_links(embedded: DataFrame) -> DataFrame:
 def _local_links(spark, rows, threshold: float, max_bucket: int) -> DataFrame | None:
     """The distributed body of ``candidate_links`` over collected probe
     rows, in numpy.  Returns None, recording nothing, when the surviving
-    buckets self-join to more than ``LOCAL_LINK_PAIRS`` rows."""
+    buckets self-join to more than ``LOCAL_LINK_PAIRS`` rows.  The links
+    are a driver-built frame: the checkpoint writes it as one file and
+    hands it forward, so canonical's probe of it runs no job."""
     ent = np.repeat(np.arange(len(rows)), [len(r["buckets"]) for r in rows])
     keys = np.fromiter((k for r in rows for k in r["buckets"]), np.int64, len(ent))
     # valve: group sizes over every (entity, band) row, drop groups over the cap
@@ -202,9 +204,7 @@ def _local_links(spark, rows, threshold: float, max_bucket: int) -> DataFrame | 
         score=("score", "max"), bucket=("bucket", "min")
     )
     links["a"], links["b"] = ids[links["a"].to_numpy()], ids[links["b"].to_numpy()]
-    # one partition: the stage table is then one file, and the next
-    # stage's capped probe reads one split
-    return local_frame(spark, links, _LINKS_DDL).coalesce(1)
+    return local_frame(spark, links, _LINKS_DDL)
 
 
 def exact_links(embedded: DataFrame, threshold: float = constants.LINK_THRESHOLD) -> DataFrame:

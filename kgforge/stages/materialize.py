@@ -1,5 +1,5 @@
 """Stage 5 — graph materialization: mentions + canonical map -> triples,
-plus per-partition lineage/metrics rows.
+plus the per-repo lineage rows of an audited run.
 
 Output is the canonical (subj, pred, obj, line, score) edge table — the
 analog of the reference's ranked-links CSV
@@ -118,7 +118,9 @@ def triples_from_packed(packed: DataFrame, mapping: DataFrame | None) -> DataFra
         # ONE probe serves both paths: probe up to the fallback's own limit
         # so the join plan can reuse these rows instead of re-collecting the
         # mapping (two driver jobs over a possibly non-checkpointed mapping
-        # otherwise, for dictionaries between the two thresholds).
+        # otherwise, for dictionaries between the two thresholds).  Over
+        # the driver-built mapping the pipeline hands forward the probe
+        # runs no job; over a stage table it is one.
         probe = mapping.limit(MAP_PROBE_ROWS + 1).collect()
         if len(probe) > MAP_LITERAL_MAX:
             return triples_from_mentions(
@@ -183,14 +185,7 @@ def triples_from_packed(packed: DataFrame, mapping: DataFrame | None) -> DataFra
     if mapping is None:
         return lexical
 
-    same_as = mapping.select(
-        F.col("entity_id").alias("subj"),
-        F.lit(constants.PRED_SAME_AS).alias("pred"),
-        F.col("canonical_id").alias("obj"),
-        F.lit(None).cast("int").alias("line"),
-        F.lit(1.0).alias("score"),
-    )
-    return lexical.unionByName(same_as)
+    return lexical.unionByName(_same_as(mapping))
 
 
 def triples_from_mentions(
@@ -304,6 +299,16 @@ def canonicalize_lexical(
         "subj", "pred", "obj", "line", "score"
     )
 
+    # Both sides are already unique per (subj, pred, obj): lexical via the
+    # per-file is_first filter, same_as via one-mapping-row-per-entity.
+    return lexical.unionByName(_same_as(mapping))
+
+
+def _same_as(mapping: DataFrame) -> DataFrame:
+    """The mapping's same_as triples.  A driver-built mapping (the one
+    canonical's union-find hands forward) stays one partition, as the
+    one-file table it was written to reads, so the triples table keeps
+    its file count."""
     same_as = mapping.select(
         F.col("entity_id").alias("subj"),
         F.lit(constants.PRED_SAME_AS).alias("pred"),
@@ -311,10 +316,7 @@ def canonicalize_lexical(
         F.lit(None).cast("int").alias("line"),
         F.lit(1.0).alias("score"),
     )
-
-    # Both sides are already unique per (subj, pred, obj): lexical via the
-    # per-file is_first filter, same_as via one-mapping-row-per-entity.
-    return lexical.unionByName(same_as)
+    return same_as.coalesce(1) if mapping.isLocal() else same_as
 
 
 def with_evidence(triples: DataFrame) -> DataFrame:
@@ -356,16 +358,17 @@ def lineage_metrics(
     triples: DataFrame,
     mentions_ms: int,
     triples_ms: int,
-    sha_ok: DataFrame | None = None,
+    sha_ok: DataFrame,
 ) -> DataFrame:
     """Per-repo lineage rows (north_rule) for the mentions stage (files in,
     mentions out) and the triples stage (mentions in, lexical triples out),
     from ONE groupBy(repo) over a union of the three tables' row weights:
     a file counts 1, a packed mention row its ``n_mentions`` (so the count
     never pays the 60x explode), a lexical triple 1.  same_as triples have
-    entity subjects, not files, so no repo owns them.  Pass ``sha_ok``
-    (from ``sha_audit``) to fold invariant verdicts into the mentions
-    rows."""
+    entity subjects, not files, so no repo owns them.  ``sha_ok`` (from
+    ``sha_audit``) folds the invariant verdicts into the mentions rows.
+    The pipeline writes these rows only under ``audit``; by default its
+    metrics table holds one row per stage."""
     zero, one = F.lit(0).cast("long"), F.lit(1).cast("long")
     cols = ["repo", "f", "m", "t"]  # weight columns: files, mentions, triples
     lexical = triples.where(F.col("pred") != constants.PRED_SAME_AS)
@@ -376,10 +379,8 @@ def lineage_metrics(
         .groupBy("repo")
         .agg(*[F.sum(c).alias(c) for c in "fmt"])
     )
-    sha = F.lit(True)
-    if sha_ok is not None:
-        per_repo = per_repo.join(sha_ok, "repo", "left")
-        sha = F.coalesce("content_sha_ok", F.lit(True))
+    per_repo = per_repo.join(sha_ok, "repo", "left")
+    sha = F.coalesce("content_sha_ok", F.lit(True))
 
     def row(stage, rows_in, rows_out, sha_col, wall_ms):
         return F.struct(

@@ -100,7 +100,7 @@ def record(name: str, cap: int, total: int, dropped: int, dropped_keys: int) -> 
         )
 
 
-def metrics_rows(spark, valves: dict[str, dict[str, float | int]]) -> DataFrame | None:
+def rows(valves: dict[str, dict[str, float | int]]) -> list[tuple]:
     """``valves`` (entries of ``LAST``) rendered as schemas.METRICS rows,
     so a pipeline run's valve audit trail persists IN the written metrics
     table instead of dying with the process (round-4 judge ask #4: log
@@ -111,12 +111,8 @@ def metrics_rows(spark, valves: dict[str, dict[str, float | int]]) -> DataFrame 
     1 - rows_out/rows_in is derivable from the long columns alone), and
     ``partition_key`` carries the remaining detail
     (``cap=..;dropped_keys=..;dropped_fraction=..``) — a valve is
-    corpus-global, not per-partition, so the key slot is free.  Returns
-    None when ``valves`` is empty (e.g. a fully-resumed run, where the
-    previously-written table already holds the rows)."""
-    if not valves:
-        return None
-    rows = [
+    corpus-global, not per-partition, so the key slot is free."""
+    return [
         (
             f"valve:{name}",
             f"cap={m['cap']};dropped_keys={m['dropped_keys']};"
@@ -128,6 +124,14 @@ def metrics_rows(spark, valves: dict[str, dict[str, float | int]]) -> DataFrame 
         )
         for name, m in sorted(valves.items())
     ]
+
+
+def metrics_rows(spark, valves: dict[str, dict[str, float | int]]) -> DataFrame | None:
+    """``rows(valves)`` as a driver-built frame; None when ``valves`` is
+    empty (e.g. a fully-resumed run, where the previously-written table
+    already holds the rows)."""
+    if not valves:
+        return None
     from .schemas import METRICS
 
-    return local_frame(spark, pd.DataFrame(rows, columns=METRICS.fieldNames()), METRICS)
+    return local_frame(spark, pd.DataFrame(rows(valves), columns=METRICS.fieldNames()), METRICS)

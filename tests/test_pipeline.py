@@ -122,11 +122,14 @@ def test_resume_recomputes_embeddings_without_sigs(pipe, spark, small_files, tmp
 
 
 # Spark jobs a fresh run of the 300-file fixture launches (local[4], 8
-# shuffle partitions): 11.  Before the link stage's driver finisher, the
-# raw-links canonical probe and the one-file driver-built tables it was
-# 17; before the observed valve, the stored LSH signatures, the
-# one-shuffle lineage metrics and the schema-given read-backs, 27.
-FRESH_RUN_JOBS = 11
+# shuffle partitions): 8.  Before the checkpoint handed driver-built stage
+# frames forward (canonical's and materialize's probes then run no job)
+# and took the metrics rows from Observations on the stage writes it was
+# 11; before the link stage's driver finisher, the raw-links canonical
+# probe and the one-file driver-built tables, 17; before the observed
+# valve, the stored LSH signatures, the one-shuffle lineage metrics and
+# the schema-given read-backs, 27.
+FRESH_RUN_JOBS = 8
 
 
 def test_fresh_run_job_budget(spark, small_files, tmp_path):
@@ -152,3 +155,87 @@ def test_run_leaves_no_persisted_blocks(spark, small_files, tmp_path, monkeypatc
     before = rdds().size()
     run_pipeline(spark, small_files, str(tmp_path / "kgrun_blocks"))
     assert rdds().size() == before
+
+
+@pytest.fixture(scope="module")
+def plain(spark, small_files, tmp_path_factory):
+    """A run without ``audit``: per-stage metrics rows."""
+    root = str(tmp_path_factory.mktemp("kgrun_plain"))
+    return run_pipeline(spark, small_files, root), root
+
+
+def _files(path) -> list:
+    import glob
+
+    return glob.glob(f"{path}/*.parquet")
+
+
+def test_driver_built_stages_are_handed_forward(plain, spark):
+    """Link and canonical finish on the driver here: the run returns their
+    driver-built frames, which hold the written tables' rows, and those
+    tables, the metrics table and the same_as triples are one file each
+    (as when the next stage read the one-file table back)."""
+    out, root = plain
+    for stage in ("candidate_links", "entities"):
+        assert out[stage].isLocal(), stage
+        got = sorted(out[stage].collect())
+        assert got and got == sorted(spark.read.parquet(f"{root}/{stage}").collect()), stage
+        assert len(_files(f"{root}/{stage}")) == 1, stage
+    assert out["metrics"].isLocal() and len(_files(f"{root}/metrics")) == 1
+    assert len(_files(f"{root}/triples/pred=same_as")) == 1
+
+
+def _stage_rows(m: pd.DataFrame) -> pd.DataFrame:
+    """Non-valve metrics rows without their timings, in a fixed order."""
+    m = m[~m["stage"].str.startswith("valve:")].drop(columns="wall_ms")
+    return m.sort_values(["stage", "partition_key"]).reset_index(drop=True)
+
+
+def test_metrics_rows_per_stage(plain, pipe, spark):
+    """Without ``audit`` the metrics table holds one row per stage whose
+    totals are counts of the stage tables, and its mentions and triples
+    rows are the sums of the per-repo rows an ``audit`` run writes."""
+    out, root = plain
+    m = out["metrics"].toPandas()
+    assert sorted(m.loc[~m["stage"].str.startswith("valve:"), "stage"]) == sorted(
+        ["mentions", "entity_embeddings", "candidate_links", "entities", "triples"]
+    )
+    assert (m["partition_key"][~m["stage"].str.startswith("valve:")] == "*").all()
+    assert m["content_sha_ok"].all() and (m["wall_ms"] >= 0).all()
+    row = m.set_index("stage")
+    read = lambda stage: spark.read.parquet(f"{root}/{stage}")  # noqa: E731
+    packed = read("mentions").agg(F.count(F.lit(1)), F.sum("n_mentions")).first()
+    lexical = read("triples").where(F.col("pred") != "same_as").count()
+    want = {
+        "mentions": (packed[0], packed[1]),
+        "entity_embeddings": (packed[1], read("entity_embeddings").count()),
+        "candidate_links": (read("entity_embeddings").count(), read("candidate_links").count()),
+        "entities": (read("candidate_links").count(), read("entities").count()),
+        "triples": (packed[1], lexical),
+    }
+    for stage, (rows_in, rows_out) in want.items():
+        assert (row.loc[stage, "rows_in"], row.loc[stage, "rows_out"]) == (rows_in, rows_out), stage
+
+    audited = pipe[0]["metrics"].toPandas()
+    for stage in ("mentions", "triples"):
+        per_repo = audited[audited["stage"] == stage][["rows_in", "rows_out"]].sum()
+        assert (row.loc[stage, "rows_in"], row.loc[stage, "rows_out"]) == tuple(per_repo), stage
+
+
+@pytest.mark.parametrize("keep_manifest", [True, False])
+def test_metrics_rows_after_resume(plain, spark, small_files, tmp_path, keep_manifest):
+    """A run killed before its triples stage resumes the stages before it:
+    their totals come from the manifest (or, without one, are counted
+    once), and the rerun writes the fresh run's per-stage rows."""
+    import shutil
+
+    out, fresh_root = plain
+    root = tmp_path / "kgrun_killed"
+    shutil.copytree(fresh_root, root)
+    for stage in ("triples", "metrics"):
+        shutil.rmtree(root / stage)
+    if not keep_manifest:
+        (root / "manifest.json").unlink()
+    run_pipeline(spark, small_files, str(root))
+    written = spark.read.parquet(str(root / "metrics")).toPandas()
+    pd.testing.assert_frame_equal(_stage_rows(written), _stage_rows(out["metrics"].toPandas()))
