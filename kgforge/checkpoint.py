@@ -10,16 +10,19 @@ truncates lineage between stages and makes each stage an independent job,
 and it passes the schema the stage just wrote, so it launches no
 parquet-footer job.  A stage whose frame was built on the driver (a
 ``LocalRelation``: the link and canonical finishers, the metrics rows) is
-written as one file and handed forward as that frame, so the next stage's
-probe of it plans over the relation and launches no job.  Only a resumed
-table has its schema inferred, which the schema guard needs.
+written as one file and, when it holds at most ``HAND_FORWARD_ROWS`` rows,
+handed forward as that frame, so the next stage's probe of it plans over
+the relation and launches no job.  Only a resumed table has its schema
+inferred, which the schema guard needs.
 
-The write carries an ``Observation`` of the stage's row totals, so they
-cost no job of their own; ``totals`` serves them to the metrics table.
+A parquet write carries an ``Observation`` of the stage's row totals, so
+they cost no job of their own; ``totals`` serves them to the metrics
+table.  A resumed table, or one written to Iceberg, is counted once
+instead, when its totals are asked for.
 
-A ``manifest.json`` under the run root records completed stages with
-their totals; completeness itself is judged by the table's _SUCCESS marker
-(atomic with the write), so a killed run resumes correctly.
+A ``manifest.json`` under the run root records completed stages;
+completeness itself is judged by the table's _SUCCESS marker (atomic with
+the write), so a killed run resumes correctly.
 """
 
 from __future__ import annotations
@@ -34,6 +37,14 @@ from pyspark.sql import functions as F
 from . import catalog
 
 
+# Largest driver-built stage frame handed forward: the cap of canonical's
+# and materialize's probes, so the next stage settles it on the driver.  A
+# larger one is read back from its one-file table, as a distributed
+# stage's is, instead of planning the next stage's distributed body over a
+# LocalTableScan that ships its rows inside the tasks.
+HAND_FORWARD_ROWS = 100_000
+
+
 class CheckpointManager:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -41,8 +52,8 @@ class CheckpointManager:
         os.makedirs(self.root, exist_ok=True) if "://" not in self.root else None
         #: stage -> milliseconds its ``get_or_run`` took in this run
         self.walls: dict[str, int] = {}
-        # stage -> its totals, or for a resumed stage without stored
-        # totals the (not yet run) aggregate that counts them
+        # stage -> its observed totals, or the (not yet run) aggregate
+        # that counts them from its table
         self._totals: dict[str, dict[str, int] | DataFrame] = {}
 
     def location(self, stage: str) -> str:
@@ -80,13 +91,9 @@ class CheckpointManager:
         if not force and self.exists(stage):
             df = catalog.read_table(self.spark, loc)
             if schema is None or self._schema_ok(df, schema):
-                stored = self.manifest().get(stage, {}).get("totals")
-                self._totals[stage] = stored or df.agg(*aggs)
+                self._totals[stage] = df.agg(*aggs)
                 self.walls[stage] = int((time.time() - t0) * 1000)
                 return df
-        # a kill between the write and its manifest entry must not leave
-        # the previous table's totals describing this one
-        self._record(stage, None)
         persisted = self.spark.sparkContext._jsc.getPersistentRDDs
         # keySet().toArray(): iterating the JavaSet itself costs ~76 py4j
         # round trips even when empty (py4j reflects on the exception
@@ -94,30 +101,34 @@ class CheckpointManager:
         before = set(persisted().keySet().toArray())
         df = fn()
         local = df.isLocal()
-        obs = Observation()
-        observed = df.observe(obs, *aggs)
-        # a driver-built frame is written as one file, so a later read of
-        # the table (a resume) is one split; this run hands the frame on
-        catalog.write_table(observed.coalesce(1) if local else observed, loc, partition_by=partition_by)
+        # Observation.get waits without a bound for metrics that an
+        # Iceberg replace-table-as-select is not known to deliver, so an
+        # Iceberg table is counted once instead, as a resumed one is
+        obs = None if catalog.table_format() == "iceberg" else Observation()
+        written = df if obs is None else df.observe(obs, *aggs)
+        # a driver-built frame is written as one file, so a read of the
+        # table (a resume, or a read back) is one split
+        catalog.write_table(written.coalesce(1) if local else written, loc, partition_by=partition_by)
         # the stage's own checkpoints and caches (valve hot keys, canonical
         # edge and round checkpoints) are dead once the table is written:
         # downstream reads the table, not the stage's plan
         now = persisted()
         for rdd_id in set(now.keySet().toArray()) - before:
             now.get(rdd_id).unpersist(False)
-        totals = {k: int(v or 0) for k, v in obs.get.items()}
-        self._totals[stage] = totals
+        totals = None if obs is None else {k: int(v or 0) for k, v in obs.get.items()}
         secs = time.time() - t0
-        self._record(stage, {"completed_at": time.time(), "secs": round(secs, 3), "totals": totals})
+        self._record(stage, secs)
         self.walls[stage] = int(secs * 1000)
-        if local:
+        if local and totals and totals["rows"] <= HAND_FORWARD_ROWS:
+            self._totals[stage] = totals
             return df
-        return catalog.read_table(self.spark, loc, schema=df.schema)
+        table = catalog.read_table(self.spark, loc, schema=df.schema)
+        self._totals[stage] = totals or table.agg(*aggs)
+        return table
 
     def totals(self, stage: str) -> dict[str, int]:
         """Row totals of a stage this run passed through: observed on its
-        write, stored in its manifest entry when it was resumed, and
-        otherwise (an older root, an object-store root) counted once."""
+        write, or counted once from its table (resumed, or Iceberg)."""
         got = self._totals[stage]
         if isinstance(got, DataFrame):
             got = self._totals[stage] = {k: int(v or 0) for k, v in got.first().asDict().items()}
@@ -136,15 +147,11 @@ class CheckpointManager:
     def _manifest_path(self) -> str:
         return f"{self.root}/manifest.json"
 
-    def _record(self, stage: str, entry: dict | None) -> None:
-        """Set the stage's manifest entry, or drop it (``entry`` None)."""
+    def _record(self, stage: str, secs: float) -> None:
         if "://" in self.root:
             return  # object-store manifest writing is a cluster concern
         m = self.manifest()
-        if entry is not None:
-            m[stage] = entry
-        elif m.pop(stage, None) is None:
-            return
+        m[stage] = {"completed_at": time.time(), "secs": round(secs, 3)}
         with open(self._manifest_path(), "w") as f:
             json.dump(m, f, indent=2)
 

@@ -117,6 +117,11 @@ def run_pipeline(
         # (e.g. link's oversized-bucket cap) — the cluster audit trail
         # for "no silent caps" lives in the written table, not in logs
         fired = {k: v for k, v in valvemetrics.LAST.items() if valves_before.get(k) is not v}
+        valves = valvemetrics.rows(fired)
+
+        def frame(rows):
+            return local_frame(spark, pd.DataFrame(rows, columns=schemas.METRICS.fieldNames()), schemas.METRICS)
+
         if audit:
             df = materialize.lineage_metrics(
                 files,
@@ -126,14 +131,12 @@ def run_pipeline(
                 ck.walls["triples"],
                 sha_ok=materialize.sha_audit(files_hashed, men),
             )
-            valve_rows = valvemetrics.metrics_rows(spark, fired)
-            return df if valve_rows is None else df.unionByName(valve_rows)
+            return df.unionByName(frame(valves)) if valves else df
         rows = [
             (stage, "*", ck.totals(src)[rows_in], ck.totals(stage)[rows_out], True, ck.walls[stage])
             for stage, ((src, rows_in), rows_out) in LINEAGE.items()
         ]
-        rows += valvemetrics.rows(fired)
-        return local_frame(spark, pd.DataFrame(rows, columns=schemas.METRICS.fieldNames()), schemas.METRICS)
+        return frame(rows + valves)
 
     out["metrics"] = ck.get_or_run("metrics", _metrics, force=force, schema=schemas.METRICS)
     out["wall_secs"] = time.time() - t0  # type: ignore[assignment]

@@ -83,7 +83,8 @@ def _local_components(spark, rows) -> DataFrame:
     on the driver, log(n) distributed rounds are pure overhead — one
     collect + one driver-built frame beats ~10 shuffle stages.  Output is
     identical to the iterative path (tests assert equivalence).  The
-    checkpoint writes the frame as one file and hands it forward, so
+    checkpoint writes the frame as one file and, up to
+    ``checkpoint.HAND_FORWARD_ROWS`` rows, hands it forward, so
     materialize's mapping probe of it runs no job."""
     parent: dict[str, str] = {}
 

@@ -152,8 +152,9 @@ def _local_links(spark, rows, threshold: float, max_bucket: int) -> DataFrame | 
     """The distributed body of ``candidate_links`` over collected probe
     rows, in numpy.  Returns None, recording nothing, when the surviving
     buckets self-join to more than ``LOCAL_LINK_PAIRS`` rows.  The links
-    are a driver-built frame: the checkpoint writes it as one file and
-    hands it forward, so canonical's probe of it runs no job."""
+    are a driver-built frame: the checkpoint writes it as one file and,
+    up to ``checkpoint.HAND_FORWARD_ROWS`` rows, hands it forward, so
+    canonical's probe of it runs no job."""
     ent = np.repeat(np.arange(len(rows)), [len(r["buckets"]) for r in rows])
     keys = np.fromiter((k for r in rows for k in r["buckets"]), np.int64, len(ent))
     # valve: group sizes over every (entity, band) row, drop groups over the cap

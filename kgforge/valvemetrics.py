@@ -33,11 +33,8 @@ from __future__ import annotations
 import logging
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-from .session import local_frame
 
 log = logging.getLogger("kgforge.valves")
 
@@ -124,14 +121,3 @@ def rows(valves: dict[str, dict[str, float | int]]) -> list[tuple]:
         )
         for name, m in sorted(valves.items())
     ]
-
-
-def metrics_rows(spark, valves: dict[str, dict[str, float | int]]) -> DataFrame | None:
-    """``rows(valves)`` as a driver-built frame; None when ``valves`` is
-    empty (e.g. a fully-resumed run, where the previously-written table
-    already holds the rows)."""
-    if not valves:
-        return None
-    from .schemas import METRICS
-
-    return local_frame(spark, pd.DataFrame(rows(valves), columns=METRICS.fieldNames()), METRICS)

@@ -10,6 +10,8 @@ import pytest
 
 from kgforge import valvemetrics
 from kgforge.operators import graph
+from kgforge.schemas import METRICS
+from kgforge.session import local_frame
 from kgforge.stages import canonical, link, materialize
 
 
@@ -37,7 +39,9 @@ def _hot_dict(spark):
 def _valves(spark):
     valves = {"v": {"cap": 1, "total_rows": 3, "dropped_rows": 1, "dropped_keys": 1,
                     "dropped_fraction": 1 / 3}}
-    return valvemetrics.metrics_rows(spark, valves)
+    return local_frame(
+        spark, pd.DataFrame(valvemetrics.rows(valves), columns=METRICS.fieldNames()), METRICS
+    )
 
 
 @pytest.mark.parametrize("build", [_link, _components, _pagerank, _hot_dict, _valves])

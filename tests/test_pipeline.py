@@ -222,11 +222,9 @@ def test_metrics_rows_per_stage(plain, pipe, spark):
         assert (row.loc[stage, "rows_in"], row.loc[stage, "rows_out"]) == tuple(per_repo), stage
 
 
-@pytest.mark.parametrize("keep_manifest", [True, False])
-def test_metrics_rows_after_resume(plain, spark, small_files, tmp_path, keep_manifest):
-    """A run killed before its triples stage resumes the stages before it:
-    their totals come from the manifest (or, without one, are counted
-    once), and the rerun writes the fresh run's per-stage rows."""
+def test_metrics_rows_after_resume(plain, spark, small_files, tmp_path):
+    """A run killed before its triples stage resumes the stages before it,
+    counts their tables once, and writes the fresh run's per-stage rows."""
     import shutil
 
     out, fresh_root = plain
@@ -234,8 +232,24 @@ def test_metrics_rows_after_resume(plain, spark, small_files, tmp_path, keep_man
     shutil.copytree(fresh_root, root)
     for stage in ("triples", "metrics"):
         shutil.rmtree(root / stage)
-    if not keep_manifest:
-        (root / "manifest.json").unlink()
     run_pipeline(spark, small_files, str(root))
     written = spark.read.parquet(str(root / "metrics")).toPandas()
     pd.testing.assert_frame_equal(_stage_rows(written), _stage_rows(out["metrics"].toPandas()))
+
+
+def test_large_driver_built_stage_is_read_back(spark, tmp_path, monkeypatch):
+    """A driver-built frame over ``HAND_FORWARD_ROWS`` is written as one
+    file and read back, as a distributed stage's table is; one at the
+    bound is handed forward.  Both report the rows they wrote."""
+    from kgforge import checkpoint
+    from kgforge.session import local_frame
+
+    monkeypatch.setattr(checkpoint, "HAND_FORWARD_ROWS", 2)
+    ck = checkpoint.CheckpointManager(spark, str(tmp_path / "kgrun_forward"))
+    for n in (2, 3):
+        frame = local_frame(spark, pd.DataFrame({"x": range(n)}), "x long")
+        got = ck.get_or_run(f"t{n}", lambda: frame)
+        assert got.isLocal() == (n == 2), n
+        assert sorted(r.x for r in got.collect()) == list(range(n))
+        assert len(_files(tmp_path / "kgrun_forward" / f"t{n}")) == 1
+        assert ck.totals(f"t{n}") == {"rows": n}
