@@ -1,10 +1,12 @@
 """Canonical over a large driver-built links frame: handed forward as its
 ``LocalRelation`` vs read back from the one-file table the checkpoint
-wrote (the bound ``checkpoint.HAND_FORWARD_ROWS`` chooses between them).
+wrote (``session.DRIVER_ROWS`` chooses between them in ``get_or_run``,
+which reads back this frame; the "forwarded" variant hands canonical the
+link finisher's frame instead).
 
 Link's driver finisher runs over ENTITIES identical entities (one
 embedding, the same 16 bucket keys), which gives ENTITIES * (ENTITIES-1)/2
-links, past canonical's 100k probe at the default 500.  Each rep builds
+links, past ``session.DRIVER_ROWS`` (100k) at the default 500.  Each rep builds
 both stages into a fresh run root with ``get_or_run``; the two variants
 alternate which runs first.  One JSON line per run.
 
@@ -32,7 +34,7 @@ from kgforge import checkpoint, constants  # noqa: E402
 from kgforge.session import build_session  # noqa: E402
 from kgforge.stages import canonical, link  # noqa: E402
 
-VARIANTS = {"forwarded": 10**9, "read_back": checkpoint.HAND_FORWARD_ROWS}
+VARIANTS = ("forwarded", "read_back")
 
 
 def main() -> None:
@@ -47,15 +49,14 @@ def main() -> None:
     rows = [Row(entity_id=f"e{i:05d}", embedding=emb, buckets=list(range(16))) for i in range(args.entities)]
     tmp = tempfile.mkdtemp(prefix="kghandfwd_")
     for rep in range(args.reps):
-        order = list(VARIANTS) if rep % 2 == 0 else list(reversed(VARIANTS))
+        order = VARIANTS if rep % 2 == 0 else VARIANTS[::-1]
         for variant in order:
-            checkpoint.HAND_FORWARD_ROWS = VARIANTS[variant]
             ck = checkpoint.CheckpointManager(spark, tempfile.mkdtemp(dir=tmp))
             t0 = time.time()
-            links = ck.get_or_run(
-                "candidate_links",
-                lambda: link._local_links(spark, rows, constants.LINK_THRESHOLD, constants.LINK_MAX_BUCKET),
-            )
+            local = link._local_links(spark, rows, constants.LINK_THRESHOLD, constants.LINK_MAX_BUCKET)
+            links = ck.get_or_run("candidate_links", lambda: local)
+            if variant == "forwarded":
+                links = local
             t1 = time.time()
             ck.get_or_run("entities", lambda: canonical.connected_components(links))
             t2 = time.time()

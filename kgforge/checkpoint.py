@@ -10,39 +10,33 @@ truncates lineage between stages and makes each stage an independent job,
 and it passes the schema the stage just wrote, so it launches no
 parquet-footer job.  A stage whose frame was built on the driver (a
 ``LocalRelation``: the link and canonical finishers, the metrics rows) is
-written as one file and, when it holds at most ``HAND_FORWARD_ROWS`` rows,
-handed forward as that frame, so the next stage's probe of it plans over
-the relation and launches no job.  Only a resumed table has its schema
-inferred, which the schema guard needs.
+written as one file and, when it holds at most ``session.DRIVER_ROWS``
+rows, handed forward as that frame, so the next stage's probe of it plans
+over the relation and launches no job.  A larger one is read back from its
+one-file table, as a distributed stage's is, instead of planning the next
+stage's distributed body over a LocalTableScan that ships its rows inside
+the tasks.  Only a resumed table has its schema inferred, which the schema
+guard needs.
 
 A parquet write carries an ``Observation`` of the stage's row totals, so
 they cost no job of their own; ``totals`` serves them to the metrics
 table.  A resumed table, or one written to Iceberg, is counted once
 instead, when its totals are asked for.
 
-A ``manifest.json`` under the run root records completed stages;
-completeness itself is judged by the table's _SUCCESS marker (atomic with
-the write), so a killed run resumes correctly.
+Completeness is judged by the table's _SUCCESS marker (atomic with the
+write), so a killed run resumes correctly.  Stage walls are kept in
+``walls`` for the metrics table's ``wall_ms``.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from . import catalog
-
-
-# Largest driver-built stage frame handed forward: the cap of canonical's
-# and materialize's probes, so the next stage settles it on the driver.  A
-# larger one is read back from its one-file table, as a distributed
-# stage's is, instead of planning the next stage's distributed body over a
-# LocalTableScan that ships its rows inside the tasks.
-HAND_FORWARD_ROWS = 100_000
+from . import catalog, session
 
 
 class CheckpointManager:
@@ -116,10 +110,8 @@ class CheckpointManager:
         for rdd_id in set(now.keySet().toArray()) - before:
             now.get(rdd_id).unpersist(False)
         totals = None if obs is None else {k: int(v or 0) for k, v in obs.get.items()}
-        secs = time.time() - t0
-        self._record(stage, secs)
-        self.walls[stage] = int(secs * 1000)
-        if local and totals and totals["rows"] <= HAND_FORWARD_ROWS:
+        self.walls[stage] = int((time.time() - t0) * 1000)
+        if local and totals and totals["rows"] <= session.DRIVER_ROWS:
             self._totals[stage] = totals
             return df
         table = catalog.read_table(self.spark, loc, schema=df.schema)
@@ -142,22 +134,3 @@ class CheckpointManager:
         got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         want = {f.name: f.dataType.simpleString() for f in schema.fields}
         return got == want
-
-    # ------------------------------------------------------------ manifest
-    def _manifest_path(self) -> str:
-        return f"{self.root}/manifest.json"
-
-    def _record(self, stage: str, secs: float) -> None:
-        if "://" in self.root:
-            return  # object-store manifest writing is a cluster concern
-        m = self.manifest()
-        m[stage] = {"completed_at": time.time(), "secs": round(secs, 3)}
-        with open(self._manifest_path(), "w") as f:
-            json.dump(m, f, indent=2)
-
-    def manifest(self) -> dict:
-        try:
-            with open(self._manifest_path()) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return {}

@@ -17,8 +17,8 @@ Two registered graph inputs:
 
 Scale notes: ``pagerank`` takes any (src, dst) edge DataFrame and runs in
 one of two regimes, chosen by the size of the cached edge set (a capped
-probe, then a count past the cap).  Up to ``PR_LOCAL_EDGES`` edges the
-graph is collected once and the power iteration finishes on the driver
+probe, then a count past the cap).  Up to ``session.DRIVER_EDGES`` edges
+the graph is collected once and the power iteration finishes on the driver
 in numpy — per-job round trips, not rank arithmetic, are the whole cost
 of a small graph.  Above it the distributed body runs: contributions are
 one groupBy per iteration (AQE-skew-safe); the per-node out-degree
@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from .. import iterate
+from .. import iterate, session
 from ..cachectl import tracked_cache
 from ..session import local_frame
 from .kgdocs import SQL_DOC_PAIRS, _doc_mentions, _doc_pairs
@@ -51,15 +51,6 @@ from .registry import ROUND, query
 
 DAMPING = 0.85
 PR_ITERS = 3
-# pagerank finishes on the driver up to this many edges — the same bound
-# as canonical.connected_components' local_threshold.  Crossover sweep in
-# BASELINE.md "PageRank at entity-graph scale": local wins 12.6x at 10k
-# edges, 2.3x at 1M and still 1.5x at 4M, so the bound is a driver-memory
-# guard, not the crossover; the 43.6M-edge scaling graphs stay distributed.
-PR_LOCAL_EDGES = 1_000_000
-# rows pagerank's first path probe collects (materialize caps its own
-# mapping probe at the same size); larger graphs are counted instead
-PR_PROBE_EDGES = 100_000
 # Past this many edges pagerank's distributed body runs the co-partitioned
 # plan; up to it the rank vector broadcasts into the edge join.  Paired
 # runs (BASELINE.md "PageRank's distributed plan by edge count"): broadcast
@@ -112,10 +103,13 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS, damping: float = DAMPING) 
     edge set returns an empty rank table rather than dividing by zero.
 
     Two regimes, one algorithm, chosen by edge count.  Graphs of at most
-    ``PR_LOCAL_EDGES`` edges are collected and finish on the driver
-    (``_local_pagerank``): up to ``PR_PROBE_EDGES`` edges the one probe
-    job's rows are the input, past it ``count()`` decides and a graph
-    within the bound is collected whole.  Larger graphs run the
+    ``session.DRIVER_EDGES`` edges are collected and finish on the driver
+    (``_local_pagerank``): the rows of one ``driver_rows`` probe are the
+    input, or past its cap ``count()`` decides and a graph within the
+    bound is collected whole.  A local-vs-distributed sweep (BASELINE.md
+    "PageRank at entity-graph scale") found local 12.6x faster at 10k
+    edges and still 1.5x at 4M, so the bound guards driver memory; the
+    43.6M-edge scaling graphs stay distributed.  Larger graphs run the
     distributed body below, which checkpoints the rank vector every
     round so plan size stays constant in iteration count.  Its plan is
     chosen by the same edge count: up to ``PR_PARTITION_EDGES`` the rank
@@ -128,18 +122,18 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS, damping: float = DAMPING) 
     double.
     """
     sym = tracked_cache(edges)  # feeds the probe, deg AND the join leg
-    # Path choice that never ships a large graph: the first
-    # PR_PROBE_EDGES + 1 rows (one job) settle a small graph outright;
-    # past them count() decides, which costs next to nothing beyond
-    # loading the cache the distributed body reads anyway.
-    head = sym.limit(PR_PROBE_EDGES + 1).collect()
-    if len(head) <= PR_PROBE_EDGES:
+    # Path choice that never ships a large graph: one probe (one job)
+    # settles a small graph outright; past its cap count() decides, which
+    # costs next to nothing beyond loading the cache the distributed body
+    # reads anyway.
+    head = session.driver_rows(sym)
+    if head is not None:
         n_edges = len(head)
         pdf = pd.DataFrame(head, columns=sym.columns)
     else:
         n_edges = sym.count()
-        pdf = sym.toPandas() if n_edges <= PR_LOCAL_EDGES else None
-    if pdf is not None and len(pdf) <= PR_LOCAL_EDGES:
+        pdf = sym.toPandas() if n_edges <= session.DRIVER_EDGES else None
+    if pdf is not None and len(pdf) <= session.DRIVER_EDGES:
         return _local_pagerank(sym, pdf, iters, damping)
     partitioned = n_edges > PR_PARTITION_EDGES
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("d"))
@@ -259,10 +253,11 @@ def concept_pagerank(spark, sf_dir):
 # corpus, the edge set is the emitted triple graph itself (subj -> obj of
 # every non-identity triple, symmetrized, deduped), and ranking takes the
 # same path choice as any caller: at oracle size the graph is far under
-# PR_LOCAL_EDGES and finishes on the driver.  The oracle re-derives the same
-# edges from the committed twin triple fixture (fixtures/twin_triples.parquet,
-# drift-guarded) and unrolls the identical PR chain in SQL — so the
-# iterative job over pipeline output is hard value-hash-gated end-to-end.
+# session.DRIVER_EDGES and finishes on the driver.  The oracle re-derives
+# the same edges from the committed twin triple fixture
+# (fixtures/twin_triples.parquet, drift-guarded) and unrolls the identical
+# PR chain in SQL — so the iterative job over pipeline output is hard
+# value-hash-gated end-to-end.
 
 _SQL_ENTITY_EDGES_TMPL = """
 tri as (select subj, obj from read_parquet('{path}') where subj <> obj),

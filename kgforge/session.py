@@ -18,6 +18,25 @@ from pyspark.sql.types import StructType
 
 from . import constants
 
+# The driver-size policy, the one bound of each kind every stage and
+# operator reads.  A table of at most DRIVER_ROWS rows is settled on the
+# driver from one capped probe (``driver_rows``), and a driver-built
+# stage frame that size is handed forward.  A graph of at most
+# DRIVER_EDGES edges may still be collected after a count: a
+# driver-memory guard, not a crossover (BASELINE.md "PageRank at
+# entity-graph scale": the driver finisher still won at 4M edges).
+DRIVER_ROWS = 100_000
+DRIVER_EDGES = 1_000_000
+
+
+def driver_rows(df: DataFrame, cap: int | None = None) -> list | None:
+    """All rows of ``df`` from one ``limit(cap + 1).collect()``, or None
+    when it holds more than ``cap`` (default ``DRIVER_ROWS``) rows, so a
+    truncated probe is never taken for the table."""
+    cap = DRIVER_ROWS if cap is None else cap
+    rows = df.limit(cap + 1).collect()
+    return rows if len(rows) <= cap else None
+
 
 def build_session(
     app_name: str = "kgforge",

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import iterate
+from .. import iterate, session
 from ..session import local_frame
 
 
@@ -82,10 +82,7 @@ def _local_components(spark, rows) -> DataFrame:
     The adaptive fast path: when the candidate-link graph fits comfortably
     on the driver, log(n) distributed rounds are pure overhead — one
     collect + one driver-built frame beats ~10 shuffle stages.  Output is
-    identical to the iterative path (tests assert equivalence).  The
-    checkpoint writes the frame as one file and, up to
-    ``checkpoint.HAND_FORWARD_ROWS`` rows, hands it forward, so
-    materialize's mapping probe of it runs no job."""
+    identical to the iterative path (tests assert equivalence)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -104,13 +101,11 @@ def _local_components(spark, rows) -> DataFrame:
     return local_frame(spark, pdf, "entity_id string, canonical_id string")
 
 
-# rows the first path probe of connected_components collects
-LOCAL_PROBE_ROWS = 100_000
 # bound on the distributed large-star/small-star rounds
 MAX_ROUNDS = 20
 
 
-def connected_components(links: DataFrame, local_threshold: int = 1_000_000) -> DataFrame:
+def connected_components(links: DataFrame, local_threshold: int = session.DRIVER_EDGES) -> DataFrame:
     """CANDIDATE_LINKS(a, b, ...) -> ENTITIES(entity_id, canonical_id).
 
     Adaptive: edge sets under ``local_threshold`` run driver-side
@@ -123,23 +118,21 @@ def connected_components(links: DataFrame, local_threshold: int = 1_000_000) -> 
     broadcast-able (north_rule).
     """
     raw = links.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    # Bounded probe, capped as materialize.triples_from_packed caps its
-    # mapping probe: ONE limit(cap+1).collect() of the RAW links settles a
-    # graph of at most LOCAL_PROBE_ROWS edges and IS the union-find's input
-    # (union-find ignores duplicate edges and self-loops, so the probe
-    # skips _dedup's shuffle); over the driver-built links the link
-    # finisher hands forward it runs no job.  Past the cap the deduped
-    # edges are checkpointed once, observing the size and the first
-    # fingerprint, so the union-find collect and the first distributed
-    # round share one pass over the _dedup plan.
+    # ONE driver_rows probe of the RAW links settles a small graph and IS
+    # the union-find's input (union-find ignores duplicate edges and
+    # self-loops, so the probe skips _dedup's shuffle); over the
+    # driver-built links the link finisher hands forward it runs no job.
+    # Past the cap the deduped edges are checkpointed once, observing the
+    # size and the first fingerprint, so the union-find collect and the
+    # first distributed round share one pass over the _dedup plan.
     spark = links.sparkSession
+    cap = min(local_threshold, session.DRIVER_ROWS)
     if local_threshold > 0:
-        cap = min(local_threshold, LOCAL_PROBE_ROWS)
-        rows = raw.limit(cap + 1).collect()
-        if len(rows) <= cap:
+        rows = session.driver_rows(raw, cap)
+        if rows is not None:
             return _local_components(spark, rows)
     edges, prev = _observed(_dedup(raw))
-    if local_threshold > LOCAL_PROBE_ROWS and prev["n"] <= local_threshold:
+    if local_threshold > cap and prev["n"] <= local_threshold:
         return _local_components(spark, edges.collect())
 
     # String rounds.  groupBy-min on STRING ids means SortAggregate

@@ -19,19 +19,20 @@ Scale notes:
   against the (tiny) oversized-bucket list — the safety valve that keeps a
   10^12-entity run from producing a quadratic bucket.
 
-Driver finisher: the stage first collects at most ``LINK_PROBE_ROWS`` + 1
-entities, each with its bucket keys (computed JVM-side by the same
-``bucket_key`` the join uses).  When the whole table fits in that probe
-and its surviving buckets self-join to at most ``LOCAL_LINK_PAIRS`` rows
-(sum of n_b^2), the same plan runs in numpy on the driver: the same valve
-(recorded through ``valvemetrics.record``), the same a < b self-join, the
-cosine as float32 products summed in order in float64 (what the JVM's
-aggregate does), the same threshold and the same (a, b) -> max score, min
-bucket dedup.  Its rows are bit-identical to the distributed plan's
-(tests/test_link.py runs both).  A 72-entity build then costs one probe
-job instead of the valve, join and dedup jobs.  Both bounds are
-driver-memory guards, not crossovers: the local path still won at the
-largest graph the guard admits (BASELINE.md "link finisher").
+Driver finisher: the stage first probes its entities with
+``session.driver_rows`` capped at ``LINK_PROBE_ROWS``, each with its
+bucket keys (computed JVM-side by the same ``bucket_key`` the join uses).
+When the whole table fits in that probe and its surviving buckets
+self-join to at most ``LOCAL_LINK_PAIRS`` rows (sum of n_b^2), the same
+plan runs in numpy on the driver: the same valve (recorded through
+``valvemetrics.record``), the same a < b self-join, the cosine as float32
+products summed in order in float64 (what the JVM's aggregate does), the
+same threshold and the same (a, b) -> max score, min bucket dedup.  Its
+rows are bit-identical to the distributed plan's (tests/test_link.py runs
+both).  A 72-entity build then costs one probe job instead of the valve,
+join and dedup jobs.  Both bounds are driver-memory guards, not
+crossovers: the local path still won at the largest graph the guard
+admits (BASELINE.md "link finisher").
 
 The bucket join is written here, not through ``kgforge.simjoin`` as the
 dedup and similarity operators' joins are: it scores inside the join
@@ -47,7 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import constants, valvemetrics
-from ..session import local_frame
+from ..session import driver_rows, local_frame
 
 # Rows of the bucket self-join (sum of n_b^2 over the buckets that pass the
 # valve) the driver finisher may build; past it the distributed plan runs.
@@ -104,18 +105,17 @@ def candidate_links(embedded: DataFrame) -> DataFrame:
     Finishes on the driver when the table and its bucket self-join fit the
     module bounds (see the module docstring); the rows are the same."""
     threshold, max_bucket = constants.LINK_THRESHOLD, constants.LINK_MAX_BUCKET
-    probe = (
+    probe = driver_rows(
         embedded.select(
             "entity_id",
             "embedding",
             F.transform("sigs", lambda sig, band: bucket_key(F.col("kind"), band, sig)).alias(
                 "buckets"
             ),
-        )
-        .limit(LINK_PROBE_ROWS + 1)
-        .collect()
+        ),
+        LINK_PROBE_ROWS,
     )
-    if len(probe) <= LINK_PROBE_ROWS:
+    if probe is not None:
         local = _local_links(embedded.sparkSession, probe, threshold, max_bucket)
         if local is not None:
             return local
@@ -151,10 +151,7 @@ def candidate_links(embedded: DataFrame) -> DataFrame:
 def _local_links(spark, rows, threshold: float, max_bucket: int) -> DataFrame | None:
     """The distributed body of ``candidate_links`` over collected probe
     rows, in numpy.  Returns None, recording nothing, when the surviving
-    buckets self-join to more than ``LOCAL_LINK_PAIRS`` rows.  The links
-    are a driver-built frame: the checkpoint writes it as one file and,
-    up to ``checkpoint.HAND_FORWARD_ROWS`` rows, hands it forward, so
-    canonical's probe of it runs no job."""
+    buckets self-join to more than ``LOCAL_LINK_PAIRS`` rows."""
     ent = np.repeat(np.arange(len(rows)), [len(r["buckets"]) for r in rows])
     keys = np.fromiter((k for r in rows for k in r["buckets"]), np.int64, len(ent))
     # valve: group sizes over every (entity, band) row, drop groups over the cap

@@ -14,9 +14,9 @@ Scale notes:
   dictionary) pay a hash aggregate.  No string agg buffers anywhere
   (they would downgrade HashAggregate to SortAggregate).
 - The canonical-map join is broadcast; the collision dictionary is built
-  driver-side from one probe of at most ``MAP_PROBE_ROWS`` mapping rows
-  when it fits, and a mapping of at most ``MAP_LITERAL_MAX`` rows rides
-  the single-pass packed plan as a closure dictionary.
+  driver-side from one ``session.driver_rows`` probe of the mapping when
+  it fits, and a mapping of at most ``MAP_LITERAL_MAX`` rows rides the
+  single-pass packed plan as a closure dictionary.
 - Output is partitioned by pred — partition pruning for per-predicate
   consumers (SURVEY.md §4 N5).
 """
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import constants
-from ..session import local_frame
+from ..session import driver_rows, local_frame
 
 _KIND_PRED = {
     "import": constants.PRED_IMPORTS,
@@ -50,16 +50,13 @@ assert len(set(_kind_images)) == len(_kind_images), (
 del _kind_images
 
 
-# Largest canonical dictionary that is inlined as a literal create_map in
-# the single-pass packed plan; bigger dictionaries fall back to the
-# broadcast-join plan (a 10k-entry literal map is ~40kB of plan, fine;
-# an unbounded one would blow up Catalyst).
+# Largest canonical dictionary the single-pass packed plan captures as a
+# dict in its mapInPandas closure; a bigger one takes the broadcast-join
+# plan.  The closure is pickled into the plan's Python command, which every
+# task deserializes (PySpark ships a command over 1 MB as a broadcast
+# instead), so the bound keeps that per-task cost small.  Its value is not
+# measured: no run has timed the two plans around it.
 MAP_LITERAL_MAX = 10_000
-# Rows of the canonical mapping the one bounded probe collects.  A mapping
-# within it becomes the collision dictionary driver-side (and, within
-# MAP_LITERAL_MAX, the literal map); past it the join plan builds the
-# dictionary as a distinct union.
-MAP_PROBE_ROWS = 100_000
 
 
 def triples_from_packed(packed: DataFrame, mapping: DataFrame | None) -> DataFrame:
@@ -113,21 +110,17 @@ def triples_from_packed(packed: DataFrame, mapping: DataFrame | None) -> DataFra
     # DataFrame (streaming/kg.py ingests lexical triples incrementally;
     # linking/canonicalization stay periodic batch jobs over the union).
     if mapping is None:
-        probe = []
+        rows = []
     else:
-        # ONE probe serves both paths: probe up to the fallback's own limit
-        # so the join plan can reuse these rows instead of re-collecting the
-        # mapping (two driver jobs over a possibly non-checkpointed mapping
-        # otherwise, for dictionaries between the two thresholds).  Over
+        # ONE probe serves both paths: the join plan takes these rows (or
+        # None past the cap) instead of collecting the mapping again.  Over
         # the driver-built mapping the pipeline hands forward the probe
         # runs no job; over a stage table it is one.
-        probe = mapping.limit(MAP_PROBE_ROWS + 1).collect()
-        if len(probe) > MAP_LITERAL_MAX:
-            return triples_from_mentions(
-                mentions_stage.explode_mentions(packed), mapping, probe_rows=probe
-            )
+        rows = driver_rows(mapping)
+        if rows is None or len(rows) > MAP_LITERAL_MAX:
+            return triples_from_mentions(mentions_stage.explode_mentions(packed), mapping, rows)
 
-    canon = {r["entity_id"]: r["canonical_id"] for r in probe}
+    canon = {r["entity_id"]: r["canonical_id"] for r in rows}
     kind_pred = dict(_KIND_PRED)
     kind_etype = dict(_KIND_ETYPE)
 
@@ -188,9 +181,7 @@ def triples_from_packed(packed: DataFrame, mapping: DataFrame | None) -> DataFra
     return lexical.unionByName(_same_as(mapping))
 
 
-def triples_from_mentions(
-    mentions: DataFrame, mapping: DataFrame, probe_rows: list | None = None
-) -> DataFrame:
+def triples_from_mentions(mentions: DataFrame, mapping: DataFrame, rows: list | None) -> DataFrame:
     """MENTIONS + ENTITIES -> TRIPLES.
 
     subj = '<repo>:<path>' (the file node), obj = canonicalized typed
@@ -198,10 +189,11 @@ def triples_from_mentions(
     ``with_evidence`` for the display string), score = 1.0 for lexical
     triples.  same_as triples come straight from the mapping.
 
-    When the mapping fits under ``MAP_PROBE_ROWS`` rows (it is
-    broadcast-sized by contract), the collision dictionary is collected and
-    rebuilt as one driver-local relation — the distinct-union subquery
-    would otherwise be planned (and its shuffle run) once per join leg.
+    ``rows`` are the mapping's rows from ``session.driver_rows``, or None
+    when it has more.  Given the rows (the mapping is broadcast-sized by
+    contract), the collision dictionary is rebuilt from them as one
+    driver-local relation — the distinct-union subquery would otherwise
+    be planned (and its shuffle run) once per join leg.
     (A packed-level ``arrays_overlap`` file pre-filter for the dedup leg
     was measured and REJECTED: re-decoding the heavy ``names`` array
     column for every file costs as much as the explode it avoids.)
@@ -228,12 +220,10 @@ def triples_from_mentions(
         F.col("line"),
         F.lit(1.0).alias("score"),
     )
-    return canonicalize_lexical(lexical, mapping, probe_rows=probe_rows)
+    return canonicalize_lexical(lexical, mapping, rows)
 
 
-def canonicalize_lexical(
-    lexical: DataFrame, mapping: DataFrame, probe_rows: list | None = None
-) -> DataFrame:
+def canonicalize_lexical(lexical: DataFrame, mapping: DataFrame, rows: list | None) -> DataFrame:
     """LEXICAL triples (subj, pred, obj, line, score — raw objs, already
     per-file first-occurrence-deduped on RAW keys) + canonical mapping ->
     canonical TRIPLES.  This is the tail of ``triples_from_mentions``,
@@ -243,29 +233,18 @@ def canonicalize_lexical(
     sliver with min-line survivorship, and unioning the same_as leg is
     exactly what the batch path does after its lexical projection — which
     is why compaction output equals the batch pipeline's triples
-    (tests/test_streaming_kg.py parity test)."""
+    (tests/test_streaming_kg.py parity test).  ``rows`` as in
+    ``triples_from_mentions``."""
     # One dictionary covering every obj that can participate in a
     # post-canonicalization collision: linked names (-> their canonical id)
     # plus the canonical ids themselves (-> identity).  A single broadcast
     # left join then yields both the final obj and the needs-dedup flag,
     # so the plan has exactly two legs over the mention scan: the untouched
     # bulk (no shuffle) and the linked sliver (tiny hash aggregate).
-    # One bounded probe of the (broadcast-sized by contract) mapping: if it
-    # fits, build the collision dictionary driver-side — one tiny local
-    # relation instead of a twice-planned distinct-union subquery.
-    # probe_rows: a caller that already limit-collected the mapping (to
-    # MAP_PROBE_ROWS + 1 rows, see triples_from_packed) passes the rows
-    # through so the same Spark job isn't run twice.
-    if probe_rows is not None:
-        probe = probe_rows
-    else:
-        probe = mapping.limit(MAP_PROBE_ROWS + 1).collect()
-    small = len(probe) <= MAP_PROBE_ROWS
-
-    if small:
+    if rows is not None:
         pairs = sorted(
-            {(r["entity_id"], r["canonical_id"]) for r in probe}
-            | {(r["canonical_id"], r["canonical_id"]) for r in probe}
+            {(r["entity_id"], r["canonical_id"]) for r in rows}
+            | {(r["canonical_id"], r["canonical_id"]) for r in rows}
         )
         spark = lexical.sparkSession
         if not pairs:

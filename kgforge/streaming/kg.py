@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import constants, schemas
+from ..session import driver_rows
 from ..stages import canonical, embed, link, materialize, mentions
 
 
@@ -111,4 +112,4 @@ def compact_canonical_triples(spark: SparkSession, lexical_dir: str) -> DataFram
     )
     links = link.candidate_links(embed.embed_entities(ents))
     mapping = canonical.connected_components(links)
-    return materialize.canonicalize_lexical(lexical, mapping)
+    return materialize.canonicalize_lexical(lexical, mapping, driver_rows(mapping))

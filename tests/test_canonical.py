@@ -90,9 +90,10 @@ def test_local_path_probes_once(spark, tmp_path):
 
 
 def test_path_choice_past_probe_cap(spark, monkeypatch):
-    """Past LOCAL_PROBE_ROWS a bounded count decides: a graph still under
-    local_threshold is collected and finished locally, a larger one runs
-    the distributed rounds — same mapping either way."""
+    """Past the ``session.DRIVER_ROWS`` probe a bounded count decides: a
+    graph still under local_threshold is collected and finished locally, a
+    larger one runs the distributed rounds — same mapping either way."""
+    from kgforge import session
     from kgforge.stages import canonical
 
     local_inputs = []
@@ -103,7 +104,7 @@ def test_path_choice_past_probe_cap(spark, monkeypatch):
 
     local = canonical._local_components
     monkeypatch.setattr(canonical, "_local_components", spy)
-    monkeypatch.setattr(canonical, "LOCAL_PROBE_ROWS", 2)
+    monkeypatch.setattr(session, "DRIVER_ROWS", 2)
     links = _links(spark, [("a", "b"), ("b", "c"), ("x", "y"), ("m", "n"), ("n", "c")])
     want = {"b": "a", "c": "a", "m": "a", "n": "a", "y": "x"}
     for threshold in (10, 4):  # 5 edges: count path local, then distributed

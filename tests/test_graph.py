@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from kgforge import session
 from kgforge.operators import graph
 from kgforge.operators.graph import pagerank
 
@@ -185,7 +186,7 @@ def test_partitioned_variants_match_broadcast_plans(spark, monkeypatch):
 
     from kgforge.operators.graph import bfs_levels_frontier, pagerank
 
-    monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)  # plan under test, not the local finisher
+    monkeypatch.setattr(session, "DRIVER_EDGES", 0)  # plan under test, not the local finisher
     sym = _random_sym_graph(spark)
     a = {r.node: round(r.r, 6) for r in pagerank(sym).collect()}
     monkeypatch.setattr(graph, "PR_PARTITION_EDGES", 0)
@@ -271,7 +272,7 @@ def test_pagerank_partitioned_has_no_per_round_rank_broadcast(spark, monkeypatch
     plan's count."""
     from kgforge import iterate
 
-    monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)  # plan under test, not the local finisher
+    monkeypatch.setattr(session, "DRIVER_EDGES", 0)  # plan under test, not the local finisher
     monkeypatch.setattr(graph, "PR_PARTITION_EDGES", 0)
     plans, real = [], iterate.checkpoint
 
@@ -295,7 +296,7 @@ def test_pagerank_plan_follows_edge_count(spark, monkeypatch):
     probe's rows or a count past the probe cap gave that count."""
     from kgforge import iterate
 
-    monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)  # plan under test, not the local finisher
+    monkeypatch.setattr(session, "DRIVER_EDGES", 0)  # plan under test, not the local finisher
     pins, real = [], iterate.checkpoint
 
     def spy(df, *probes, pin=False):
@@ -306,8 +307,8 @@ def test_pagerank_plan_follows_edge_count(spark, monkeypatch):
     sym = _random_sym_graph(spark)
     n_edges = sym.count()
     got = []
-    for probe_cap in (graph.PR_PROBE_EDGES, 100):
-        monkeypatch.setattr(graph, "PR_PROBE_EDGES", probe_cap)
+    for probe_cap in (session.DRIVER_ROWS, 100):
+        monkeypatch.setattr(session, "DRIVER_ROWS", probe_cap)
         for bound in (n_edges, n_edges - 1):
             monkeypatch.setattr(graph, "PR_PARTITION_EDGES", bound)
             pins.clear()
@@ -321,7 +322,7 @@ def _both_paths(monkeypatch, edges, **kw):
     """(local, distributed) pagerank outputs over the same edges."""
     local = pagerank(edges, **kw)
     with monkeypatch.context() as m:
-        m.setattr(graph, "PR_LOCAL_EDGES", 0)
+        m.setattr(session, "DRIVER_EDGES", 0)
         dist = pagerank(edges, **kw)
     return local, dist
 
@@ -381,9 +382,9 @@ def test_pagerank_local_ranks_ignore_input_order(spark):
 
 
 def test_pagerank_path_choice_past_probe_cap(spark, monkeypatch):
-    """Past PR_PROBE_EDGES a count decides: a graph within PR_LOCAL_EDGES
-    is collected whole and finished locally (bit-identical to the probe's
-    rows), a larger one runs the distributed body."""
+    """Past the DRIVER_ROWS probe a count decides: a graph within
+    DRIVER_EDGES is collected whole and finished locally (bit-identical to
+    the probe's rows), a larger one runs the distributed body."""
     sym = _random_sym_graph(spark)
     n_edges = sym.count()
     local_inputs = []
@@ -395,9 +396,9 @@ def test_pagerank_path_choice_past_probe_cap(spark, monkeypatch):
     local = graph._local_pagerank
     monkeypatch.setattr(graph, "_local_pagerank", spy)
     head = _ranks(pagerank(sym))
-    monkeypatch.setattr(graph, "PR_PROBE_EDGES", 100)
+    monkeypatch.setattr(session, "DRIVER_ROWS", 100)
     counted = _ranks(pagerank(sym))
-    monkeypatch.setattr(graph, "PR_LOCAL_EDGES", n_edges - 1)
+    monkeypatch.setattr(session, "DRIVER_EDGES", n_edges - 1)
     dist = _ranks(pagerank(sym), 9)
     assert local_inputs == [n_edges, n_edges]
     assert counted == head

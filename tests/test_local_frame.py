@@ -33,7 +33,7 @@ def _hot_dict(spark):
         pd.DataFrame({"subj": ["f"], "pred": ["calls"], "obj": ["a"], "line": [1], "score": [1.0]})
     )
     mapping = spark.createDataFrame(pd.DataFrame({"entity_id": ["a"], "canonical_id": ["b"]}))
-    return materialize.canonicalize_lexical(lexical, mapping, probe_rows=mapping.collect())
+    return materialize.canonicalize_lexical(lexical, mapping, mapping.collect())
 
 
 def _valves(spark):

@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from kgforge.session import driver_rows
 from kgforge.stages import materialize, mentions
 
 
@@ -85,5 +86,5 @@ def test_packed_path_matches_exploded_join_path(spark, small_files):
         ents.collect() or [], "entity_id string, canonical_id string"
     )
     fast = _rows(materialize.triples_from_packed(packed, ents))
-    slow = _rows(materialize.triples_from_mentions(men, ents))
+    slow = _rows(materialize.triples_from_mentions(men, ents, driver_rows(ents)))
     assert fast == slow

@@ -58,9 +58,9 @@ def test_query_matches_oracle(spark, sf_dir, ducks, name):
 def test_pagerank_oracles_on_distributed_path(spark, sf_dir, ducks, monkeypatch, name):
     """At sf size every PageRank query finishes on the driver; with the
     local bound at 0 the same oracles gate the distributed body too."""
-    from kgforge.operators import graph
+    from kgforge import session
 
-    monkeypatch.setattr(graph, "PR_LOCAL_EDGES", 0)
+    monkeypatch.setattr(session, "DRIVER_EDGES", 0)
     _assert_matches_oracle(spark, sf_dir, ducks, name)
 
 

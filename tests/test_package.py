@@ -92,17 +92,60 @@ def _env_reads(tree) -> list[tuple[int, str | None]]:
     return reads
 
 
-def test_library_reads_only_deployment_env():
-    """No module under kgforge/ reads an env var other than the
-    deployment settings: a knob only a bench sets is not library API."""
+def _library_modules():
+    """(path relative to the repo, parsed tree) of every module under kgforge/."""
     root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "kgforge")
-    bad = []
     for dirpath, _, files in os.walk(root):
         for name in sorted(files):
             if name.endswith(".py"):
                 path = os.path.join(dirpath, name)
                 with open(path, encoding="utf-8") as f:
-                    tree = ast.parse(f.read(), path)
-                rel = os.path.relpath(path, os.path.dirname(root))
-                bad += [f"{rel}:{ln} {var}" for ln, var in _env_reads(tree) if var not in DEPLOYMENT_ENV]
+                    yield os.path.relpath(path, os.path.dirname(root)), ast.parse(f.read(), path)
+
+
+def test_library_reads_only_deployment_env():
+    """No module under kgforge/ reads an env var other than the
+    deployment settings: a knob only a bench sets is not library API."""
+    bad = [
+        f"{rel}:{ln} {var}"
+        for rel, tree in _library_modules()
+        for ln, var in _env_reads(tree)
+        if var not in DEPLOYMENT_ENV
+    ]
     assert not bad, f"env reads outside the deployment settings: {bad}"
+
+
+def _limit_collects(tree) -> list[tuple[int, str | None]]:
+    """(line, enclosing function) of every ``<frame>.limit(...).collect()``
+    in ``tree``."""
+    found = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
+                inner = child.func.value
+                if (
+                    child.func.attr == "collect"
+                    and isinstance(inner, ast.Call)
+                    and isinstance(inner.func, ast.Attribute)
+                    and inner.func.attr == "limit"
+                ):
+                    found.append((child.lineno, fn))
+            is_fn = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, child.name if is_fn else fn)
+
+    visit(tree, None)
+    return found
+
+
+def test_driver_probes_go_through_driver_rows():
+    """Every capped collect under kgforge/ is ``session.driver_rows``,
+    the one place the driver-size policy lives: a probe written inline
+    could again pass a truncated table off as the whole one."""
+    bad = [
+        f"{rel}:{ln}"
+        for rel, tree in _library_modules()
+        for ln, fn in _limit_collects(tree)
+        if (rel, fn) != ("kgforge/session.py", "driver_rows")
+    ]
+    assert not bad, f"limit(...).collect() outside session.driver_rows: {bad}"

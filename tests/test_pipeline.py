@@ -47,8 +47,8 @@ def test_metrics_lineage(pipe):
     m = out["metrics"].toPandas()
     stages = set(m["stage"])
     # per-partition lineage rows for both pipeline stages, plus any
-    # valve-audit rows the run recorded (valvemetrics.metrics_rows —
-    # stage 'valve:<name>'; their own read-back contract is covered by
+    # valve-audit rows the run recorded (valvemetrics.rows — stage
+    # 'valve:<name>'; their own read-back contract is covered by
     # tests/test_valvemetrics.py)
     assert {"mentions", "triples"} <= stages
     assert all(s.startswith("valve:") for s in stages - {"mentions", "triples"})
@@ -102,8 +102,6 @@ def test_resume_recomputes_embeddings_without_sigs(pipe, spark, small_files, tmp
     recomputed, and the run's triples equal a fresh run's."""
     import shutil
 
-    from kgforge.checkpoint import CheckpointManager
-
     out, fresh_root = pipe
     root = tmp_path / "kgrun_old_embeddings"
     shutil.copytree(f"{fresh_root}/mentions", root / "mentions")
@@ -111,10 +109,14 @@ def test_resume_recomputes_embeddings_without_sigs(pipe, spark, small_files, tmp
     assert old.columns == ["entity_id", "name", "kind", "embedding"]
     old.write.parquet(str(root / "entity_embeddings"))
 
+    def parts(stage):  # a rewrite names its part files afresh
+        return sorted(p.name for p in (root / stage).rglob("*.parquet"))
+
+    before_parts = {stage: parts(stage) for stage in ("mentions", "entity_embeddings")}
     out2 = run_pipeline(spark, small_files, str(root))
     assert "sigs" in spark.read.parquet(str(root / "entity_embeddings")).columns
-    done = CheckpointManager(spark, str(root)).manifest()
-    assert "mentions" not in done and "entity_embeddings" in done  # resumed vs recomputed
+    assert parts("mentions") == before_parts["mentions"]  # resumed
+    assert parts("entity_embeddings") != before_parts["entity_embeddings"]  # recomputed
     key = ["subj", "pred", "obj"]
     before = _triples_pdf(out["triples"]).sort_values(key).reset_index(drop=True)
     after = _triples_pdf(out2["triples"]).sort_values(key).reset_index(drop=True)
@@ -147,10 +149,11 @@ def test_run_leaves_no_persisted_blocks(spark, small_files, tmp_path, monkeypatc
     """The valve's hot-key checkpoint and canonical's edge checkpoint are
     released once their stage table is written: a run ends with the
     persistent-RDD count it started with."""
-    from kgforge.stages import canonical, link
+    from kgforge import session
+    from kgforge.stages import link
 
     monkeypatch.setattr(link, "LINK_PROBE_ROWS", 0)  # distributed link: the valve fires
-    monkeypatch.setattr(canonical, "LOCAL_PROBE_ROWS", 2)  # past the probe: edge checkpoint
+    monkeypatch.setattr(session, "DRIVER_ROWS", 2)  # past canonical's probe: edge checkpoint
     rdds = spark.sparkContext._jsc.getPersistentRDDs
     before = rdds().size()
     run_pipeline(spark, small_files, str(tmp_path / "kgrun_blocks"))
@@ -238,13 +241,13 @@ def test_metrics_rows_after_resume(plain, spark, small_files, tmp_path):
 
 
 def test_large_driver_built_stage_is_read_back(spark, tmp_path, monkeypatch):
-    """A driver-built frame over ``HAND_FORWARD_ROWS`` is written as one
+    """A driver-built frame over ``session.DRIVER_ROWS`` is written as one
     file and read back, as a distributed stage's table is; one at the
     bound is handed forward.  Both report the rows they wrote."""
-    from kgforge import checkpoint
+    from kgforge import checkpoint, session
     from kgforge.session import local_frame
 
-    monkeypatch.setattr(checkpoint, "HAND_FORWARD_ROWS", 2)
+    monkeypatch.setattr(session, "DRIVER_ROWS", 2)
     ck = checkpoint.CheckpointManager(spark, str(tmp_path / "kgrun_forward"))
     for n in (2, 3):
         frame = local_frame(spark, pd.DataFrame({"x": range(n)}), "x long")
@@ -253,3 +256,40 @@ def test_large_driver_built_stage_is_read_back(spark, tmp_path, monkeypatch):
         assert sorted(r.x for r in got.collect()) == list(range(n))
         assert len(_files(tmp_path / "kgrun_forward" / f"t{n}")) == 1
         assert ck.totals(f"t{n}") == {"rows": n}
+
+
+def test_tiny_driver_cap_writes_the_same_tables(plain, spark, small_files, tmp_path, monkeypatch):
+    """With ``session.DRIVER_ROWS`` at 2 every driver probe of the build
+    is past its cap: the link and canonical frames are read back instead
+    of handed forward, canonical finishes through its count path and
+    materialize through its join plan.  A probe cut short must never pass
+    as the whole table, so the run writes the default run's rows."""
+    from kgforge import session
+    from kgforge.stages import canonical, materialize
+
+    out, _ = plain
+    calls = {"components": [], "mentions": []}
+
+    def components(spark, rows):
+        calls["components"].append(len(rows))
+        return real_components(spark, rows)
+
+    def from_mentions(mentions, mapping, rows):
+        calls["mentions"].append(rows)
+        return real_mentions(mentions, mapping, rows)
+
+    real_components, real_mentions = canonical._local_components, materialize.triples_from_mentions
+    monkeypatch.setattr(canonical, "_local_components", components)
+    monkeypatch.setattr(materialize, "triples_from_mentions", from_mentions)
+    monkeypatch.setattr(session, "DRIVER_ROWS", 2)
+    capped = run_pipeline(spark, small_files, str(tmp_path / "kgrun_cap2"))
+
+    assert len(calls["components"]) == 1 and calls["components"][0] > 2  # the count path
+    assert calls["mentions"] == [None]  # the join plan, its dictionary a distinct union
+    for stage in ("candidate_links", "entities"):
+        assert not capped[stage].isLocal(), stage
+        assert sorted(capped[stage].collect()) == sorted(out[stage].collect()), stage
+    key = ["subj", "pred", "obj"]
+    want = _triples_pdf(out["triples"]).sort_values(key).reset_index(drop=True)
+    got = _triples_pdf(capped["triples"]).sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want)

@@ -166,12 +166,13 @@ def test_triples_bulk_path_has_no_shuffle(spark, small_files):
     first-occurrence dedup happens in the lexer (is_first), so only the
     linked-entity sliver may aggregate.  No SortAggregate anywhere (string
     min/max agg buffers would force full sorts of the mention set)."""
+    from kgforge.session import driver_rows
     from kgforge.stages import canonical, embed, link, materialize, mentions
 
     men = mentions.extract_mentions(small_files)
     links = link.candidate_links(embed.embed_mentions(men))
     ents = canonical.connected_components(links)
-    p = plan_of(materialize.triples_from_mentions(men, ents))
+    p = plan_of(materialize.triples_from_mentions(men, ents, driver_rows(ents)))
     assert "SortAggregate" not in p
     assert "BroadcastHashJoin" in p  # canonical dictionary is broadcast
     # exactly the dedup sliver may exchange: the safe leg reaches the union
